@@ -109,13 +109,13 @@ object Oracles {
   def mhSql(listCol: String, j: Int): String =
     s"list_min(list_transform($listCol, t -> (${mhA(j)}*cast(t AS bigint) + ${mhB(j)}) % $P))"
 
-  /** Twin of DedupOps.minhashSignature(stoks, 16) over shingles. */
+  /** Twin of DedupOps.minhashSigRows(k=16) over shingles. */
   val SigCte: String = {
     val cols = (0 until 16).map(j => s"${mhSql("stoks", j)} AS m$j").mkString(",\n    ")
     s"ssig AS (\n  SELECT sid,\n    $cols\n  FROM shingd)"
   }
 
-  /** Twin of DedupOps.banded(k=16, r=4): 4 band keys per doc. */
+  /** Twin of DedupOps.bandRows(k=16, r=4): 4 band keys per doc. */
   val BandsCte: String = {
     val bands = (0 until 4).map { bi =>
       val key = (0 until 4).map(o => s"cast(m${bi * 4 + o} AS varchar)").mkString(" || '_' || ")
@@ -124,7 +124,7 @@ object Oracles {
     s"sbands AS ($bands)"
   }
 
-  /** Twin of DedupOps.lshCandidates: distinct (doc_a<doc_b) band matches. */
+  /** Twin of DedupOps.lshCandidatesRows: distinct (doc_a<doc_b) band matches. */
   val PairsCte: String =
     """spairs AS (
       |  SELECT DISTINCT a.sid AS doc_a, b.sid AS doc_b

@@ -85,21 +85,11 @@ object QueriesOps {
       .withColumn("doc_id", col("doc_id") + lit(1000000000000L)))
   }
 
-  /** Shingling fans the (often single-file) doc read out to all cores first:
-    * the 8-char rolling hash is a higher-order `transform` (interpreted, not
-    * codegen'd), so its cost must parallelize — at cluster scale the input
-    * arrives pre-split, locally a tiny repartition shuffle buys 32× on the
-    * hash work.
-    */
-  private def shingled(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id").cast("long").as("sid"),
-        DedupOps.shingleTokens(col("text"), 8).as("stoks"))
-
-  /** Codegen'd (sid, tok) shingle rows — same values as [[shingled]] with
-    * no interpreted HOF in the plan (see DedupOps.shingleRows); the
-    * repartition fans the often-single-file doc read out to all cores
-    * before the explode.
+  /** Codegen'd (sid, tok) shingle rows — same values as
+    * DedupOps.shingleTokens with no interpreted HOF in the plan (see
+    * DedupOps.shingleRows); the repartition fans the often-single-file doc
+    * read out to all cores before the explode (at cluster scale the input
+    * arrives pre-split).
     */
   private def shingleRows(s: SparkSession, dir: String, dedup: Boolean = true): DataFrame =
     DedupOps.shingleRows(

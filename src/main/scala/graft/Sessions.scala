@@ -30,11 +30,4 @@ object Sessions {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  /** Tune an existing session (driver-created) without rebuilding it. */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark
-  }
 }

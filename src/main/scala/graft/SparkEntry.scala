@@ -14,21 +14,15 @@ object SparkEntry {
     // non-ANSI: malformed field → NULL (the reference drops-and-counts bad
     // records, never aborts — /root/reference/src/collector/zeek.rs:118-139)
     spark.conf.set("spark.sql.ansi.enabled", "false")
-    // AQE partition-coalescing floor: Spark's 1 MB default is right for the
-    // suite as a whole (a 64 KB global floor was measured +30 s across the
-    // 212-query bench — every modest shuffle pays extra task scheduling),
-    // but it folds byte-SMALL, compute-DENSE stages into one task; the two
-    // operators with that profile (allPairsSimilarity's array_intersect
-    // verify, mmrSelect's greedy rounds) scope a lower floor locally.
-    // Env knob for experiments only.
-    sys.env.get("SPARK_GRAFT_AQE_MIN_PARTITION").foreach(
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", _))
-    // match the engine's own Sessions.local broadcast threshold (64 MB) so
+    // the AQE partition-coalescing floor stays at Spark's 1 MB default: a
+    // 64 KB global floor was measured +30 s across the 212-query bench
+    // (every modest shuffle pays extra task scheduling); the operators with
+    // byte-SMALL, compute-DENSE stages pin their own parallelism locally.
+    // Match the engine's own Sessions.local broadcast threshold (64 MB) so
     // the driver-created bench/verify session plans the same joins the dev
     // sessions plan (guide §3.1: broadcast the side that fits — estimates
     // at the 10 MB default flip small model/frequency tables to shuffles)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", (64L << 20).toString))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
     // drop the PREVIOUS query's localCheckpoint blocks before this one
     // runs: eager checkpoints otherwise accumulate across a 212-query
     // session until the driver happens to GC the RDD handles, saturating

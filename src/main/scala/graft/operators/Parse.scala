@@ -3,13 +3,15 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.RegexpExtractStruct
+
 /** Catalyst-only parse stage (no UDFs — north rule).
   *
   * The reference parses each log line with a hand-written positional/regex
   * extractor per format (/root/reference/src/parser/zeek.rs:71-79 TSV,
   * security_log/nginx.rs:14 grok, security_log/fgt.rs:17 key=value,
   * operation_log.rs:21-28 level lines). Here each family is a bank of
-  * codegen'd `regexp_extract` / `split` expressions producing a common
+  * codegen'd regex / `split` expressions producing a common
   * parsed struct; malformed rows get ok=false and are counted, never fatal
   * (reference drops-and-counts — src/collector/zeek.rs:118-139).
   *
@@ -33,26 +35,33 @@ object Parse {
   /** Operation-log family: `<sec>.<micros> LEVEL contents`
     * (reference regex: `(datetime)\s+(INFO|WARN|ERROR)\s(contents)` —
     * operation_log.rs:21-28; level whitelist is part of the regex).
+    * One regex pass per line ([[RegexpExtractStruct]]), where a
+    * `regexp_extract` per group would match the line 4 times.
     */
-  def oplog(line: Column): Column = struct(
-    nsFromSecFrac(regexp_extract(line, OplogRe, 1), regexp_extract(line, OplogRe, 2)).as("ts_ns"),
-    regexp_extract(line, OplogRe, 3).as("level"),
-    regexp_extract(line, OplogRe, 4).as("contents"),
-    (regexp_extract(line, OplogRe, 3) =!= "").as("ok")
-  )
+  def oplog(line: Column): Column = {
+    val m = RegexpExtractStruct.of(line, OplogRe, 4)
+    struct(
+      nsFromSecFrac(m("g1"), m("g2")).as("ts_ns"),
+      m("g3").as("level"),
+      m("g4").as("contents"),
+      m("matched").as("ok"))
+  }
 
   /** nginx access-log family: grok named-group analog
-    * (reference: security_log/nginx.rs:14,19-25).
+    * (reference: security_log/nginx.rs:14,19-25). One regex pass per line
+    * instead of 6.
     */
-  def nginx(line: Column): Column = struct(
-    (regexp_extract(line, NginxRe, 2).cast("long") * lit(1000000000L)).as("ts_ns"),
-    regexp_extract(line, NginxRe, 1).as("src_ip"),
-    regexp_extract(line, NginxRe, 3).as("method"),
-    regexp_extract(line, NginxRe, 4).as("path"),
-    regexp_extract(line, NginxRe, 5).cast("int").as("status"),
-    regexp_extract(line, NginxRe, 6).cast("long").as("resp_bytes"),
-    (regexp_extract(line, NginxRe, 5) =!= "").as("ok")
-  )
+  def nginx(line: Column): Column = {
+    val m = RegexpExtractStruct.of(line, NginxRe, 6)
+    struct(
+      (m("g2").cast("long") * lit(1000000000L)).as("ts_ns"),
+      m("g1").as("src_ip"),
+      m("g3").as("method"),
+      m("g4").as("path"),
+      m("g5").cast("int").as("status"),
+      m("g6").cast("long").as("resp_bytes"),
+      m("matched").as("ok"))
+  }
 
   /** Fortinet-style key=value family (reference: security_log/fgt.rs:17).
     * One regexp_extract per key — each codegen'd, regex constant-folded.
@@ -96,10 +105,11 @@ object Parse {
     * per-kind struct for sink schemas.
     */
   def parsed(df: DataFrame, line: Column = col("raw_line"), kind: Column = col("kind")): DataFrame = {
-    // oplog/nginx use the one-pass RegexpExtractStruct bank (2.0× on the
-    // regex stage, see ParseMicroBench; equality proven in ParseFastSpec);
-    // fgt/zeek are per-key regex / split positional — no single-regex win
-    val op = ParseFast.oplog(line); val ng = ParseFast.nginx(line)
+    // oplog/nginx match each line once (RegexpExtractStruct: 1.88–2.04×
+    // on the regex stage against a regexp_extract per group; equal to the
+    // builtins per RegexpExtractStructSpec); fgt/zeek are per-key regex /
+    // split positional — no single-regex win
+    val op = oplog(line); val ng = nginx(line)
     val fg = fgt(line); val zk = zeek(line)
     df
       .withColumn("ts_raw_ns",

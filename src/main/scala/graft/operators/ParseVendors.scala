@@ -44,7 +44,7 @@ object ParseVendors {
     */
   def wapples(line: Column, serial: Column): Column = {
     // one-pass grok: all 4 groups in ONE regex execution per row
-    // (RegexpExtractStruct, the ParseFast form — the reference compiles the
+    // (RegexpExtractStruct, as Parse.oplog/nginx — the reference compiles the
     // regex once and reads all named groups from one Captures)
     val m = graft.functions.RegexpExtractStruct.of(line, WapplesRe, 4)
     // "yyyy-MM-dd HH:mm:ss Z" == the reference's %Y-%m-%d %H:%M:%S %z —

@@ -54,96 +54,25 @@ object DedupOps {
     docs.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
   }
 
+  /** The j-th MinHash permutation (a_j, b_j) of t ↦ (a_j·t + b_j) mod P —
+    * one definition shared by the column and the aggregate signature, so
+    * both generate identical hash values. Knuth multiplier: a·t wraps P
+    * even for small t, so the permutation mixes (a small multiplier is
+    * monotone on small ids → min-hash would always elect the smallest
+    * token).
+    */
+  private def perm(j: Int, t: Column): Column = {
+    val a = (2654435761L * (j + 1)) % P
+    val b = (1013904223L * (j + 1)) % P
+    (lit(a) * t.cast("long") + lit(b)) % lit(P)
+  }
+
   /** j-th MinHash over an int-token array: min over tokens of the LCG
     * permutation ((a_j·t + b_j) mod P). Min over the multiset equals min
     * over the set, so no dedup of tokens needed.
     */
-  def minhash(tokens: Column, j: Int): Column = {
-    // Knuth multiplier: a·t wraps P even for small t, so the permutation
-    // mixes (a small multiplier is monotone on small ids → min-hash would
-    // always elect the smallest token)
-    val a = (2654435761L * (j + 1)) % P
-    val b = (1013904223L * (j + 1)) % P
-    array_min(transform(tokens, t => (lit(a) * t.cast("long") + lit(b)) % lit(P)))
-  }
-
-  /** k-wide MinHash signature. */
-  def minhashSignature(tokens: Column, k: Int): Column =
-    array((0 until k).map(minhash(tokens, _)): _*)
-
-  /** k-wide MinHash signature as k aggregate columns m0..m{k-1} via
-    * explode + groupBy(min) — NOT an array `transform` HOF: higher-order
-    * functions are CodegenFallback (interpreted), and Catalyst's project
-    * collapse re-inlines the signature into every consumer, turning each
-    * band key into a full signature recomputation (measured: 15+ min for
-    * 5k docs, single-threaded). The aggregate form is whole-stage-codegen'd
-    * with map-side combine, shuffles one row per doc, and parallelizes over
-    * (doc, token) rather than per-doc arrays.
-    */
-  def minhashSigAgg(docs: DataFrame, idCol: String, tokens: Column, k: Int): DataFrame = {
-    // explode drops empty-token docs; the left join from the doc set puts
-    // them back with NULL m0..m{k-1} (the same row DuckDB's list_min gives
-    // for an empty list), so every input doc appears in the output —
-    // downstream banding must skip NULL signatures explicitly
-    val ids = docs.select(col(idCol))
-    val e = docs.select(col(idCol), explode(array_distinct(tokens)).as("__t"))
-    val aggs = (0 until k).map { j =>
-      val a = (2654435761L * (j + 1)) % P
-      val b = (1013904223L * (j + 1)) % P
-      min((lit(a) * col("__t").cast("long") + lit(b)) % lit(P)).as(s"m$j")
-    }
-    ids.join(e.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*), Seq(idCol), "left")
-  }
-
-  /** LSH band rows: (id, band_idx, band_key) from the aggregate signature;
-    * band keys are plain-column string concats (cheap, evaluated once).
-    */
-  def banded(docs: DataFrame, idCol: String, tokens: Column, k: Int, r: Int): DataFrame = {
-    require(k % r == 0, "k must be divisible by r")
-    val sig = minhashSigAgg(docs, idCol, tokens, k)
-    val bands = (0 until k / r).map { bi =>
-      struct(lit(bi).as("band_idx"),
-        concat_ws("_", (0 until r).map(o => col(s"m${bi * r + o}").cast("string")): _*).as("band_key"))
-    }
-    // NULL signature = empty-token doc: no band rows (cannot near-dup match)
-    sig.where(col("m0").isNotNull)
-      .select(col(idCol), explode(array(bands: _*)).as("__band"))
-      .select(col(idCol), col("__band.band_idx").as("band_idx"), col("__band.band_key").as("band_key"))
-  }
-
-  /** MinHash-LSH candidate pairs (doc_a < doc_b), deduped across bands. */
-  def lshCandidates(docs: DataFrame, idCol: String, tokens: Column, k: Int = 8, r: Int = 2): DataFrame = {
-    val b = banded(docs, idCol, tokens, k, r)
-    val l = b.select(col(idCol).as("doc_a"), col("band_idx"), col("band_key"))
-    val rgt = b.select(col(idCol).as("doc_b"), col("band_idx"), col("band_key"))
-    l.join(rgt, Seq("band_idx", "band_key"))
-      .where(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-  }
-
-  /** Exact Jaccard over distinct token sets for given candidate pairs —
-    * relational form (explode + join + count) so it runs at any scale and
-    * has a direct SQL twin. pairs: (doc_a, doc_b).
-    */
-  def jaccard(docs: DataFrame, idCol: String, tokens: Column, pairs: DataFrame): DataFrame = {
-    val toks = docs.select(col(idCol).as("__id"), explode(array_distinct(tokens)).as("tok"))
-    val sizes = toks.groupBy("__id").agg(count(lit(1)).as("sz"))
-    // the second join carries (doc, token) in its key EXPLICITLY: keying on
-    // doc_b alone and filtering tok equality afterwards would rely on
-    // Catalyst pushing the predicate into the join — if that ever failed,
-    // each candidate pair would materialize |A|×|B| rows before filtering
-    val toksB = toks.select(col("__id").as("__doc_b"), col("tok").as("tok_b"))
-    val inter = pairs
-      .join(toks.withColumnRenamed("__id", "doc_a").withColumnRenamed("tok", "tok_a"), "doc_a")
-      .join(toksB, col("doc_b") === col("__doc_b") && col("tok_a") === col("tok_b"))
-      .drop("__doc_b")
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("__id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-      .join(sizes.withColumnRenamed("__id", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-      .withColumn("jaccard",
-        round(col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")), 6))
-  }
+  def minhash(tokens: Column, j: Int): Column =
+    array_min(transform(tokens, perm(j, _)))
 
   /** 16-bit SimHash over token ids: bit b of the hash is the sign of
     * Σ_tokens (2·bit_b(t) − 1). Computed with explode + one groupBy carrying
@@ -207,21 +136,24 @@ object DedupOps {
       .select(col("sid"), col("__h").cast("int").as("tok"))
   }
 
-  /** k-wide MinHash signature from (sid, tok) rows — the aggregate form of
-    * [[minhashSigAgg]] without the array detour. Only docs with rows appear
-    * (shingle-less docs cannot band-match anyway).
+  /** k-wide MinHash signature m0..m{k-1} from (sid, tok) rows: one
+    * whole-stage-codegen'd aggregate with map-side combine that shuffles one
+    * row per doc — not a per-doc array `transform` HOF, which is
+    * CodegenFallback (interpreted) and which Catalyst's project collapse
+    * re-inlines into every band key (measured: 15+ min for 5k docs). Only
+    * docs with rows appear (shingle-less docs cannot band-match anyway).
     */
   def minhashSigRows(rows: DataFrame, k: Int): DataFrame = {
-    val aggs = (0 until k).map { j =>
-      val a = (2654435761L * (j + 1)) % P
-      val b = (1013904223L * (j + 1)) % P
-      min((lit(a) * col("tok").cast("long") + lit(b)) % lit(P)).as(s"m$j")
-    }
+    val aggs = (0 until k).map(j => min(perm(j, col("tok"))).as(s"m$j"))
     rows.groupBy("sid").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** (sid, band_idx, band_key) rows from a k-minhash signature frame. */
-  private def bandRows(sig: DataFrame, k: Int, r: Int): DataFrame = {
+  /** LSH band rows (sid, band_idx, band_key) from a k-minhash signature
+    * frame: k/r bands of r minhashes, each key a plain-column string
+    * concat (cheap, evaluated once).
+    */
+  def bandRows(sig: DataFrame, k: Int, r: Int): DataFrame = {
+    require(k % r == 0, "k must be divisible by r")
     val bands = (0 until k / r).map { bi =>
       struct(lit(bi).as("band_idx"),
         concat_ws("_", (0 until r).map(o => col(s"m${bi * r + o}").cast("string")): _*).as("band_key"))
@@ -232,7 +164,6 @@ object DedupOps {
 
   /** MinHash-LSH candidate pairs from (sid, tok) rows (doc_a < doc_b). */
   def lshCandidatesRows(rows: DataFrame, k: Int, r: Int): DataFrame = {
-    require(k % r == 0, "k must be divisible by r")
     val b = bandRows(minhashSigRows(rows, k), k, r)
     b.select(col("sid").as("doc_a"), col("band_idx"), col("band_key"))
       .join(b.select(col("sid").as("doc_b"), col("band_idx"), col("band_key")),
@@ -259,8 +190,8 @@ object DedupOps {
     * OpsSpec (planted corpus, exceptAll both ways) and bit-identical at
     * sf0.1/10× against the doc-level dumps + the 10× union-find.
     *
-    * WHEN TO USE WHICH (measured, adjacent A/B in one JVM —
-    * graft.AbClusters): on a pairs-SPARSE corpus (near-dups rotated apart,
+    * WHEN TO USE WHICH (measured, adjacent doc-level/collapsed A/B over the
+    * same checkpointed shingle rows in one JVM): on a pairs-SPARSE corpus (near-dups rotated apart,
     * like the testdata and its 10× upscale) the doc-level form is ~10-30%
     * faster (5.0-5.8 s vs 5.5-7.8 s at sf0.1; 11.9-14.1 vs 12.5-16.4 s at
     * 10×) — the collapse's signature-window shuffle and extra checkpoints
@@ -301,8 +232,8 @@ object DedupOps {
       .select(col("sid"), coalesce(col("cluster"), col("gid")).as("cluster"))
   }
 
-  /** Exact Jaccard over (sid, tok) rows for given candidate pairs — same
-    * explicit two-key join as [[jaccard]], minus the array explode.
+  /** Exact Jaccard over (sid, tok) rows for given candidate pairs
+    * (doc_a, doc_b): per-pair intersection of the two docs' token sets.
     * PRECONDITION: rows must be distinct per (sid, tok)
     * ([[shingleRows]] with dedup=true) — duplicates inflate `inter`.
     */
@@ -362,7 +293,7 @@ object DedupOps {
     * rank window is bounded by a single document's token count; the
     * candidate join is an equi-join on the prefix token (low-df keys by
     * construction — AQE skew-join covers a pathological corpus); the
-    * verify is the d04 explicit two-key join over candidates only. The
+    * verify is a per-pair token-array intersection over candidates only. The
     * distinct (sid, tok) frame feeds four consumers — materialize once
     * upstream ([[jaccardRows]] precondition: rows distinct per (sid, tok)).
     *
@@ -433,8 +364,8 @@ object DedupOps {
     * delta band rows broadcast (a day's intake is orders of magnitude
     * smaller than the corpus), so the candidate probe is a broadcast hash
     * join against the index bands — the corpus never shuffles on the band
-    * key. Candidates verify by exact shingle Jaccard (the d04 explicit
-    * two-key join) and pairs clearing minJacE6 report as near-duplicates
+    * key. Candidates verify by exact shingle Jaccard ([[jaccardRows]], as
+    * d04 does) and pairs clearing minJacE6 report as near-duplicates
     * of the standing corpus.
     *
     * rows: distinct (sid, tok) shingle rows for index ∪ delta (the
@@ -445,17 +376,8 @@ object DedupOps {
     */
   def lshAgainstIndex(rows: DataFrame, deltaPred: Column, k: Int, r: Int,
                       minJacE6: Long): DataFrame = {
-    require(k % r == 0, "k must be divisible by r")
-    val sig = minhashSigRows(rows, k)
-    val bands = (0 until k / r).map { bi =>
-      struct(lit(bi).as("band_idx"),
-        concat_ws("_", (0 until r).map(o => col(s"m${bi * r + o}").cast("string")): _*).as("band_key"))
-    }
     // one banding pass feeds BOTH probe sides — materialize once
-    val b = sig.select(col("sid"), explode(array(bands: _*)).as("__band"))
-      .select(col("sid"), col("__band.band_idx").as("band_idx"),
-        col("__band.band_key").as("band_key"))
-      .localCheckpoint(true)
+    val b = bandRows(minhashSigRows(rows, k), k, r).localCheckpoint(true)
     val cand = b.where(!deltaPred)
       .select(col("sid").as("doc_a"), col("band_idx"), col("band_key"))
       .join(broadcast(b.where(deltaPred)

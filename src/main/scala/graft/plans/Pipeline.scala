@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
 
 import graft.sources.Tables
 import graft.operators.{Dedup, Enrich, Parse, Report, Route}
@@ -24,12 +23,6 @@ import graft.table.SinkTable
   */
 object Pipeline {
 
-  final case class Metrics(parsedOk: LongAccumulator, parseFailed: LongAccumulator)
-
-  def metrics(spark: SparkSession): Metrics = Metrics(
-    spark.sparkContext.longAccumulator("graft.parse.ok"),
-    spark.sparkContext.longAccumulator("graft.parse.failed"))
-
   /** The transform-only portion (no writes) — reused by queries and tests. */
   def transformed(spark: SparkSession, dir: String): DataFrame = {
     val raw = Tables.rawEvents(spark, dir)
@@ -40,22 +33,14 @@ object Pipeline {
     Route.routed(enriched)
   }
 
-  /** Full run with sink writes + manifests + metrics. Returns the report. */
+  /** Full run with sink writes + manifest commit. Returns the report. */
   def run(spark: SparkSession, dir: String, outBase: String, commitId: Long = 1L): DataFrame = {
-    val m = metrics(spark)
     val routed = transformed(spark, dir)
-
-    // accumulator side-channel without an extra pass: observe() attaches
-    // metric aggregates to the plan (Spark-native; no .collect loops)
-    val observed = routed.observe("graft_parse",
-      sum(when(col("parse_ok"), 1L).otherwise(0L)).as("ok"),
-      sum(when(!col("parse_ok"), 1L).otherwise(0L)).as("failed"))
-
     val table = new SinkTable(outBase)
     // quarantined rows keep the WHOLE line as bytes — the reference's raw-log
     // fallback record (Log{kind, log bytes} — src/collector/log.rs:129-149);
     // parsed sinks carry null here (columnar: costs nothing when absent)
-    val slim = observed.select(
+    val slim = routed.select(
       col("doc_id"), col("tokens"), col("n_tok"), col("source"), col("line_no"),
       col("ts_ns"), col("level"), col("src_ip"), col("status_code"),
       col("vendor"), col("log_type"), col("version"), col("bytes"),

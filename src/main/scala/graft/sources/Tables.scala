@@ -23,14 +23,14 @@ import org.apache.spark.sql.functions._
 object Tables {
 
   /** Pinned testdata schemas (TESTDATA.md contract, printed by
-    * graft.PrintSchemas): an explicit schema skips the per-read parquet
+    * `graft.Diag schemas`): an explicit schema skips the per-read parquet
     * schema-inference resolution, which profiled as the single largest
     * analyzer cost across the 212-query bench (ResolveDataSource ≈ 42% of
     * total rule time — a footer read + resolution per `spark.read.parquet`
     * call, paid by every query). Tables outside this map (none today) fall
     * back to inference.
     */
-  private val schemas: Map[String, String] = Map(
+  private[graft] val schemas: Map[String, String] = Map(
     "documents" -> "doc_id BIGINT,text STRING,lang STRING,source STRING,n_chars BIGINT",
     "embeddings" -> "vec_id BIGINT,embedding ARRAY<FLOAT>,label INT",
     "events" -> ("event_id BIGINT,ts TIMESTAMP_NTZ,user_id BIGINT," +

@@ -121,10 +121,10 @@ object StreamPipeline {
     *
     * Documents too short to shingle carry null band keys and pass (equi-
     * joins never match null — the same no-band-rows semantics as the batch
-    * [[graft.ops.DedupOps.banded]]). indexBands: the static
-    * (band_idx, band_key) artifact d15 probes; the same call runs in batch
-    * mode, where it must equal the batch band-match complement
-    * (StreamingSpec asserts it).
+    * [[graft.ops.DedupOps.bandRows]] over [[graft.ops.DedupOps.shingleRows]]).
+    * indexBands: the static (band_idx, band_key) artifact d15 probes; the
+    * same call runs in batch mode, where it must equal the batch band-match
+    * complement (StreamingSpec asserts it).
     */
   def nearDupGate(docs: DataFrame, indexBands: DataFrame,
                   k: Int = 16, r: Int = 4): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -70,10 +70,7 @@ object TemplateStore {
       .where(col("__rn") === 1).drop("__rn")
     val ver = currentVer(base).getOrElse(0L) + 1
     dict.write.mode("overwrite").parquet(s"$base/ver=$ver")
-    val tmp = Paths.get(base, ".tmp-CURRENT")
-    Files.writeString(tmp, ver.toString)
-    Files.move(tmp, currentPath(base), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    graft.table.AtomicFile.write(currentPath(base), ver.toString)
     // superseded snapshots are garbage once the pointer has swapped —
     // without this the store directory grows by one snapshot per run. The
     // prune keeps the newest `keepVersions` (default current + previous):

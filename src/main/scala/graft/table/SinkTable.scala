@@ -1,6 +1,6 @@
 package graft.table
 
-import java.nio.file.{Files, Paths, Path, StandardCopyOption}
+import java.nio.file.{Files, Paths, Path}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -55,13 +55,8 @@ final class SinkTable(base: String) {
     val spark = df.sparkSession
     val stats = spark.read.parquet(dir).agg(count(lit(1)), coalesce(max(col("line_no")), lit(-1L))).head()
     val m = Manifest(commitId, stats.getLong(0), stats.getLong(1), Seq(dir))
-    val tmp = manDir.resolve(s".tmp-$commitId")
-    Files.writeString(tmp, render(m))
-    Files.move(tmp, manPath(commitId), StandardCopyOption.ATOMIC_MOVE)
-    val tmpCur = manDir.resolve(".tmp-CURRENT")
-    Files.writeString(tmpCur, commitId.toString)
-    Files.move(tmpCur, currentPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    AtomicFile.write(manPath(commitId), render(m))
+    AtomicFile.write(currentPath, commitId.toString)
     m
   }
 
@@ -85,7 +80,7 @@ final class SinkTable(base: String) {
   def rollbackLast(): Unit = manifests.lastOption.foreach { m =>
     Files.deleteIfExists(manPath(m.commitId))
     manifests.lastOption match {
-      case Some(prev) => Files.writeString(currentPath, prev.commitId.toString)
+      case Some(prev) => AtomicFile.write(currentPath, prev.commitId.toString)
       case None => Files.deleteIfExists(currentPath)
     }
   }

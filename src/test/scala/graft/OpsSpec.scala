@@ -28,12 +28,18 @@ class OpsSpec extends SparkSpec {
   }
 
   test("minhash: identical token sets → identical signatures; is a lower bound of all hashes") {
-    val df = Seq((1L, Seq(5, 9, 12)), (2L, Seq(12, 5, 9)), (3L, Seq(5, 9, 13)))
-      .toDF("id", "tokens")
-    val sig = df.select(col("id"), DedupOps.minhashSignature(col("tokens"), 8).as("sig"))
+    val docs = Seq(1L -> Seq(5, 9, 12), 2L -> Seq(12, 5, 9), 3L -> Seq(5, 9, 13))
+    val rows = docs.flatMap { case (s, ts) => ts.map(t => (s, t)) }.toDF("sid", "tok")
+    val sig = DedupOps.minhashSigRows(rows, 8)
+      .select(col("sid"), array((0 until 8).map(j => col(s"m$j")): _*))
       .as[(Long, Seq[Long])].collect().toMap
     assert(sig(1L) === sig(2L)) // order-insensitive
     assert(sig(1L) !== sig(3L))
+    // m_j is the minimum of the j-th permutation: the array form agrees
+    val arr = docs.toDF("sid", "tokens")
+      .select(col("sid"), array((0 until 8).map(DedupOps.minhash(col("tokens"), _)): _*))
+      .as[(Long, Seq[Long])].collect().toMap
+    assert(arr === sig)
   }
 
   test("duplicateClusters: chains collapse to one component, islands stay apart") {
@@ -124,15 +130,16 @@ class OpsSpec extends SparkSpec {
       (2L, "join", 1), (2L, "scan", 2), (3L, "join", 1), (3L, "scan", 2)))
   }
 
-  test("jaccard: identical docs → 1.0, disjoint docs absent") {
-    val docs = Seq((1L, Seq(1, 2, 3)), (2L, Seq(1, 2, 3)), (3L, Seq(9, 10, 11)))
-      .toDF("sid", "toks")
-    val pairs = Seq((1L, 2L), (1L, 3L)).toDF("doc_a", "doc_b")
-    val j = DedupOps.jaccard(docs, "sid", col("toks"), pairs)
-      .select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)].collect()
-      .map { case (a, b, v) => (a, b) -> v }.toMap
-    assert(j((1L, 2L)) === 1.0)
-    assert(!j.contains((1L, 3L))) // no common token → dropped by the join
+  test("jaccardRows: identical docs → 1.0, disjoint docs → 0.0, partial overlap exact") {
+    val rows = Seq(1L -> Seq(1, 2, 3), 2L -> Seq(1, 2, 3), 3L -> Seq(9, 10, 11),
+        4L -> Seq(1, 2, 7, 8))
+      .flatMap { case (s, ts) => ts.map(t => (s, t)) }.toDF("sid", "tok")
+    val pairs = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("doc_a", "doc_b")
+    val j = DedupOps.jaccardRows(rows, pairs)
+      .select("doc_a", "doc_b", "inter", "jaccard").as[(Long, Long, Long, Double)].collect()
+      .map { case (a, b, i, v) => (a, b) -> (i, v) }.toMap
+    assert(j === Map((1L, 2L) -> (3L, 1.0), (1L, 3L) -> (0L, 0.0),
+      (1L, 4L) -> (2L, 0.4))) // |{1,2}| / |{1,2,3,7,8}|
   }
 
   test("allPairsSimilarity == brute force at the J=1/2 boundary (exact, no LSH miss)") {
@@ -171,10 +178,10 @@ class OpsSpec extends SparkSpec {
   }
 
   test("LSH candidates recover planted near-duplicate pairs (recall on jaccard>=0.9)") {
-    val sh = Tables.documents(spark, Sf).select(col("doc_id").cast("long").as("sid"),
-      DedupOps.shingleTokens(col("text"), 8).as("stoks"))
-    val cands = DedupOps.lshCandidates(sh, "sid", col("stoks"), 16, 4)
-    val withJ = DedupOps.jaccard(sh, "sid", col("stoks"), cands)
+    val sh = DedupOps.shingleRows(Tables.documents(spark, Sf), "doc_id", "text", 8)
+      .localCheckpoint(true)
+    val cands = DedupOps.lshCandidatesRows(sh, 16, 4)
+    val withJ = DedupOps.jaccardRows(sh, cands)
     // the testdata plants near-dups (verified: pairs with 8-gram jaccard >= 0.9 exist);
     // banding with k=16,r=4 must surface them
     assert(withJ.where(col("jaccard") >= 0.9).count() > 0)

@@ -44,12 +44,22 @@ class PipelineSpec extends SparkSpec {
   test("resume: rollback last manifest + re-run → identical sink contents, no dupes/gaps") {
     val out = freshDir()
     Pipeline.run(spark, Sf, out, 1L)
+    Pipeline.run(spark, Sf, out, 2L) // nothing new past the resume point
     val t = new SinkTable(out)
     val before = t.read(spark).orderBy("doc_id")
       .select("sink", "doc_id", "n_tok", "ts_ns").collect().toSeq
+    // each rollback swaps CURRENT back one commit, leaving no temp file
+    val manDir = java.nio.file.Paths.get(out, "_manifests")
+    def tmpFiles = Files.list(manDir).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).filter(_.startsWith(".tmp-"))
+    assert(t.currentCommit === Some(2L))
     t.rollbackLast()
+    assert(t.currentCommit === Some(1L))
+    assert(tmpFiles.isEmpty)
+    t.rollbackLast()
+    assert(t.currentCommit === None)
     assert(t.read(spark).count() === 0L) // uncommitted data invisible
-    Pipeline.run(spark, Sf, out, 2L)
+    Pipeline.run(spark, Sf, out, 3L)
     val after = t.read(spark).orderBy("doc_id")
       .select("sink", "doc_id", "n_tok", "ts_ns").collect().toSeq
     assert(after === before)

@@ -13,25 +13,20 @@ import graft.sources.Tables
   */
 class PlanAuditSpec extends SparkSpec {
 
-  test("d04 jaccard intersection join carries (doc, token) equi-keys explicitly") {
-    val sh = Tables.documents(spark, Sf)
-      .select(col("doc_id").cast("long").as("sid"),
-        DedupOps.shingleTokens(col("text"), 8).as("stoks"))
-    val pairs = DedupOps.lshCandidates(sh, "sid", col("stoks"), k = 16, r = 4)
-    val jac = DedupOps.jaccard(sh, "sid", col("stoks"), pairs)
-    // the intersection join's condition must bind BOTH the doc key and the
-    // token equality — if the token predicate were a post-join filter, each
-    // candidate pair would materialize |A|×|B| rows before filtering
-    val joins = jac.queryExecution.optimizedPlan.collect { case j: Join => j }
-    val tokenJoin = joins.filter { j =>
-      val c = j.condition.map(_.toString).getOrElse("")
-      c.contains("tok_a") && c.contains("tok_b")
-    }
-    assert(tokenJoin.nonEmpty, "no join carries the tok_a = tok_b key")
-    tokenJoin.foreach { j =>
-      val c = j.condition.get.toString
-      assert(c.contains("doc_b") || c.contains("__doc_b"),
-        s"token join must also key on the doc id, got: $c")
+  test("d04 jaccardRows never joins on a token column (no per-pair |A|×|B| rows)") {
+    // the verify intersects each candidate pair's token ARRAYS in place; a
+    // join keyed on (or filtered by) token values would instead materialize
+    // exploded per-pair token rows — |A|×|B| of them if the token equality
+    // ever ended up a post-join filter. Every d04 join keys on band keys
+    // (candidate generation) or doc ids (attaching each doc's token set).
+    val keys = Set("band_idx", "band_key", "doc_a", "doc_b", "sid")
+    val d04 = SparkEntry.queries("d04_lsh_jaccard")(spark, Sf)
+    val joins = d04.queryExecution.optimizedPlan.collect { case j: Join => j }
+    assert(joins.nonEmpty)
+    joins.foreach { j =>
+      val refs = j.condition.toSeq.flatMap(_.references.map(_.name))
+      assert(refs.nonEmpty, s"d04 has a cross join: $j")
+      assert(refs.forall(keys), s"d04 joins on a non-key column: ${j.condition.get}")
     }
   }
 

@@ -146,9 +146,10 @@ class StreamingSpec extends SparkSpec {
     // standing corpus = sid % 5 != 0; delta (the stream) = sid % 5 == 0
     val delta = all.where(col("doc_id") % 5 === 0)
     delta.write.mode("overwrite").parquet(docsDir)
-    val indexBands = graft.ops.DedupOps.banded(
-        all.where(col("doc_id") % 5 =!= 0), "doc_id",
-        graft.ops.DedupOps.shingleTokens(col("text"), 8), k = 16, r = 4)
+    import graft.ops.DedupOps.{bandRows, minhashSigRows, shingleRows}
+    def bands(docs: org.apache.spark.sql.DataFrame) =
+      bandRows(minhashSigRows(shingleRows(docs, "doc_id", "text", 8), 16), 16, 4)
+    val indexBands = bands(all.where(col("doc_id") % 5 =!= 0))
       .select(col("band_idx"), col("band_key")).localCheckpoint(true)
     val q = StreamPipeline.nearDupGate(
         spark.readStream.schema(delta.schema).parquet(docsDir), indexBands)
@@ -159,10 +160,8 @@ class StreamingSpec extends SparkSpec {
     val got = spark.table("neardup_gate").select("doc_id")
       .collect().map(_.getLong(0)).toSet
     // batch expectation: delta docs with NO band-key hit against the index
-    val deltaBands = graft.ops.DedupOps.banded(delta, "doc_id",
-      graft.ops.DedupOps.shingleTokens(col("text"), 8), k = 16, r = 4)
-    val dropped = deltaBands.join(indexBands, Seq("band_idx", "band_key"))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val dropped = bands(delta).join(indexBands, Seq("band_idx", "band_key"))
+      .select("sid").collect().map(_.getLong(0)).toSet
     val exp = delta.select("doc_id").collect().map(_.getLong(0)).toSet -- dropped
     assert(got === exp, "streaming gate diverges from the batch band-match complement")
     // the gate actually gates on this corpus: some docs drop, some pass
