@@ -98,7 +98,24 @@ object WindowHashes {
     * modulus defaults to 1e9+7 (the d12/t11 fold); the d-series shingles
     * pass 2^31−1. Stepwise mod equals the chains' single final mod for
     * either prime — mod is a ring homomorphism.
+    *
+    * The int64 arithmetic is exact only while `h·31 + c`, `c·pw` and
+    * `h + p` stay below Long.MaxValue for every code point c ≤ 0x10FFFF;
+    * `of` requires it. h and pw are below p, and never above their
+    * unreduced values (the n-code-point polynomial, 31^(n−1)) — which is
+    * what lets lmFamiliarity's n = 3 use a 1e18 modulus.
     */
-  def of(text: Column, n: Int, p: Long = 1000000007L): Column =
+  def of(text: Column, n: Int, p: Long = 1000000007L): Column = {
+    require(fitsInt64(n, p), s"window_hashes(n = $n, p = $p) overflows int64: need " +
+      "h*31 + 0x10FFFF, 0x10FFFF*pw and h + p below Long.MaxValue")
     GraftColumnBridge.column(WindowHashes(GraftColumnBridge.expression(text), Literal(n), p))
+  }
+
+  private def fitsInt64(n: Int, p: Long): Boolean = p > 1 && {
+    val (c, m, max) = (BigInt(0x10FFFF), BigInt(p), BigInt(Long.MaxValue))
+    val pow = BigInt(31).pow(math.max(n, 1) - 1)
+    val h = (c * (pow * 31 - 1) / 30).min(m - 1) // Σ_{i<n} c·31^i, reduced below p
+    val pw = pow.min(m - 1)
+    h * 31 + c <= max && pw * 31 <= max && c * pw <= max && h + m <= max
+  }
 }

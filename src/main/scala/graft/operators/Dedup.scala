@@ -29,6 +29,24 @@ object Dedup {
     df.withColumn(out, ts + row_number().over(w).cast("long") - lit(1L))
   }
 
+  /** [[timestampDedup]] of `fresh`, continued from `carried`: the window
+    * counts the carried rows too, and only the fresh rows come out.
+    * `carried` needs only the partition, ts and line-order columns, so a
+    * resumed commit continues the committed rows' equal-ts groups from the
+    * committed table's narrow keys instead of re-parsing the input behind
+    * the resume point. Equals the window over fresh ∪ carried restricted to
+    * the fresh rows (DedupSpec's resume law). Carried rows with a null ts
+    * are dropped first: they share a window group only with null-ts fresh
+    * rows, whose output is null whatever they count.
+    */
+  def timestampDedupCarried(fresh: DataFrame, carried: DataFrame, ts: Column, partCols: Seq[Column],
+                            lineNo: Column, out: String = "ts_ns"): DataFrame = {
+    val both = fresh.withColumn("__fresh", lit(true))
+      .unionByName(carried.where(ts.isNotNull).withColumn("__fresh", lit(false)),
+        allowMissingColumns = true)
+    timestampDedup(both, ts, partCols, lineNo, out).where(col("__fresh")).drop("__fresh")
+  }
+
   /** Consecutive-duplicate drop: a record equal (on cmpCols) to the
     * immediately preceding record in line order is silently dropped
     * (/root/reference/src/collector/zeek.rs:115,170-172).

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Route
+
 /** Readers + deterministic derivations over the driver-generated testdata.
   *
   * The north-rule input is a table of pre-tokenized sequences
@@ -110,8 +112,17 @@ object Tables {
   /** Format family for a source: 0=oplog 1=nginx 2=fgt 3=zeek. */
   def kindNum(source: Column): Column = sourceNum(source) % lit(4)
 
+  /** Format family names, in [[kindNum]] order. */
+  val KindNames: Seq[String] = Seq("oplog", "nginx", "fgt", "zeek")
+
   def kindName(source: Column): Column =
-    element_at(array(lit("oplog"), lit("nginx"), lit("fgt"), lit("zeek")), kindNum(source) + lit(1))
+    element_at(array(KindNames.map(lit): _*), kindNum(source) + lit(1))
+
+  /** Every sink the pipeline routes to: one per format family, plus
+    * quarantine for lines that fail to parse. A SinkTable commit records one
+    * report partial per sink in this list, and fails on a row routed elsewhere.
+    */
+  val SinkNames: Seq[String] = KindNames :+ Route.Quarantine
 
   /** One deterministic log line per document, format keyed by source.
     * Input columns required: doc_id (long), source, n_chars.
@@ -572,8 +583,13 @@ object Tables {
     * /root/reference/src/parser/security_log.rs:54-87): one row per source,
     * derived deterministically so the oracle can rebuild it.
     */
-  def sourceDim(spark: SparkSession, dir: String): DataFrame = {
-    val d = documents(spark, dir).select("source").distinct()
+  def sourceDim(spark: SparkSession, dir: String): DataFrame = sourceDim(documents(spark, dir))
+
+  /** The source dimension over the sources present in `docs`, any frame
+    * with a `source` column: a resumed commit builds it from its delta.
+    */
+  def sourceDim(docs: DataFrame): DataFrame = {
+    val d = docs.select("source").distinct()
     d.select(
       col("source"),
       concat(lit("vendor-"), (sourceNum(col("source")) % lit(7)).cast("string")).as("vendor"),

@@ -59,9 +59,7 @@ object StreamPipeline {
     val writeBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       val table = new SinkTable(outBase)
       if (!table.manifests.exists(_.commitId == batchId)) {
-        table.commit(
-          batch.repartition(col("sink"), pmod(xxhash64(col("doc_id")), lit(8))),
-          batchId)
+        table.commit(batch, batchId)
       }
       ()
     }

@@ -48,6 +48,43 @@ class DedupSpec extends SparkSpec {
     assert(out.toSeq === Seq(5L, 6L, 7L, 7L, 8L, 9L))
   }
 
+  test("resume law: carry form == full window on the fresh rows (non-monotonic, straddling, null ts)") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // one case: rows (source, ts) in line order, cut at resume point k; few
+    // sources and ts values, so equal-ts groups recur out of order and
+    // straddle k; None is a parse failure's null ts
+    val genCase = for {
+      n <- Gen.chooseNum(0, 40)
+      rows <- Gen.listOfN(n, for {
+        src <- Gen.chooseNum(0, 2)
+        ts <- Gen.frequency(8 -> Gen.chooseNum(0L, 3L).map(Option(_)), 1 -> Gen.const(None))
+      } yield (s"s$src", ts.map(_ * 1000L)))
+      k <- Gen.chooseNum(-1, n)
+    } yield (rows, k.toLong)
+    val cases = Gen.listOfN(60, genCase).pureApply(Gen.Parameters.default, Seed(3L))
+    val all = cases.zipWithIndex.flatMap { case ((rows, k), c) =>
+      rows.zipWithIndex.map { case ((src, ts), i) => (c, src, i.toLong, ts, k) }
+    }.toDF("case", "source", "line_no", "ts", "k")
+    val part = Seq(col("case"), col("source"))
+    val isFresh = col("line_no") > col("k")
+    def result(df: org.apache.spark.sql.DataFrame) = df.select("case", "line_no", "out")
+    val full = result(Dedup.timestampDedup(all, col("ts"), part, col("line_no"), "out").where(isFresh))
+    val carried = all.where(!isFresh).select("case", "source", "line_no", "ts")
+    val carry = result(Dedup.timestampDedupCarried(all.where(isFresh), carried, col("ts"), part,
+      col("line_no"), "out"))
+    assert(full.count() === all.where(isFresh).count())
+    assert(carry.exceptAll(full).isEmpty && full.exceptAll(carry).isEmpty)
+    // the law has teeth: the generator straddles k, and fresh rows alone differ
+    val straddling = cases.count { case (rows, k) =>
+      val (old, fresh) = rows.zipWithIndex.partition(_._2 <= k)
+      fresh.exists { case (r, _) => r._2.isDefined && old.exists(_._1 == r) }
+    }
+    assert(straddling > 20 && cases.exists(_._1.exists(_._2.isEmpty)))
+    val freshOnly = result(Dedup.timestampDedup(all.where(isFresh), col("ts"), part, col("line_no"), "out"))
+    assert(!freshOnly.exceptAll(full).isEmpty)
+  }
+
   private def refConsecDrop[A](xs: Seq[A]): Seq[A] =
     xs.foldLeft(List.empty[A]) { (acc, x) =>
       if (acc.headOption.contains(x)) acc else x :: acc

@@ -190,7 +190,9 @@ class ElasticSpec extends SparkSpec {
     } yield ls.mkString(sep)
     val samples = Gen.listOfN(146, genBlock).sample.get ++
       Seq("", "\n", "User:x\nUser:y\nUser:z", "😀:😀")
-    val df = samples.zipWithIndex.map(_.swap).toDF("id", "message")
+    // an RDD, not a local Seq: the optimizer would evaluate projections over
+    // a LocalRelation itself, through eval, and codegen would never run
+    val df = spark.sparkContext.parallelize(samples.zipWithIndex.map(_.swap), 2).toDF("id", "message")
     def run(): (Seq[String], Seq[String]) = {
       def canon(rows: Array[org.apache.spark.sql.Row]) =
         rows.map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
@@ -205,10 +207,8 @@ class ElasticSpec extends SparkSpec {
     }
     val (a, b) = run()
     assert(a === b, "codegen path diverged")
-    val prev = spark.conf.get("spark.sql.codegen.wholeStage")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try { val (ai, bi) = run(); assert(ai === bi, "interpreted path diverged") }
-    finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
+    val (ai, bi) = interpreted(run())
+    assert(ai === bi, "interpreted path diverged")
   }
 
   test("messageKey maps every field of all 14 layouts onto the reference's actual message keys") {

@@ -42,18 +42,29 @@ class FingerprintPropSpec extends SparkSpec {
         // supplementary-plane (non-BMP) text: one CODE POINT per character —
         // U+1F600 hashes as 128512, never as its two UTF-16 surrogates
         "a😀b😀" + ("c😀" * 30))
+    // an RDD, not a local Seq: the optimizer would evaluate projections over
+    // a LocalRelation itself, through eval, and codegen would never run
+    val rows = spark.sparkContext.parallelize(samples.zipWithIndex.map { case (s, i) => (i.toLong, s) }, 2)
     for (n <- Seq(2, 16, 24)) {
-      val df = samples.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("id", "text")
+      val df = rows.toDF("id", "text")
         .select(col("id"), expr(s"window_hashes(text, $n)").as("hs"))
       val want = samples.map(s => windowFold(s, n))
       assert(df.orderBy("id").as[(Long, Seq[Long])].collect().map(_._2).toSeq === want,
         s"codegen path diverged at n=$n")
-      val prev = spark.conf.get("spark.sql.codegen.wholeStage")
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      try assert(df.orderBy("id").as[(Long, Seq[Long])].collect().map(_._2).toSeq === want,
+      assert(interpreted(df.orderBy("id").as[(Long, Seq[Long])].collect()).map(_._2).toSeq === want,
         s"interpreted path diverged at n=$n")
-      finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
     }
+  }
+
+  test("WindowHashes.of refuses an (n, modulus) whose int64 slide could overflow") {
+    import graft.functions.WindowHashes
+    val t = col("text")
+    WindowHashes.of(t, 24) // 1e9+7
+    WindowHashes.of(t, 5, 2147483647L) // the d-series shingles
+    WindowHashes.of(t, 3, 1000000000000000003L) // lmFamiliarity: h never reaches p
+    val e = intercept[IllegalArgumentException](WindowHashes.of(t, 24, 1000000000000000003L))
+    assert(e.getMessage.contains("overflows int64"))
+    intercept[IllegalArgumentException](WindowHashes.of(t, 24, Long.MaxValue / 31))
   }
 
   test("window_hashes == substr+ascii chain on supplementary-plane text (code-point semantics)") {

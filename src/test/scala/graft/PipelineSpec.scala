@@ -3,15 +3,18 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
+import graft.operators.Report
 import graft.plans.Pipeline
 import graft.sources.Tables
-import graft.table.SinkTable
+import graft.table.{SinkStats, SinkTable}
 
 /** End-to-end invariants from BASELINE.md:
   *   - routed-row sets equal the oracle by token-array equality per doc_id
   *     (exceptAll both directions empty),
   *   - per-sink (records, bytes) match independent recomputation,
-  *   - resume from a rolled-back manifest reproduces identical sinks.
+  *   - resume from a rolled-back manifest reproduces identical sinks,
+  *   - commits over a growing input equal one run over the final input,
+  *   - the manifests' report conserves the committed rows.
   */
 class PipelineSpec extends SparkSpec {
 
@@ -65,18 +68,132 @@ class PipelineSpec extends SparkSpec {
     assert(after === before)
   }
 
-  test("appendResumable skips already-committed line_no range (no dupes on overlap)") {
+  /** Commit-shaped rows [lo, hi): every row routed to `sink`. */
+  private def rows(lo: Long, hi: Long, sink: String = "oplog") = {
     import spark.implicits._
+    (lo until hi).map(i => (i, s"r$i", sink, 10L + i % 3, true))
+      .toDF("line_no", "v", "sink", "bytes", "parse_ok")
+  }
+
+  test("appendResumable skips already-committed line_no range (no dupes on overlap)") {
     val out = freshDir()
     val t = new SinkTable(out)
-    val part1 = (0L until 100L).map(i => (i, s"r$i")).toDF("line_no", "v")
-    t.commit(part1, 1L)
+    t.commit(rows(0L, 100L), 1L)
     // re-offer an overlapping window [50, 150): only (100,150) may land
-    val part2 = (50L until 150L).map(i => (i, s"r$i")).toDF("line_no", "v")
-    val m = t.appendResumable(part2, 2L)
+    val m = t.appendResumable(rows(50L, 150L), 2L)
     assert(m.rows === 50L)
     assert(t.read(spark).count() === 150L)
     assert(t.read(spark).select("line_no").distinct().count() === 150L)
+  }
+
+  test("a moved table reads its own data, and each commit's files cluster rows by sink") {
+    val src = java.nio.file.Paths.get(freshDir(), "t")
+    val t = new SinkTable(src.toString)
+    t.commit(rows(0L, 30L, "oplog").union(rows(30L, 60L, "zeek")).repartition(1)
+      .sortWithinPartitions(col("line_no") % 2), 1L)
+    val dst = java.nio.file.Paths.get(freshDir(), "moved")
+    Files.move(src, dst)
+    val moved = new SinkTable(dst.toString)
+    assert(moved.read(spark).count() === 60L)
+    assert(moved.read(spark, Seq("line_no")).get.count() === 60L)
+    // one file; its sink column changes value once
+    val sinks = moved.read(spark).select("sink").collect().map(_.getString(0)).toSeq
+    assert(sinks.sliding(2).count(p => p.head != p.last) === 1)
+  }
+
+  /** Appends doc_id slice [lo, hi) of sf0.001 `documents` to `dir`'s copy,
+    * shifted by `shift`; returns the rows added.
+    */
+  private def grow(dir: String, lo: Long, hi: Long, shift: Long = 0L): Long = {
+    val part = Tables.documents(spark, Sf).where(col("doc_id") >= lo && col("doc_id") < hi)
+      .withColumn("doc_id", col("doc_id") + shift)
+    part.coalesce(1).write.mode("append").parquet(s"$dir/documents.parquet")
+    part.count()
+  }
+
+  private val ResultCols = Seq("sink", "doc_id", "tokens", "ts_ns").map(col)
+
+  test("resume: slice-by-slice commits equal one Pipeline.run on the grown input") {
+    val in = freshDir(); val out = freshDir(); val one = freshDir()
+    // sf0.001's timestamps are distinct; the second lap repeats the first's
+    // docs 7000 ids on (line ts is a function of doc_id mod 1000 and mod 7),
+    // so its equal-ts groups straddle the resume points and a commit must
+    // continue them from the committed rows
+    val slices = Seq((0L, 170L, 0L), (170L, 340L, 0L), (340L, 500L, 0L),
+      (0L, 250L, 7000L), (250L, 500L, 7000L))
+    slices.zipWithIndex.foreach { case ((lo, hi, shift), i) =>
+      grow(in, lo, hi, shift)
+      Pipeline.run(spark, in, out, i + 1L)
+    }
+    Pipeline.run(spark, in, one, 1L)
+    val a = new SinkTable(out).read(spark).select(ResultCols: _*)
+    val b = new SinkTable(one).read(spark).select(ResultCols: _*)
+    assert(a.count() === 1000L)
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    // the second lap does collide with the first
+    assert(graft.operators.Parse.parsed(Tables.rawEvents(spark, in))
+      .groupBy("source", "ts_raw_ns").count().where(col("count") > 1).count() > 100)
+  }
+
+  /** Runs `body`; returns its result and the Spark jobs it started. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerCount.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = body
+      org.apache.spark.ListenerCount.drain(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("conservation: manifest report == perSink(read) over commits + rollback; no job after a write") {
+    val in = freshDir(); val out = freshDir()
+    val t = new SinkTable(out)
+    grow(in, 0L, 200L); Pipeline.run(spark, in, out, 1L)
+    grow(in, 200L, 350L); Pipeline.run(spark, in, out, 2L)
+    grow(in, 350L, 500L); Pipeline.run(spark, in, out, 3L)
+    t.rollbackLast() // commit 3's rows are past the resume point again
+    val report = Pipeline.run(spark, in, out, 4L)
+    val (got, collectJobs) = jobsDuring(report.collect())
+    assert(collectJobs === 0, "the report is a local relation")
+    val fromData = Report.perSink(t.read(spark))
+    assert(report.exceptAll(fromData).isEmpty && fromData.exceptAll(report).isEmpty)
+    def total(c: String) = got.map(_.getAs[Long](c)).sum
+    assert(total("records") === 500L)
+    assert(t.manifests.map(_.rows).sum === 500L)
+    assert(t.manifests.map(_.commitId) === Seq(1L, 2L, 4L))
+    assert(total("success_cnt") + total("failed_cnt") === total("records"))
+    // a shuffle-free frame's commit is one job: the write, stats observed on it
+    val (m, commitJobs) = jobsDuring(t.commit(rows(1000L, 1010L), 5L))
+    assert(commitJobs === 1)
+    assert(m.rows === 10L && m.maxLineNo === 1009L)
+    assert(m.sinks === Seq(SinkStats("oplog", 10L, 10L * 11L, 10L, 12L, 10L, 0L)))
+  }
+
+  test("fail loudly: v1 manifest, sinks without ts_raw_ns, a sink outside the declared list") {
+    val v1Base = freshDir()
+    val v1 = new SinkTable(v1Base)
+    val v1Path = java.nio.file.Paths.get(v1Base, "_manifests", "000000000001.json")
+    Files.writeString(v1Path, """{"commit_id":1,"rows":0,"max_line_no":-1,"partitions":[]}""")
+    val e1 = intercept[IllegalArgumentException](v1.manifests)
+    assert(e1.getMessage.contains(v1Path.toString) && e1.getMessage.contains("v1"))
+
+    val out = freshDir()
+    val t = new SinkTable(out)
+    t.commit(rows(0L, 10L), 1L) // committed, but without the dedup lineage
+    val e2 = intercept[IllegalArgumentException](Pipeline.run(spark, Sf, out, 2L))
+    val manifest1 = java.nio.file.Paths.get(out, "_manifests", "000000000001.json")
+    assert(e2.getMessage.contains(manifest1.toString) && e2.getMessage.contains("ts_raw_ns"))
+
+    val e3 = intercept[IllegalArgumentException](t.commit(rows(10L, 20L, sink = "elsewhere"), 2L))
+    assert(e3.getMessage.contains("10 of 10 rows routed to no sink"))
+    assert(t.manifests.map(_.commitId) === Seq(1L))
   }
 
   test("quarantine sink receives exactly the corrupt rows (did % 97 == 0)") {

@@ -42,17 +42,7 @@ class RegexpExtractStructSpec extends SparkSpec {
   }
 
   test("the law holds with whole-stage codegen off (interpreted path)") {
-    // whole-stage off alone still compiles per-operator projections and
-    // predicates; NO_CODEGEN makes them call the expression's eval
-    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try lawViolations().foreach { case (re, bad) => assert(bad === 0L, re) }
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    interpreted(lawViolations()).foreach { case (re, bad) => assert(bad === 0L, re) }
   }
 
   test("null-group regex yields empty string, not null") {
