@@ -147,7 +147,7 @@ object Oracles {
       |  SELECT vec_id, label, list_transform(embedding, x -> cast(x AS double)) AS v
       |  FROM embeddings)""".stripMargin
 
-  /** dot(a,b) in SQL: ordered fold, same order as Spark's aggregate(). */
+  /** dot(a,b) in SQL: ordered fold, same order as Ann.dot's fold. */
   def dotSql(a: String, b: String): String =
     s"list_sum(list_transform(range(1, len($a)+1), i -> ($a)[i] * ($b)[i]))"
 
@@ -169,7 +169,7 @@ object Oracles {
       s"cast(cast(floor($a/256) AS bigint) % 256 AS varchar) || '.' || " +
       s"cast($a % 256 AS varchar)"
 
-  /** Twin of Ann.sketches(kProj=32): exact int64 microunit projections
+  /** Twin of Ann.sketchFrame(kProj=32): exact int64 microunit projections
     * (floor(x·1e6 + 0.5) — the cross-engine-stable rounding), one column per
     * projection row.
     */
@@ -181,8 +181,9 @@ object Oracles {
     s"sk AS (\n  SELECT vec_id,\n    $cols\n  FROM edd)"
   }
 
-  /** Twin of Ann.sketchCos: left-associated double chains over the 32
-    * sketch columns of aliases `q` and `c`.
+  /** Twin of Ann's sketch cosine: left-associated double chains (the
+    * VectorKernels.sketchDot fold) over the 32 sketch columns of aliases
+    * `q` and `c`.
     */
   def skCosSql(q: String, c: String): String = {
     def chain(f: Int => String) = (0 until 32).map(f).mkString(" + ")

@@ -266,13 +266,13 @@ object QueriesOps {
     // ANN recall-evaluation harness as a first-class query — the eval
     // loop a pipeline runs when tuning an index: per query, |approx ∩
     // exact| over the a01 ground truth and the a04 sketch-rerank run,
-    // recall in exact ppm. One equi-join + one aggregate over two top-k
-    // frames of Q·k rows — never corpus-sized regardless of corpus
+    // recall in exact ppm. Both runs come from one shared Q×N frame; the
+    // recall is one equi-join + one aggregate over two top-k frames of
+    // Q·k rows — never corpus-sized regardless of corpus
     "i09_ann_recall" -> ((s, dir) => {
-      val exact = Ann.bruteForceTopK(emb(s, dir), col("vec_id") < 10, k = 5)
-        .select(col("q_id"), col("c_id"))
-      val apx = Ann.sketchRerankTopK(emb(s, dir), col("vec_id") < 10, k = 5)
-        .select(col("q_id").as("aq"), col("c_id").as("ac"))
+      val (exactK, apxK) = Ann.exactAndSketchTopK(emb(s, dir), col("vec_id") < 10, k = 5)
+      val exact = exactK.select(col("q_id"), col("c_id"))
+      val apx = apxK.select(col("q_id").as("aq"), col("c_id").as("ac"))
       exact.join(apx, col("q_id") === col("aq") && col("c_id") === col("ac"), "left")
         .groupBy("q_id").agg(count(col("ac")).as("hits"))
         .select(col("q_id"), col("hits"),
@@ -833,7 +833,7 @@ object QueriesOps {
     // L2 normalization (sequential-fold norm, oracle-exact doubles)
     "i02_embed_normalize" -> ((s, dir) => {
       val v = transform(col("embedding"), x => x.cast("double"))
-      val norm = sqrt(aggregate(zip_with(v, v, (a, b) => a * b), lit(0.0), (acc, x) => acc + x))
+      val norm = sqrt(Ann.dot(v, v))
       emb(s, dir).select(col("vec_id"),
         concat_ws(",", transform(v, x => round(x / norm * 1e6).cast("long"))).as("unit_e6_csv"))
     }),

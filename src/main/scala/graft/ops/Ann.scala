@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorKernels
+
 /** Approximate-nearest-neighbor search over an embedding column.
   *
   * Baseline: brute-force cosine top-k (query set broadcast, corpus scanned
@@ -12,7 +14,7 @@ import org.apache.spark.sql.functions._
   *
   *  - [[sketchRerankTopK]] — compressed-scan + exact rerank: score the
   *    corpus by 32-d sketch cosine (8× less data than the 64-d f32 vectors,
-  *    whole-stage-codegen'd integer arithmetic), keep the top fraction via
+  *    one compiled product chain per pair), keep the top fraction via
   *    a two-pass quantized-histogram threshold (no per-query corpus sort —
   *    per-query window state is bounded by the bucket range at any scale),
   *    re-score only those with exact cosine. Candidate fraction is an exact
@@ -36,14 +38,22 @@ import org.apache.spark.sql.functions._
   * int64 arithmetic over round(x·1e6) microunits — order-independent sums,
   * so DuckDB reproduces them bit-exactly; doubles appear only in final
   * ratios computed in identical expression order on both sides.
+  *
+  * The per-row vector work — the projection sketch, the dot fold and the
+  * sketch product chains — runs in [[VectorKernels]]' compiled loops,
+  * each bit-identical to the Catalyst form (and SQL twin) it replaced.
+  * Embeddings become `array<double>` by a cast, not a `transform`, so
+  * these plans carry no higher-order function.
   */
 object Ann {
 
-  private def asDouble(c: Column): Column = transform(c, x => x.cast("double"))
+  private def asDouble(c: Column): Column = c.cast("array<double>")
 
-  /** Sequential-fold dot product (left-to-right, IEEE double → oracle-exact). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+  /** Sequential-fold dot product (left-to-right from 0.0, IEEE double →
+    * oracle-exact); null on a null array, a null element or unequal
+    * lengths. One compiled loop ([[VectorKernels.dot]]).
+    */
+  def dot(a: Column, b: Column): Column = VectorKernels.dot(a, b)
 
   def cosine(a: Column, b: Column): Column =
     round(dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b))), 6)
@@ -70,16 +80,53 @@ object Ann {
       .select("q_id", "c_id", "cos", "rank")
   }
 
+  /** Q×N scored pairs (q_id, c_id, cos): every query vector against every
+    * other corpus vector (the query side is tiny and broadcasts). Each
+    * vector's norm is folded once per side, not once per pair — the same
+    * `round(dot / (sqrt(dot(q,q)) · sqrt(dot(c,c))), 6)` tree as [[cosine]],
+    * so the values are bit-identical. With `kProj > 0` the frame also
+    * carries the sketch score `ski` = floor(sketch cosine · 1e6) and
+    * `has_sk`, false where either side has no sketch (a null or empty
+    * embedding, which every sketch frame drops).
+    */
+  private def scoredPairs(emb: DataFrame, queryFilter: Column, kProj: Int = 0): DataFrame = {
+    val v = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val base = v.withColumn("n", sqrt(dot(col("v"), col("v"))))
+    val vs = if (kProj == 0) base
+      else base.withColumn("sk", VectorKernels.sketch(col("v"), kProj))
+        .withColumn("skn", sketchNorm(col("sk")))
+    def side(df: DataFrame, id: String, p: String): DataFrame = df.select(
+      col("vec_id").as(id) +: df.columns.toSeq.filter(_ != "vec_id").map(c => col(c).as(p + c)): _*)
+    val pairs = side(vs.where(queryFilter), "q_id", "q")
+      .join(side(vs, "c_id", "c"), col("c_id") =!= col("q_id"))
+    val cos = round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("cos")
+    if (kProj == 0) pairs.select(col("q_id"), col("c_id"), cos)
+    else pairs.select(col("q_id"), col("c_id"), cos,
+      sketchScore(col("qsk"), col("qskn"), col("csk"), col("cskn")).as("ski"),
+      (col("qsk").isNotNull && col("csk").isNotNull).as("has_sk"))
+  }
+
   /** Brute-force cosine top-k: for each query vector, the k nearest corpus
     * vectors (excluding itself). Deterministic tie-break on (cos desc, id).
     */
-  def bruteForceTopK(emb: DataFrame, queryFilter: Column, k: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val q = e.where(queryFilter).select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val c = e.select(col("vec_id").as("c_id"), col("v").as("cv"))
-    val scored = q.join(c, col("c_id") =!= col("q_id")) // broadcast(q) auto: q is tiny
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-    topKPerQuery(scored.select("q_id", "c_id", "cos"), k)
+  def bruteForceTopK(emb: DataFrame, queryFilter: Column, k: Int): DataFrame =
+    topKPerQuery(scoredPairs(emb, queryFilter), k)
+
+  /** The a01 exact top-k and the a04 sketch-rerank top-k of the same
+    * queries, both from ONE checkpointed Q×N frame carrying the exact
+    * `cos` and the sketch `ski` ([[scoredPairs]]): the exact arm ranks it
+    * directly, the sketch arm applies [[sketchCut]] and takes its
+    * candidates' `cos` from the same rows — no second pair build, no
+    * embedding re-join for the rerank. Row for row equal to
+    * `(bruteForceTopK, sketchRerankTopK)` at that path's default
+    * [[SketchKProj]] and [[SketchCandDiv]].
+    */
+  def exactAndSketchTopK(emb: DataFrame, queryFilter: Column, k: Int): (DataFrame, DataFrame) = {
+    val scored = scoredPairs(emb, queryFilter, SketchKProj).localCheckpoint(true)
+    val exact = topKPerQuery(scored.select("q_id", "c_id", "cos"), k)
+    val apx = topKPerQuery(
+      sketchCut(scored.where(col("has_sk")), SketchCandDiv).select("q_id", "c_id", "cos"), k)
+    (exact, apx)
   }
 
   /** Semi-hard negative mining (FaceNet, Schroff et al. 2015 §3.2): per
@@ -100,12 +147,8 @@ object Ann {
     */
   def semiHardNegatives(emb: DataFrame, queryFilter: Column, k: Int,
                         marginE6: Long): DataFrame = {
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val q = e.where(queryFilter).select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val c = e.select(col("vec_id").as("c_id"), col("v").as("cv"))
-    val scored = q.join(c, col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"),
-        round(cosine(col("qv"), col("cv")) * 1e6).cast("long").as("cos"))
+    val scored = scoredPairs(emb, queryFilter)
+      .select(col("q_id"), col("c_id"), round(col("cos") * 1e6).cast("long").as("cos"))
       .localCheckpoint(true)
     val pos = topKPerQuery(scored, 1)
       .select(col("q_id"), col("c_id").as("pos_id"), col("cos").as("pos_cos"))
@@ -122,7 +165,8 @@ object Ann {
   /** Projection weight for sketch row t (0-based), component i0 (1-based):
     * an LCG with a per-row multiplier so rows are decorrelated (a shared
     * multiplier makes every row the same sequence shifted — measured recall
-    * collapse). Values in [-3, 3]; pure int64, identical in SQL.
+    * collapse). Values in [-3, 3]; pure int64, identical in SQL and in the
+    * [[VectorKernels.sketch]] loop.
     */
   def projWeight(t: Int, i0: Column): Column =
     (i0 * lit((2L * t + 3L) * 2654435761L) + lit((t + 1L) * 1013904223L)) % 1000003L % 7L - 3L
@@ -131,35 +175,53 @@ object Ann {
   def projWeightSql(t: Int, i0: String): String =
     s"(($i0 * ${(2L * t + 3L) * 2654435761L} + ${(t + 1L) * 1013904223L}) % 1000003 % 7 - 3)"
 
-  /** Integer projection sketches: kProj int64 columns s0..s{kProj-1} per
-    * vector, from round(x·1e6) microunits. Computed with posexplode +
-    * groupBy integer sums — codegen'd, map-side combined, order-independent
-    * (exact), one shuffled row per vector. This is the 100 TB shape: the
-    * sketch table is the small scan-side artifact.
+  /** Integer projection sketches as ONE column: `(vec_id, sk)`, where `sk`
+    * is an `array<bigint>` of kProj slots Σ_i floor(x_i·1e6 + 0.5)·
+    * projWeight(t, i) ([[VectorKernels.sketch]]) — a map-only projection,
+    * computed per row, no shuffle. This is the 100 TB shape: the sketch
+    * table is the small scan-side artifact.
+    *
+    * Rows whose embedding is null or empty have no sketch and drop out; a
+    * row whose elements are all null keeps kProj null slots. `vec_id` must
+    * be unique per row: the sketch is per row, like the SQL twin `SkCte`
+    * (a duplicate id yields two sketch rows, not one summed sketch).
     */
-  def sketches(emb: DataFrame, kProj: Int): DataFrame = {
-    val px = emb
-      .select(col("vec_id"), posexplode(asDouble(col("embedding"))).as(Seq("p", "x")))
-      .select(col("vec_id"), (col("p") + 1).cast("long").as("i0"),
-        floor(col("x") * 1e6 + lit(0.5)).cast("long").as("xi"))
-    val aggs = (0 until kProj).map(t => sum(col("xi") * projWeight(t, col("i0"))).as(s"s$t"))
-    px.groupBy("vec_id").agg(aggs.head, aggs.tail: _*)
+  def sketchFrame(emb: DataFrame, kProj: Int): DataFrame =
+    emb.select(col("vec_id"), VectorKernels.sketch(col("embedding"), kProj).as("sk"))
+      .where(col("sk").isNotNull)
+
+  /** The sketch frame in column form, s0..s{kProj-1}, for the callers
+    * that read individual slots (LSH sign buckets, Hamming codes, the IVF
+    * int64 cell scores).
+    */
+  def sketches(emb: DataFrame, kProj: Int): DataFrame =
+    slots(sketchFrame(emb, kProj), "vec_id", "sk", "s", kProj)
+
+  /** `id` plus the array column `arr` spread into columns prefix0..prefix{n-1}. */
+  private def slots(df: DataFrame, id: String, arr: String, prefix: String, n: Int): DataFrame =
+    df.select(col(id) +: (0 until n).map(t => col(arr).getItem(t).as(s"$prefix$t")): _*)
+
+  /** sqrt of a sketch's self product chain — its norm, folded once per vector. */
+  private[graft] def sketchNorm(sk: Column): Column = sqrt(VectorKernels.sketchDot(sk, sk))
+
+  /** floor(sketch cosine · 1e6): the product chain over the norms, in the
+    * SQL twin's `(d) / (sqrt(nq) * sqrt(nc))` order.
+    */
+  private[graft] def sketchScore(qsk: Column, qn: Column, csk: Column, cn: Column): Column =
+    floor(VectorKernels.sketchDot(qsk, csk) / (qn * cn) * lit(1e6)).cast("long")
+
+  /** Q×N sketch scores (q_id, c_id, ski) over a sketch frame. */
+  private def sketchPairs(sk: DataFrame, queryFilter: Column): DataFrame = {
+    def side(df: DataFrame, id: String, p: String): DataFrame =
+      df.select(col("vec_id").as(id), col("sk").as(s"${p}sk"), sketchNorm(col("sk")).as(s"${p}n"))
+    side(sk.where(queryFilter), "q_id", "q")
+      .join(side(sk, "c_id", "c"), col("c_id") =!= col("q_id"))
+      .select(col("q_id"), col("c_id"),
+        sketchScore(col("qsk"), col("qn"), col("csk"), col("cn")).as("ski"))
   }
 
-  /** Sketch cosine between prefixed sketch column sets — a flat codegen'd
-    * arithmetic chain (no HOFs), left-associated like its SQL twin.
-    */
-  private def sketchCos(kProj: Int, qp: String, cp: String): Column = {
-    def chain(f: Int => Column): Column = (0 until kProj).map(f).reduce(_ + _)
-    val d = chain(t => col(s"$qp$t").cast("double") * col(s"$cp$t"))
-    val nq = sqrt(chain(t => col(s"$qp$t").cast("double") * col(s"$qp$t")))
-    val nc = sqrt(chain(t => col(s"$cp$t").cast("double") * col(s"$cp$t")))
-    d / (nq * nc)
-  }
-
-  /** Compressed-scan + exact-rerank top-k, two-pass threshold form: keep
-    * every candidate whose sketch cosine clears the per-query cut value,
-    * exact-cosine only those.
+  /** The per-query candidate cut over scored rows (q_id, ski, …): every row
+    * whose sketch score clears the query's threshold, all columns kept.
     *
     * The cut is derived WITHOUT ranking the corpus per query (a
     * `Window.partitionBy(q_id)` rank over the Q×N scored rows would sort
@@ -170,28 +232,13 @@ object Ann {
     * is bounded by the 2·1e6+1 bucket range REGARDLESS of corpus size —
     * and the threshold bucket (largest bucket at which the descending
     * cumulative count reaches ceil(cnt/candDiv)) falls out of a window over
-    * that bounded histogram. Pass 2 re-scans the sketch pairs and keeps
+    * that bounded histogram. Pass 2 re-scans the scored rows and keeps
     * ski ≥ threshold; boundary-bucket ties are all kept (candidates may
     * slightly exceed cnt/candDiv — recall can only improve, and both
-    * engines keep the identical set, so the oracle stays exact).
+    * engines keep the identical set, so the oracle stays exact). Both
+    * passes read `scored`, so the caller materializes it once.
     */
-  def sketchRerankTopK(emb: DataFrame, queryFilter: Column, k: Int,
-                       kProj: Int = 32, candDiv: Int = 5): DataFrame = {
-    // materialized once: both passes consume it (at cluster scale the
-    // sketch table is the persisted compressed-scan artifact)
-    val sk = sketches(emb, kProj).localCheckpoint(true)
-    val qs = sk.where(queryFilter)
-      .select(col("vec_id").as("q_id") +: (0 until kProj).map(t => col(s"s$t").as(s"qs$t")): _*)
-    val cs = sk
-      .select(col("vec_id").as("c_id") +: (0 until kProj).map(t => col(s"s$t").as(s"cs$t")): _*)
-    // materialized once: the Q×N sketch-cosine join feeds BOTH the histogram
-    // pass and the threshold re-scan — without this the dominant join + 32-term
-    // cosine chain runs twice per query batch (at cluster scale: persist to the
-    // shuffle service / a scratch table instead of local disk)
-    val scored = qs.join(cs, col("c_id") =!= col("q_id"))
-      .withColumn("ski", floor(sketchCos(kProj, "qs", "cs") * lit(1e6)).cast("long"))
-      .select("q_id", "c_id", "ski")
-      .localCheckpoint(true)
+  private def sketchCut(scored: DataFrame, candDiv: Int): DataFrame = {
     val hist = scored.groupBy("q_id", "ski").agg(count(lit(1)).as("n"))
     val wCum = Window.partitionBy(col("q_id")).orderBy(col("ski").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -200,10 +247,27 @@ object Ann {
       .withColumn("cnt", sum(col("n")).over(Window.partitionBy(col("q_id"))))
       .where(col("cum") >= expr(s"(cnt + ${candDiv - 1}) div $candDiv"))
       .groupBy("q_id").agg(max(col("ski")).as("thr"))
-    val cand = scored.join(thr, "q_id")
-      .where(col("ski") >= col("thr"))
-      .select("q_id", "c_id")
-    rerankExact(emb, cand, k)
+    scored.join(thr, "q_id").where(col("ski") >= col("thr")).drop("thr")
+  }
+
+  /** Default sketch width and candidate divisor (a fifth of the corpus per
+    * query) of the sketch-rerank path, shared by [[exactAndSketchTopK]].
+    */
+  private val SketchKProj = 32
+  private val SketchCandDiv = 5
+
+  /** Compressed-scan + exact-rerank top-k: keep every candidate whose
+    * sketch cosine clears the per-query cut ([[sketchCut]]), exact-cosine
+    * only those.
+    */
+  def sketchRerankTopK(emb: DataFrame, queryFilter: Column, k: Int,
+                       kProj: Int = SketchKProj, candDiv: Int = SketchCandDiv): DataFrame = {
+    // materialized once: the Q×N sketch-score join feeds BOTH the histogram
+    // pass and the threshold re-scan — without this the dominant join runs
+    // twice per query batch (at cluster scale: persist to the shuffle
+    // service / a scratch table instead of local disk)
+    val scored = sketchPairs(sketchFrame(emb, kProj), queryFilter).localCheckpoint(true)
+    rerankExact(emb, sketchCut(scored, candDiv).select("q_id", "c_id"), k)
   }
 
   /** Exact-cosine rerank of (q_id, c_id) candidate pairs → top-k per query
@@ -402,25 +466,6 @@ object Ann {
       .select("q_id", "c_id")
   }
 
-  /** IVF with data-derived centroids, assignment in SKETCH space: centroids
-    * are stride-sampled corpus vectors (vec_id ≡ 7 mod 13, first nCells by
-    * id — a seeded sample that any engine reproduces), and both corpus and
-    * centroids are represented by their shared 32-d integer sketches (the
-    * same persisted artifact a04 scans — coarse quantization in the
-    * projected space, the standard IVF-on-reduced-dim construction).
-    * Corpus vectors live in their best cell, queries probe their top nProbe
-    * cells; the final rerank is exact full-dim cosine. The assignment is a
-    * broadcast cross join with a flat 32-term int64 chain per row —
-    * whole-stage codegen, no explode, ~2.5× less arithmetic than full-dim
-    * microunit assignment (measured 3.5 → ~1.5 s at sf0.1).
-    *
-    * Cell count must scale with the corpus: the candidate stage equi-joins
-    * on `cid`, so nCells IS the shuffle-key cardinality — a handful of
-    * cells funnels the corpus through a handful of reducers. Default 256
-    * (≈√N at the bench scale; at real scale pick 1024–4096), with nProbe
-    * sized to hold the candidate fraction ≈ nProbe/nCells at the target
-    * recall/cost point.
-    */
   /** Lloyd k-means in sketch space — the clustering stage of semantic
     * dedup (SemDeDup: cluster embeddings, then prune near-identical
     * members within each cluster) and of a trained-IVF index build.
@@ -428,48 +473,79 @@ object Ann {
     * Cross-engine-exact by construction: centroids are SUMS, not means —
     * ranking by dot(v, Σc)/|Σc| equals ranking by dot(v, Σc/n)/|Σc/n|
     * (the member count cancels), so no division ever happens and every
-    * centroid component stays an exact int64. Scores are computed as
-    * left-associated double chains identical to the SQL twin (products
-    * exceed 2^53, but IEEE rounding is deterministic and both engines
-    * evaluate the same expression tree). Init = the same stride-sampled
-    * corpus rows as [[ivfTopK]]; iterations unroll into the oracle as one
-    * CTE pair each.
+    * centroid component stays an exact int64. Scores are left-to-right
+    * double product folds ([[VectorKernels.sketchDot]]) equal to the SQL
+    * twin's chains (products exceed 2^53, but IEEE rounding is
+    * deterministic and both engines add in the same order). Init = the same
+    * stride-sampled corpus rows as [[ivfTopK]]; iterations unroll into the
+    * oracle as one CTE pair each.
     *
     * Per iteration: one broadcast cross-join assignment (k·N codegen'd
-    * rows, window bounded by k rows per vector) + one map-side-combined
-    * sum aggregate — no driver-side state; empty clusters drop from the
+    * rows) whose per-vector argmax carries the vector's sketch as a
+    * trailing field, then one map-side-combined sum aggregate over those
+    * carried sketches — no join back to the sketch frame, no driver-side
+    * state beyond the ≤ k-row model; empty clusters drop from the
     * centroid table identically in both engines.
+    *
+    * Centroid frames are `(cid, c array<bigint>)`; the sketch frame is
+    * [[sketchCheckpoint]].
     */
-  private def kmAssign(sk: DataFrame, cents: DataFrame, kProj: Int): DataFrame = {
-    val dotChain = (0 until kProj).map(t => col(s"s$t").cast("double") * col(s"c$t")).reduce(_ + _)
-    val cnormChain = (0 until kProj).map(t => col(s"c$t").cast("double") * col(s"c$t")).reduce(_ + _)
-    // per-vector argmax as a map-side-combined AGGREGATE, not a window: the
-    // window form exchanged and sorted all k·N scored rows per assignment
-    // pass; max(struct(score, -cid)) picks the same (score desc, cid asc)
-    // winner — struct ordering compares score first, then -cid, so ties
-    // break to the SMALLEST cid exactly like the row_number orderBy — and
-    // the broadcast cross join preserves sk's partitioning, so the
-    // aggregate needs no exchange at all (guide §2.3/§2.4).
-    sk.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cid"),
-        (dotChain / sqrt(cnormChain)).as("score"))
-      .groupBy("vec_id")
-      .agg(max(struct(col("score"), (-col("cid")).as("nc"))).as("m"))
-      .select(col("vec_id"), (-col("m.nc")).as("cid"))
+  private def sketchCheckpoint(emb: DataFrame, kProj: Int): DataFrame =
+    // materialized once: every assignment pass re-reads it. It is NOT
+    // repartitioned by vec_id first, so each per-vector argmax below
+    // exchanges its N partial-aggregate rows. Measured: such a partitioning
+    // does not survive the checkpoint (AQE coalesces the shuffle, and the
+    // checkpoint scan reports UnknownPartitioning), so the repartition only
+    // added a shuffle — i12 at sf0.01 ran 17 jobs / 28 stages with it,
+    // 16 / 26 without.
+    sketchFrame(emb, kProj).localCheckpoint(true)
+
+  /** Per-vector argmax over the broadcast centroids: the winner of
+    * max(struct(score, -cid, carry…)), i.e. score desc, then the SMALLEST
+    * cid — exactly the oracle's row_number() ORDER BY score DESC, cid.
+    * (score, -cid) is already a total order per vector (cid is unique), so
+    * a carried field never changes which row wins. `carry` expressions may
+    * read `sk`, `d` (the pair's product chain), `skn` and `cn` (the two
+    * norms).
+    */
+  private def kmWinners(sk: DataFrame, cents: DataFrame,
+                        carry: (String, Column)*): DataFrame = {
+    val c = broadcast(cents.select(col("cid"), col("c"), sketchNorm(col("c")).as("cn")))
+    val pairs = sk.select(col("vec_id"), col("sk"), sketchNorm(col("sk")).as("skn"))
+      .crossJoin(c)
+      .select(col("vec_id"), col("cid"), col("sk"), col("skn"), col("cn"),
+        VectorKernels.sketchDot(col("sk"), col("c")).as("d"))
+    val fields = (col("d") / col("cn")).as("score") +: (-col("cid")).as("nc") +:
+      carry.map { case (n, e) => e.as(n) }
+    pairs.groupBy("vec_id").agg(max(struct(fields: _*)).as("m"))
+      .select(col("vec_id") +: (-col("m.nc")).as("cid") +:
+        carry.map { case (n, _) => col(s"m.$n").as(n) }: _*)
   }
 
-  /** A ≤ k-row MODEL ARTIFACT rebuilt as a local relation: collect the
+  /** A bounded MODEL ARTIFACT rebuilt as a local relation: collect the
     * trained rows and re-create them as a literal frame. Same legitimacy
     * class as the collected DSIR model (a bounded trained artifact, never
     * corpus-sized); vs localCheckpoint it truncates the per-iteration
     * lineage without a checkpoint job, and every later broadcast build is
-    * a LocalTableScan instead of replaying a query stage.
+    * a LocalTableScan instead of replaying a query stage. The collect
+    * reads at most `maxRows + 1` rows and fails if the model has more than
+    * `maxRows`, so a broad input fails loudly instead of pulling a
+    * corpus-sized frame into the driver.
     */
-  private[ops] def localModel(df: DataFrame): DataFrame = {
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(df.collect(): _*)
-    df.sparkSession.createDataFrame(rows, df.schema)
+  def localModel(df: DataFrame, maxRows: Int): DataFrame = {
+    val rows = df.limit(maxRows + 1).collect()
+    require(rows.length <= maxRows,
+      s"localModel: the model frame has more than maxRows = $maxRows rows; " +
+        "it is collected to the driver, so it must stay model-sized")
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
+
+  /** The stride-sampled seed model (cid, c): the first `n` vectors with
+    * vec_id ≡ 7 mod 13, shared by the k-means init and the IVF cells.
+    */
+  private def seedCents(sk: DataFrame, n: Int): DataFrame =
+    localModel(sk.where(col("vec_id") % 13 === 7).orderBy(col("vec_id")).limit(n)
+      .select(col("vec_id").as("cid"), col("sk").as("c")), n)
 
   /** The trained sum-centroids after `iters` Lloyd rounds — shared by
     * [[kmeansSketch]] and the i12 quality report.
@@ -479,20 +555,19 @@ object Ann {
     // centroids — materializing it the same way makes ALL iterations'
     // plans shape-identical (sk × LocalRelation → aggregates), so the
     // generated-class cache compiles one round and reuses it for the rest
-    var cents = localModel(
-      sk.where(col("vec_id") % 13 === 7).orderBy(col("vec_id")).limit(k)
-        .select(col("vec_id").as("cid") +: (0 until kProj).map(t => col(s"s$t").as(s"c$t")): _*))
+    var cents = seedCents(sk, k)
+    val sums = (0 until kProj).map(t => sum(col("sk").getItem(t)).as(s"c$t"))
     for (_ <- 1 to iters) {
-      val sums = (0 until kProj).map(t => sum(col(s"s$t")).as(s"c$t"))
-      cents = localModel(kmAssign(sk, cents, kProj).join(sk, "vec_id")
-        .groupBy("cid").agg(sums.head, sums.tail: _*))
+      cents = localModel(kmWinners(sk, cents, "sk" -> col("sk"))
+        .groupBy("cid").agg(sums.head, sums.tail: _*)
+        .select(col("cid"), array((0 until kProj).map(t => col(s"c$t")): _*).as("c")), k)
     }
     cents
   }
 
   def kmeansSketch(emb: DataFrame, k: Int = 16, iters: Int = 2, kProj: Int = 32): DataFrame = {
-    val sk = sketches(emb, kProj).localCheckpoint(true)
-    kmAssign(sk, kmCents(sk, k, iters, kProj), kProj)
+    val sk = sketchCheckpoint(emb, kProj)
+    kmWinners(sk, kmCents(sk, k, iters, kProj))
       .select(col("vec_id"), col("cid").as("cluster"))
   }
 
@@ -514,61 +589,58 @@ object Ann {
     */
   def kmeansQuality(emb: DataFrame, k: Int = 16, iters: Int = 2,
                     kProj: Int = 32): DataFrame = {
-    val sk = sketches(emb, kProj).localCheckpoint(true)
+    val sk = sketchCheckpoint(emb, kProj)
     val cents = kmCents(sk, k, iters, kProj) // already a ≤ k-row local model
-    val dotF = (0 until kProj).map(t => col(s"s$t").cast("double") * col(s"c$t")).reduce(_ + _)
-    val knorm = (0 until kProj).map(t => col(s"s$t").cast("double") * col(s"s$t")).reduce(_ + _)
-    val cnorm = (0 until kProj).map(t => col(s"c$t").cast("double") * col(s"c$t")).reduce(_ + _)
     // ONE fused pass computes the final assignment AND the member→centroid
-    // cosine: the old shape ran kmAssign (a full sk×cents scan), then
-    // re-joined sk and cents back just to recompute the same dot products.
-    // The winner's ce6 rides the argmax struct as a trailing field —
-    // (score, -cid) is already a total order per vector (cid is unique),
-    // so the extra field never influences which row wins, and both the
-    // score and ce6 expressions are byte-identical to the unfused forms.
-    val scored = sk.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cid"),
-        (dotF / sqrt(cnorm)).as("score"),
-        floor(dotF / (sqrt(knorm) * sqrt(cnorm)) * 1e6).cast("long").as("ce6"))
-    val win = scored.groupBy("vec_id")
-      .agg(max(struct(col("score"), (-col("cid")).as("nc"), col("ce6"))).as("m"))
-      .select(col("vec_id"), (-col("m.nc")).as("cid"), col("m.ce6").as("ce6"))
+    // cosine: the winner's ce6 rides the argmax struct as a trailing field,
+    // from the same product chain the score divides
+    val win = kmWinners(sk, cents,
+      "ce6" -> floor(col("d") / (col("skn") * col("cn")) * 1e6).cast("long"))
     val per = win
       .groupBy("cid").agg(count(lit(1)).as("n"), sum(col("ce6")).as("se"))
       .select(col("cid").as("cluster"), col("n"),
         expr("(se + n * 1000000) div n - 1000000").as("mean_cos_e6"))
-    val c2 = cents.select(col("cid").as("cid2") +:
-      (0 until kProj).map(t => col(s"c$t").as(s"d$t")): _*)
-    val dotCC = (0 until kProj).map(t => col(s"c$t").cast("double") * col(s"d$t")).reduce(_ + _)
-    val n2 = (0 until kProj).map(t => col(s"d$t").cast("double") * col(s"d$t")).reduce(_ + _)
-    val nn = cents.crossJoin(broadcast(c2)).where(col("cid") =!= col("cid2"))
-      .withColumn("ce6", floor(dotCC / (sqrt(cnorm) * sqrt(n2)) * 1e6).cast("long"))
+    val cn = cents.select(col("cid"), col("c"), sketchNorm(col("c")).as("cn"))
+    val c2 = cn.select(col("cid").as("cid2"), col("c").as("c2"), col("cn").as("cn2"))
+    val nn = cn.crossJoin(broadcast(c2)).where(col("cid") =!= col("cid2"))
+      .withColumn("ce6",
+        floor(VectorKernels.sketchDot(col("c"), col("c2")) / (col("cn") * col("cn2")) * 1e6)
+          .cast("long"))
       .groupBy("cid").agg(max(col("ce6")).as("nn_cent_cos_e6"))
     per.join(nn, per("cluster") === nn("cid")).drop("cid")
   }
 
+  /** IVF with data-derived centroids, assignment in SKETCH space: centroids
+    * are stride-sampled corpus vectors (vec_id ≡ 7 mod 13, first nCells by
+    * id — a seeded sample that any engine reproduces), and both corpus and
+    * centroids are represented by their shared 32-d integer sketches (the
+    * same persisted artifact a04 scans — coarse quantization in the
+    * projected space, the standard IVF-on-reduced-dim construction).
+    * Corpus vectors live in their best cell, queries probe their top nProbe
+    * cells; the final rerank is exact full-dim cosine. The assignment is a
+    * broadcast cross join with a flat 32-term int64 chain per row —
+    * whole-stage codegen, no explode, ~2.5× less arithmetic than full-dim
+    * microunit assignment (measured 3.5 → ~1.5 s at sf0.1).
+    *
+    * Cell count must scale with the corpus: the candidate stage equi-joins
+    * on `cid`, so nCells IS the shuffle-key cardinality — a handful of
+    * cells funnels the corpus through a handful of reducers. Default 256
+    * (≈√N at the bench scale; at real scale pick 1024–4096), with nProbe
+    * sized to hold the candidate fraction ≈ nProbe/nCells at the target
+    * recall/cost point.
+    */
   def ivfTopK(emb: DataFrame, queryFilter: Column, k: Int,
               nCells: Int = 256, nProbe: Int = 32, kProj: Int = 32): DataFrame =
     rerankExact(emb, ivfPairs(emb, queryFilter, nCells, nProbe, kProj), k)
 
-  /** The IVF coarse assignment ranks shared by [[ivfTopK]]/[[ivfPqTopK]]
-    * (via ivfPairs — the distinct (q_id, c_id) candidate pairs where the
-    * corpus vector's best cell is among the query's nProbe probed cells;
-    * see [[ivfTopK]]'s scaladoc for the shuffle-key and exactness
-    * analysis) and the i11 cell-balance report: per vector, centroids
-    * ranked by sketch-space cosine, cut at nProbe.
-    */
-  /** The shared IVF coarse artifacts: the checkpointed sketch frame and the
-    * nCells stride-sampled sketch-space centroids.
+  /** The shared IVF coarse artifacts, in column form for the int64 cell
+    * scores: the checkpointed sketch frame and the nCells stride-sampled
+    * sketch-space centroids (a ≤ nCells-row local model, evaluated once
+    * instead of once per broadcast build).
     */
   private def ivfBase(emb: DataFrame, nCells: Int, kProj: Int): (DataFrame, DataFrame) = {
-    val sk = sketches(emb, kProj).localCheckpoint(true)
-    // ≤ nCells-row coarse-centroid model as a local relation (see
-    // [[localModel]]): evaluated once instead of once per broadcast build
-    val cents = localModel(
-      sk.where(col("vec_id") % 13 === 7).orderBy(col("vec_id")).limit(nCells)
-        .select(col("vec_id").as("cid") +: (0 until kProj).map(t => col(s"s$t").as(s"c$t")): _*))
-    (sk, cents)
+    val sk = sketchCheckpoint(emb, kProj)
+    (slots(sk, "vec_id", "sk", "s", kProj), slots(seedCents(sk, nCells), "cid", "c", "c", kProj))
   }
 
   /** per (vector, centroid) int64 sketch dot; within a vector the rank by
@@ -588,7 +660,8 @@ object Ann {
     * index-build artifact the i11 balance report audits. The per-vector
     * argmax is a map-side-combined aggregate (same (score desc, cid)
     * winner as the old rank-1 window via max(struct(score, -cid)) — see
-    * [[kmAssign]]); the N×nCells scored frame never exchanges or sorts.
+    * [[kmWinners]]); the N×nCells scored frame is never sorted, and only
+    * its N per-vector partial rows exchange.
     */
   def ivfAssignment(emb: DataFrame, nCells: Int = 256,
                     kProj: Int = 32): DataFrame = {
@@ -601,11 +674,16 @@ object Ann {
       .agg(max(struct(col("score"), (-col("cid")).as("nc"))).as("m"))
       .select(col("vec_id"), (-col("m.nc")).as("cid"))
 
+  /** The distinct (q_id, c_id) candidate pairs where the corpus vector's
+    * best cell is among the query's nProbe probed cells — shared by
+    * [[ivfTopK]] and [[ivfPqTopK]] (see [[ivfTopK]]'s scaladoc for the
+    * shuffle-key and exactness analysis).
+    */
   private def ivfPairs(emb: DataFrame, queryFilter: Column,
                        nCells: Int, nProbe: Int, kProj: Int): DataFrame = {
     val (sk, cents) = ivfBase(emb, nCells, kProj)
     // corpus best cell: aggregate argmax over the checkpointed sk — one
-    // no-exchange pass (the window form sorted all N×nCells rows); the
+    // map-side-combined pass (the window form sorted all N×nCells rows); the
     // query probe list re-scores ONLY the query vectors (|Q|×nCells rows),
     // so its bounded rank window costs nothing at any corpus size
     val corpusCell = bestCellAgg(cellScores(sk, cents, kProj))
@@ -661,15 +739,8 @@ object Ann {
     */
   def sketchTopK(emb: DataFrame, queryFilter: Column, k: Int,
                  kProj: Int = 32): DataFrame = {
-    val sk = sketches(emb, kProj).localCheckpoint(true)
-    val qs = sk.where(queryFilter)
-      .select(col("vec_id").as("q_id") +: (0 until kProj).map(t => col(s"s$t").as(s"qs$t")): _*)
-    val cs = sk
-      .select(col("vec_id").as("c_id") +: (0 until kProj).map(t => col(s"s$t").as(s"cs$t")): _*)
-    val scored = qs.join(cs, col("c_id") =!= col("q_id"))
-      .withColumn("cos", floor(sketchCos(kProj, "qs", "cs") * lit(1e6)).cast("long"))
-      .select("q_id", "c_id", "cos")
-    topKPerQuery(scored, k)
+    val scored = sketchPairs(sketchFrame(emb, kProj), queryFilter)
+    topKPerQuery(scored.withColumnRenamed("ski", "cos"), k)
       .select(col("q_id"), col("c_id"), col("cos").as("ski"), col("rank"))
   }
 
@@ -693,6 +764,12 @@ object Ann {
     fused.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
 
+  /** The most rows [[mmrSelect]]'s running selection may hold: 20 000
+    * queries at k = 5. A queryFilter that matches a corpus-sized query set
+    * fails loudly instead of collecting it to the driver.
+    */
+  private val MmrMaxSelected = 100000
+
   /** Maximal Marginal Relevance diversified top-k (Carbonell & Goldstein
     * 1998): from each query's `poolK` nearest candidates, greedily pick k
     * results maximizing λ·relevance − (1−λ)·max-similarity-to-already-
@@ -712,6 +789,9 @@ object Ann {
     * aggregate, never a corpus-wide window. Work is (queries × poolK²) ×
     * k — linear in the query count, independent of corpus size after the
     * pool cut.
+    *
+    * The running selection (≤ Q·k rows) is collected to the driver each
+    * round ([[localModel]]), bounded by [[MmrMaxSelected]].
     */
   def mmrSelect(emb: DataFrame, queryFilter: Column, poolK: Int = 20,
                 k: Int = 5, lambdaPpm: Long = 700000L): DataFrame = {
@@ -740,7 +820,7 @@ object Ann {
     // instead of re-materializing a query-stage chain
     var selected = localModel(argmax(
       pool.select(col("q_id"), col("c_id"), (col("rel") * lambdaPpm).as("mmr")),
-      pick = 1))
+      pick = 1), MmrMaxSelected)
     (2 to k).foreach { i =>
       val selIds = selected.select(col("q_id"), col("c_id"))
       val cand = pool.join(selIds, Seq("q_id", "c_id"), "left_anti")
@@ -751,7 +831,7 @@ object Ann {
       val scored = cand.join(maxsim, Seq("q_id", "c_id"))
         .select(col("q_id"), col("c_id"),
           (col("rel") * lambdaPpm - col("maxsim") * mu).as("mmr"))
-      selected = localModel(selected.unionByName(argmax(scored, i)))
+      selected = localModel(selected.unionByName(argmax(scored, i)), MmrMaxSelected)
     }
     selected
   }

@@ -302,7 +302,8 @@ object CurationOps {
       val top = Ann.localModel(
         pairs.orderBy(col("freq").desc, col("sym"), col("nxt")).limit(topM)
           .withColumn("rank", row_number().over(
-            Window.partitionBy(lit(0)).orderBy(col("freq").desc, col("sym"), col("nxt")))))
+            Window.partitionBy(lit(0)).orderBy(col("freq").desc, col("sym"), col("nxt")))),
+        topM)
       val t1 = top.where(col("rank") === 1)
         .select(col("sym").as("ml"), col("nxt").as("mr"))
       val marked = withNext.crossJoin(broadcast(t1))

@@ -528,7 +528,7 @@ object DedupOps {
     * sequential double fold (bit-identical in the SQL oracle).
     */
   def embeddingNearDup(emb: DataFrame, window: Int, minCos: Double): DataFrame = {
-    val asD = transform(col("embedding"), x => x.cast("double"))
+    val asD = col("embedding").cast("array<double>")
     val e = emb.select(col("vec_id"), col("label"), asD.as("v"))
     // blocking key = (label, id-block): side A explodes to blocks
     // {⌊a/w⌋, ⌊a/w⌋+1} so any b with 0 < b−a ≤ w lands in exactly one
@@ -539,12 +539,9 @@ object DedupOps {
         explode(array(floor(col("vec_id") / window), floor(col("vec_id") / window) + 1)).as("blk"))
     val b = e.select(col("vec_id").as("id_b"), col("label"), col("v").as("vb"),
         floor(col("vec_id") / window).as("blk"))
-    val dot = aggregate(zip_with(col("va"), col("vb"), (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-    val na = sqrt(aggregate(zip_with(col("va"), col("va"), (x, y) => x * y), lit(0.0), (acc, x) => acc + x))
-    val nb = sqrt(aggregate(zip_with(col("vb"), col("vb"), (x, y) => x * y), lit(0.0), (acc, x) => acc + x))
     a.join(b, Seq("label", "blk"))
       .where(col("id_b") > col("id_a") && col("id_b") - col("id_a") <= window)
-      .withColumn("cos", round(dot / (na * nb), 6))
+      .withColumn("cos", Ann.cosine(col("va"), col("vb")))
       .where(col("cos") >= minCos)
       .select("id_a", "id_b", "cos")
   }
@@ -564,7 +561,7 @@ object DedupOps {
     val asn = Ann.kmeansSketch(emb, k, iters)
     val reps = asn.groupBy("cluster").agg(min(col("vec_id")).as("rep_id"))
     val e = emb.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
+      col("embedding").cast("array<double>").as("v"))
     val repVec = reps.join(
       e.select(col("vec_id").as("rep_id"), col("v").as("rv")), "rep_id")
     asn.join(e, "vec_id").join(broadcast(repVec), "cluster")

@@ -234,6 +234,13 @@ class OpsSpec extends SparkSpec {
           exact.get((q, c)).foreach(e => assert(e === cs, s"cos mismatch for ($q,$c)"))
         }
     }
+    // i09's shared-frame pair equals the two separate paths, row for row
+    val (exactArm, sketchArm) = Ann.exactAndSketchTopK(emb, col("vec_id") < 3, 5)
+    Seq(exactArm -> Ann.bruteForceTopK(emb, col("vec_id") < 3, 5),
+      sketchArm -> Ann.sketchRerankTopK(emb, col("vec_id") < 3, 5)).foreach { case (got, want) =>
+      assert(got.count() === 15)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    }
   }
 
   test("MMR: second pick trades relevance for diversity, pure top-k would not") {
@@ -257,6 +264,13 @@ class OpsSpec extends SparkSpec {
     // mmr scores strictly decrease along picks (greedy argmax over a
     // shrinking candidate set with a growing redundancy term)
     assert(got.map(_._3).toSeq === got.map(_._3).sorted.reverse.toSeq)
+  }
+
+  test("localModel collects at most maxRows rows and names the bound when a model is larger") {
+    val four = spark.range(4).toDF("id")
+    assert(Ann.localModel(four, 4).as[Long].collect().sorted.toSeq === Seq(0L, 1L, 2L, 3L))
+    val e = intercept[IllegalArgumentException](Ann.localModel(four, 3))
+    assert(e.getMessage.contains("maxRows = 3"), e.getMessage)
   }
 
   test("RRF: consensus across runs outranks a single run's top hit; exact ppm points") {

@@ -1,7 +1,12 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project, Window => LWindow, WindowGroupLimit}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.ops.DedupOps
 import graft.sources.Tables
@@ -11,7 +16,33 @@ import graft.sources.Tables
   * `explain` eyeball check would verify, encoded as tests so a refactor
   * cannot silently regress them.
   */
-class PlanAuditSpec extends SparkSpec {
+class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  /** Every query execution that building and collecting a registered query
+    * runs — its eager checkpoints and model collects included, which the
+    * final plan only shows as already-materialized leaves.
+    */
+  private def executions(name: String): Seq[QueryExecution] = {
+    val sc = spark.sparkContext
+    val seen = scala.collection.mutable.ArrayBuffer[QueryExecution]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.synchronized(seen += qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerCount.drain(sc)
+    spark.listenerManager.register(l)
+    try {
+      SparkEntry.queries(name)(spark, Sf).collect()
+      org.apache.spark.ListenerCount.drain(sc)
+    } finally spark.listenerManager.unregister(l)
+    seen.synchronized(seen.toList)
+  }
+
+  private def hofs(qes: Seq[QueryExecution]): Seq[String] = qes.flatMap { qe =>
+    collectWithSubqueries(qe.executedPlan) { case p => p }
+      .flatMap(_.expressions.flatMap(_.collect { case h: HigherOrderFunction => h.prettyName }))
+  }
 
   test("d04 jaccardRows never joins on a token column (no per-pair |A|×|B| rows)") {
     // the verify intersects each candidate pair's token ARRAYS in place; a
@@ -63,6 +94,35 @@ class PlanAuditSpec extends SparkSpec {
       }
       assert(boundedInput(w.child, sawLocalRankCut = false),
         s"q_id-only window over unbounded input:\n${w.child.treeString}")
+    }
+  }
+
+  test("i09 builds one Q×N frame: exactly one join reads embeddings on both sides") {
+    // the exact top-k and the sketch cut share one checkpointed pair frame,
+    // and the cut's candidates take their cosine from it — a second Q×N
+    // build, or a rerank re-joining the embeddings for both ids, would
+    // add a join with the embeddings scan under both inputs
+    def readsEmb(p: LogicalPlan): Boolean = p.collect {
+      case l: LogicalRelation => l.relation
+    }.exists {
+      case h: HadoopFsRelation => h.location.rootPaths.exists(_.getName == "embeddings.parquet")
+      case _ => false
+    }
+    val qes = executions("i09_ann_recall")
+    assert(qes.nonEmpty, "no query execution was observed")
+    val both = qes.flatMap(_.optimizedPlan.collect {
+      case j: Join if readsEmb(j.left) && readsEmb(j.right) => j
+    })
+    assert(both.size === 1, s"joins over embeddings on both sides:\n${both.mkString("\n")}")
+  }
+
+  test("i09 and i12 execute no higher-order function") {
+    // ArrayAggregate/ZipWith/ArrayTransform are CodegenFallback: a HOF in
+    // these plans means interpreted per-element lambdas in the hot loop
+    assert(hofs(executions("i02_embed_normalize")).nonEmpty, "the probe must see i02's transform")
+    for (name <- Seq("i09_ann_recall", "i12_cluster_quality")) {
+      val found = hofs(executions(name))
+      assert(found.isEmpty, s"$name executes higher-order functions: ${found.distinct}")
     }
   }
 

@@ -9,13 +9,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val Sf = "/root/testdata/sf0.001"
 
-  /** Runs `body` on the interpreted path. Whole-stage codegen off alone
-    * still compiles per-operator projections and predicates; NO_CODEGEN
-    * makes them call the expressions' `eval`.
-    */
-  def interpreted[A](body: => A): A = {
-    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+  /** Runs `body` with the given session confs set, then restores them. */
+  def withConfs[A](confs: (String, String)*)(body: => A): A = {
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
@@ -24,6 +19,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** Runs `body` on the interpreted path. Whole-stage codegen off alone
+    * still compiles per-operator projections and predicates; NO_CODEGEN
+    * makes them call the expressions' `eval`.
+    */
+  def interpreted[A](body: => A): A =
+    withConfs("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body)
 }
 
 object SparkSpec {

@@ -1,0 +1,195 @@
+package graft
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.functions.VectorKernels
+import graft.ops.Ann
+
+/** Each vector kernel equals, bit for bit, the Catalyst form it replaced:
+  * the `posexplode` + `sum` sketch and the `aggregate(zip_with)` dot fold.
+  * Over int64 sketches the fold is the 0.0-seeded left-to-right chain, and
+  * the sketch scores built on it equal those of the `reduce(_ + _)` chain
+  * it replaced. Doubles compare by their bits, so a flipped zero sign or a
+  * reassociated sum shows.
+  *
+  * Inputs come from an RDD: over a local `Seq`, `ConvertToLocalRelation`
+  * would evaluate the projection through `eval` and the generated code
+  * would never run. The codegen leg forbids the interpreted fallback, the
+  * interpreted leg forbids code generation, so each leg tests one path.
+  */
+class VectorKernelsSpec extends SparkSpec {
+
+  private val rnd = new scala.util.Random(20261017L)
+
+  /** A vector element: ordinary values, ±0.0, NaN, ±∞, magnitudes near 1e8
+    * microunits, exact half-microunit ties and nulls.
+    */
+  private def elem(): java.lang.Double = rnd.nextInt(20) match {
+    case 0 => null
+    case 1 => -0.0
+    case 2 => 0.0
+    case 3 => Double.NaN
+    case 4 => if (rnd.nextBoolean()) Double.PositiveInfinity else Double.NegativeInfinity
+    case 5 | 6 => (rnd.nextDouble() * 2 - 1) * 100.0 // |x·1e6| up to 1e8
+    case 7 => (rnd.nextInt(2000001) - 1000000) / 1e6 + 0.5e-6 // a rounding tie
+    case _ => rnd.nextGaussian() * 0.125
+  }
+
+  private def vec(n: Int, f: () => java.lang.Double = () => elem()): Seq[java.lang.Double] =
+    Seq.fill(n)(f())
+
+  /** A clean vector: no special values, the common case. */
+  private def plain(n: Int): Seq[java.lang.Double] =
+    vec(n, () => java.lang.Double.valueOf(rnd.nextGaussian() * 0.125))
+
+  /** (id, a, b) pairs over the edge cases: null and empty arrays, unequal
+    * lengths, all-null elements, a single −0.0 product, and random vectors.
+    */
+  private lazy val doubleRows: Seq[Row] = {
+    val fixed: Seq[(Seq[java.lang.Double], Seq[java.lang.Double])] = Seq(
+      (null, plain(4)), (plain(4), null), (null, null),
+      (Seq(), Seq()), (Seq(), plain(1)), (plain(3), plain(5)),
+      (Seq(null, null), Seq(1.0, 2.0)),
+      (Seq(-0.0), Seq(1.0)), (Seq(-1.0, 0.0), Seq(0.0, 3.0)))
+    val random = Seq.fill(300) {
+      val n = rnd.nextInt(12)
+      rnd.nextInt(6) match {
+        case 0 => (vec(n), vec(n + 1 + rnd.nextInt(3)))
+        case 1 | 2 => (plain(n), plain(n))
+        case _ => (vec(n), vec(n))
+      }
+    }
+    (fixed ++ random).zipWithIndex.map { case ((a, b), i) => Row(i.toLong, a, b) }
+  }
+
+  private def frame(rows: Seq[Row], elem: DataType): DataFrame = {
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("a", ArrayType(elem, containsNull = true)),
+      StructField("b", ArrayType(elem, containsNull = true))))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+  }
+
+  /** Runs `body` with generated code only: no fallback to `eval`. */
+  private def compiled[A](body: => A): A =
+    withConfs("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")(body)
+
+  /** The bits of a double with every NaN collapsed to one: ±0.0 and all
+    * finite values compare exactly, but which NaN an `inf − inf` or a
+    * NaN-plus-NaN yields is not fixed by the JVM — the JIT may commute a
+    * floating add, and x86 then propagates the other operand's NaN sign —
+    * so raw NaN bits differ between runs of the same expression.
+    */
+  private def bits(v: Any): Option[Long] = Option(v).map(d =>
+    java.lang.Double.doubleToLongBits(d.asInstanceOf[Double]))
+
+  /** id → the bits of a double column, every NaN collapsed ([[bits]]). */
+  private def doubles(df: DataFrame, c: Column): Map[Long, Option[Long]] =
+    df.select(col("id"), c).collect().map(r => r.getLong(0) -> bits(r.get(1))).toMap
+
+  /** Both legs of `run` against the reference values, per id. */
+  private def bothLegs[B](what: String)(run: => Map[Long, B])(want: Map[Long, B]): Unit = {
+    def check(got: Map[Long, B], leg: String): Unit = {
+      val bad = (got.keySet ++ want.keySet).toSeq.sorted.filter(id => got.get(id) != want.get(id))
+      if (bad.nonEmpty) fail(s"$what: the $leg diverged at ${bad.size} ids, first " +
+        bad.take(3).map(id => s"$id: got ${got.get(id)}, want ${want.get(id)}").mkString("; "))
+    }
+    check(compiled(run), "generated code")
+    check(interpreted(run), "interpreted path")
+  }
+
+  test("dot fold == aggregate(zip_with) bit for bit, codegen AND interpreted") {
+    val df = frame(doubleRows, DoubleType)
+    val want = doubles(df,
+      aggregate(zip_with(col("a"), col("b"), (x, y) => x * y), lit(0.0), (acc, x) => acc + x))
+    // the edge semantics the fold must keep
+    assert(want(0L).isEmpty && want(2L).isEmpty, "a null array gives null")
+    assert(want(3L) == bits(0.0), "an empty pair folds to 0.0")
+    assert(want(5L).isEmpty, "unequal lengths give null")
+    assert(want(6L).isEmpty, "a null element gives null")
+    assert(want(7L) == bits(0.0), "the 0.0 seed turns a lone −0.0 product into +0.0")
+    bothLegs("dot")(doubles(df, VectorKernels.dot(col("a"), col("b"))))(want)
+    bothLegs("Ann.dot")(doubles(df, Ann.dot(col("a"), col("b"))))(want)
+  }
+
+  test("sketch dot == the 0.0-seeded chain, and its scores equal the reduce(_ + _) chain's, " +
+    "codegen AND interpreted") {
+    val l = 8
+    def long(): java.lang.Long = rnd.nextInt(30) match {
+      case 0 => null
+      case 1 | 2 => 0L
+      case 3 | 4 => -(rnd.nextInt(5).toLong + 1) // with a 0 on the other side: −0.0
+      case 5 | 6 => (rnd.nextLong() >> 24) // ~2^39: products far past 2^53
+      case _ => (rnd.nextGaussian() * 2e8).toLong // sketch-slot magnitudes
+    }
+    def lv(n: Int): Seq[java.lang.Long] = Seq.fill(n)(long())
+    def fixed(xs: Long*): Seq[java.lang.Long] = xs.map(java.lang.Long.valueOf)
+    val zeros = fixed(Seq.fill(l)(0L): _*)
+    val negs = fixed(Seq.fill(l)(-3L): _*)
+    // every product −0.0, both norms nonzero
+    val (negZero, zeroNeg) = (fixed(-3, 0, -3, 0, -3, 0, -3, 0), fixed(0, -5, 0, -5, 0, -5, 0, -5))
+    val rows = (Seq[(Seq[java.lang.Long], Seq[java.lang.Long])](
+      (null, lv(l)), (lv(l), null), (lv(l), lv(l - 2)), (negs, zeros), (negZero, zeroNeg)) ++
+      Seq.fill(300)(if (rnd.nextInt(8) == 0) (lv(l), lv(rnd.nextInt(l))) else (lv(l), lv(l))))
+      .zipWithIndex.map { case ((a, b), i) => Row(i.toLong, a, b) }
+    val df = frame(rows, LongType)
+    def products(a: Column, b: Column): Seq[Column] =
+      (0 until l).map(t => a.getItem(t).cast("double") * b.getItem(t))
+    val (a, b) = (col("a"), col("b"))
+
+    // the kernel is the left-to-right fold from 0.0, bit for bit
+    val want = doubles(df, (lit(0.0) +: products(a, b)).reduce(_ + _))
+    assert(want(0L).isEmpty && want(1L).isEmpty && want(2L).isEmpty)
+    assert(want.values.count(_.nonEmpty) > 50)
+    bothLegs("sketchDot")(doubles(df, VectorKernels.sketchDot(a, b)))(want)
+    // no product at all: the empty pair is 0.0
+    val empty = frame(Seq(Row(0L, Seq(), Seq())), LongType)
+    bothLegs("empty sketchDot")(doubles(empty, VectorKernels.sketchDot(a, b)))(
+      Map(0L -> bits(0.0)))
+
+    // the replaced chain starts at the first product, so an all −0.0 chain
+    // keeps its sign; the seeded fold does not
+    val chain = doubles(df, products(a, b).reduce(_ + _))
+    assert(chain(3L) == bits(-0.0) && chain(4L) == bits(-0.0))
+    assert(want(3L) == bits(0.0) && want(4L) == bits(0.0))
+    // ... and no sketch output can see that sign: the norms never are −0.0,
+    // and the score (the k-means ce6 is the same tree) floors to a long
+    def chainNorm(x: Column): Column = sqrt(products(x, x).reduce(_ + _))
+    val oldScore = floor(products(a, b).reduce(_ + _) / (chainNorm(a) * chainNorm(b)) *
+      lit(1e6)).cast("long")
+    def scores(df: DataFrame, score: Column): Map[Long, Option[Long]] =
+      df.select(col("id"), score).collect()
+        .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Long])).toMap
+    val wantScores = scores(df, oldScore)
+    assert(wantScores(4L).contains(0L))
+    bothLegs("sketch score")(scores(df,
+      Ann.sketchScore(a, Ann.sketchNorm(a), b, Ann.sketchNorm(b))))(wantScores)
+    bothLegs("sketch norm")(doubles(df, Ann.sketchNorm(a)))(doubles(df, chainNorm(a)))
+  }
+
+  test("projection sketch == posexplode + per-slot sum, codegen AND interpreted") {
+    val kProj = 32
+    val allNull: Seq[java.lang.Double] = Seq(null, null, null)
+    val rows = doubleRows :+ Row(doubleRows.size.toLong, allNull, null)
+    val df = frame(rows, DoubleType)
+    val px = df.select(col("id"), posexplode(col("a")).as(Seq("p", "x")))
+      .select(col("id"), (col("p") + 1).cast("long").as("i0"),
+        floor(col("x") * 1e6 + lit(0.5)).cast("long").as("xi"))
+    val aggs = (0 until kProj).map(t => sum(col("xi") * Ann.projWeight(t, col("i0"))))
+    val want: Map[Long, Seq[Option[Long]]] = px.groupBy("id").agg(aggs.head, aggs.tail: _*)
+      .collect().map(r => r.getLong(0) ->
+        (1 to kProj).map(i => Option(r.get(i)).map(_.asInstanceOf[Long]))).toMap
+    // a null or empty vector has no posexplode row, hence no sketch; an
+    // all-null vector has a row of null slots
+    assert(!want.contains(0L) && !want.contains(3L))
+    assert(want(rows.size - 1L) == Seq.fill(kProj)(None))
+    def sketches: Map[Long, Seq[Option[Long]]] =
+      df.select(col("id"), VectorKernels.sketch(col("a"), kProj)).collect()
+        .filterNot(_.isNullAt(1))
+        .map(r => r.getLong(0) -> r.getSeq[Any](1).map(v => Option(v).map(_.asInstanceOf[Long])))
+        .toMap
+    bothLegs("sketch")(sketches)(want)
+  }
+}
