@@ -120,16 +120,16 @@ object QueriesOps {
     // miss probability — the deterministic complement of d03/d04. The
     // 16-char basis (not the 8-char LSH shingles) keeps the df tail heavy
     // so the prefix filter actually filters (100x measured — see the op's
-    // scaladoc). The window frame feeds df/rank/verify — materialize once
+    // scaladoc). One row per document: its distinct window hashes (a
+    // per-doc array_distinct, not a corpus-wide (sid, tok) distinct —
+    // duplicates only arise within one document); the op checkpoints it.
+    // The rebalance lets AQE size the hashing fan-out from the data.
     "d22_allpairs" -> ((s, dir) =>
-      // per-doc array_distinct instead of a corpus-wide (sid, tok)
-      // distinct exchange — duplicates only arise within one document
       DedupOps.allPairsSimilarity(
-        docs(s, dir).repartition(s.sparkContext.defaultParallelism)
+        docs(s, dir).hint("rebalance")
           .select(col("doc_id").as("sid"),
-            explode(array_distinct(
-              graft.functions.WindowHashes.of(col("text"), 16))).as("tok"))
-          .localCheckpoint(true), tE6 = 500000L)),
+            array_distinct(graft.functions.WindowHashes.of(col("text"), 16)).as("ts")),
+        tE6 = 500000L)),
 
     "d04_lsh_jaccard" -> ((s, dir) => {
       // the shingle rows feed TWO consumers (banding + verification) —

@@ -1,11 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.{Column, GraftColumnBridge, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
 
 /** Per-row kProj int64 projection sketch of an `array<double>` vector —
   * the kernel behind the ANN sketch frames. For every non-null element x
@@ -168,6 +170,161 @@ case class ArrayDot(left: Expression, right: Expression) extends BinaryExpressio
     copy(left = l, right = r)
 }
 
+/** The nearest centroid of an int64 sketch within a bounded model — the
+  * k-means assignment as one per-row loop instead of a cross join with
+  * the centroids and a per-vector `max(struct)` shuffle.
+  *
+  * `model` is the whole centroid table as one foldable value of
+  * [[NearestCentroid.ModelType]], one `(cid, c, cn)` struct per centroid:
+  * `c` its sum-sketch and `cn` its norm. As a literal it is a reference
+  * object of the generated class, not part of its text, so every Lloyd
+  * round compiles to the same code. For each centroid the score is
+  * `d / cn`, with `d` the [[ArrayDot]] fold of sketch and `c`; the result
+  * is the winner's `(cid, d, cn)`, the row that
+  * `max(struct(d / cn, -cid))` over the cross join picked:
+  *  - a null score (null `d` or `cn`, and a zero `cn`, as Spark's `/`
+  *    gives null for a zero divisor) ranks below every other score;
+  *  - scores compare as Spark orders doubles (`SQLOrderingUtil`): −0.0
+  *    equals 0.0, NaN is the largest;
+  *  - equal scores go to the larger `-cid`, i.e. the smallest cid.
+  *
+  * A null sketch scores null against every centroid, so it gets the
+  * smallest cid, as the cross join gave it. An empty model gives null.
+  */
+case class NearestCentroid(sketch: Expression, model: Expression) extends BinaryExpression {
+  override def left: Expression = sketch
+  override def right: Expression = model
+  override def dataType: DataType = NearestCentroid.WinnerType
+  override def nullable: Boolean = true
+  override def prettyName: String = "nearest_centroid"
+
+  override def checkInputDataTypes(): TypeCheckResult = (sketch.dataType, model.dataType) match {
+    case (ArrayType(LongType, _), NearestCentroid.ModelType) if model.foldable =>
+      TypeCheckResult.TypeCheckSuccess
+    case (s, m) => TypeCheckResult.TypeCheckFailure(s"$prettyName needs an array<bigint> " +
+      s"sketch and a foldable ${NearestCentroid.ModelType.simpleString} model, got " +
+      s"${s.simpleString} and ${m.simpleString}")
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val m = model.eval(input).asInstanceOf[ArrayData]
+    if (m == null || m.numElements() == 0) return null
+    val s = sketch.eval(input).asInstanceOf[ArrayData]
+    var best = -1
+    var bestScore = 0.0
+    var bestScoreNull = true
+    var bestNc = 0L
+    var bestD = 0.0
+    var bestDNull = true
+    var j = 0
+    while (j < m.numElements()) {
+      val cent = m.getStruct(j, 3)
+      val nc = -cent.getLong(0)
+      // the ArrayDot fold of the sketch and this centroid
+      var dNull = s == null || cent.isNullAt(1)
+      var d = 0.0
+      if (!dNull) {
+        val c = cent.getArray(1)
+        val n = s.numElements()
+        if (n != c.numElements()) dNull = true
+        var i = 0
+        while (!dNull && i < n) {
+          if (s.isNullAt(i) || c.isNullAt(i)) dNull = true
+          else d += s.getLong(i).toDouble * c.getLong(i).toDouble
+          i += 1
+        }
+      }
+      val cnNull = cent.isNullAt(2)
+      val cn = if (cnNull) 0.0 else cent.getDouble(2)
+      val scoreNull = dNull || cnNull || cn == 0.0
+      val score = if (scoreNull) 0.0 else d / cn
+      val cmp =
+        if (scoreNull) { if (bestScoreNull) 0 else -1 }
+        else if (bestScoreNull) 1
+        else SQLOrderingUtil.compareDoubles(score, bestScore)
+      if (best < 0 || cmp > 0 || (cmp == 0 && nc > bestNc)) {
+        best = j; bestScore = score; bestScoreNull = scoreNull; bestNc = nc
+        bestD = d; bestDNull = dNull
+      }
+      j += 1
+    }
+    val win = m.getStruct(best, 3)
+    new GenericInternalRow(Array[Any](-bestNc, if (bestDNull) null else bestD,
+      if (win.isNullAt(2)) null else win.getDouble(2)))
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val s = sketch.genCode(ctx)
+    val m = model.genCode(ctx)
+    val Seq(best, bestScore, bestScoreNull, bestNc, bestD, bestDNull, j, cent, nc, d, dNull,
+      c, n, i, cnNull, cn, scoreNull, score, cmp, win) = Seq("best", "bestScore",
+      "bestScoreNull", "bestNc", "bestD", "bestDNull", "j", "cent", "nc", "d", "dNull", "c",
+      "n", "i", "cnNull", "cn", "scoreNull", "score", "cmp", "win").map(ctx.freshName)
+    val ord = "org.apache.spark.sql.catalyst.util.SQLOrderingUtil"
+    val row = classOf[GenericInternalRow].getName
+    ev.copy(code = code"""
+      |${m.code}
+      |${s.code}
+      |boolean ${ev.isNull} = true;
+      |${CodeGenerator.javaType(dataType)} ${ev.value} = null;
+      |if (!${m.isNull} && ${m.value}.numElements() > 0) {
+      |  int $best = -1;
+      |  double $bestScore = 0.0;
+      |  boolean $bestScoreNull = true;
+      |  long $bestNc = 0L;
+      |  double $bestD = 0.0;
+      |  boolean $bestDNull = true;
+      |  for (int $j = 0; $j < ${m.value}.numElements(); $j++) {
+      |    InternalRow $cent = ${m.value}.getStruct($j, 3);
+      |    long $nc = -$cent.getLong(0);
+      |    boolean $dNull = ${s.isNull} || $cent.isNullAt(1);
+      |    double $d = 0.0;
+      |    if (!$dNull) {
+      |      ArrayData $c = $cent.getArray(1);
+      |      int $n = ${s.value}.numElements();
+      |      if ($n != $c.numElements()) $dNull = true;
+      |      for (int $i = 0; !$dNull && $i < $n; $i++) {
+      |        if (${s.value}.isNullAt($i) || $c.isNullAt($i)) $dNull = true;
+      |        else $d += (double) ${s.value}.getLong($i) * (double) $c.getLong($i);
+      |      }
+      |    }
+      |    boolean $cnNull = $cent.isNullAt(2);
+      |    double $cn = $cnNull ? 0.0 : $cent.getDouble(2);
+      |    boolean $scoreNull = $dNull || $cnNull || $cn == 0.0;
+      |    double $score = $scoreNull ? 0.0 : $d / $cn;
+      |    int $cmp = $scoreNull ? ($bestScoreNull ? 0 : -1)
+      |      : $bestScoreNull ? 1 : $ord.compareDoubles($score, $bestScore);
+      |    if ($best < 0 || $cmp > 0 || ($cmp == 0 && $nc > $bestNc)) {
+      |      $best = $j; $bestScore = $score; $bestScoreNull = $scoreNull; $bestNc = $nc;
+      |      $bestD = $d; $bestDNull = $dNull;
+      |    }
+      |  }
+      |  InternalRow $win = ${m.value}.getStruct($best, 3);
+      |  ${ev.isNull} = false;
+      |  ${ev.value} = new $row(new Object[] {-$bestNc, $bestDNull ? null : (Object) $bestD,
+      |    $win.isNullAt(2) ? null : (Object) $win.getDouble(2)});
+      |}
+      """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): NearestCentroid =
+    copy(sketch = l, model = r)
+}
+
+object NearestCentroid {
+  /** One struct per centroid: its id, its int64 sum-sketch, its norm. */
+  val ModelType: ArrayType = ArrayType(StructType(Seq(
+    StructField("cid", LongType, nullable = false),
+    StructField("c", ArrayType(LongType, containsNull = true)),
+    StructField("cn", DoubleType))), containsNull = false)
+
+  /** The winner: its cid, its product fold with the sketch and its norm. */
+  val WinnerType: StructType = StructType(Seq(
+    StructField("cid", LongType, nullable = false),
+    StructField("d", DoubleType),
+    StructField("cn", DoubleType)))
+}
+
 /** Column DSL for the vector kernels. Each casts its inputs to the array
   * type its kernel reads (a no-op cast is removed by the optimizer), so
   * an `array<float>` embedding needs no `transform` — and the plan no
@@ -189,4 +346,14 @@ object VectorKernels {
     */
   def sketchDot(a: Column, b: Column): Column =
     GraftColumnBridge.column(ArrayDot(expr(a.cast("array<bigint>")), expr(b.cast("array<bigint>"))))
+
+  /** The row type of a [[nearestCentroid]] model. */
+  val CentroidModel: StructType = NearestCentroid.ModelType.elementType.asInstanceOf[StructType]
+
+  /** The winning `(cid, d, cn)` of a sketch against a bounded centroid
+    * model, given as rows of [[CentroidModel]] ([[NearestCentroid]]).
+    */
+  def nearestCentroid(sk: Column, model: Seq[Row]): Column =
+    GraftColumnBridge.column(NearestCentroid(expr(sk.cast("array<bigint>")),
+      Literal.create(model, NearestCentroid.ModelType)))
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -480,47 +480,23 @@ object Ann {
     * stride-sampled corpus rows as [[ivfTopK]]; iterations unroll into the
     * oracle as one CTE pair each.
     *
-    * Per iteration: one broadcast cross-join assignment (k·N codegen'd
-    * rows) whose per-vector argmax carries the vector's sketch as a
-    * trailing field, then one map-side-combined sum aggregate over those
-    * carried sketches — no join back to the sketch frame, no driver-side
-    * state beyond the ≤ k-row model; empty clusters drop from the
-    * centroid table identically in both engines.
+    * Per iteration: each sketch finds its nearest centroid in one per-row
+    * kernel ([[VectorKernels.nearestCentroid]]) against the ≤ k-row model
+    * ([[kmModel]]), carried into the plan as a literal; then one
+    * map-side-combined sum aggregate by cid and a bounded collect build the
+    * next model — no cross join, no per-vector argmax shuffle, no
+    * driver-side state beyond the model; empty clusters drop from the
+    * centroid table identically in both engines. The kernel's winner is the
+    * oracle's row_number() ORDER BY score DESC, cid: the score d/cn desc,
+    * then the SMALLEST cid. A corpus with no seed vector (vec_id ≡ 7 mod
+    * 13) has an empty model, and every vector gets a null cluster.
     *
-    * Centroid frames are `(cid, c array<bigint>)`; the sketch frame is
+    * Model rows are `(cid, c array<bigint>, cn)`; the sketch frame is
     * [[sketchCheckpoint]].
     */
   private def sketchCheckpoint(emb: DataFrame, kProj: Int): DataFrame =
-    // materialized once: every assignment pass re-reads it. It is NOT
-    // repartitioned by vec_id first, so each per-vector argmax below
-    // exchanges its N partial-aggregate rows. Measured: such a partitioning
-    // does not survive the checkpoint (AQE coalesces the shuffle, and the
-    // checkpoint scan reports UnknownPartitioning), so the repartition only
-    // added a shuffle — i12 at sf0.01 ran 17 jobs / 28 stages with it,
-    // 16 / 26 without.
+    // materialized once: every assignment pass re-reads it
     sketchFrame(emb, kProj).localCheckpoint(true)
-
-  /** Per-vector argmax over the broadcast centroids: the winner of
-    * max(struct(score, -cid, carry…)), i.e. score desc, then the SMALLEST
-    * cid — exactly the oracle's row_number() ORDER BY score DESC, cid.
-    * (score, -cid) is already a total order per vector (cid is unique), so
-    * a carried field never changes which row wins. `carry` expressions may
-    * read `sk`, `d` (the pair's product chain), `skn` and `cn` (the two
-    * norms).
-    */
-  private def kmWinners(sk: DataFrame, cents: DataFrame,
-                        carry: (String, Column)*): DataFrame = {
-    val c = broadcast(cents.select(col("cid"), col("c"), sketchNorm(col("c")).as("cn")))
-    val pairs = sk.select(col("vec_id"), col("sk"), sketchNorm(col("sk")).as("skn"))
-      .crossJoin(c)
-      .select(col("vec_id"), col("cid"), col("sk"), col("skn"), col("cn"),
-        VectorKernels.sketchDot(col("sk"), col("c")).as("d"))
-    val fields = (col("d") / col("cn")).as("score") +: (-col("cid")).as("nc") +:
-      carry.map { case (n, e) => e.as(n) }
-    pairs.groupBy("vec_id").agg(max(struct(fields: _*)).as("m"))
-      .select(col("vec_id") +: (-col("m.nc")).as("cid") +:
-        carry.map { case (n, _) => col(s"m.$n").as(n) }: _*)
-  }
 
   /** A bounded MODEL ARTIFACT rebuilt as a local relation: collect the
     * trained rows and re-create them as a literal frame. Same legitimacy
@@ -532,43 +508,53 @@ object Ann {
     * `maxRows`, so a broad input fails loudly instead of pulling a
     * corpus-sized frame into the driver.
     */
-  def localModel(df: DataFrame, maxRows: Int): DataFrame = {
+  def localModel(df: DataFrame, maxRows: Int): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(modelRows(df, maxRows): _*), df.schema)
+
+  /** The rows of a bounded model frame — [[localModel]]'s collect. */
+  private def modelRows(df: DataFrame, maxRows: Int): Array[Row] = {
     val rows = df.limit(maxRows + 1).collect()
     require(rows.length <= maxRows,
       s"localModel: the model frame has more than maxRows = $maxRows rows; " +
         "it is collected to the driver, so it must stay model-sized")
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    rows
   }
 
   /** The stride-sampled seed model (cid, c): the first `n` vectors with
     * vec_id ≡ 7 mod 13, shared by the k-means init and the IVF cells.
     */
-  private def seedCents(sk: DataFrame, n: Int): DataFrame =
-    localModel(sk.where(col("vec_id") % 13 === 7).orderBy(col("vec_id")).limit(n)
-      .select(col("vec_id").as("cid"), col("sk").as("c")), n)
+  private def seedFrame(sk: DataFrame, n: Int): DataFrame =
+    sk.where(col("vec_id") % 13 === 7).orderBy(col("vec_id")).limit(n)
+      .select(col("vec_id").as("cid"), col("sk").as("c"))
 
-  /** The trained sum-centroids after `iters` Lloyd rounds — shared by
-    * [[kmeansSketch]] and the i12 quality report.
+  /** [[seedFrame]] as a local relation, for the IVF cells. */
+  private def seedCents(sk: DataFrame, n: Int): DataFrame = localModel(seedFrame(sk, n), n)
+
+  /** The trained sum-centroids after `iters` Lloyd rounds as ≤ k model
+    * rows `(cid, c, cn)`, each with its norm — shared by [[kmeansSketch]]
+    * and the i12 quality report.
     */
-  private def kmCents(sk: DataFrame, k: Int, iters: Int, kProj: Int): DataFrame = {
-    // the seed is a ≤ k-row model artifact like every later round's
-    // centroids — materializing it the same way makes ALL iterations'
-    // plans shape-identical (sk × LocalRelation → aggregates), so the
-    // generated-class cache compiles one round and reuses it for the rest
-    var cents = seedCents(sk, k)
+  private def kmModel(sk: DataFrame, k: Int, iters: Int, kProj: Int): Seq[Row] = {
+    def withNorms(cents: DataFrame): Seq[Row] =
+      modelRows(cents.select(col("cid"), col("c"), sketchNorm(col("c")).as("cn")), k).toSeq
+    // every round's model enters its plan as a literal of the same type,
+    // so all rounds generate the same code and the generated-class cache
+    // compiles one round and reuses it for the rest
+    var model = withNorms(seedFrame(sk, k))
     val sums = (0 until kProj).map(t => sum(col("sk").getItem(t)).as(s"c$t"))
-    for (_ <- 1 to iters) {
-      cents = localModel(kmWinners(sk, cents, "sk" -> col("sk"))
+    for (_ <- 1 to iters if model.nonEmpty) {
+      val cid = VectorKernels.nearestCentroid(col("sk"), model).getField("cid")
+      model = withNorms(sk.select(cid.as("cid"), col("sk"))
         .groupBy("cid").agg(sums.head, sums.tail: _*)
-        .select(col("cid"), array((0 until kProj).map(t => col(s"c$t")): _*).as("c")), k)
+        .select(col("cid"), array((0 until kProj).map(t => col(s"c$t")): _*).as("c")))
     }
-    cents
+    model
   }
 
   def kmeansSketch(emb: DataFrame, k: Int = 16, iters: Int = 2, kProj: Int = 32): DataFrame = {
     val sk = sketchCheckpoint(emb, kProj)
-    kmWinners(sk, kmCents(sk, k, iters, kProj))
-      .select(col("vec_id"), col("cid").as("cluster"))
+    val win = VectorKernels.nearestCentroid(col("sk"), kmModel(sk, k, iters, kProj))
+    sk.select(col("vec_id"), win.getField("cid").as("cluster"))
   }
 
   /** Cluster-quality audit of the [[kmeansSketch]] partition — the report
@@ -583,24 +569,26 @@ object Ann {
     * the sign-safe floor-mean identity (se + n·1e6) div n − 1e6 keeps
     * both engines exact for any sign.
     *
-    * Shape at scale: one assignment pass (broadcast ≤k centroids), one
-    * map-side-combined rollup, and a ≤k×k centroid self-join — output k
-    * rows at any corpus size.
+    * Shape at scale: one per-row assignment pass against the ≤ k-row model
+    * literal, one map-side-combined rollup by cluster, and a ≤k×k centroid
+    * self-join — output k rows at any corpus size.
     */
   def kmeansQuality(emb: DataFrame, k: Int = 16, iters: Int = 2,
                     kProj: Int = 32): DataFrame = {
     val sk = sketchCheckpoint(emb, kProj)
-    val cents = kmCents(sk, k, iters, kProj) // already a ≤ k-row local model
+    val model = kmModel(sk, k, iters, kProj)
     // ONE fused pass computes the final assignment AND the member→centroid
-    // cosine: the winner's ce6 rides the argmax struct as a trailing field,
-    // from the same product chain the score divides
-    val win = kmWinners(sk, cents,
-      "ce6" -> floor(col("d") / (col("skn") * col("cn")) * 1e6).cast("long"))
+    // cosine, from the same product fold the winning score divides
+    val win = sk.select(VectorKernels.nearestCentroid(col("sk"), model).as("w"),
+        sketchNorm(col("sk")).as("skn"))
+      .select(col("w.cid").as("cid"),
+        floor(col("w.d") / (col("skn") * col("w.cn")) * 1e6).cast("long").as("ce6"))
     val per = win
       .groupBy("cid").agg(count(lit(1)).as("n"), sum(col("ce6")).as("se"))
       .select(col("cid").as("cluster"), col("n"),
         expr("(se + n * 1000000) div n - 1000000").as("mean_cos_e6"))
-    val cn = cents.select(col("cid"), col("c"), sketchNorm(col("c")).as("cn"))
+    val cn = sk.sparkSession.createDataFrame(java.util.Arrays.asList(model: _*),
+      VectorKernels.CentroidModel)
     val c2 = cn.select(col("cid").as("cid2"), col("c").as("c2"), col("cn").as("cn2"))
     val nn = cn.crossJoin(broadcast(c2)).where(col("cid") =!= col("cid2"))
       .withColumn("ce6",
@@ -658,10 +646,11 @@ object Ann {
 
   /** Corpus cell assignment (nearest coarse centroid per vector) — the
     * index-build artifact the i11 balance report audits. The per-vector
-    * argmax is a map-side-combined aggregate (same (score desc, cid)
-    * winner as the old rank-1 window via max(struct(score, -cid)) — see
-    * [[kmWinners]]); the N×nCells scored frame is never sorted, and only
-    * its N per-vector partial rows exchange.
+    * argmax is a map-side-combined aggregate, max(struct(score, -cid)):
+    * score desc, then the smallest cid, the old rank-1 window's winner
+    * ((score, -cid) is a total order per vector, cid being unique). The
+    * N×nCells scored frame is never sorted, and only its N per-vector
+    * partial rows exchange.
     */
   def ivfAssignment(emb: DataFrame, nCells: Int = 256,
                     kProj: Int = 32): DataFrame = {

@@ -289,20 +289,30 @@ object DedupOps {
     * identical true-pair set. Pass the widest window the near-dup
     * definition tolerates.
     *
+    * Input: one row per document, `(sid, ts)`, where `ts` is the
+    * document's DISTINCT tokens (duplicates would inflate `inter`, `len`
+    * and `sz`); a document with an empty or null `ts` joins no pair. The
+    * function localCheckpoints this frame once: its token rows (for the
+    * df table and the prefix rank) are an explode of it, and its arrays are
+    * the verify step's token sets as they stand — no regroup of the token
+    * rows back into per-document arrays.
+    *
     * Shape at scale: the df table is one map-side-combined aggregate; the
     * rank window is bounded by a single document's token count; the
     * candidate join is an equi-join on the prefix token (low-df keys by
     * construction — AQE skew-join covers a pathological corpus); the
-    * verify is a per-pair token-array intersection over candidates only. The
-    * distinct (sid, tok) frame feeds four consumers — materialize once
-    * upstream ([[jaccardRows]] precondition: rows distinct per (sid, tok)).
+    * verify is a per-pair token-array intersection over candidates only.
     *
     * tE6 is the Jaccard threshold in microunits; both filters are derived
     * for t = 1/2 — the emitted jac_e6 floor-division cut equals the exact
     * rational predicate 2·inter ≥ |A∪B|.
     */
-  def allPairsSimilarity(rows: DataFrame, tE6: Long): DataFrame = {
+  def allPairsSimilarity(docs: DataFrame, tE6: Long): DataFrame = {
     require(tE6 == 500000L, "prefix and size filters are derived for t = 1/2")
+    // every consumer below reads this frame — materialize once, so the
+    // caller's token derivation runs once
+    val sets = docs.select(col("sid"), col("ts")).localCheckpoint(true)
+    val rows = sets.select(col("sid"), explode(col("ts")).as("tok"))
     val df = rows.groupBy("tok").agg(count(lit(1)).as("df"))
     val ranked = rows.join(df, "tok")
       .withColumn("rn", row_number().over(
@@ -326,7 +336,7 @@ object DedupOps {
     // a user-specified numPartitions) keeps the verify parallel; the count
     // follows the session's shuffle parallelism, so it scales with the
     // deployment, not a local constant.
-    val nVerify = rows.sparkSession.sparkContext.defaultParallelism
+    val nVerify = docs.sparkSession.sparkContext.defaultParallelism
     val cand = pref.as("a").join(pref.as("b"), "tok")
       .where(col("a.sid") < col("b.sid") &&
         col("a.len") * 2 >= col("b.len") && col("b.len") * 2 >= col("a.len"))
@@ -335,21 +345,18 @@ object DedupOps {
       // (doc_a, doc_b) exchange — a user-pinned partition count survives
       // AQE, an ENSURE_REQUIREMENTS exchange gets coalesced by bytes
       .repartition(nVerify, col("doc_a"))
-    // verify via per-pair set intersection on collected token ARRAYS (the
-    // same fix the d04 oracle made: the explicit two-key token join pushes
+    // verify via per-pair set intersection on the token ARRAYS (the same
+    // fix the d04 oracle made: the explicit two-key token join pushes
     // |pairs|·|doc| exploded rows through a shuffle — 23M at sf0.1 for 87k
     // candidates — while the array join ships each candidate doc's tokens
     // once and intersects in place; array_intersect is a native expression,
     // not a CodegenFallback HOF, and both inputs are distinct so size() is
     // the exact set intersection)
-    val docsArr = rows.groupBy("sid")
-      .agg(collect_list(col("tok")).as("ts"), count(lit(1)).as("sz"))
-      .localCheckpoint(true)
+    def side(id: String, t: String, sz: String): DataFrame =
+      sets.select(col("sid").as(id), col("ts").as(t), size(col("ts")).cast("long").as(sz))
     cand
-      .join(docsArr.select(col("sid").as("doc_a"),
-        col("ts").as("ta"), col("sz").as("sz_a")), "doc_a")
-      .join(docsArr.select(col("sid").as("doc_b"),
-        col("ts").as("tb"), col("sz").as("sz_b")), "doc_b")
+      .join(side("doc_a", "ta", "sz_a"), "doc_a")
+      .join(side("doc_b", "tb", "sz_b"), "doc_b")
       .withColumn("inter", size(array_intersect(col("ta"), col("tb"))).cast("long"))
       .withColumn("jac_e6", expr("inter * 1000000 div (sz_a + sz_b - inter)"))
       .where(col("jac_e6") >= tE6)
@@ -411,18 +418,6 @@ object DedupOps {
       .localCheckpoint(true)
     var labels = edges.select(col("src").as("sid")).distinct()
       .withColumn("lbl", col("sid")).localCheckpoint(true)
-    // the per-round frames are label tables (≤ one row per endpoint) — far
-    // smaller than the corpus the session's coalescing floor is tuned for;
-    // with a lowered floor every one of the ~log(diameter)·4 loop jobs
-    // spawns multi-task stages whose scheduling overhead dwarfs the work.
-    // Scope the Spark-default 1 MB floor over the loop only (restored in
-    // the finally) — at cluster scale label frames clear 1 MB anyway, so
-    // this changes nothing there.
-    val spark = edges.sparkSession
-    val floorKey = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    val floorBefore = spark.conf.getOption(floorKey)
-    spark.conf.set(floorKey, "1m")
-    try {
     var converged = false
     var i = 0
     // one relax+jump step over a (sid, lbl, old) frame; `old` (the label at
@@ -463,12 +458,6 @@ object DedupOps {
     require(converged,
       s"duplicateClusters did not converge within $maxIters rounds")
     labels.select(col("sid"), col("lbl").as("cluster"))
-    } finally {
-      floorBefore match {
-        case Some(v) => spark.conf.set(floorKey, v)
-        case None => spark.conf.unset(floorKey)
-      }
-    }
   }
 
   /** Soft deduplication: instead of DROPPING near-duplicates, every

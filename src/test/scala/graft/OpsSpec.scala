@@ -51,6 +51,32 @@ class OpsSpec extends SparkSpec {
     assert(c.size === 6)
   }
 
+  test("duplicateClusters runs under the caller's coalescing floor and leaves it in place") {
+    // library code must not retune the session: every job of the label
+    // loop sees the floor the caller set (jobs carry the session's SQL
+    // confs as local properties), and the floor is unchanged afterwards
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 8L)).toDF("doc_a", "doc_b")
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty(key))).getOrElse("unset"))
+    }
+    withConfs(key -> "64k") {
+      org.apache.spark.ListenerCount.drain(sc)
+      sc.addSparkListener(l)
+      try {
+        assert(DedupOps.duplicateClusters(pairs).count() === 6)
+        org.apache.spark.ListenerCount.drain(sc)
+      } finally sc.removeSparkListener(l)
+      assert(spark.conf.get(key) === "64k")
+    }
+    import scala.jdk.CollectionConverters._
+    val floors = seen.asScala.toSeq
+    assert(floors.nonEmpty && floors.forall(_ == "64k"), s"floors seen by the jobs: ${floors.distinct}")
+  }
+
   test("softDedupWeights: 1e6 div cluster size, singletons at 1e6, mass conserved per family") {
     // chain 1-2-3-4 (size 4), island 7-8 (size 2), 5/6 singletons
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 8L)).toDF("doc_a", "doc_b")
@@ -143,26 +169,33 @@ class OpsSpec extends SparkSpec {
   }
 
   test("allPairsSimilarity == brute force at the J=1/2 boundary (exact, no LSH miss)") {
-    // constructed boundary corpus: (1,2) J=4/8=0.5 exactly (kept), (3,4)
-    // J=2/4=0.5 (kept), (5,6) J=1/5 (dropped), (7,8) disjoint (dropped)
-    val rows = Seq(
+    // constructed boundary corpus, one row of distinct tokens per document:
+    // (1,2) J=4/8=0.5 exactly (kept), (3,4) J=2/4=0.5 (kept), (5,6) J=1/5
+    // (dropped), (7,8) disjoint (dropped); 9 has no token at all
+    val docs = Seq(
       1L -> Seq(1, 2, 3, 4), 2L -> Seq(1, 2, 3, 4, 5, 6, 7, 8),
       3L -> Seq(11, 12, 13), 4L -> Seq(11, 12, 14),
       5L -> Seq(21, 22, 23), 6L -> Seq(21, 24, 25),
-      7L -> Seq(31, 32), 8L -> Seq(33, 34)
-    ).flatMap { case (s, ts) => ts.map(t => (s, t)) }.toDF("sid", "tok")
-    val got = DedupOps.allPairsSimilarity(rows, tE6 = 500000L)
+      7L -> Seq(31, 32), 8L -> Seq(33, 34), 9L -> Seq()
+    ).toDF("sid", "ts")
+    val got = DedupOps.allPairsSimilarity(docs, tE6 = 500000L)
       .select("doc_a", "doc_b", "jac_e6").as[(Long, Long, Long)].collect()
       .map { case (a, b, j) => (a, b) -> j }.toMap
     assert(got === Map((1L, 2L) -> 500000L, (3L, 4L) -> 500000L))
 
     // corpus-level exactness: equals driver-side brute force over ALL pairs
     // (the oracle mirrors the prefix filter, so only brute force can catch
-    // a false negative of the candidate lemma)
-    val sets = Tables.documents(spark, Sf)
-      .select(col("doc_id").cast("long").as("sid"),
-        DedupOps.shingleTokens(col("text"), 8).as("stoks"))
-      .as[(Long, Seq[Int])].collect().map { case (s, ts) => (s, ts.toSet) }
+    // a false negative of the candidate lemma). Planted beside the corpus:
+    // a text too short for any 8-char window, and a pair whose texts repeat
+    // their windows, so their token sets are far smaller than their texts
+    val looped = "abcdefghij" * 5
+    val planted = Seq(-1L -> "tiny", -2L -> looped, -3L -> (looped.take(40) + "zzzzz"))
+      .toDF("doc_id", "text")
+    val corpus = Tables.documents(spark, Sf).select(col("doc_id").cast("long"), col("text"))
+      .unionByName(planted)
+      .select(col("doc_id").as("sid"), DedupOps.shingleTokens(col("text"), 8).as("ts"))
+    val sets = corpus.as[(Long, Seq[Int])].collect().map { case (s, ts) => (s, ts.toSet) }
+    assert(sets.exists { case (s, ts) => s == -1L && ts.isEmpty })
     val brute = (for {
       i <- sets.indices.iterator; j <- (i + 1) until sets.length
       (sa, ta) = sets(i); (sb, tb) = sets(j)
@@ -170,11 +203,16 @@ class OpsSpec extends SparkSpec {
       if inter > 0 && 2L * inter >= (ta.size + tb.size - inter)
       (a, b) = if (sa < sb) (sa, sb) else (sb, sa)
     } yield (a, b)).toSet
-    val sh = DedupOps.shingleRows(Tables.documents(spark, Sf), "doc_id", "text", 8)
-    val full = DedupOps.allPairsSimilarity(sh.localCheckpoint(true), tE6 = 500000L)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(full === brute, s"prefix filter diverged from brute force: " +
-      s"missed=${(brute -- full).take(3)} extra=${(full -- brute).take(3)}")
+    assert(brute.contains((-3L, -2L)), "the repeated-window pair must be a true pair")
+    val full = DedupOps.allPairsSimilarity(corpus, tE6 = 500000L)
+    val pairs = full.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    assert(pairs === brute, s"prefix filter diverged from brute force: " +
+      s"missed=${(brute -- pairs).take(3)} extra=${(pairs -- brute).take(3)}")
+    // the verify reads set sizes, not text lengths
+    val (inter, szA, szB) = full.where(col("doc_a") === -3L && col("doc_b") === -2L)
+      .select("inter", "sz_a", "sz_b").as[(Long, Long, Long)].head()
+    val (t3, t2) = (sets.find(_._1 == -3L).get._2, sets.find(_._1 == -2L).get._2)
+    assert((inter, szA, szB) === (((t3 & t2).size.toLong, t3.size.toLong, t2.size.toLong)))
   }
 
   test("LSH candidates recover planted near-duplicate pairs (recall on jaccard>=0.9)") {

@@ -1,13 +1,15 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project, Window => LWindow, WindowGroupLimit}
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LocalRelation, LogicalPlan, Project, Repartition, Window => LWindow, WindowGroupLimit}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.functions.WindowHashes
 import graft.ops.DedupOps
 import graft.sources.Tables
 
@@ -97,17 +99,20 @@ class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  /** Whether `p` scans the testdata table `table`. */
+  private def reads(p: LogicalPlan, table: String): Boolean = p.collect {
+    case l: LogicalRelation => l.relation
+  }.exists {
+    case h: HadoopFsRelation => h.location.rootPaths.exists(_.getName == s"$table.parquet")
+    case _ => false
+  }
+
   test("i09 builds one Q×N frame: exactly one join reads embeddings on both sides") {
     // the exact top-k and the sketch cut share one checkpointed pair frame,
     // and the cut's candidates take their cosine from it — a second Q×N
     // build, or a rerank re-joining the embeddings for both ids, would
     // add a join with the embeddings scan under both inputs
-    def readsEmb(p: LogicalPlan): Boolean = p.collect {
-      case l: LogicalRelation => l.relation
-    }.exists {
-      case h: HadoopFsRelation => h.location.rootPaths.exists(_.getName == "embeddings.parquet")
-      case _ => false
-    }
+    def readsEmb(p: LogicalPlan): Boolean = reads(p, "embeddings")
     val qes = executions("i09_ann_recall")
     assert(qes.nonEmpty, "no query execution was observed")
     val both = qes.flatMap(_.optimizedPlan.collect {
@@ -123,6 +128,54 @@ class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     for (name <- Seq("i09_ann_recall", "i12_cluster_quality")) {
       val found = hofs(executions(name))
       assert(found.isEmpty, s"$name executes higher-order functions: ${found.distinct}")
+    }
+  }
+
+  test("d22 hashes each document once and keeps one row per document until the verify") {
+    // the per-document token sets are derived once and checkpointed; their
+    // exploded rows and the verify arrays both come from that checkpoint —
+    // no collect_list regroup of the token rows — and the hashing fan-out
+    // is AQE's rebalance, not a fixed-count round-robin of the documents
+    val qes = executions("d22_allpairs")
+    assert(qes.nonEmpty, "no query execution was observed")
+    val hashings = qes.flatMap(qe => collectWithSubqueries(qe.executedPlan) { case p => p }
+      .flatMap(_.expressions.flatMap(_.collect { case w: WindowHashes => w })))
+    assert(hashings.size === 1, s"WindowHashes evaluated ${hashings.size} times")
+    val regroups = qes.flatMap(_.optimizedPlan.collect {
+      case a: Aggregate if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[CollectList])) => a
+    })
+    assert(regroups.isEmpty, s"collect_list aggregates:\n${regroups.mkString("\n")}")
+    val fixed = qes.flatMap(_.optimizedPlan.collect {
+      case r: Repartition if r.shuffle && reads(r.child, "documents") => r
+    })
+    assert(fixed.isEmpty, s"fixed-count repartitions of documents:\n${fixed.mkString("\n")}")
+  }
+
+  test("i03 and i12 assign without a sketch × centroid join or a per-vector aggregate") {
+    // the nearest-centroid kernel scores each sketch against the model
+    // literal in place: no plan joins rows of the sketch frame (the `sk`
+    // checkpoint) with a centroid model (a local relation), and none
+    // aggregates by vec_id. Row level = not below an aggregate, so i12's
+    // join of per-cluster rollups does not count
+    def rowLevel(p: LogicalPlan): Seq[LogicalPlan] = p match {
+      case _: Aggregate => Nil
+      case q => q +: q.children.flatMap(rowLevel)
+    }
+    def sketchRows(p: LogicalPlan) = rowLevel(p).exists(_.output.exists(_.name == "sk"))
+    def modelRows(p: LogicalPlan) = rowLevel(p).exists(_.isInstanceOf[LocalRelation])
+    def violations(name: String): Seq[String] = executions(name).flatMap(_.optimizedPlan.collect {
+      case j: Join if (sketchRows(j.left) && modelRows(j.right)) ||
+          (modelRows(j.left) && sketchRows(j.right)) => s"sketch × model join: ${j.simpleString(3)}"
+      case a: Aggregate if a.groupingExpressions.exists(_.references.exists(_.name == "vec_id")) =>
+        s"aggregate by vec_id: ${a.simpleString(3)}"
+    })
+    // the probe sees the IVF cell argmax, which does both
+    val ivf = violations("i11_ivf_balance")
+    assert(ivf.exists(_.startsWith("sketch × model")) && ivf.exists(_.startsWith("aggregate")),
+      "the probe must see i11's cross join and argmax")
+    for (name <- Seq("i03_kmeans", "i12_cluster_quality")) {
+      val found = violations(name)
+      assert(found.isEmpty, s"$name:\n${found.mkString("\n")}")
     }
   }
 

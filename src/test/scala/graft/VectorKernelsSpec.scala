@@ -8,7 +8,8 @@ import graft.functions.VectorKernels
 import graft.ops.Ann
 
 /** Each vector kernel equals, bit for bit, the Catalyst form it replaced:
-  * the `posexplode` + `sum` sketch and the `aggregate(zip_with)` dot fold.
+  * the `posexplode` + `sum` sketch, the `aggregate(zip_with)` dot fold and
+  * the k-means cross join + `max(struct)` argmax.
   * Over int64 sketches the fold is the 0.0-seeded left-to-right chain, and
   * the sketch scores built on it equal those of the `reduce(_ + _)` chain
   * it replaced. Doubles compare by their bits, so a flipped zero sign or a
@@ -191,5 +192,73 @@ class VectorKernelsSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getSeq[Any](1).map(v => Option(v).map(_.asInstanceOf[Long])))
         .toMap
     bothLegs("sketch")(sketches)(want)
+  }
+  test("nearest centroid == cross join + max(struct(d / cn, -cid)), codegen AND interpreted") {
+    val l = 8
+    def lv(n: Int, f: () => java.lang.Long): Seq[java.lang.Long] = Seq.fill(n)(f())
+    def small(): java.lang.Long =
+      if (rnd.nextInt(25) == 0) null else java.lang.Long.valueOf(rnd.nextInt(7) - 3L)
+    def big(): java.lang.Long =
+      if (rnd.nextInt(25) == 0) null else java.lang.Long.valueOf((rnd.nextGaussian() * 2e8).toLong)
+    def fixed(xs: Long*): Seq[java.lang.Long] = xs.map(java.lang.Long.valueOf)
+    val unit = fixed(1, 0, 0, 0, 0, 0, 0, 0)
+    // sketches: null, all-null, short, zero, and random slots with nulls
+    val sketches: Seq[Seq[java.lang.Long]] = Seq(null, Seq.fill(l)(null), lv(l - 2, small),
+      fixed(Seq.fill(l)(0L): _*), unit, fixed(1, 1, 0, 0, 0, 0, 0, 0)) ++
+      Seq.fill(300)(rnd.nextInt(3) match {
+        case 0 => lv(l, big)
+        case 1 => lv(if (rnd.nextInt(10) == 0) l + 1 else l, small)
+        case _ => lv(l, () => java.lang.Long.valueOf(rnd.nextInt(3) - 1L))
+      })
+    val df = frame(sketches.zipWithIndex.map { case (a, i) => Row(i.toLong, a, null) }, LongType)
+
+    def norm(c: Seq[java.lang.Long]): java.lang.Double =
+      if (c.exists(_ == null)) null
+      else math.sqrt(c.foldLeft(0.0)((acc, x) => acc + x.toDouble * x.toDouble))
+    def model(cs: (Long, Seq[java.lang.Long])*): Seq[Row] =
+      cs.map { case (cid, c) => Row(cid, c, norm(c)) }
+    val models: Seq[(String, Seq[Row])] = Seq(
+      "trained-like" -> model((1 to 6).map(cid => cid.toLong -> lv(l, big)): _*),
+      // equal scores: cid 9 and cid 4 are the same centroid, unit axes tie
+      // on diagonal sketches; a zero centroid (cn 0.0, null score), a
+      // null-slot centroid (null d and cn) and a short one (null d)
+      "ties" -> model(9L -> fixed(2, 1, 0, 0, 0, 0, 0, 0), 4L -> fixed(2, 1, 0, 0, 0, 0, 0, 0),
+        7L -> unit, 3L -> fixed(0, 1, 0, 0, 0, 0, 0, 0),
+        1L -> fixed(Seq.fill(l)(0L): _*), 2L -> (null +: unit.tail),
+        8L -> unit.take(l - 1), 6L -> fixed(-1, -1, 0, 0, 0, 0, 0, 0)),
+      // norms the kernel must take as given: a negative one turns a zero
+      // product into a −0.0 score, which must tie with +0.0 (cid 3 wins on
+      // the zero sketch, where Double.compare would pick cid 5); a null or
+      // ±0.0 norm gives a null score
+      "given norms" -> Seq(Row(3L, unit, -2.0), Row(5L, unit, 2.0), Row(2L, unit, -0.0),
+        Row(1L, unit, null), Row(6L, unit, 0.0)),
+      // a NaN score ranks above every other
+      "NaN norm" -> Seq(Row(8L, unit, Double.NaN), Row(1L, unit, 1.0)),
+      "one centroid" -> model(11L -> lv(l, small)),
+      "empty" -> Seq())
+
+    for ((name, m) <- models) {
+      val cents = spark.createDataFrame(java.util.Arrays.asList(m: _*), VectorKernels.CentroidModel)
+      val want = df.crossJoin(cents)
+        .select(col("id"), col("cid"), col("cn"), VectorKernels.sketchDot(col("a"), col("c")).as("d"))
+        .groupBy("id").agg(max(struct((col("d") / col("cn")).as("score"), (-col("cid")).as("nc"),
+          col("d"), col("cn"))).as("m"))
+        .select(col("id"), (-col("m.nc")).as("cid"), col("m.d"), col("m.cn"))
+      def winners(w: DataFrame): Map[Long, (Long, Option[Long], Option[Long])] =
+        w.collect().map(r => r.getLong(0) -> ((r.getLong(1), bits(r.get(2)), bits(r.get(3))))).toMap
+      val ref = winners(want)
+      if (name == "empty") assert(ref.isEmpty)
+      else assert(ref.size == sketches.size, s"$name: the reference lost a sketch")
+      if (name == "ties") {
+        assert(ref(4L)._1 == 7L && ref(5L)._1 == 4L, "equal scores go to the smallest cid")
+        assert(ref(0L)._1 == 1L && ref(1L)._1 == 1L, "all null scores go to the smallest cid")
+        assert(ref.values.exists(_._1 == 4L) && !ref.values.exists(_._1 == 9L))
+      }
+      if (name == "given norms") assert(ref(3L)._1 == 3L, "a −0.0 score ties with +0.0")
+      if (name == "NaN norm") assert(ref(4L)._1 == 8L, "a NaN score wins")
+      bothLegs(s"nearest centroid, $name model")(winners(df.select(col("id"),
+        VectorKernels.nearestCentroid(col("a"), m).as("w"))
+        .where(col("w").isNotNull).select(col("id"), col("w.cid"), col("w.d"), col("w.cn"))))(ref)
+    }
   }
 }
