@@ -7,14 +7,13 @@ import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 import graft.ops.{Ann, DedupOps, Multimodal, Retrieval, TextOps}
 import graft.Oracles._
+import graft.SparkEntry.QFn
 
 /** Training-data pipeline queries: deduplication (exact, MinHash-LSH,
   * SimHash, n-gram Jaccard, embedding-cosine), similarity search (brute
   * force + LSH-bucketed ANN), text analysis, multimodal plumbing.
   */
 object QueriesOps {
-
-  type QFn = (SparkSession, String) => DataFrame
 
   private def docs(s: SparkSession, dir: String) = Tables.documents(s, dir)
   private def emb(s: SparkSession, dir: String) = Tables.embeddings(s, dir)

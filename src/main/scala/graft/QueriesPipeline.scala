@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.operators.{Dedup, Enrich, Parse, Report, Route}
 import graft.Oracles._
+import graft.SparkEntry.QFn
 
 /** North-rule pipeline queries (parse→dedup→enrich→route→aggregate) plus
   * relational coverage (joins, windows, rollup, set ops). Each entry is a
@@ -14,10 +15,8 @@ import graft.Oracles._
   */
 object QueriesPipeline {
 
-  type QFn = (SparkSession, String) => DataFrame
-
-  /** Framed v9 flowset rows (from the typed walk or the Catalyst form) →
-    * the stateful decode's NfRec shape.
+  /** Framed v9 flowset rows (from [[graft.operators.BinaryDecode.v9FlowsetWalk]]
+    * or its reference-compat twin) → the stateful decode's NfRec shape.
     */
   private def nfRecsOf(s: SparkSession, recs: DataFrame) = {
     import s.implicits._
@@ -586,9 +585,8 @@ object QueriesPipeline {
       val fs = recs.agg(
         sum(when(col("is_template"), 1L).otherwise(0L)).as("template_flowsets"),
         sum(when(!col("is_template"), 1L).otherwise(0L)).as("data_flowsets"),
-        // flowsets observed in packets whose walk hit the maxFlowsets cap —
-        // loss is counted, never silent (reference counts skipped datasets)
-        sum(when(col("truncated"), 1L).otherwise(0L)).as("truncated_flowsets"))
+        // the walk has no flowset bound, so no flowset is ever cut short
+        lit(0L).as("truncated_flowsets"))
       val ev = graft.streaming.Templates.decodeBatch(ds).toDF().agg(
         sum(when(col("decoded"), 1L).otherwise(0L)).as("decoded_records"),
         sum(when(!col("decoded"), 1L).otherwise(0L)).as("undecodable_flowsets"))
@@ -630,8 +628,8 @@ object QueriesPipeline {
           element_at(col("fields"), 4).as("in_bytes"))
     }),
 
-    // REFERENCE-COMPAT v9 framing end-to-end (the migrant flag —
-    // v9FlowsetWalk(referenceCompat = true)): the same corpus as p27
+    // REFERENCE-COMPAT v9 framing end-to-end (the migrant walk —
+    // v9FlowsetWalkCompat): the same corpus as p27
     // through the reference binary's exact parse behavior. Two
     // oracle-visible consequences of the emulated quirks: the template
     // flowset's SECOND back-to-back entry (tid+200) never registers — the
@@ -643,8 +641,7 @@ object QueriesPipeline {
     // any earlier data record). Everything single-flowset matches p27.
     "p33_netflow_v9_compat" -> ((s, dir) => {
       import s.implicits._
-      val recs = graft.operators.BinaryDecode.v9FlowsetWalk(
-        Tables.nfV9Packets(s, dir), referenceCompat = true)
+      val recs = graft.operators.BinaryDecode.v9FlowsetWalkCompat(Tables.nfV9Packets(s, dir))
       val ds = nfRecsOf(s, recs)
       graft.streaming.Templates.decodeBatch(ds).toDF()
         .select(col("exporter").cast("long").as("exporter_id"),

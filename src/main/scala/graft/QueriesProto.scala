@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Positional, ProtoSynth}
 import graft.sources.Tables
 import graft.Oracles._
+import graft.SparkEntry.QFn
 
 /** Mechanically generated protocol-breadth queries: one oracle-checked
   * driver query per registered layout — 20 giganto-export network protocols
@@ -16,8 +17,6 @@ import graft.Oracles._
   * ([[graft.operators.ProtoSynth]]).
   */
 object QueriesProto {
-
-  type QFn = (SparkSession, String) => DataFrame
 
   private def numbered(prefix: String, protos: Seq[Positional.Proto]): Seq[(String, Positional.Proto)] =
     protos.zipWithIndex.map { case (p, i) =>

@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, ParseVendors}
 import graft.sources.Tables
 import graft.Oracles._
+import graft.SparkEntry.QFn
 
 /** One oracle-checked driver query per remaining security-log vendor
   * (v01..v09): mf2, sniper, aiwaf, tg, vforce, srx, sonicwall, shadowwall,
@@ -17,8 +18,6 @@ import graft.Oracles._
   * (collector/security_log.rs:105-109).
   */
 object QueriesVendors {
-
-  type QFn = (SparkSession, String) => DataFrame
 
   val queries: Seq[(String, QFn)] =
     ParseVendors.vendors.zipWithIndex.map { case (v, k) =>

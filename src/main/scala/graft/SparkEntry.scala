@@ -10,6 +10,9 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
   */
 object SparkEntry {
 
+  /** A driver query: (session, testdata directory) → its result. */
+  type QFn = (SparkSession, String) => DataFrame
+
   private def prep(spark: SparkSession): SparkSession = {
     // non-ANSI: malformed field → NULL (the reference drops-and-counts bad
     // records, never aborts — /root/reference/src/collector/zeek.rs:118-139)
@@ -39,7 +42,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("p14_pipeline")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  def queries: Map[String, QFn] =
     (QueriesPipeline.queries ++ QueriesOps.queries ++ QueriesProto.queries ++
       QueriesVendors.queries)
       .map { case (name, fn) =>

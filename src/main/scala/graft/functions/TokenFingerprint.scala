@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -50,13 +49,16 @@ case class TokenFingerprint(child: Expression) extends UnaryExpression {
 }
 
 object GraftFunctions {
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "token_fingerprint" -> ((children: Seq[Expression]) => TokenFingerprint(children.head)),
-    "window_hashes" -> ((children: Seq[Expression]) => WindowHashes(children(0), children(1)))
+  /** Every graft SQL function, declared once: (name, expression class,
+    * builder). Both entry points below register exactly this table.
+    */
+  private[functions] val fns: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("token_fingerprint", classOf[TokenFingerprint], children => TokenFingerprint(children.head)),
+    ("window_hashes", classOf[WindowHashes], children => WindowHashes(children(0), children(1)))
   )
 
   /** Register into an existing session (tests, Verify, Bench). */
-  def register(spark: SparkSession): Unit = fns.foreach { case (name, builder) =>
+  def register(spark: SparkSession): Unit = fns.foreach { case (name, _, builder) =>
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
   }
 }
@@ -65,14 +67,8 @@ object GraftFunctions {
   * spark-submit deployments.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("token_fingerprint"),
-      new ExpressionInfo(classOf[TokenFingerprint].getName, "token_fingerprint"),
-      (children: Seq[Expression]) => TokenFingerprint(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("window_hashes"),
-      new ExpressionInfo(classOf[WindowHashes].getName, "window_hashes"),
-      (children: Seq[Expression]) => WindowHashes(children(0), children(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.fns.foreach { case (name, cls, builder) =>
+      ext.injectFunction((new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
 }

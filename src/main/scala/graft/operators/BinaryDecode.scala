@@ -111,132 +111,17 @@ object BinaryDecode {
       .drop("packet")
   }
 
-  /** NetFlow v9 wire framing, pure Catalyst: header (20 bytes — version u16,
-    * count u16, sys_uptime u32, unix_secs u32, flow_sequence u32, source_id
-    * u32; reference packet.rs:289-300) followed by a walk over up to
-    * `maxFlowsets` flowsets, each (flowset_id u16, flowset_length u16, body)
-    * with the NEXT offset depending on the previous length
-    * (packet.rs:306-310). Template flowsets (id 0) decode their
-    * (type, length) pair list (packet.rs:330-355); data flowsets keep the
-    * raw record bytes as a hex payload for the template-stateful decode
-    * stage ([[graft.streaming.Templates]]). One output row per flowset:
-    * (exporter, seq, is_template, template_id, field_types, widths(hex
-    * chars), payload, max_recs, truncated).
-    *
-    * Known bounds vs the reference's iterator (documented, not silent):
-    *  - up to `maxTpls` template definitions are read per template flowset
-    *    (the reference's parse_netflow_template / parse_netflow_options_
-    *    template loop over back-to-back definitions, packet.rs:330-400;
-    *    here each definition is a dependent-offset slot — the next offset
-    *    depends on the previous field count — so the walk is expression-
-    *    bounded like the flowset walk; a flowset bundling more templates
-    *    than `maxTpls` loses the tail, sized generously vs real exporters
-    *    which bundle 1-2);
-    *  - packets carrying more than `maxFlowsets` flowsets are truncated;
-    *    every emitted row of such a packet has `truncated=true` so callers
-    *    count the loss (p28-style stats) rather than mistake it for a full
-    *    decode.
-    */
-  def netflowV9Recs(packets: org.apache.spark.sql.DataFrame,
-                    maxFlowsets: Int = 3, maxTpls: Int = 3): org.apache.spark.sql.DataFrame = {
-    val p = col("packet")
-    // flowset offsets: o1 = 21 (1-based); o_{i+1} = o_i + length_i
-    val offsets = Iterator.iterate(lit(21L).cast("long"), maxFlowsets)(o =>
-      o + beUintAt(p, (o + 2).cast("int"), 2)).toSeq
-    val fsStructs = offsets.map { o =>
-      struct(o.as("off"), (length(p) >= o + 3).as("valid"))
-    }
-    val base = packets
-      .withColumn("version", beUint(p, 1, 2))
-      .where(col("version") === 9L)
-      .withColumn("max_recs", beUint(p, 3, 2).cast("int"))
-      .withColumn("exporter", beUint(p, 17, 4).cast("string"))
-      .withColumn("seq", beUint(p, 13, 4))
-      .withColumn("fs", explode(array(fsStructs: _*)))
-      .where(col("fs.valid"))
-      .withColumn("o", col("fs.off").cast("int"))
-    val fsId = beUintAt(p, col("o"), 2)
-    val fsLen = beUintAt(p, col("o") + 2, 2)
-    // template-definition slots WITHIN a template flowset (the reference's
-    // back-to-back template loop, packet.rs:330-400). A regular template
-    // entry (flowset id 0) is tid(2) + field_count(2) + count·4 pair bytes;
-    // an options entry (id 1) is tid(2) + scope_len(2) + option_len(2) +
-    // (scope_len + option_len) pair bytes. Each next slot offset embeds the
-    // previous entry's length — bounded at maxTpls like the flowset walk.
-    val regSlots = Iterator.iterate((col("o") + 4).cast("long"), maxTpls)(t =>
-      t + 4 + beUintAt(p, (t + 2).cast("int"), 2) * 4).toSeq
-    val optSlots = Iterator.iterate((col("o") + 4).cast("long"), maxTpls)(t =>
-      t + 6 + beUintAt(p, (t + 2).cast("int"), 2) + beUintAt(p, (t + 4).cast("int"), 2)).toSeq
-    val slotStructs = (0 until maxTpls).map { k =>
-      // a slot is live when the WHOLE template entry fits inside the flowset
-      // body (the reference stops when fewer bytes remain); data flowsets
-      // pass through the single k=0 slot untouched
-      val regFits = regSlots(k) + 4 + beUintAt(p, (regSlots(k) + 2).cast("int"), 2) * 4 <=
-        col("o") + fsLen
-      val optFits = optSlots(k) + 6 + beUintAt(p, (optSlots(k) + 2).cast("int"), 2) +
-        beUintAt(p, (optSlots(k) + 4).cast("int"), 2) <= col("o") + fsLen
-      struct(
-        when(fsId === 0L, regSlots(k)).when(fsId === 1L, optSlots(k))
-          .otherwise(col("o") + 4).as("toff"),
-        (fsId === 0L && regFits || fsId === 1L && optFits ||
-          fsId > 1L && lit(k) === 0).as("tvalid"))
-    }
-    val withSlot = base
-      .withColumn("slot", explode(array(slotStructs: _*)))
-      .where(col("slot.tvalid"))
-      .withColumn("t", col("slot.toff").cast("int"))
-    val t = col("t")
-    val tplId = beUintAt(p, t, 2)
-    val fldCnt = beUintAt(p, t + 2, 2)
-    // regular template (flowset id 0): field pairs at t+4, count from the
-    // entry header (packet.rs:330-355). Options template (id 1): scope and
-    // option byte lengths at t+2/t+4, pairs at t+6, combined like the
-    // reference's scope_fields ++ option_fields (packet.rs:357-400). Each
-    // pair is (type u16, byte-length u16); widths kept in hex chars (2×
-    // bytes).
-    def pairList(start: Column, n: Column, pick: Int): Column =
-      transform(sequence(lit(0L), n - 1), j => pick match {
-        case 0 => beUintAt(p, (start + j * 4).cast("int"), 2).cast("int")
-        case _ => (beUintAt(p, (start + j * 4 + 2).cast("int"), 2) * 2).cast("int")
-      })
-    val scopeLen = beUintAt(p, t + 2, 2)
-    val optPairs = (scopeLen + beUintAt(p, t + 4, 2)) / 4
-    def tplSel(pick: Int): Column =
-      when(fsId === 0L && fldCnt > 0, pairList(t + 4, fldCnt, pick))
-        .when(fsId === 1L && optPairs > 0, pairList(t + 6, optPairs.cast("long"), pick))
-        .otherwise(array().cast("array<int>"))
-    // a further flowset header fits after the LAST walked offset → the walk
-    // was cut short by maxFlowsets (per-packet flag, same value on each row)
-    val oLast = offsets.last
-    // `+ 3` matches the walked-flowset validity check (`length(p) >= o + 3`
-    // under the 1-based convention): a skipped flowset whose 4-byte header
-    // ends exactly at the buffer's last byte is still a truncation
-    val truncated = length(p) >= oLast + 3 &&
-      length(p) >= oLast + beUintAt(p, (oLast + 2).cast("int"), 2) + 3
-    withSlot
-      .withColumn("is_template", fsId <= 1L)
-      .withColumn("template_id", when(fsId <= 1L, tplId).otherwise(fsId).cast("int"))
-      .withColumn("field_types", tplSel(0))
-      .withColumn("widths", tplSel(1))
-      // how many leading pairs are SCOPE fields (options templates render
-      // them with scope names + Ascii — packet.rs:484-497); 0 elsewhere
-      .withColumn("scope_cnt",
-        when(fsId === 1L, (scopeLen / 4).cast("int")).otherwise(lit(0)))
-      .withColumn("payload",
-        when(fsId <= 1L, lit("")).otherwise(lower(hex(p.substr(col("o") + 4, (fsLen - 4).cast("int"))))))
-      .withColumn("truncated", truncated)
-      .select("exporter", "template_id", "seq", "is_template", "widths",
-        "field_types", "scope_cnt", "payload", "max_recs", "truncated")
-  }
-
-  /** One framed v9 flowset element from the typed walk — the same row shape
-    * [[netflowV9Recs]] emits, so the template-stateful decode stage consumes
-    * either form.
+  /** One framed v9 flowset element — the row shape both walks
+    * ([[v9FlowsetWalk]], [[v9FlowsetWalkCompat]]) emit, so the
+    * template-stateful decode stage ([[graft.streaming.Templates]]) consumes
+    * either. One row per template entry (`is_template`, the entry's
+    * `field_types`/`widths` in hex chars, `scope_cnt`) or per data flowset
+    * (`payload` as hex); `max_recs` is the packet header's record count.
     */
   final case class V9Rec(doc_id: String, exporter: String, template_id: Int,
                          seq: Long, is_template: Boolean, field_types: Seq[Int],
                          widths: Seq[Int], scope_cnt: Int, payload: String,
-                         max_recs: Int, truncated: Boolean)
+                         max_recs: Int)
 
   /** Big-endian u16/u32 and hex-slice over a packet buffer — shared by the
     * RFC and compat walks so a byte-reading fix cannot land in one and miss
@@ -268,9 +153,7 @@ object BinaryDecode {
     * carrying arbitrarily many flowsets/templates decode fully (real
     * exporters bundle 10-30 flowsets per packet). Packets parallelize
     * across the cluster; within a packet the wire format is sequential —
-    * the same shape as [[pcapPackets]]. The bounded Catalyst form
-    * ([[netflowV9Recs]]) remains for expression-only pipelines; an sbt spec
-    * asserts the two agree wherever the bounded walk is complete.
+    * the same shape as [[pcapPackets]]. This is the framing p27–p32 run.
     *
     * Two DOCUMENTED divergences from the reference, both in favor of the
     * RFC-3954 semantics the reference's own TODO aspires to
@@ -286,22 +169,19 @@ object BinaryDecode {
     *     (packet.rs:394-397) — so a trailing template flowset registers
     *     only its FIRST entry. This walk registers every entry that fits
     *     inside the flowset body (the RFC's back-to-back layout). Like the
-    *     IHL option-skip fix above, the intended semantics are implemented
-    *     and the quirk is recorded here rather than reproduced.
+    *     IHL option-skip fix in [[pcapNetflowV5Payloads]], the intended
+    *     semantics are implemented and the quirk is recorded here rather
+    *     than reproduced.
     *
     * Reserved flowset ids 2..255 are skipped (the reference warns and
     * counts them — netflow.rs:116-122). Truncated trailing bytes that
-    * cannot hold a flowset header end the walk; `truncated` is always
-    * false here (nothing is ever cut short by a bound), kept for schema
-    * parity with the Catalyst form's loss accounting.
+    * cannot hold a flowset header end the walk.
     *
-    * `referenceCompat = true` reproduces the reference binary's framing
+    * [[v9FlowsetWalkCompat]] reproduces the reference binary's framing
     * BIT-FOR-BIT instead (for migrants who need identical output on quirky
-    * packets — see [[v9FlowsetWalkCompat]] for the exact emulated behaviors).
+    * packets; p33 runs it).
     */
-  def v9FlowsetWalk(packets: org.apache.spark.sql.DataFrame,
-                    referenceCompat: Boolean = false): org.apache.spark.sql.DataFrame = {
-    if (referenceCompat) return v9FlowsetWalkCompat(packets)
+  def v9FlowsetWalk(packets: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import packets.sparkSession.implicits._
     packets.select(col("doc_id").cast("string"), col("packet"))
       .as[(String, Array[Byte])]
@@ -333,7 +213,7 @@ object BinaryDecode {
                     val types = (0 until cnt).map(j => u16(t + 4 + j * 4))
                     val widths = (0 until cnt).map(j => u16(t + 6 + j * 4) * 2)
                     out += V9Rec(docId, exporter, tid, seq, is_template = true,
-                      types, widths, 0, "", maxRecs, truncated = false)
+                      types, widths, 0, "", maxRecs)
                     t += 4 + cnt * 4
                   }
                 }
@@ -349,14 +229,13 @@ object BinaryDecode {
                     val types = (0 until n).map(j => u16(t + 6 + j * 4))
                     val widths = (0 until n).map(j => u16(t + 8 + j * 4) * 2)
                     out += V9Rec(docId, exporter, tid, seq, is_template = true,
-                      types, widths, scopeLen / 4, "", maxRecs, truncated = false)
+                      types, widths, scopeLen / 4, "", maxRecs)
                     t += 6 + scopeLen + optLen
                   }
                 }
               } else if (fsId >= 256) {             // data flowset
                 out += V9Rec(docId, exporter, fsId, seq, is_template = false,
-                  Seq.empty, Seq.empty, 0, hexOf(o + 4, end), maxRecs,
-                  truncated = false)
+                  Seq.empty, Seq.empty, 0, hexOf(o + 4, end), maxRecs)
               }                                      // 2..255 reserved → skip
               o = end
             }
@@ -364,7 +243,7 @@ object BinaryDecode {
           out.result().iterator
         }
       }.toDF("doc_id", "exporter", "template_id", "seq", "is_template",
-        "field_types", "widths", "scope_cnt", "payload", "max_recs", "truncated")
+        "field_types", "widths", "scope_cnt", "payload", "max_recs")
   }
 
   /** REFERENCE-COMPAT v9 framing: reproduces the reference binary's parse
@@ -471,7 +350,7 @@ object BinaryDecode {
                 val (types, widths) = readPairs((cnt * 4) & 0xFFFF)
                 if (!failed)
                   entries += V9Rec(docId, exporter, tid, seq, is_template = true,
-                    types, widths, 0, "", maxRecs, truncated = false)
+                    types, widths, 0, "", maxRecs)
               }
             }
             if (failed) Iterator.empty else entries.result().iterator
@@ -505,7 +384,7 @@ object BinaryDecode {
                   else {
                     entries += V9Rec(docId, exporter, tid, seq, is_template = true,
                       sTypes ++ oTypes, sWidths ++ oWidths, sTypes.length, "",
-                      maxRecs, truncated = false)
+                      maxRecs)
                     t += pad
                   }
                 }
@@ -515,19 +394,12 @@ object BinaryDecode {
             }
           } else if (fsId >= 256) {
             Iterator.single(V9Rec(docId, exporter, fsId, seq, is_template = false,
-              Seq.empty, Seq.empty, 0, hexOf(24, c.length), maxRecs,
-              truncated = false))
+              Seq.empty, Seq.empty, 0, hexOf(24, c.length), maxRecs))
           } else Iterator.empty // reserved 2..255: warned + counted, no events
         }
       }.toDF("doc_id", "exporter", "template_id", "seq", "is_template",
-        "field_types", "widths", "scope_cnt", "payload", "max_recs", "truncated")
+        "field_types", "widths", "scope_cnt", "payload", "max_recs")
   }
-
-  /** Little-endian unsigned int at a dynamic 1-based offset (pcap headers
-    * are LE while network payloads are BE).
-    */
-  def leUintAt(bin: Column, pos: Column, len: Int): Column =
-    (0 until len).map(i => beUintAt(bin, pos + i, 1) * lit(1L << (8 * i))).reduce(_ + _)
 
   /** pcap FILE framing, typed per-file walk over `binaryFile` content: one
     * sequential pass over each file's record chain (each packet's offset

@@ -89,16 +89,6 @@ object DedupOps {
     agg.select(col(idCol), hash.as("simhash"))
   }
 
-  /** Character n-gram shingles of a text column (positional substrings —
-    * portable; used for n-gram Jaccard near-dup).
-    */
-  def charShingles(text: Column, n: Int): Column =
-    when(length(text) >= n,
-      array_distinct(transform(
-        sequence(lit(1), length(text) - lit(n - 1)),
-        i => text.substr(i, lit(n)))))
-      .otherwise(array().cast("array<string>"))
-
   /** Distinct int32 shingle tokens: base-31 ascii hash of each n-char
     * shingle mod 2^31−1 — pure arithmetic, identical in the SQL oracle.
     * This is the shingle→int step of the MinHash pipeline

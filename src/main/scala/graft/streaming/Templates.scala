@@ -47,21 +47,30 @@ object Templates {
                              raws: Seq[String] = Seq.empty, scopeCnt: Int = 0)
 
   /** State: latest widths + field types + scope count per template id for
-    * this exporter.
+    * this exporter. [[register]] and [[decode]] are the two steps every
+    * fold over it takes; the fold decides their order.
     */
   final case class TplState(widths: Map[Int, Seq[Int]],
                             types: Map[Int, Seq[Int]] = Map.empty,
-                            scopes: Map[Int, Int] = Map.empty)
+                            scopes: Map[Int, Int] = Map.empty) {
 
-  /** Decode every record packed in the flowset payload: records of
-    * Σwidths hex chars, while payload remains and the header count allows —
-    * the reference's dataset loop (packet.rs:465-479). No template → one
-    * undecoded marker row (counted-and-skipped semantics).
-    */
-  private def decodeRecords(rec: NfRec, widths: Option[Seq[Int]],
-                            ts: Seq[Int], scopeCnt: Int): Seq[NfDecoded] =
-    widths match {
+    /** This state with template record `t` in force (a redefinition
+      * replaces the previous one).
+      */
+    def register(t: NfRec): TplState =
+      TplState(widths + (t.templateId -> t.widths), types + (t.templateId -> t.types),
+        scopes + (t.templateId -> t.scopeCnt))
+
+    /** Decode every record packed in data flowset `rec`'s payload with the
+      * template in force: records of Σwidths hex chars, while payload
+      * remains and the header count allows — the reference's dataset loop
+      * (packet.rs:465-479). No template → one undecoded marker row
+      * (counted-and-skipped semantics).
+      */
+    def decode(rec: NfRec): Seq[NfDecoded] = widths.get(rec.templateId) match {
       case Some(ws) if ws.nonEmpty =>
+        val ts = types.getOrElse(rec.templateId, Seq.empty)
+        val scopeCnt = scopes.getOrElse(rec.templateId, 0)
         val recLen = ws.sum
         val n = math.min(rec.payload.length / recLen, rec.maxRecs)
         (0 until n).map { r =>
@@ -85,6 +94,7 @@ object Templates {
       case _ =>
         Seq(NfDecoded(rec.exporter, rec.templateId, rec.seq, 0, decoded = false, Seq.empty))
     }
+  }
 
   /** Pure per-group fold for the STREAMING form: records of one micro-batch
     * sorted by seq; templates update the dictionary, data records decode
@@ -101,13 +111,7 @@ object Templates {
     var st = init
     val out = Seq.newBuilder[NfDecoded]
     sorted.foreach { r =>
-      if (r.isTemplate)
-        st = TplState(st.widths + (r.templateId -> r.widths),
-          st.types + (r.templateId -> r.types),
-          st.scopes + (r.templateId -> r.scopeCnt))
-      else out ++= decodeRecords(r, st.widths.get(r.templateId),
-        st.types.getOrElse(r.templateId, Seq.empty),
-        st.scopes.getOrElse(r.templateId, 0))
+      if (r.isTemplate) st = st.register(r) else out ++= st.decode(r)
     }
     (out.result(), st)
   }
@@ -151,14 +155,8 @@ object Templates {
         var st = TplState(Map.empty)
         it.flatMap { r =>
           if (r.exporter != cur) { cur = r.exporter; st = TplState(Map.empty) }
-          if (r.isTemplate) {
-            st = TplState(st.widths + (r.templateId -> r.widths),
-              st.types + (r.templateId -> r.types),
-              st.scopes + (r.templateId -> r.scopeCnt))
-            Iterator.empty
-          } else decodeRecords(r, st.widths.get(r.templateId),
-            st.types.getOrElse(r.templateId, Seq.empty),
-            st.scopes.getOrElse(r.templateId, 0)).iterator
+          if (r.isTemplate) { st = st.register(r); Iterator.empty }
+          else st.decode(r).iterator
         }
       }
   }

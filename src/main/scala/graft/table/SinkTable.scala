@@ -73,6 +73,8 @@ final class SinkTable(base: String) {
 
   /** Highest committed line_no — the resume point (analog of the
     * reference's decimal line-count checkpoint, src/collector.rs:28-30).
+    * The resume filter is `Pipeline.run`'s: it commits only input rows
+    * with a `line_no` past this point.
     */
   def committedMaxLineNo: Long = manifests.map(_.maxLineNo).foldLeft(-1L)(math.max)
 
@@ -97,10 +99,6 @@ final class SinkTable(base: String) {
     AtomicFile.write(currentPath, commitId.toString)
     m
   }
-
-  /** Append only the rows past the committed resume point. Returns rows written. */
-  def appendResumable(df: DataFrame, commitId: Long): Manifest =
-    commit(df.where(col("line_no") > committedMaxLineNo), commitId)
 
   /** Read = union of committed commits only (uncommitted data invisible). */
   def read(spark: SparkSession): DataFrame = {

@@ -120,7 +120,7 @@ class BinaryFuzzSpec extends SparkSpec {
     // every entry of its one parse call or none, never a partial CALL (the
     // per-entry partial-pair case is in V9CompatSpec); here it must simply
     // bound itself on arbitrary bytes
-    BinaryDecode.v9FlowsetWalk(g, referenceCompat = true).count() // law: completes
+    BinaryDecode.v9FlowsetWalkCompat(g).count() // law: completes
     BinaryDecode.netflowV5AllRecords(g).count() // law: completes
 
     // structured v5: header count=5, truncate at every byte — rows must be

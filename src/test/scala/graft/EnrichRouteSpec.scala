@@ -37,22 +37,4 @@ class EnrichRouteSpec extends SparkSpec {
     val sinks = routed.select("sink").distinct().as[String].collect().toSet
     assert(sinks === Set("oplog", "nginx", "fgt", "zeek", "quarantine"))
   }
-
-  test("ensureSinks creates a directory per declared sink (header-even-if-empty)") {
-    val base = java.nio.file.Files.createTempDirectory("graft-sinks").toString
-    Route.ensureSinks(base, Seq("a", "b"))
-    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"$base/sink=a")))
-    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"$base/sink=b")))
-  }
-
-  test("fanOut writes hive-partitioned sinks readable per-sink with pruning") {
-    val base = java.nio.file.Files.createTempDirectory("graft-fan").toString
-    val routed = Route.routed(graft.operators.Parse.parsed(Tables.rawEvents(spark, Sf)))
-      .select("doc_id", "sink")
-    Route.fanOut(routed, base, buckets = 4)
-    val one = spark.read.parquet(base).where(col("sink") === "oplog")
-    assert(one.count() === routed.where(col("sink") === "oplog").count())
-    val total = spark.read.parquet(base).count()
-    assert(total === routed.count())
-  }
 }

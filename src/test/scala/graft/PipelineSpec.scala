@@ -75,17 +75,6 @@ class PipelineSpec extends SparkSpec {
       .toDF("line_no", "v", "sink", "bytes", "parse_ok")
   }
 
-  test("appendResumable skips already-committed line_no range (no dupes on overlap)") {
-    val out = freshDir()
-    val t = new SinkTable(out)
-    t.commit(rows(0L, 100L), 1L)
-    // re-offer an overlapping window [50, 150): only (100,150) may land
-    val m = t.appendResumable(rows(50L, 150L), 2L)
-    assert(m.rows === 50L)
-    assert(t.read(spark).count() === 150L)
-    assert(t.read(spark).select("line_no").distinct().count() === 150L)
-  }
-
   test("a moved table reads its own data, and each commit's files cluster rows by sink") {
     val src = java.nio.file.Paths.get(freshDir(), "t")
     val t = new SinkTable(src.toString)

@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.operators.BinaryDecode
+import graft.operators.BinaryDecode.V9Rec
 import graft.streaming.Templates
 import graft.streaming.Templates.{NfRec, TplState}
 
@@ -65,32 +69,37 @@ class TemplatesSpec extends SparkSpec {
     assert(st.widths(7) === Seq(2, 2))
   }
 
+  // four v9 wire packets, exporter 42:
+  // A: template packet (seq 1): template 257 = (IPv4SrcAddr/4, L4SrcPort/2)
+  private val pktA = "0009" + "0001" + "00000000" + "655fa1c0" + "00000001" + "0000002a" +
+    "0000" + "0010" + "0101" + "0002" + "0008" + "0004" + "0007" + "0002"
+  // B: data packet (seq 2, count=2): two 6-byte records for template 257
+  private val pktB = "0009" + "0002" + "00000000" + "655fa1c0" + "00000002" + "0000002a" +
+    "0101" + "0010" + "0a010203" + "1f90" + "0a010204" + "1f91"
+  // C: ONE packet carrying template 258 (one u16 field) AND its data
+  // flowset — exercises the dependent-offset flowset walk and the
+  // same-seq template-first rule
+  private val pktC = "0009" + "0001" + "00000000" + "655fa1c0" + "00000003" + "0000002a" +
+    "0000" + "000c" + "0102" + "0001" + "0001" + "0002" +
+    "0102" + "0006" + "beef"
+  // D: count=1 but payload has 2 records — loop must stop at header bound
+  private val pktD = "0009" + "0001" + "00000000" + "655fa1c0" + "00000004" + "0000002a" +
+    "0101" + "0010" + "0a010205" + "1f92" + "0a010206" + "1f93"
+
+  /** Hex packets → (doc_id d0, d1, …, packet) → the typed walk's framed rows. */
+  private def walk(pkts: Seq[String]): DataFrame =
+    BinaryDecode.v9FlowsetWalk(pkts.zipWithIndex.map { case (h, i) => (s"d$i", h) }
+      .toDF("doc_id", "h").select(col("doc_id"), unhex(col("h")).as("packet")))
+
+  private def nfRecs(framed: DataFrame) = framed
+    .select(col("exporter"), col("template_id").as("templateId"), col("seq"),
+      col("is_template").as("isTemplate"), col("widths"), col("payload"),
+      col("max_recs").as("maxRecs"), col("field_types").as("types"),
+      col("scope_cnt").as("scopeCnt"))
+    .as[NfRec]
+
   test("real v9 wire bytes: framing + stateful decode, multi-flowset packet, count bound") {
-    import org.apache.spark.sql.functions._
-    // A: template packet (exporter 42, seq 1): template 257 = (IPv4SrcAddr/4, L4SrcPort/2)
-    val pktA = "0009" + "0001" + "00000000" + "655fa1c0" + "00000001" + "0000002a" +
-      "0000" + "0010" + "0101" + "0002" + "0008" + "0004" + "0007" + "0002"
-    // B: data packet (seq 2, count=2): two 6-byte records for template 257
-    val pktB = "0009" + "0002" + "00000000" + "655fa1c0" + "00000002" + "0000002a" +
-      "0101" + "0010" + "0a010203" + "1f90" + "0a010204" + "1f91"
-    // C: ONE packet carrying template 258 (one u16 field) AND its data
-    // flowset — exercises the dependent-offset flowset walk and the
-    // same-seq template-first rule
-    val pktC = "0009" + "0001" + "00000000" + "655fa1c0" + "00000003" + "0000002a" +
-      "0000" + "000c" + "0102" + "0001" + "0001" + "0002" +
-      "0102" + "0006" + "beef"
-    // D: count=1 but payload has 2 records — loop must stop at header bound
-    val pktD = "0009" + "0001" + "00000000" + "655fa1c0" + "00000004" + "0000002a" +
-      "0101" + "0010" + "0a010205" + "1f92" + "0a010206" + "1f93"
-    val packets = Seq(pktA, pktB, pktC, pktD).toDF("h")
-      .select(unhex(col("h")).as("packet"))
-    val recs = graft.operators.BinaryDecode.netflowV9Recs(packets)
-      .select(col("exporter"), col("template_id").as("templateId"), col("seq"),
-        col("is_template").as("isTemplate"), col("widths"), col("payload"),
-        col("max_recs").as("maxRecs"), col("field_types").as("types"),
-        col("scope_cnt").as("scopeCnt"))
-      .as[NfRec]
-    val out = Templates.decodeBatch(recs).collect()
+    val out = Templates.decodeBatch(nfRecs(walk(Seq(pktA, pktB, pktC, pktD)))).collect()
       .map(d => (d.seq, d.recIdx) -> (d.decoded, d.templateId, d.fields.toList)).toMap
     assert(out((2L, 0)) === (true, 257, List(0x0a010203L, 8080L)))
     assert(out((2L, 1)) === (true, 257, List(0x0a010204L, 8081L)))
@@ -99,60 +108,37 @@ class TemplatesSpec extends SparkSpec {
     assert(!out.contains((4L, 1)), "record loop must stop at the header count")
   }
 
-  test("typed walk ≡ Catalyst framing wherever the bounded form is complete") {
-    import org.apache.spark.sql.functions._
-    // the four wire packets of the previous test — all within the Catalyst
-    // form's maxFlowsets/maxTpls bounds, so the two framings must agree row
-    // for row
-    val pktA = "0009" + "0001" + "00000000" + "655fa1c0" + "00000001" + "0000002a" +
-      "0000" + "0010" + "0101" + "0002" + "0008" + "0004" + "0007" + "0002"
-    val pktB = "0009" + "0002" + "00000000" + "655fa1c0" + "00000002" + "0000002a" +
-      "0101" + "0010" + "0a010203" + "1f90" + "0a010204" + "1f91"
-    val pktC = "0009" + "0001" + "00000000" + "655fa1c0" + "00000003" + "0000002a" +
-      "0000" + "000c" + "0102" + "0001" + "0001" + "0002" +
-      "0102" + "0006" + "beef"
-    val pktD = "0009" + "0001" + "00000000" + "655fa1c0" + "00000004" + "0000002a" +
-      "0101" + "0010" + "0a010205" + "1f92" + "0a010206" + "1f93"
-    val packets = Seq(pktA, pktB, pktC, pktD).zipWithIndex
-      .map { case (h, i) => (s"d$i", h) }.toDF("doc_id", "h")
-      .select(col("doc_id"), unhex(col("h")).as("packet"))
-    val cols = Seq("exporter", "template_id", "seq", "is_template",
-      "field_types", "widths", "scope_cnt", "payload", "max_recs")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select(cols.map(col): _*).collect()
-        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
-    val walk = canon(graft.operators.BinaryDecode.v9FlowsetWalk(packets))
-    val cat = canon(graft.operators.BinaryDecode.netflowV9Recs(packets))
-    assert(walk === cat)
+  test("typed walk frames each template entry and data flowset of the wire packets") {
+    // rows hand-derived from the four packets' bytes: widths are hex chars
+    // (2 × the wire byte length), payloads the data flowset body after its
+    // 4-byte header, max_recs the packet header's count
+    val framed = walk(Seq(pktA, pktB, pktC, pktD)).as[V9Rec].collect()
+      .sortBy(r => (r.doc_id, !r.is_template)).toSeq
+    assert(framed === Seq(
+      V9Rec("d0", "42", 257, 1L, is_template = true, Seq(8, 7), Seq(8, 4), 0, "", 1),
+      V9Rec("d1", "42", 257, 2L, is_template = false, Nil, Nil, 0,
+        "0a0102031f900a0102041f91", 2),
+      V9Rec("d2", "42", 258, 3L, is_template = true, Seq(1), Seq(4), 0, "", 1),
+      V9Rec("d2", "42", 258, 3L, is_template = false, Nil, Nil, 0, "beef", 1),
+      V9Rec("d3", "42", 257, 4L, is_template = false, Nil, Nil, 0,
+        "0a0102051f920a0102061f93", 1)))
   }
 
   test("typed walk: an 8-flowset packet (template + 7 data) decodes fully, no truncation") {
-    import org.apache.spark.sql.functions._
     // one packet: header (count=7) + template flowset (260: one u16 field)
-    // + 7 single-record data flowsets — beyond the Catalyst form's
-    // maxFlowsets=3 bound, decoded completely by the walk
+    // + 7 single-record data flowsets, all framed by the unbounded walk
     val tplFs = "0000" + "000c" + "0104" + "0001" + "0007" + "0002"
     val dataFs = (0 until 7).map(j => "0104" + "0006" + f"00${0xa0 + j}%02x").mkString
     val pkt = "0009" + "0007" + "00000000" + "655fa1c0" + "00000005" + "0000002a" +
       tplFs + dataFs
-    val packets = Seq(("d0", pkt)).toDF("doc_id", "h")
-      .select(col("doc_id"), unhex(col("h")).as("packet"))
-    val framed = graft.operators.BinaryDecode.v9FlowsetWalk(packets)
-    assert(framed.where(col("truncated")).count() === 0L)
+    val framed = walk(Seq(pkt))
     assert(framed.where(col("is_template")).count() === 1L)
-    val recs = framed
-      .select(col("exporter"), col("template_id").as("templateId"), col("seq"),
-        col("is_template").as("isTemplate"), col("widths"), col("payload"),
-        col("max_recs").as("maxRecs"), col("field_types").as("types"),
-        col("scope_cnt").as("scopeCnt"))
-      .as[NfRec]
-    val out = Templates.decodeBatch(recs).collect()
+    val out = Templates.decodeBatch(nfRecs(framed)).collect()
     assert(out.length === 7 && out.forall(_.decoded))
     assert(out.map(_.fields.head).sorted.toSeq === (0 until 7).map(j => 0xa0L + j))
   }
 
   test("v9 options template (flowset id 1): scope+option pairs define the widths") {
-    import org.apache.spark.sql.functions._
     // options template 259: scope (System/2B) = 1 pair, options (InBytes/4B)
     // = 1 pair → record = 6 bytes; then its data packet
     val pktT = "0009" + "0001" + "00000000" + "655fa1c0" + "00000001" + "0000002b" +
@@ -160,14 +146,7 @@ class TemplatesSpec extends SparkSpec {
       "0001" + "0002" + "0001" + "0004"
     val pktD = "0009" + "0001" + "00000000" + "655fa1c0" + "00000002" + "0000002b" +
       "0103" + "000a" + "00aa" + "000f4240"
-    val packets = Seq(pktT, pktD).toDF("h").select(unhex(col("h")).as("packet"))
-    val recs = graft.operators.BinaryDecode.netflowV9Recs(packets)
-      .select(col("exporter"), col("template_id").as("templateId"), col("seq"),
-        col("is_template").as("isTemplate"), col("widths"), col("payload"),
-        col("max_recs").as("maxRecs"), col("field_types").as("types"),
-        col("scope_cnt").as("scopeCnt"))
-      .as[NfRec]
-    val out = Templates.decodeBatch(recs).collect()
+    val out = Templates.decodeBatch(nfRecs(walk(Seq(pktT, pktD)))).collect()
       .map(d => d.seq -> (d.decoded, d.fields.toList)).toMap
     assert(out(2L) === (true, List(0xaaL, 1000000L)))
   }

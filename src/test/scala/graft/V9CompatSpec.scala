@@ -4,11 +4,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.BinaryDecode
 
-/** Reference-compat v9 framing (`v9FlowsetWalk(referenceCompat = true)`):
+/** Reference-compat v9 framing (`v9FlowsetWalkCompat`):
   * each test pins one emulated quirk of the reference binary's parser
   * against hand-derived expectations from packet.rs:305-400 and
   * netflow.rs:84-140. Where the packet is single-flowset and well-formed
-  * the compat walk must equal the RFC walk exactly — the migrant flag
+  * the compat walk must equal the RFC walk exactly — the migrant walk
   * changes nothing on the overwhelming wire reality.
   */
 class V9CompatSpec extends SparkSpec {
@@ -20,7 +20,7 @@ class V9CompatSpec extends SparkSpec {
     val df = pkts.zipWithIndex.map { case (h, i) => (s"d$i", h) }
       .toDF("doc_id", "h")
       .select(col("doc_id"), unhex(col("h")).as("packet"))
-    BinaryDecode.v9FlowsetWalk(df, referenceCompat = compat)
+    if (compat) BinaryDecode.v9FlowsetWalkCompat(df) else BinaryDecode.v9FlowsetWalk(df)
   }
 
   private def canon(df: org.apache.spark.sql.DataFrame) =

@@ -5,8 +5,11 @@ Usage: compare.py <sfDir> <verifyOutDir>
 
 With SPARK_GRAFT_ONLY set (as for the Verify run), only the queries that
 Verify selects are checked; the others are reported as skipped. A selected
-query without output still fails."""
-import sys, os, json, glob
+query without output still fails.
+
+After the summary line it prints the five oracles whose DuckDB execution
+took longest, with their wall seconds."""
+import sys, os, json, glob, time
 import duckdb
 import pandas as pd
 import numpy as np
@@ -33,6 +36,7 @@ prefixes = None if only is None else java_split(only, ",")
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
 ok, bad, skipped = [], [], []
+oracle_s = {}  # name -> DuckDB execution wall seconds
 for name, sql in sorted(oracle.items()):
     if prefixes is not None and not any(name.startswith(p) for p in prefixes):
         skipped.append(name); continue
@@ -43,10 +47,13 @@ for name, sql in sorted(oracle.items()):
         spark_df = pd.read_parquet(pdir)
     except Exception as e:
         bad.append((name, f"read fail: {e}")); continue
+    t0 = time.perf_counter()
     try:
         duck_df = con.execute(sql).df()
     except Exception as e:
         bad.append((name, f"ORACLE SQL ERROR: {str(e)[:200]}")); continue
+    finally:
+        oracle_s[name] = time.perf_counter() - t0
 
     def norm(df):
         df = df.reindex(sorted(df.columns), axis=1)
@@ -78,4 +85,7 @@ for n, m in bad: print(f"FAIL {n}: {m}")
 skip = f" / {len(skipped)} skipped (SPARK_GRAFT_ONLY={only})" if prefixes is not None else ""
 print(f"\n{len(ok)} pass / {len(bad)} fail{skip} / rows-only: "
       f"{[d for d in os.listdir(out) if os.path.isdir(os.path.join(out,d)) and d not in oracle]}")
+slowest = sorted(oracle_s.items(), key=lambda kv: -kv[1])[:5]
+if slowest:
+    print("slowest oracles (DuckDB s): " + ", ".join(f"{n} {t:.2f}" for n, t in slowest))
 sys.exit(1 if bad else 0)
