@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Positional, ProtoSynth}
 import graft.sources.Tables
 import graft.Oracles._
-import graft.SparkEntry.QFn
+import graft.SparkEntry.Q
 
 /** Mechanically generated protocol-breadth queries: one oracle-checked
   * driver query per registered layout — 20 giganto-export network protocols
@@ -23,19 +22,14 @@ object QueriesProto {
       f"$prefix${i + 1}%02d_${p.name.drop(2)}" -> p
     }
 
-  val all: Seq[(String, Positional.Proto)] =
-    numbered("g", Positional.giganto) ++
+  val registry: Seq[Q] =
+    (numbered("g", Positional.giganto) ++
       numbered("y", Positional.sysmon14) ++
       numbered("z", Positional.zeekP) ++
-      numbered("w", Positional.sysmonCsv)
-
-  val queries: Seq[(String, QFn)] = all.map { case (qname, proto) =>
-    qname -> ((s: SparkSession, dir: String) =>
-      ProtoSynth.query(proto)(
-        Tables.rawEvents2(s, dir).select(col("doc_id"), col("did"))))
-  }
-
-  val oracles: Map[String, String] = all.map { case (qname, proto) =>
-    qname -> withCtes(V2Cte)(ProtoSynth.oracleBody(proto))
-  }.toMap
+      numbered("w", Positional.sysmonCsv)).map { case (qname, proto) =>
+      Q(qname, (s, dir) =>
+        ProtoSynth.query(proto)(
+          Tables.rawEvents2(s, dir).select(col("doc_id"), col("did"))),
+        withCtes(V2Cte)(ProtoSynth.oracleBody(proto)))
+    }
 }

@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, ParseVendors}
 import graft.sources.Tables
 import graft.Oracles._
-import graft.SparkEntry.QFn
+import graft.SparkEntry.Q
 
 /** One oracle-checked driver query per remaining security-log vendor
   * (v01..v09): mf2, sniper, aiwaf, tg, vforce, srx, sonicwall, shadowwall,
@@ -18,25 +17,6 @@ import graft.SparkEntry.QFn
   * (collector/security_log.rs:105-109).
   */
 object QueriesVendors {
-
-  val queries: Seq[(String, QFn)] =
-    ParseVendors.vendors.zipWithIndex.map { case (v, k) =>
-      val fn: QFn = (s: SparkSession, dir: String) => {
-        // run-level syslog-year passthrough (SURVEY §2.2): the reference
-        // injects the wall clock (vforce.rs:23-26); a run pins it via conf,
-        // defaulting to the gate fixtures' 2025 (the oracle twin's constant)
-        val pinYear = s.conf.get("graft.syslog.pinYear", "2025").toInt
-        val vv = ParseVendors.vendorsFor(pinYear)(k)
-        val r = Tables.rawEvents3(s, dir).where(col("did") % 9 === k)
-          .withColumn("o", ParseVendors.secuLog(vv)(col("raw_line"),
-            Dedup.securitySerial(col("line_no"))))
-        r.where(col("o.ok")).select(col("doc_id"), col("o.ts_ns").as("ts_ns"),
-          col("o.src_ip").as("src_ip"), col("o.src_port").as("src_port"),
-          col("o.dst_ip").as("dst_ip"), col("o.dst_port").as("dst_port"),
-          col("o.proto_s").as("proto_s"))
-      }
-      f"v${k + 1}%02d_parse_${v.name}" -> fn
-    }
 
   private val Serial = "((did - 1) % 999) + 1"
   private val Base0900 =
@@ -54,16 +34,32 @@ object QueriesVendors {
     (s"(1700000000 + did % 1000)*1000000000 + $Serial", "6"),           // shadowwall (epoch secs)
     (s"$Base0900 + $Serial", "6"))                                      // axgate
 
-  val oracles: Map[String, String] =
+  // after every strict val the oracle strings read: an object initializes
+  // its vals in source order, so a later val would still be null here
+  val registry: Seq[Q] =
     ParseVendors.vendors.zipWithIndex.map { case (v, k) =>
       val (ts, proto) = tsSql(k)
-      f"v${k + 1}%02d_parse_${v.name}" -> withCtes(V2Cte)(
-        s"""SELECT doc_id, $ts AS ts_ns,
-           |  '10.2.' || cast(did % 250 AS varchar) || '.' || cast(did % 200 + 1 AS varchar) AS src_ip,
-           |  cast(1024 + did % 60000 AS int) AS src_port,
-           |  '10.3.' || cast((did * 3) % 250 AS varchar) || '.' || cast(did % 200 + 1 AS varchar) AS dst_ip,
-           |  cast(1 + did % 50000 AS int) AS dst_port,
-           |  '$proto' AS proto_s
-           |FROM v2 WHERE did % 9 = $k""".stripMargin)
-    }.toMap
+      Q(f"v${k + 1}%02d_parse_${v.name}", (s, dir) => {
+        // run-level syslog-year passthrough (SURVEY §2.2): the reference
+        // injects the wall clock (vforce.rs:23-26); a run pins it via conf,
+        // defaulting to the gate fixtures' 2025 (the oracle twin's constant)
+        val pinYear = s.conf.get("graft.syslog.pinYear", "2025").toInt
+        val vv = ParseVendors.vendorsFor(pinYear)(k)
+        val r = Tables.rawEvents3(s, dir).where(col("did") % 9 === k)
+          .withColumn("o", ParseVendors.secuLog(vv)(col("raw_line"),
+            Dedup.securitySerial(col("line_no"))))
+        r.where(col("o.ok")).select(col("doc_id"), col("o.ts_ns").as("ts_ns"),
+          col("o.src_ip").as("src_ip"), col("o.src_port").as("src_port"),
+          col("o.dst_ip").as("dst_ip"), col("o.dst_port").as("dst_port"),
+          col("o.proto_s").as("proto_s"))
+      },
+        withCtes(V2Cte)(
+          s"""SELECT doc_id, $ts AS ts_ns,
+             |  '10.2.' || cast(did % 250 AS varchar) || '.' || cast(did % 200 + 1 AS varchar) AS src_ip,
+             |  cast(1024 + did % 60000 AS int) AS src_port,
+             |  '10.3.' || cast((did * 3) % 250 AS varchar) || '.' || cast(did % 200 + 1 AS varchar) AS dst_ip,
+             |  cast(1 + did % 50000 AS int) AS dst_port,
+             |  '$proto' AS proto_s
+             |FROM v2 WHERE did % 9 = $k""".stripMargin))
+    }
 }

@@ -1,17 +1,25 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every implemented operator from SURVEY.md §2 (plus the training-data ops)
-  * has a `queries` entry; those expressible in ANSI SQL have a DuckDB twin
-  * in `oracleSql` built from the exact same integer/string arithmetic so the
-  * driver's hash compare matches value-for-value.
+  * is one [[SparkEntry.Q]] in [[SparkEntry.registry]]: its name, its Spark
+  * plan and its DuckDB twin, declared together in one family object
+  * (`QueriesPipeline`, `QueriesOps`, `QueriesProto`, `QueriesVendors`). The
+  * twin is built from the exact same integer/string arithmetic so the
+  * driver's hash compare matches value-for-value. `queries` and `oracleSql`
+  * are the by-name views of the registry that Verify, Bench and Diag read.
   */
 object SparkEntry {
 
   /** A driver query: (session, testdata directory) → its result. */
   type QFn = (SparkSession, String) => DataFrame
+
+  /** One driver query: its name, its plan and its DuckDB oracle SQL.
+    * `run` does not apply [[prep]]; [[queries]] does.
+    */
+  final case class Q(name: String, run: QFn, oracle: String)
 
   private def prep(spark: SparkSession): SparkSession = {
     // non-ANSI: malformed field → NULL (the reference drops-and-counts bad
@@ -34,7 +42,6 @@ object SparkEntry {
     // done). prep runs before a query builds its frames, so every
     // persistent RDD seen here belongs to an already-completed query.
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    graft.functions.GraftFunctions.register(spark)
     spark
   }
 
@@ -42,14 +49,22 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("p14_pipeline")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, QFn] =
-    (QueriesPipeline.queries ++ QueriesOps.queries ++ QueriesProto.queries ++
-      QueriesVendors.queries)
-      .map { case (name, fn) =>
-        name -> ((s: SparkSession, dir: String) => fn(prep(s), dir))
-      }.toMap
+  /** `qs`, after checking that no two entries share a name. */
+  private[graft] def registryOf(qs: Seq[Q]): Seq[Q] = {
+    val dupes = qs.groupBy(_.name).collect { case (n, xs) if xs.size > 1 => n }
+    require(dupes.isEmpty, s"duplicate query names: ${dupes.toSeq.sorted.mkString(", ")}")
+    qs
+  }
 
-  def oracleSql: Map[String, String] =
-    QueriesPipeline.oracles ++ QueriesOps.oracles ++ QueriesProto.oracles ++
-      QueriesVendors.oracles
+  /** Every driver query, once. */
+  val registry: Seq[Q] = registryOf(QueriesPipeline.registry ++ QueriesOps.registry ++
+    QueriesProto.registry ++ QueriesVendors.registry)
+
+  /** Each query by name, run after [[prep]] on the caller's session. */
+  val queries: Map[String, QFn] = registry.map { q =>
+    q.name -> ((s: SparkSession, dir: String) => q.run(prep(s), dir))
+  }.toMap
+
+  /** Each query's DuckDB oracle SQL by name. */
+  val oracleSql: Map[String, String] = registry.map(q => q.name -> q.oracle).toMap
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
@@ -48,6 +48,14 @@ case class TokenFingerprint(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+object TokenFingerprint {
+  /** Column DSL: `TokenFingerprint.of(col("tokens"))` → bigint, with no
+    * SQL function registration in the session.
+    */
+  def of(tokens: Column): Column =
+    GraftColumnBridge.column(TokenFingerprint(GraftColumnBridge.expression(tokens)))
+}
+
 object GraftFunctions {
   /** Every graft SQL function, declared once: (name, expression class,
     * builder). Both entry points below register exactly this table.
@@ -57,7 +65,7 @@ object GraftFunctions {
     ("window_hashes", classOf[WindowHashes], children => WindowHashes(children(0), children(1)))
   )
 
-  /** Register into an existing session (tests, Verify, Bench). */
+  /** Register into an existing session (`SqlSurface.register`, tests). */
   def register(spark: SparkSession): Unit = fns.foreach { case (name, _, builder) =>
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
   }

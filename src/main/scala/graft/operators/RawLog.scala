@@ -21,13 +21,18 @@ object RawLog {
   def readLines(spark: SparkSession, path: String): DataFrame =
     spark.read.format("text").load(path)
 
+  /** `target/stage/<name>_<sfDir with every non-alphanumeric as _>`: one
+    * staging path per fixture and scale factor.
+    */
+  def stagePath(name: String, sfDir: String): String =
+    s"target/stage/${name}_${sfDir.replaceAll("[^0-9a-zA-Z]", "_")}"
+
   /** Stage a deterministic fixture file (one write per distinct path+mode,
     * overwritten each run) and return its path — fixture setup for the
     * real-file-reader queries; the measured operator is the read back.
     */
   def stage(df: DataFrame, name: String, sfDir: String): String = {
-    val tag = sfDir.replaceAll("[^0-9a-zA-Z]", "_")
-    val path = s"target/stage/${name}_$tag"
+    val path = stagePath(name, sfDir)
     df.coalesce(1).write.mode("overwrite").text(path)
     path
   }
@@ -40,8 +45,7 @@ object RawLog {
     * after the header is irrelevant to the set-compared oracle.
     */
   def stageWithHeader(df: DataFrame, header: String, name: String, sfDir: String): String = {
-    val tag = sfDir.replaceAll("[^0-9a-zA-Z]", "_")
-    val path = s"target/stage/${name}_hdr_$tag"
+    val path = stagePath(s"${name}_hdr", sfDir)
     val hdr = df.sparkSession.range(1)
       .select(lit(0).as("k"), lit(header).as("value"))
     df.select(lit(1).as("k"), col("value")).unionByName(hdr)

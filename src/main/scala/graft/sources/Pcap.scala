@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
   */
 object Pcap {
 
-  private def hexN(v: Column, width: Int): Column = lpad(lower(hex(v)), width, "0")
-  private def idiv(a: Column, b: Long): Column = floor(a / lit(b)).cast("long")
+  import Tables.{hexN, idiv}
 
   /** Little-endian hex of a u32 value. */
   private def leHex4(v: Column): Column = concat(
@@ -98,8 +97,7 @@ object Pcap {
     * them) under target/stage and return the directory path.
     */
   def stage(spark: SparkSession, sfDir: String): String = {
-    val tag = sfDir.replaceAll("[^0-9a-zA-Z]", "_")
-    val dir = new java.io.File(s"target/stage/pcap_$tag")
+    val dir = new java.io.File(graft.operators.RawLog.stagePath("pcap", sfDir))
     dir.mkdirs()
     // idempotent: skip the whole staging job when this layout version is
     // already on disk for this sf (the marker pins the synth version, so a

@@ -73,6 +73,11 @@ object Tables {
   /** Truncating integer division for non-negative operands: floor(a/b). */
   def idiv(a: Column, b: Long): Column = floor(a / lit(b)).cast("long")
 
+  /** Lower-case hex of a non-negative integer, left-padded with zeros to
+    * `width` digits (the fixture packets' big-endian wire fields).
+    */
+  def hexN(v: Column, width: Int): Column = lpad(lower(hex(v)), width, "0")
+
   /** Word → deterministic int32 token id. Pure arithmetic over the first
     * char, last char and length so DuckDB computes the identical id.
     */
@@ -312,7 +317,6 @@ object Tables {
     * derivation is exercised on every packet.
     */
   private[sources] def nfV5HeaderHex(did: Column, cnt: Column): Column = {
-    def hexN(v: Column, width: Int): Column = lpad(lower(hex(v)), width, "0")
     concat(
       hexN(lit(5L), 4), hexN(cnt, 4),
       hexN(did % 4294967296L, 8),                           // sys_uptime (carries did — the f03 scan recovers the doc key from it)
@@ -330,7 +334,6 @@ object Tables {
     * overflows at any doc count) for arithmetic oracle re-derivation.
     */
   private[sources] def nfV5RecordHex(did: Column, j: Int): Column = {
-    def hexN(v: Column, width: Int): Column = lpad(lower(hex(v)), width, "0")
     val dm = did % 999983L
     concat(
       hexN((did % 1000003L * 2654435761L + j * 7919L) % 4294967296L, 8), // src_addr
@@ -409,7 +412,6 @@ object Tables {
     */
   def nfV9Packets(spark: SparkSession, dir: String): DataFrame = {
     val did = col("doc_id")
-    def hexN(v: Column, width: Int): Column = lpad(lower(hex(v)), width, "0")
     val g = idiv(did, 10L)
     // exporter = g (full u32 range, not g % 4096): with a narrower exporter
     // modulus, two groups g ≡ g' (mod lcm(4096, 100)) would share BOTH the
@@ -479,7 +481,6 @@ object Tables {
     */
   def nfV9OptionsPackets(spark: SparkSession, dir: String): DataFrame = {
     val did = col("doc_id")
-    def hexN(v: Column, width: Int): Column = lpad(lower(hex(v)), width, "0")
     val g = idiv(did, 2L)
     val tid = lit(512L) + g % 50L
     val header = concat(
@@ -521,7 +522,6 @@ object Tables {
     */
   def nfV9TypedPackets(spark: SparkSession, dir: String): DataFrame = {
     val did = col("doc_id")
-    def hexN(v: Column, width: Int): Column = lpad(lower(hex(v)), width, "0")
     val g = idiv(did, 2L)
     val tid = lit(700L) + g % 50L
     val header = concat(

@@ -83,15 +83,16 @@ object TemplateStore {
     val dir = Paths.get(base).toFile
     Option(dir.listFiles()).getOrElse(Array.empty).foreach { f =>
       if (f.getName.startsWith("ver=") &&
-        f.getName.stripPrefix("ver=").toLongOption.exists(_ <= ver - keep)) {
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-          x.delete(); ()
-        }
-        rm(f)
-      }
+        f.getName.stripPrefix("ver=").toLongOption.exists(_ <= ver - keep))
+        deleteTree(f)
     }
     ver
+  }
+
+  /** Delete `f` and everything under it; a missing `f` is a no-op. */
+  def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteTree)
+    f.delete(); ()
   }
 
   /** [[Templates.decodeBatch]] with warm-started, persisted template state:

@@ -14,10 +14,19 @@ class ContractSpec extends SparkSpec {
   }
 
   test("query names are unique across the family objects") {
-    val all = (QueriesPipeline.queries ++ QueriesOps.queries ++
-      QueriesProto.queries ++ QueriesVendors.queries).map(_._1)
-    val dupes = all.groupBy(identity).collect { case (n, xs) if xs.size > 1 => n }
-    assert(dupes.isEmpty, s"duplicate query names: $dupes")
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct.size == names.size, s"duplicate query names: ${names.diff(names.distinct)}")
+    assert(SparkEntry.queries.size == names.size && SparkEntry.oracleSql.size == names.size)
+  }
+
+  test("a registry with a repeated name fails at construction and names the duplicate") {
+    import SparkEntry.Q
+    val fn: SparkEntry.QFn = (s, _) => s.range(1).toDF()
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.registryOf(Seq(Q("x01_a", fn, "SELECT 1"), Q("x02_b", fn, "SELECT 2"),
+        Q("x01_a", fn, "SELECT 3")))
+    }
+    assert(e.getMessage.contains("duplicate query names: x01_a"), e.getMessage)
   }
 
   test("every query builds a plan against sf0.001 (no analysis errors)") {
@@ -26,5 +35,14 @@ class ContractSpec extends SparkSpec {
       val schema = fn(spark, Sf).schema
       assert(schema.nonEmpty, s"$name produced an empty schema")
     }
+  }
+
+  test("t04 runs in a fresh session and registers no SQL function there") {
+    val fresh = spark.newSession()
+    val t04 = SparkEntry.queries("t04_fingerprint_roll")
+    val got = t04(fresh, Sf).collect().toSet
+    assert(!fresh.catalog.functionExists("token_fingerprint"),
+      "t04 registered token_fingerprint in the caller's session")
+    assert(got.nonEmpty && got == t04(spark, Sf).collect().toSet)
   }
 }
