@@ -678,33 +678,9 @@ object BinaryDecode {
 
   /** RFC-5952 IPv6 string from the field's 32 raw hex chars, matching
     * Rust's Ipv6Addr Display (the reference's Ipv6 render,
-    * packet.rs:595,631-634): lowercase groups without leading zeros, the
-    * leftmost-longest run of ≥2 zero groups compressed to "::", and the
-    * IPv4-mapped form ::ffff:a.b.c.d special-cased.
+    * packet.rs:595,631-634): one compiled kernel, [[graft.functions.Ipv6String]].
     */
-  def ipv6String(raw: Column): Column = {
-    val hexes = (0 until 8).map(i => lower(substring(raw, 1 + 4 * i, 4)))
-    val short = hexes.map(h => regexp_replace(h, "^0{1,3}", ""))
-    val zero = hexes.map(_ === "0000")
-    def allZero(s: Int, l: Int): Column =
-      (s until s + l).map(zero).reduce(_ && _)
-    def compressed(s: Int, l: Int): Column = {
-      val left = short.take(s)
-      val right = short.drop(s + l)
-      concat((left.flatMap(h => Seq(h, lit(":"))).dropRight(1) ++
-        Seq(lit("::")) ++
-        right.flatMap(h => Seq(h, lit(":"))).dropRight(1)): _*)
-    }
-    val full = concat(short.flatMap(h => Seq(h, lit(":"))).dropRight(1): _*)
-    // candidates ordered longest-first then leftmost — the first match is
-    // the RFC-5952 choice
-    val runs = for (l <- 8 to 2 by -1; s <- 0 to 8 - l) yield (s, l)
-    val mapped = allZero(0, 5) && hexes(5) === "ffff"
-    val v4 = ipv4String(conv(substring(raw, 25, 8), 16, 10).cast("long"))
-    runs.foldLeft(when(mapped, concat(lit("::ffff:"), v4))) {
-      case (acc, (s, l)) => acc.when(allZero(s, l), compressed(s, l))
-    }.otherwise(full)
-  }
+  def ipv6String(raw: Column): Column = graft.functions.Ipv6String.of(raw)
 
   /** Printable-prefix text render from the field's raw hex chars — the
     * reference's Text kind verbatim (packet.rs:614-623): the bytes BEFORE

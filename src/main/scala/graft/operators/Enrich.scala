@@ -12,14 +12,23 @@ import org.apache.spark.sql.functions._
   * a tiny dim. Spark-first: `broadcast(dim)` keeps it shuffle-free; the
   * fact side never moves.
   *
+  * The pipeline's dimension (`Tables.sourceDim`) holds one row per source,
+  * each a pure function of its source. A table's first commit builds it from
+  * its delta's distinct sources; a resumed commit projects it over a local
+  * relation of the sources the table's manifests record, which broadcasts
+  * with no job, and writes again, unpublished, with the dimension widened
+  * when its write observes a source outside it (`Pipeline.run`). Extra
+  * dimension rows change nothing: the join is a left join on the key.
+  *
   * Skew: at 10^12 rows hot `source` keys skew any shuffle join; broadcast
   * sidesteps it entirely (dims are ~1k rows). [[salted]] is provided for the
   * case where a dim outgrows broadcast: it splits hot keys across S salts.
   */
 object Enrich {
 
-  /** Left broadcast join — must not drop rows (every source present in dim;
-    * header-even-if-empty invariant is the writer's job, not the join's).
+  /** Left broadcast join — must not drop rows: a fact whose key the dim
+    * lacks keeps null dim columns (header-even-if-empty invariant is the
+    * writer's job, not the join's).
     */
   def withDim(facts: DataFrame, dim: DataFrame, key: String): DataFrame =
     facts.join(broadcast(dim), Seq(key), "left")

@@ -111,20 +111,20 @@ object Parse {
     // split positional — no single-regex win
     val op = oplog(line); val ng = nginx(line)
     val fg = fgt(line); val zk = zeek(line)
-    df
-      .withColumn("ts_raw_ns",
-        when(kind === "oplog", op("ts_ns"))
-          .when(kind === "nginx", ng("ts_ns"))
-          .when(kind === "fgt", fg("ts_ns"))
-          .otherwise(zk("ts_ns")))
-      .withColumn("level", when(kind === "oplog", op("level")).when(kind === "fgt", fg("action")).otherwise(lit(null).cast("string")))
-      .withColumn("src_ip",
-        when(kind === "nginx", ng("src_ip")).when(kind === "fgt", fg("src_ip"))
-          .when(kind === "zeek", zk("src_ip")).otherwise(lit(null).cast("string")))
-      .withColumn("status_code", when(kind === "nginx", ng("status")).otherwise(lit(null).cast("int")))
-      .withColumn("parse_ok",
-        when(kind === "oplog", op("ok")).when(kind === "nginx", ng("ok"))
-          .when(kind === "fgt", fg("ok")).otherwise(zk("ok")))
-      .withColumn("bytes", length(line).cast("long"))
+    // one projection: a `withColumn` per column would re-analyze the plan
+    // once per column
+    df.select(col("*"),
+      when(kind === "oplog", op("ts_ns"))
+        .when(kind === "nginx", ng("ts_ns"))
+        .when(kind === "fgt", fg("ts_ns"))
+        .otherwise(zk("ts_ns")).as("ts_raw_ns"),
+      when(kind === "oplog", op("level")).when(kind === "fgt", fg("action"))
+        .otherwise(lit(null).cast("string")).as("level"),
+      when(kind === "nginx", ng("src_ip")).when(kind === "fgt", fg("src_ip"))
+        .when(kind === "zeek", zk("src_ip")).otherwise(lit(null).cast("string")).as("src_ip"),
+      when(kind === "nginx", ng("status")).otherwise(lit(null).cast("int")).as("status_code"),
+      when(kind === "oplog", op("ok")).when(kind === "nginx", ng("ok"))
+        .when(kind === "fgt", fg("ok")).otherwise(zk("ok")).as("parse_ok"),
+      length(line).cast("long").as("bytes"))
   }
 }

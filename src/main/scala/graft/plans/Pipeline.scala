@@ -1,11 +1,13 @@
 package graft.plans
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 import graft.operators.{Dedup, Enrich, Parse, Report, Route}
-import graft.table.SinkTable
+import graft.table.{Manifest, SinkTable}
 
 /** The end-to-end north-rule pipeline:
   * read → tokenize → parse (Catalyst grok) → ts-dedup window → enrich
@@ -23,15 +25,25 @@ import graft.table.SinkTable
   * input rows past the committed `line_no` (the reference tails from its
   * checkpoint the same way — src/checkpoint.rs:44-116, zeek.rs:92-94), and
   * its report merges the manifests (no scan, no job). A delta commit runs
-  *   - two scans of the delta, whose `line_no` predicate reaches the parquet
-  *     scan: its rows, and its sources for the broadcast dimension (a
-  *     distinct: one small shuffle and the broadcast collect);
+  *   - one scan of the delta, whose `line_no` predicate reaches the parquet
+  *     scan;
   *   - one scan of the committed table's `(source, line_no, ts_raw_ns)`
   *     with the schema the manifests recorded, rows with a null ts dropped
   *     at the scan; it continues the dedup window's equal-ts groups;
   *   - the window shuffle over the delta ∪ those keys. Its reduce side
   *     enriches, routes, sorts each partition by sink and writes; the
-  *     manifest's stats are observed on that write.
+  *     manifest's stats and the commit's sources are observed on that
+  *     write.
+  * The broadcast source dimension of a delta commit costs no job: it is a
+  * projection over a local relation of the sources the manifests record
+  * (`SinkTable.sources`). Each dimension row is a pure function of its
+  * source and the join is a left join, so a dimension with extra sources
+  * attaches the same values. When the write observes a source the
+  * manifests lack, the commit writes its unpublished data again with the
+  * dimension widened by it, and publishes only that write: a delta that
+  * brings a new source costs a second write. A table's first commit has no
+  * manifests and builds the dimension from its delta (a distinct: one
+  * small shuffle and the broadcast collect).
   * The committed keys are the one part that is not O(delta): three narrow
   * columns of every committed row with a ts are scanned and shuffled on
   * each commit (ROADMAP item 1 lists ways to cut them to the keys a delta
@@ -66,17 +78,38 @@ object Pipeline {
   def run(spark: SparkSession, dir: String, outBase: String, commitId: Long = 1L): DataFrame = {
     val table = new SinkTable(outBase)
     val delta = Tables.rawEvents(spark, dir).where(col("line_no") > table.committedMaxLineNo)
-    val routed = stages(delta, table.read(spark, DedupKeys), Tables.sourceDim(delta))
-    // quarantined rows keep the WHOLE line as bytes — the reference's raw-log
-    // fallback record (Log{kind, log bytes} — src/collector/log.rs:129-149);
-    // parsed sinks carry null here (columnar: costs nothing when absent)
-    val slim = routed.select(
-      col("doc_id"), col("tokens"), col("n_tok"), col("source"), col("line_no"),
-      col("ts_raw_ns"), col("ts_ns"), col("level"), col("src_ip"), col("status_code"),
-      col("vendor"), col("log_type"), col("version"), col("bytes"),
-      when(col("sink") === Route.Quarantine, encode(col("raw_line"), "UTF-8")).as("raw_log"),
-      col("parse_ok"), col("sink"))
-    table.commit(slim, commitId)
+    val carried = table.read(spark, DedupKeys)
+    def write(dim: DataFrame): Manifest =
+      table.write(slim(stages(delta, carried, dim)), commitId)
+    // every write reads the files `delta` listed, so the rows, and the
+    // sources they bring, are the same each time
+    @tailrec def widening(known: Set[String]): Manifest = {
+      val w = write(Tables.sourceDimRows(localSources(spark, known)))
+      val fresh = w.sources -- known
+      if (fresh.isEmpty) w else widening(known ++ fresh)
+    }
+    table.publish(if (carried.isEmpty) write(Tables.sourceDim(delta)) else widening(table.sources))
     Report.fromManifests(spark, table.manifests)
   }
+
+  /** `sources` as a local relation. Never `distinct` it: the projection
+    * [[Tables.sourceDimRows]] folds into a local relation and broadcasts
+    * with no job, an aggregate over it would plan one.
+    */
+  private def localSources(spark: SparkSession, sources: Set[String]): DataFrame = {
+    import spark.implicits._
+    sources.toSeq.sorted.toDF("source")
+  }
+
+  /** The stored columns. Quarantined rows keep the WHOLE line as bytes —
+    * the reference's raw-log fallback record (Log{kind, log bytes} —
+    * src/collector/log.rs:129-149); parsed sinks carry null here (columnar:
+    * costs nothing when absent).
+    */
+  private def slim(routed: DataFrame): DataFrame = routed.select(
+    col("doc_id"), col("tokens"), col("n_tok"), col("source"), col("line_no"),
+    col("ts_raw_ns"), col("ts_ns"), col("level"), col("src_ip"), col("status_code"),
+    col("vendor"), col("log_type"), col("version"), col("bytes"),
+    when(col("sink") === Route.Quarantine, encode(col("raw_line"), "UTF-8")).as("raw_log"),
+    col("parse_ok"), col("sink"))
 }

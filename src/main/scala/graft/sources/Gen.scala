@@ -38,13 +38,8 @@ object Gen {
       Tables.kindName(source).as("kind"))
   }
 
-  /** Matching source dimension (same derivation as Tables.sourceDim). */
-  def sourceDim(spark: SparkSession, sources: Int = 500): DataFrame = {
-    val source = concat(lit("src"), col("id").cast("string"))
-    spark.range(0, sources, 1, 1).select(
-      source.as("source"),
-      concat(lit("vendor-"), (Tables.sourceNum(source) % 7).cast("string")).as("vendor"),
-      Tables.kindName(source).as("log_type"),
-      concat(lit("v"), (Tables.sourceNum(source) % 3 + 1).cast("string")).as("version"))
-  }
+  /** Matching source dimension: `Tables.sourceDimRows` of every source. */
+  def sourceDim(spark: SparkSession, sources: Int = 500): DataFrame =
+    Tables.sourceDimRows(spark.range(0, sources, 1, 1)
+      .select(concat(lit("src"), col("id").cast("string")).as("source")))
 }

@@ -586,15 +586,22 @@ object Tables {
   def sourceDim(spark: SparkSession, dir: String): DataFrame = sourceDim(documents(spark, dir))
 
   /** The source dimension over the sources present in `docs`, any frame
-    * with a `source` column: a resumed commit builds it from its delta.
+    * with a `source` column: a table's first commit builds it from its
+    * delta. [[sourceDimRows]] of their distinct.
     */
-  def sourceDim(docs: DataFrame): DataFrame = {
-    val d = docs.select("source").distinct()
-    d.select(
+  def sourceDim(docs: DataFrame): DataFrame = sourceDimRows(docs.select("source").distinct())
+
+  /** The dimension rows of `sources`, a frame of distinct `source` values:
+    * each row a pure function of its source, in one projection. Over a local
+    * relation the optimizer folds it into a local relation, which
+    * broadcasts without a job; an aggregate over it (a `distinct`) would
+    * plan one.
+    */
+  def sourceDimRows(sources: DataFrame): DataFrame =
+    sources.select(
       col("source"),
       concat(lit("vendor-"), (sourceNum(col("source")) % lit(7)).cast("string")).as("vendor"),
       kindName(col("source")).as("log_type"),
       concat(lit("v"), (sourceNum(col("source")) % lit(3) + lit(1)).cast("string")).as("version")
     )
-  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.operators.Report
@@ -68,11 +69,13 @@ class PipelineSpec extends SparkSpec {
     assert(after === before)
   }
 
-  /** Commit-shaped rows [lo, hi): every row routed to `sink`. */
+  /** Commit-shaped rows [lo, hi): every row routed to `sink`, from one of
+    * three sources.
+    */
   private def rows(lo: Long, hi: Long, sink: String = "oplog") = {
     import spark.implicits._
-    (lo until hi).map(i => (i, s"r$i", sink, 10L + i % 3, true))
-      .toDF("line_no", "v", "sink", "bytes", "parse_ok")
+    (lo until hi).map(i => (i, s"r$i", s"src${i % 3}", sink, 10L + i % 3, true))
+      .toDF("line_no", "v", "source", "sink", "bytes", "parse_ok")
   }
 
   test("a moved table reads its own data, and each commit's files cluster rows by sink") {
@@ -91,10 +94,11 @@ class PipelineSpec extends SparkSpec {
   }
 
   /** Appends doc_id slice [lo, hi) of sf0.001 `documents` to `dir`'s copy,
-    * shifted by `shift`; returns the rows added.
+    * the rows `where` holds for, shifted by `shift`; returns the rows added.
     */
-  private def grow(dir: String, lo: Long, hi: Long, shift: Long = 0L): Long = {
-    val part = Tables.documents(spark, Sf).where(col("doc_id") >= lo && col("doc_id") < hi)
+  private def grow(dir: String, lo: Long, hi: Long, shift: Long = 0L,
+                   where: Column = lit(true)): Long = {
+    val part = Tables.documents(spark, Sf).where(col("doc_id") >= lo && col("doc_id") < hi && where)
       .withColumn("doc_id", col("doc_id") + shift)
     part.coalesce(1).write.mode("append").parquet(s"$dir/documents.parquet")
     part.count()
@@ -163,15 +167,20 @@ class PipelineSpec extends SparkSpec {
     assert(commitJobs === 1)
     assert(m.rows === 10L && m.maxLineNo === 1009L)
     assert(m.sinks === Seq(SinkStats("oplog", 10L, 10L * 11L, 10L, 12L, 10L, 0L)))
+    assert(m.sources.isEmpty, "the pipeline's commits recorded rows' three sources")
   }
 
   test("fail loudly: v1 manifest, sinks without ts_raw_ns, a sink outside the declared list") {
-    val v1Base = freshDir()
-    val v1 = new SinkTable(v1Base)
-    val v1Path = java.nio.file.Paths.get(v1Base, "_manifests", "000000000001.json")
-    Files.writeString(v1Path, """{"commit_id":1,"rows":0,"max_line_no":-1,"partitions":[]}""")
-    val e1 = intercept[IllegalArgumentException](v1.manifests)
-    assert(e1.getMessage.contains(v1Path.toString) && e1.getMessage.contains("v1"))
+    val oldBase = freshDir()
+    val old = new SinkTable(oldBase)
+    val oldPath = java.nio.file.Paths.get(oldBase, "_manifests", "000000000001.json")
+    // v1 had no version field; v2 had no `sources`
+    for ((v, json) <- Seq(1 -> """{"commit_id":1,"rows":0,"max_line_no":-1,"partitions":[]}""",
+        2 -> """{"version":2,"commit_id":1,"rows":0,"max_line_no":-1,"sinks":[]}""")) {
+      Files.writeString(oldPath, json)
+      val e = intercept[IllegalArgumentException](old.manifests)
+      assert(e.getMessage.contains(oldPath.toString) && e.getMessage.contains(s"manifest v$v"))
+    }
 
     val out = freshDir()
     val t = new SinkTable(out)
@@ -183,6 +192,58 @@ class PipelineSpec extends SparkSpec {
     val e3 = intercept[IllegalArgumentException](t.commit(rows(10L, 20L, sink = "elsewhere"), 2L))
     assert(e3.getMessage.contains("10 of 10 rows routed to no sink"))
     assert(t.manifests.map(_.commitId) === Seq(1L))
+  }
+
+  private val Early = Tables.sourceNum(col("source")) < 10
+  private def srcs(r: Range): Set[String] = r.map(i => s"src$i").toSet
+
+  /** A table whose commits 1-2 land src0..src9, and an input whose next
+    * delta (doc_ids 1250-1499) brings src10..src19 as well.
+    */
+  private def tableBeforeNewSources(): (String, String) = {
+    val in = freshDir(); val out = freshDir()
+    grow(in, 0L, 500L, where = Early); Pipeline.run(spark, in, out, 1L)
+    grow(in, 0L, 250L, 1000L, Early); Pipeline.run(spark, in, out, 2L)
+    grow(in, 250L, 500L, 1000L)
+    (in, out)
+  }
+
+  test("a resumed commit whose sources are all recorded runs fewer jobs than one building its dimension") {
+    val in = freshDir(); val out = freshDir()
+    grow(in, 0L, 250L)
+    val (_, fromDelta) = jobsDuring(Pipeline.run(spark, in, out, 1L))
+    grow(in, 250L, 500L)
+    val (_, fromManifests) = jobsDuring(Pipeline.run(spark, in, out, 2L))
+    val t = new SinkTable(out)
+    assert(t.manifests.map(_.sources) === Seq(srcs(0 until 20), Set.empty[String]))
+    assert(fromManifests < fromDelta,
+      s"resumed commit ran $fromManifests jobs, the first commit $fromDelta")
+  }
+
+  test("a delta bringing a new source: one-shot rows, each source recorded by exactly one manifest") {
+    val (in, out) = tableBeforeNewSources()
+    Pipeline.run(spark, in, out, 3L)
+    val t = new SinkTable(out)
+    val cols = Seq("doc_id", "sink", "ts_ns", "vendor", "log_type", "version").map(col)
+    val a = t.read(spark).select(cols: _*)
+    val b = Pipeline.transformed(spark, in).select(cols: _*)
+    assert(a.count() === 250L + 130L + 250L)
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    assert(a.where(col("vendor").isNull).count() === 0L)
+    assert(t.manifests.map(_.sources) === Seq(srcs(0 until 10), Set.empty[String], srcs(10 until 20)))
+    assert(t.sources === srcs(0 until 20))
+  }
+
+  test("rolling back the commit that introduced a source: the re-run records it again") {
+    val (in, out) = tableBeforeNewSources()
+    Pipeline.run(spark, in, out, 3L)
+    val t = new SinkTable(out)
+    t.rollbackLast()
+    assert(t.sources === srcs(0 until 10))
+    Pipeline.run(spark, in, out, 4L)
+    assert(t.manifests.map(m => m.commitId -> m.sources) ===
+      Seq(1L -> srcs(0 until 10), 2L -> Set.empty[String], 4L -> srcs(10 until 20)))
+    assert(t.read(spark).where(col("vendor").isNull).count() === 0L)
   }
 
   test("quarantine sink receives exactly the corrupt rows (did % 97 == 0)") {
