@@ -6,8 +6,7 @@ import graft.table.SinkTable
 
 /** spark-submit entrypoint: run the full parse→enrich→route→aggregate
   * pipeline over a testdata dir, write per-sink tables + manifest, print the
-  * per-sink report, each commit's manifest stats and the sources it was the
-  * first to record, and the table's source count.
+  * per-sink report and each commit's manifest stats.
   * Args: <sfDir> <outBase> [commitId] [--rollback-first]
   *
   * `--rollback-first` drops the last manifest before running — the resume
@@ -29,18 +28,14 @@ object Main {
     val report = Pipeline.run(spark, sfDir, outBase, commitId)
     report.orderBy("sink").show(50, truncate = false)
 
-    // committed rows, per-sink stats and sources come from the manifests: no scan
+    // committed rows and per-sink stats come from the manifests: no scan
     val t = new SinkTable(outBase)
     val ms = t.manifests
     println(s"[graft] manifests=${ms.map(m => s"#${m.commitId}:rows=${m.rows},maxLine=${m.maxLineNo}").mkString(" ")}")
     for (m <- ms; s <- m.sinks)
       println(s"[graft] #${m.commitId} ${s.sink}: records=${s.records} bytes(sum/min/max)=" +
         s"${s.sumBytes}/${s.minBytes}/${s.maxBytes} ok=${s.successCnt} failed=${s.failedCnt}")
-    for (m <- ms)
-      println(s"[graft] #${m.commitId} new_sources=${m.sources.size}: " +
-        m.sources.toSeq.sorted.mkString("[", ", ", "]"))
-    println(s"[graft] committed_rows=${ms.map(_.rows).sum} sources=${t.sources.size} " +
-      s"current=${t.currentCommit.getOrElse(-1L)}")
+    println(s"[graft] committed_rows=${ms.map(_.rows).sum} current=${t.currentCommit.getOrElse(-1L)}")
     spark.stop()
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Enrichment = broadcast hash join against small lookup dimensions.
   *
   * The reference's analog is constant-attaching: SecurityLogInfo
@@ -12,13 +14,11 @@ import org.apache.spark.sql.functions._
   * a tiny dim. Spark-first: `broadcast(dim)` keeps it shuffle-free; the
   * fact side never moves.
   *
-  * The pipeline's dimension (`Tables.sourceDim`) holds one row per source,
-  * each a pure function of its source. A table's first commit builds it from
-  * its delta's distinct sources; a resumed commit projects it over a local
-  * relation of the sources the table's manifests record, which broadcasts
-  * with no job, and writes again, unpublished, with the dimension widened
-  * when its write observes a source outside it (`Pipeline.run`). Extra
-  * dimension rows change nothing: the join is a left join on the key.
+  * The pipeline's source dimension needs no join at all: each of its
+  * columns is a pure function of `source` (`Tables.sourceAttrs`), so
+  * [[withSourceAttrs]] projects them onto the facts. Over a dimension with a
+  * row for every fact's source, [[withDim]] attaches the same values, and a
+  * projection builds, collects and broadcasts nothing.
   *
   * Skew: at 10^12 rows hot `source` keys skew any shuffle join; broadcast
   * sidesteps it entirely (dims are ~1k rows). [[salted]] is provided for the
@@ -26,12 +26,18 @@ import org.apache.spark.sql.functions._
   */
 object Enrich {
 
-  /** Left broadcast join — must not drop rows: a fact whose key the dim
-    * lacks keeps null dim columns (header-even-if-empty invariant is the
-    * writer's job, not the join's).
+  /** Left broadcast join — must not drop rows (every source present in dim;
+    * header-even-if-empty invariant is the writer's job, not the join's).
     */
   def withDim(facts: DataFrame, dim: DataFrame, key: String): DataFrame =
     facts.join(broadcast(dim), Seq(key), "left")
+
+  /** `facts` with the source dimension's columns (vendor, log_type,
+    * version) computed from its `source` column: the rows of
+    * `withDim(facts, Tables.sourceDim(..), "source")`, with no job.
+    */
+  def withSourceAttrs(facts: DataFrame): DataFrame =
+    facts.select(col("*") +: Tables.sourceAttrs(col("source")): _*)
 
   /** Salted shuffle join for a too-big-to-broadcast dim with hot keys:
     * facts get a random-free deterministic salt from a row key, the dim is

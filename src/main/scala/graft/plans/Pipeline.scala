@@ -1,25 +1,24 @@
 package graft.plans
 
-import scala.annotation.tailrec
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 import graft.operators.{Dedup, Enrich, Parse, Report, Route}
-import graft.table.{Manifest, SinkTable}
+import graft.table.SinkTable
 
 /** The end-to-end north-rule pipeline:
   * read → tokenize → parse (Catalyst grok) → ts-dedup window → enrich
-  * (broadcast join) → route → sinks (+ manifest commit) → per-sink report
+  * (a projection of the source's attributes) → route → sinks (+ manifest commit) → per-sink report
   * — the Spark-native re-expression of the reference's
   * run_pipeline_with_sender loop (reference src/controller.rs:61-145).
   *
   * Single logical plan until the write: Catalyst fuses parse + dedup-window
-  * + join into few stages; the only row shuffle is the window partition by
+  * + enrich into few stages; the only row shuffle is the window partition by
   * (source, ts), on a high-cardinality composite key, so no hot partitions;
-  * AQE skew-join covers residual skew. The enrich join is broadcast — no
-  * shuffle of the facts.
+  * AQE skew-join covers residual skew. Enrichment attaches the source
+  * dimension's columns as expressions of `source` (`Enrich.withSourceAttrs`):
+  * no join, no dimension to build, no broadcast.
   *
   * [[run]] resumes: it reads, parses, enriches, routes and writes only the
   * input rows past the committed `line_no` (the reference tails from its
@@ -32,18 +31,7 @@ import graft.table.{Manifest, SinkTable}
   *     at the scan; it continues the dedup window's equal-ts groups;
   *   - the window shuffle over the delta ∪ those keys. Its reduce side
   *     enriches, routes, sorts each partition by sink and writes; the
-  *     manifest's stats and the commit's sources are observed on that
-  *     write.
-  * The broadcast source dimension of a delta commit costs no job: it is a
-  * projection over a local relation of the sources the manifests record
-  * (`SinkTable.sources`). Each dimension row is a pure function of its
-  * source and the join is a left join, so a dimension with extra sources
-  * attaches the same values. When the write observes a source the
-  * manifests lack, the commit writes its unpublished data again with the
-  * dimension widened by it, and publishes only that write: a delta that
-  * brings a new source costs a second write. A table's first commit has no
-  * manifests and builds the dimension from its delta (a distinct: one
-  * small shuffle and the broadcast collect).
+  *     manifest's stats are observed on that write.
   * The committed keys are the one part that is not O(delta): three narrow
   * columns of every committed row with a ts are scanned and shuffled on
   * each commit (ROADMAP item 1 lists ways to cut them to the keys a delta
@@ -53,18 +41,18 @@ object Pipeline {
 
   /** The transform-only portion (no writes) — reused by queries and tests. */
   def transformed(spark: SparkSession, dir: String): DataFrame =
-    stages(Tables.rawEvents(spark, dir), None, Tables.sourceDim(spark, dir))
+    stages(Tables.rawEvents(spark, dir), None)
 
   /** parse → ts-dedup window → enrich → route: the one stage chain of
     * [[transformed]] and [[run]]. With `carried` committed dedup keys the
     * window continues their equal-ts groups, and only `raw`'s rows come out.
     */
-  private def stages(raw: DataFrame, carried: Option[DataFrame], dim: DataFrame): DataFrame = {
+  private def stages(raw: DataFrame, carried: Option[DataFrame]): DataFrame = {
     val parsed = Parse.parsed(raw)
     val (ts, part, lineNo) = (col("ts_raw_ns"), Seq(col("source")), col("line_no"))
     val deduped = carried.fold(Dedup.timestampDedup(parsed, ts, part, lineNo))(
       Dedup.timestampDedupCarried(parsed, _, ts, part, lineNo))
-    Route.routed(Enrich.withDim(deduped, dim, "source"))
+    Route.routed(Enrich.withSourceAttrs(deduped))
   }
 
   /** The committed columns a resumed commit's dedup window needs. */
@@ -78,38 +66,17 @@ object Pipeline {
   def run(spark: SparkSession, dir: String, outBase: String, commitId: Long = 1L): DataFrame = {
     val table = new SinkTable(outBase)
     val delta = Tables.rawEvents(spark, dir).where(col("line_no") > table.committedMaxLineNo)
-    val carried = table.read(spark, DedupKeys)
-    def write(dim: DataFrame): Manifest =
-      table.write(slim(stages(delta, carried, dim)), commitId)
-    // every write reads the files `delta` listed, so the rows, and the
-    // sources they bring, are the same each time
-    @tailrec def widening(known: Set[String]): Manifest = {
-      val w = write(Tables.sourceDimRows(localSources(spark, known)))
-      val fresh = w.sources -- known
-      if (fresh.isEmpty) w else widening(known ++ fresh)
-    }
-    table.publish(if (carried.isEmpty) write(Tables.sourceDim(delta)) else widening(table.sources))
+    val routed = stages(delta, table.read(spark, DedupKeys))
+    // quarantined rows keep the WHOLE line as bytes — the reference's raw-log
+    // fallback record (Log{kind, log bytes} — src/collector/log.rs:129-149);
+    // parsed sinks carry null here (columnar: costs nothing when absent)
+    val slim = routed.select(
+      col("doc_id"), col("tokens"), col("n_tok"), col("source"), col("line_no"),
+      col("ts_raw_ns"), col("ts_ns"), col("level"), col("src_ip"), col("status_code"),
+      col("vendor"), col("log_type"), col("version"), col("bytes"),
+      when(col("sink") === Route.Quarantine, encode(col("raw_line"), "UTF-8")).as("raw_log"),
+      col("parse_ok"), col("sink"))
+    table.commit(slim, commitId)
     Report.fromManifests(spark, table.manifests)
   }
-
-  /** `sources` as a local relation. Never `distinct` it: the projection
-    * [[Tables.sourceDimRows]] folds into a local relation and broadcasts
-    * with no job, an aggregate over it would plan one.
-    */
-  private def localSources(spark: SparkSession, sources: Set[String]): DataFrame = {
-    import spark.implicits._
-    sources.toSeq.sorted.toDF("source")
-  }
-
-  /** The stored columns. Quarantined rows keep the WHOLE line as bytes —
-    * the reference's raw-log fallback record (Log{kind, log bytes} —
-    * src/collector/log.rs:129-149); parsed sinks carry null here (columnar:
-    * costs nothing when absent).
-    */
-  private def slim(routed: DataFrame): DataFrame = routed.select(
-    col("doc_id"), col("tokens"), col("n_tok"), col("source"), col("line_no"),
-    col("ts_raw_ns"), col("ts_ns"), col("level"), col("src_ip"), col("status_code"),
-    col("vendor"), col("log_type"), col("version"), col("bytes"),
-    when(col("sink") === Route.Quarantine, encode(col("raw_line"), "UTF-8")).as("raw_log"),
-    col("parse_ok"), col("sink"))
 }

@@ -38,8 +38,9 @@ object Gen {
       Tables.kindName(source).as("kind"))
   }
 
-  /** Matching source dimension: `Tables.sourceDimRows` of every source. */
-  def sourceDim(spark: SparkSession, sources: Int = 500): DataFrame =
-    Tables.sourceDimRows(spark.range(0, sources, 1, 1)
-      .select(concat(lit("src"), col("id").cast("string")).as("source")))
+  /** Matching source dimension (same derivation as Tables.sourceDim). */
+  def sourceDim(spark: SparkSession, sources: Int = 500): DataFrame = {
+    val source = concat(lit("src"), col("id").cast("string"))
+    spark.range(0, sources, 1, 1).select(source.as("source") +: Tables.sourceAttrs(source): _*)
+  }
 }

@@ -583,25 +583,17 @@ object Tables {
     * /root/reference/src/parser/security_log.rs:54-87): one row per source,
     * derived deterministically so the oracle can rebuild it.
     */
-  def sourceDim(spark: SparkSession, dir: String): DataFrame = sourceDim(documents(spark, dir))
+  def sourceDim(spark: SparkSession, dir: String): DataFrame = {
+    val source = col("source")
+    documents(spark, dir).select(source).distinct().select(source +: sourceAttrs(source): _*)
+  }
 
-  /** The source dimension over the sources present in `docs`, any frame
-    * with a `source` column: a table's first commit builds it from its
-    * delta. [[sourceDimRows]] of their distinct.
+  /** The dimension's columns for `source` (vendor, log_type, version), each
+    * a pure function of the source: null when the source is null or lacks
+    * its numeric part, like a fact the dimension has no row for.
     */
-  def sourceDim(docs: DataFrame): DataFrame = sourceDimRows(docs.select("source").distinct())
-
-  /** The dimension rows of `sources`, a frame of distinct `source` values:
-    * each row a pure function of its source, in one projection. Over a local
-    * relation the optimizer folds it into a local relation, which
-    * broadcasts without a job; an aggregate over it (a `distinct`) would
-    * plan one.
-    */
-  def sourceDimRows(sources: DataFrame): DataFrame =
-    sources.select(
-      col("source"),
-      concat(lit("vendor-"), (sourceNum(col("source")) % lit(7)).cast("string")).as("vendor"),
-      kindName(col("source")).as("log_type"),
-      concat(lit("v"), (sourceNum(col("source")) % lit(3) + lit(1)).cast("string")).as("version")
-    )
+  def sourceAttrs(source: Column): Seq[Column] = Seq(
+    concat(lit("vendor-"), (sourceNum(source) % lit(7)).cast("string")).as("vendor"),
+    kindName(source).as("log_type"),
+    concat(lit("v"), (sourceNum(source) % lit(3) + lit(1)).cast("string")).as("version"))
 }

@@ -22,26 +22,13 @@ import graft.sources.Tables
   *   base/_manifests/<id>.json               (committed only AFTER data lands)
   *   base/_manifests/CURRENT                 (atomic pointer, rename swap)
   *
-  * A manifest (v3) holds the commit's row count, its max `line_no` (the
-  * resume point), the data's schema, one report partial per sink
-  * ([[SinkStats]]: records, sum/min/max bytes, ok, failed), and `sources`:
-  * the non-null `source` values this commit is the first published commit
-  * to land, so the union over the manifests ([[SinkTable.sources]]) is every
-  * source the table's rows carry, read with no scan. All of it comes from
-  * one `Dataset.observe` on the commit's own write, so a commit runs no job
-  * after the write, and the report over every commit is a metadata merge
-  * (`Report.fromManifests`). A v1 or v2 manifest fails to load, naming it.
-  *
-  * A commit has two phases. [[SinkTable.write]] lays down the data under
-  * `data/commit=<id>`, replacing any unpublished data of that id, and
-  * returns the manifest observed on that write; readers do not see it.
-  * [[SinkTable.publish]] writes the manifest, then swaps CURRENT.
-  * [[SinkTable.commit]] does both. Between the phases a caller may write the
-  * same id again (the pipeline does, when a write observes a source its
-  * enrichment dimension lacked) and publish only the last write.
-  *
-  * A commit's data directory is derived from its id under `base`, so a
-  * copied or moved table reads its own data.
+  * A manifest (v2) holds the commit's row count, its max `line_no` (the
+  * resume point), the data's schema, and one report partial per sink
+  * ([[SinkStats]]: records, sum/min/max bytes, ok, failed). All of it comes
+  * from one `Dataset.observe` on the commit's own write, so a commit runs
+  * no job after the write, and the report over every commit is a metadata
+  * merge (`Report.fromManifests`). A commit's data directory is derived
+  * from its id under `base`, so a copied or moved table reads its own data.
   * Each commit's files cluster their rows by sink (a sort within each write
   * task, no shuffle). A crashed write leaves data files but no manifest →
   * invisible to readers, re-run re-does only uncommitted input (idempotent, no dupes/gaps). Iceberg is not on the
@@ -56,7 +43,7 @@ import graft.sources.Tables
   * table.
   */
 final case class Manifest(commitId: Long, rows: Long, maxLineNo: Long, schema: StructType,
-                          sinks: Seq[SinkStats], sources: Set[String])
+                          sinks: Seq[SinkStats])
 
 /** One sink's mergeable report partial within a commit. */
 final case class SinkStats(sink: String, records: Long, sumBytes: Long, minBytes: Long,
@@ -91,25 +78,15 @@ final class SinkTable(base: String) {
     */
   def committedMaxLineNo: Long = manifests.map(_.maxLineNo).foldLeft(-1L)(math.max)
 
-  /** Every source the published manifests record: the non-null sources of
-    * the committed rows, from metadata alone.
+  /** Two-phase commit: write data for this commit, THEN write the manifest,
+    * THEN swap CURRENT atomically. df must carry `line_no`, `sink`, `bytes`
+    * and `parse_ok`; every row's sink must be one of `Tables.SinkNames`.
     */
-  def sources: Set[String] = manifests.flatMap(_.sources).toSet
-
-  /** Phase one of a commit: writes `df` as commit `commitId`'s data,
-    * replacing any unpublished data of that id, and returns the manifest
-    * observed on the write, with `sources` every non-null source written.
-    * Readers do not see the data until [[publish]]. `df` must carry
-    * `line_no`, `source`, `sink`, `bytes` and `parse_ok`; every row's sink
-    * must be one of `Tables.SinkNames`, and it may carry at most
-    * [[SinkTable.MaxCommitSources]] distinct sources.
-    */
-  def write(df: DataFrame, commitId: Long): Manifest = {
+  def commit(df: DataFrame, commitId: Long): Manifest = {
     val dir = commitDir(commitId)
     val obs = Observation()
     df.sortWithinPartitions(col("sink")).observe(obs, count(lit(1)).as("rows"),
-        coalesce(max(col("line_no")), lit(-1L)).as("max_line_no") +:
-          collect_set(col("source")).as("sources") +: Report.partials(Tables.SinkNames): _*)
+        coalesce(max(col("line_no")), lit(-1L)).as("max_line_no") +: Report.partials(Tables.SinkNames): _*)
       .write.mode("overwrite").parquet(dir)
     val stats = obs.get
     val rows = stats("rows").asInstanceOf[Long]
@@ -117,26 +94,11 @@ final class SinkTable(base: String) {
     require(sinks.map(_.records).sum == rows,
       s"$dir: ${rows - sinks.map(_.records).sum} of $rows rows routed to no sink of " +
         Tables.SinkNames.mkString("[", ", ", "]"))
-    val sources = stats("sources").asInstanceOf[scala.collection.Seq[String]].toSet
-    require(sources.size <= SinkTable.MaxCommitSources,
-      s"$dir: ${sources.size} distinct sources in one commit, above the " +
-        s"${SinkTable.MaxCommitSources} a manifest records")
-    Manifest(commitId, rows, stats("max_line_no").asInstanceOf[Long], df.schema, sinks, sources)
-  }
-
-  /** Phase two: publishes a [[write]]'s manifest, recording only the
-    * sources no published manifest records, THEN swaps CURRENT atomically.
-    * Returns the manifest as published.
-    */
-  def publish(written: Manifest): Manifest = {
-    val m = written.copy(sources = written.sources -- sources)
-    AtomicFile.write(manPath(m.commitId), SinkTable.render(m))
-    AtomicFile.write(currentPath, m.commitId.toString)
+    val m = Manifest(commitId, rows, stats("max_line_no").asInstanceOf[Long], df.schema, sinks)
+    AtomicFile.write(manPath(commitId), SinkTable.render(m))
+    AtomicFile.write(currentPath, commitId.toString)
     m
   }
-
-  /** Two-phase commit: [[write]] the data, THEN [[publish]] its manifest. */
-  def commit(df: DataFrame, commitId: Long): Manifest = publish(write(df, commitId))
 
   /** Read = union of committed commits only (uncommitted data invisible). */
   def read(spark: SparkSession): DataFrame = {
@@ -175,14 +137,7 @@ final class SinkTable(base: String) {
 }
 
 object SinkTable {
-  private val Version = 3
-
-  /** The most distinct sources one commit may write. Each is a row of the
-    * enrichment dimension that every later commit broadcasts from the
-    * manifests, and the write collects them to the driver; the reference's
-    * per-source dimensions are around a thousand rows.
-    */
-  val MaxCommitSources = 100000
+  private val Version = 2
   private val Json = new ObjectMapper()
 
   private def render(m: Manifest): String = {
@@ -190,8 +145,6 @@ object SinkTable {
     o.put("version", Version).put("commit_id", m.commitId).put("rows", m.rows)
       .put("max_line_no", m.maxLineNo)
     o.set[JsonNode]("schema", Json.readTree(m.schema.json))
-    val sources = o.putArray("sources")
-    m.sources.toSeq.sorted.foreach(sources.add)
     val sinks = o.putArray("sinks")
     m.sinks.foreach { s =>
       sinks.addObject().put("sink", s.sink).put("records", s.records).put("sum_bytes", s.sumBytes)
@@ -201,13 +154,13 @@ object SinkTable {
     Json.writeValueAsString(o)
   }
 
-  /** Parses a v3 manifest; any other version fails naming the file. */
+  /** Parses a v2 manifest; any other version fails naming the file. */
   private def load(p: Path): Manifest = {
     val o = Json.readTree(Files.readString(p))
     val version = o.path("version").asInt(1)
     require(version == Version,
-      s"$p: manifest v$version, this build reads only v$Version (per-sink stats, schema and " +
-        "sources); re-commit the table")
+      s"$p: manifest v$version, this build reads only v$Version (per-sink stats and schema); " +
+        "re-commit the table")
     def field(n: JsonNode, k: String): JsonNode =
       Option(n.get(k)).filterNot(_.isNull).getOrElse(sys.error(s"$p: manifest lacks `$k`"))
     def num(n: JsonNode, k: String): Long = field(n, k).asLong
@@ -216,7 +169,6 @@ object SinkTable {
         num(s, "min_bytes"), num(s, "max_bytes"), num(s, "success_cnt"), num(s, "failed_cnt"))
     }.toSeq
     Manifest(num(o, "commit_id"), num(o, "rows"), num(o, "max_line_no"),
-      DataType.fromJson(field(o, "schema").toString).asInstanceOf[StructType], sinks,
-      field(o, "sources").elements().asScala.map(_.asText).toSet)
+      DataType.fromJson(field(o, "schema").toString).asInstanceOf[StructType], sinks)
   }
 }

@@ -22,6 +22,21 @@ class EnrichRouteSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join, got:\n$plan")
   }
 
+  test("source attributes by projection == the left join with a dimension of every source") {
+    val odd = Seq[String](null, "src", "srcX1", "abc").toDF("source")
+    val facts = Tables.tokens(spark, Sf).select("source").unionByName(odd)
+    val dim = Tables.sourceDim(spark, Sf).unionByName(odd.where(col("source").isNotNull)
+      .select(col("source") +: Tables.sourceAttrs(col("source")): _*))
+    val cols = Seq("source", "vendor", "log_type", "version").map(col)
+    val joined = Enrich.withDim(facts, dim, "source").select(cols: _*)
+    val projected = Enrich.withSourceAttrs(facts)
+    assert(projected.select(cols: _*).exceptAll(joined).isEmpty &&
+      joined.exceptAll(projected.select(cols: _*)).isEmpty)
+    assert(projected.where(col("vendor").isNotNull).count() === facts.count() - odd.count())
+    val plan = projected.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join") && !plan.contains("BroadcastExchange"), plan)
+  }
+
   test("salted join equals plain join result") {
     val facts = Seq(("a", 1L), ("a", 2L), ("b", 3L)).toDF("k", "v")
     val dim = Seq(("a", "A"), ("b", "B")).toDF("k", "d")

@@ -69,13 +69,11 @@ class PipelineSpec extends SparkSpec {
     assert(after === before)
   }
 
-  /** Commit-shaped rows [lo, hi): every row routed to `sink`, from one of
-    * three sources.
-    */
+  /** Commit-shaped rows [lo, hi): every row routed to `sink`. */
   private def rows(lo: Long, hi: Long, sink: String = "oplog") = {
     import spark.implicits._
-    (lo until hi).map(i => (i, s"r$i", s"src${i % 3}", sink, 10L + i % 3, true))
-      .toDF("line_no", "v", "source", "sink", "bytes", "parse_ok")
+    (lo until hi).map(i => (i, s"r$i", sink, 10L + i % 3, true))
+      .toDF("line_no", "v", "sink", "bytes", "parse_ok")
   }
 
   test("a moved table reads its own data, and each commit's files cluster rows by sink") {
@@ -167,20 +165,15 @@ class PipelineSpec extends SparkSpec {
     assert(commitJobs === 1)
     assert(m.rows === 10L && m.maxLineNo === 1009L)
     assert(m.sinks === Seq(SinkStats("oplog", 10L, 10L * 11L, 10L, 12L, 10L, 0L)))
-    assert(m.sources.isEmpty, "the pipeline's commits recorded rows' three sources")
   }
 
   test("fail loudly: v1 manifest, sinks without ts_raw_ns, a sink outside the declared list") {
-    val oldBase = freshDir()
-    val old = new SinkTable(oldBase)
-    val oldPath = java.nio.file.Paths.get(oldBase, "_manifests", "000000000001.json")
-    // v1 had no version field; v2 had no `sources`
-    for ((v, json) <- Seq(1 -> """{"commit_id":1,"rows":0,"max_line_no":-1,"partitions":[]}""",
-        2 -> """{"version":2,"commit_id":1,"rows":0,"max_line_no":-1,"sinks":[]}""")) {
-      Files.writeString(oldPath, json)
-      val e = intercept[IllegalArgumentException](old.manifests)
-      assert(e.getMessage.contains(oldPath.toString) && e.getMessage.contains(s"manifest v$v"))
-    }
+    val v1Base = freshDir()
+    val v1 = new SinkTable(v1Base)
+    val v1Path = java.nio.file.Paths.get(v1Base, "_manifests", "000000000001.json")
+    Files.writeString(v1Path, """{"commit_id":1,"rows":0,"max_line_no":-1,"partitions":[]}""")
+    val e1 = intercept[IllegalArgumentException](v1.manifests)
+    assert(e1.getMessage.contains(v1Path.toString) && e1.getMessage.contains("v1"))
 
     val out = freshDir()
     val t = new SinkTable(out)
@@ -194,56 +187,30 @@ class PipelineSpec extends SparkSpec {
     assert(t.manifests.map(_.commitId) === Seq(1L))
   }
 
-  private val Early = Tables.sourceNum(col("source")) < 10
-  private def srcs(r: Range): Set[String] = r.map(i => s"src$i").toSet
-
-  /** A table whose commits 1-2 land src0..src9, and an input whose next
-    * delta (doc_ids 1250-1499) brings src10..src19 as well.
-    */
-  private def tableBeforeNewSources(): (String, String) = {
+  test("a delta bringing new sources commits the one-shot rows, every row enriched") {
     val in = freshDir(); val out = freshDir()
-    grow(in, 0L, 500L, where = Early); Pipeline.run(spark, in, out, 1L)
-    grow(in, 0L, 250L, 1000L, Early); Pipeline.run(spark, in, out, 2L)
-    grow(in, 250L, 500L, 1000L)
-    (in, out)
-  }
-
-  test("a resumed commit whose sources are all recorded runs fewer jobs than one building its dimension") {
-    val in = freshDir(); val out = freshDir()
-    grow(in, 0L, 250L)
-    val (_, fromDelta) = jobsDuring(Pipeline.run(spark, in, out, 1L))
-    grow(in, 250L, 500L)
-    val (_, fromManifests) = jobsDuring(Pipeline.run(spark, in, out, 2L))
+    val early = Tables.sourceNum(col("source")) < 10
+    grow(in, 0L, 500L, where = early); Pipeline.run(spark, in, out, 1L)
+    grow(in, 250L, 500L, 1000L); Pipeline.run(spark, in, out, 2L)
     val t = new SinkTable(out)
-    assert(t.manifests.map(_.sources) === Seq(srcs(0 until 20), Set.empty[String]))
-    assert(fromManifests < fromDelta,
-      s"resumed commit ran $fromManifests jobs, the first commit $fromDelta")
-  }
-
-  test("a delta bringing a new source: one-shot rows, each source recorded by exactly one manifest") {
-    val (in, out) = tableBeforeNewSources()
-    Pipeline.run(spark, in, out, 3L)
-    val t = new SinkTable(out)
+    val sources = t.read(spark).groupBy("source").agg(min("line_no").as("first"))
+    assert(sources.where(col("first") < 1000L).count() === 10L)
+    assert(sources.where(col("first") >= 1000L).count() === 10L, "the delta brings 10 new sources")
     val cols = Seq("doc_id", "sink", "ts_ns", "vendor", "log_type", "version").map(col)
     val a = t.read(spark).select(cols: _*)
     val b = Pipeline.transformed(spark, in).select(cols: _*)
-    assert(a.count() === 250L + 130L + 250L)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-    assert(a.where(col("vendor").isNull).count() === 0L)
-    assert(t.manifests.map(_.sources) === Seq(srcs(0 until 10), Set.empty[String], srcs(10 until 20)))
-    assert(t.sources === srcs(0 until 20))
+    assert(a.where(col("vendor").isNull || col("log_type").isNull || col("version").isNull).isEmpty)
   }
 
-  test("rolling back the commit that introduced a source: the re-run records it again") {
-    val (in, out) = tableBeforeNewSources()
-    Pipeline.run(spark, in, out, 3L)
-    val t = new SinkTable(out)
-    t.rollbackLast()
-    assert(t.sources === srcs(0 until 10))
-    Pipeline.run(spark, in, out, 4L)
-    assert(t.manifests.map(m => m.commitId -> m.sources) ===
-      Seq(1L -> srcs(0 until 10), 2L -> Set.empty[String], 4L -> srcs(10 until 20)))
-    assert(t.read(spark).where(col("vendor").isNull).count() === 0L)
+  test("enrichment runs no job: no join in the plan; a resumed commit is the window shuffle and the write") {
+    val plan = Pipeline.transformed(spark, Sf).queryExecution.executedPlan.toString
+    assert(!plan.contains("Join") && !plan.contains("BroadcastExchange"), plan)
+    val in = freshDir(); val out = freshDir()
+    grow(in, 0L, 250L); Pipeline.run(spark, in, out, 1L)
+    grow(in, 250L, 500L)
+    val (_, commitJobs) = jobsDuring(Pipeline.run(spark, in, out, 2L))
+    assert(commitJobs === 2)
   }
 
   test("quarantine sink receives exactly the corrupt rows (did % 97 == 0)") {
