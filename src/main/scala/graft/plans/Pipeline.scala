@@ -9,7 +9,7 @@ import graft.table.SinkTable
 
 /** The end-to-end north-rule pipeline:
   * read → tokenize → parse (Catalyst grok) → ts-dedup window → enrich
-  * (a projection of the source's attributes) → route → sinks (+ manifest commit) → per-sink report
+  * (source attributes, projected) → route → sinks (+ manifest commit) → per-sink report
   * — the Spark-native re-expression of the reference's
   * run_pipeline_with_sender loop (reference src/controller.rs:61-145).
   *
