@@ -58,12 +58,13 @@ object Pipeline {
   /** The committed columns a resumed commit's dedup window needs. */
   private val DedupKeys = Seq("source", "line_no", "ts_raw_ns")
 
-  /** Commit the input rows past the resume point, with sink writes +
-    * manifest commit. Returns the report over every committed row. Its
-    * rows equal one full [[transformed]] run whenever every input row at or
-    * before the resume point is committed — the resume contract.
+  /** Commit the input rows past the resume point as `commitId` (never a
+    * committed one). Returns the report over every committed row. Resume
+    * point, carried keys and report come from one manifest listing plus this
+    * commit's manifest. Its rows equal one full [[transformed]] run whenever
+    * every input row at or before the resume point is committed.
     */
-  def run(spark: SparkSession, dir: String, outBase: String, commitId: Long = 1L): DataFrame = {
+  def run(spark: SparkSession, dir: String, outBase: String, commitId: Long): DataFrame = {
     val table = new SinkTable(outBase)
     val delta = Tables.rawEvents(spark, dir).where(col("line_no") > table.committedMaxLineNo)
     val routed = stages(delta, table.read(spark, DedupKeys))

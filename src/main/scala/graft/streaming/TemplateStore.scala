@@ -14,7 +14,7 @@ import Templates.NfRec
   * 95-106): a later batch run's data-before-template packets decode with
   * the previous run's registrations instead of starting cold.
   *
-  * Snapshot layout mirrors [[graft.table.SinkTable]]'s two-phase commit:
+  * Snapshot layout, committed in two phases (data, then pointer):
   *
   *   base/ver=<id>/...parquet       (one row per (exporter, templateId):
   *                                   the LATEST widths/types/scopeCnt)
@@ -28,6 +28,8 @@ import Templates.NfRec
   * partitioning.
   */
 object TemplateStore {
+
+  private val KeepVersions = 2 // snapshots kept by save: current + previous
 
   private def currentPath(base: String) = Paths.get(base, "CURRENT")
 
@@ -56,10 +58,10 @@ object TemplateStore {
   /** Merge this run's template definitions over the persisted state (latest
     * per (exporter, templateId) wins) and commit a new snapshot version.
     * Two-phase: parquet lands under the new ver dir first; CURRENT swaps by
-    * atomic rename only afterwards. `keepVersions` bounds snapshot retention
+    * atomic rename only afterwards. `KeepVersions` bounds snapshot retention
     * (see the prune note below for what an outstanding lazy reader needs).
     */
-  def save(recs: Dataset[NfRec], base: String, keepVersions: Int = 2): Long = {
+  def save(recs: Dataset[NfRec], base: String): Long = {
     val spark = recs.sparkSession
     Files.createDirectories(Paths.get(base))
     val merged = load(spark, base).toDF()
@@ -73,17 +75,14 @@ object TemplateStore {
     graft.table.AtomicFile.write(currentPath(base), ver.toString)
     // superseded snapshots are garbage once the pointer has swapped —
     // without this the store directory grows by one snapshot per run. The
-    // prune keeps the newest `keepVersions` (default current + previous):
-    // a decode that warm-started from snapshot v is lazily reading v's
-    // parquet until it is materialized, so each unconsumed
-    // decodeBatchResumable result tolerates at most keepVersions−1
-    // subsequent save() calls before its backing files are deleted —
-    // callers holding more outstanding lazy decodes raise keepVersions
-    val keep = math.max(keepVersions, 1)
+    // prune keeps the newest KeepVersions: a decode that warm-started from
+    // snapshot v is lazily reading v's parquet until it is materialized, so
+    // each unconsumed decodeBatchResumable result tolerates one subsequent
+    // save() before its backing files are deleted
     val dir = Paths.get(base).toFile
     Option(dir.listFiles()).getOrElse(Array.empty).foreach { f =>
       if (f.getName.startsWith("ver=") &&
-        f.getName.stripPrefix("ver=").toLongOption.exists(_ <= ver - keep))
+        f.getName.stripPrefix("ver=").toLongOption.exists(_ <= ver - KeepVersions))
         deleteTree(f)
     }
     ver

@@ -11,29 +11,29 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import graft.operators.Report
 import graft.sources.Tables
 
-/** Iceberg-style table-with-snapshots on plain Parquet: a tiny
-  * snapshot + per-commit summary manifest layer giving the pipeline
-  * checkpoint-resume, mirroring the reference's two-phase checkpoint
-  * (position advances only after the batch is acked —
-  * /root/reference/src/collector/zeek.rs:92-94,155-161; src/checkpoint.rs:44-116).
+/** Iceberg-style table-with-snapshots on plain Parquet: per-commit data
+  * plus a summary manifest give the pipeline checkpoint-resume, as the
+  * reference's position advances only after the batch is acked (reference
+  * src/collector/zeek.rs:92-94,155-161; src/checkpoint.rs:44-116).
   *
   * Layout:
   *   base/data/commit=<id>/...parquet        (immutable per-commit data)
-  *   base/_manifests/<id>.json               (committed only AFTER data lands)
-  *   base/_manifests/CURRENT                 (atomic pointer, rename swap)
+  *   base/_manifests/<id>.json               (written only AFTER data lands)
+  *
+  * The manifests are the table: the atomic write of `<id>.json` is the
+  * commit point. A crashed commit leaves data but no manifest, invisible to
+  * readers, and a re-run with that id overwrites it (no dupes/gaps). A
+  * committed id is never written again. A table lists its manifests once,
+  * at open, and answers from that listing plus its own commits/rollbacks.
   *
   * A manifest (v2) holds the commit's row count, its max `line_no` (the
   * resume point), the data's schema, and one report partial per sink
-  * ([[SinkStats]]: records, sum/min/max bytes, ok, failed). All of it comes
-  * from one `Dataset.observe` on the commit's own write, so a commit runs
-  * no job after the write, and the report over every commit is a metadata
-  * merge (`Report.fromManifests`). A commit's data directory is derived
-  * from its id under `base`, so a copied or moved table reads its own data.
-  * Each commit's files cluster their rows by sink (a sort within each write
-  * task, no shuffle). A crashed write leaves data files but no manifest →
-  * invisible to readers, re-run re-does only uncommitted input (idempotent, no dupes/gaps). Iceberg is not on the
-  * classpath; this layer keeps the same contract behind a small API so a
-  * real catalog drops in.
+  * ([[SinkStats]]: records, sum/min/max bytes, ok, failed), all observed on
+  * the commit's own write: no job runs after it, and the report is a
+  * metadata merge (`Report.fromManifests`). Reads use the recorded schema.
+  * Data directories derive from the id under `base`, so a moved table
+  * reads its own data; each commit's files cluster rows by sink. Iceberg is
+  * not on the classpath; this small API keeps its contract so one drops in.
   *
   * Pipeline sinks also store `ts_raw_ns`, the dedup window's lineage: a
   * resumed commit continues the committed equal-ts groups from the table's
@@ -60,29 +60,33 @@ final class SinkTable(base: String) {
 
   private def manPath(id: Long): Path = manDir.resolve(f"$id%012d.json")
   private def commitDir(id: Long): String = dataDir.resolve(f"commit=$id%012d").toString
-  private def currentPath: Path = manDir.resolve("CURRENT")
 
-  def currentCommit: Option[Long] =
-    if (Files.exists(currentPath)) Some(Files.readString(currentPath).trim.toLong) else None
-
-  def manifests: Seq[Manifest] =
+  private def list(): Seq[Manifest] =
     Files.list(manDir).iterator().asScala.toSeq
       .filter(_.getFileName.toString.endsWith(".json"))
       .sortBy(_.getFileName.toString)
       .map(SinkTable.load)
+
+  private var listed: Seq[Manifest] = list()
+
+  /** Committed snapshots in id order: the listing made at open, plus own commits/rollbacks. */
+  def manifests: Seq[Manifest] = listed
 
   /** Highest committed line_no — the resume point (analog of the
     * reference's decimal line-count checkpoint, src/collector.rs:28-30).
     * The resume filter is `Pipeline.run`'s: it commits only input rows
     * with a `line_no` past this point.
     */
-  def committedMaxLineNo: Long = manifests.map(_.maxLineNo).foldLeft(-1L)(math.max)
+  def committedMaxLineNo: Long = listed.map(_.maxLineNo).foldLeft(-1L)(math.max)
 
-  /** Two-phase commit: write data for this commit, THEN write the manifest,
-    * THEN swap CURRENT atomically. df must carry `line_no`, `sink`, `bytes`
-    * and `parse_ok`; every row's sink must be one of `Tables.SinkNames`.
+  /** Write the data, THEN the manifest (the commit point). An id with a
+    * manifest on disk fails, naming it, before any data is written. df must
+    * carry `line_no`, `sink`, `bytes` and `parse_ok`; every row's sink must
+    * be one of `Tables.SinkNames`.
     */
   def commit(df: DataFrame, commitId: Long): Manifest = {
+    require(!Files.exists(manPath(commitId)),
+      s"${manPath(commitId)}: commit $commitId is already committed, and a committed id is never overwritten")
     val dir = commitDir(commitId)
     val obs = Observation()
     df.sortWithinPartitions(col("sink")).observe(obs, count(lit(1)).as("rows"),
@@ -96,43 +100,36 @@ final class SinkTable(base: String) {
         Tables.SinkNames.mkString("[", ", ", "]"))
     val m = Manifest(commitId, rows, stats("max_line_no").asInstanceOf[Long], df.schema, sinks)
     AtomicFile.write(manPath(commitId), SinkTable.render(m))
-    AtomicFile.write(currentPath, commitId.toString)
+    listed = (listed.filter(_.commitId != commitId) :+ m).sortBy(_.commitId)
     m
   }
 
-  /** Read = union of committed commits only (uncommitted data invisible). */
-  def read(spark: SparkSession): DataFrame = {
-    val dirs = manifests.map(m => commitDir(m.commitId))
-    if (dirs.isEmpty) spark.emptyDataFrame else spark.read.parquet(dirs: _*)
-  }
+  /** Every recorded column of the committed rows; empty when nothing is committed. */
+  def read(spark: SparkSession): DataFrame =
+    read(spark, listed.flatMap(_.schema.fieldNames).distinct).getOrElse(spark.emptyDataFrame)
 
   /** Only `columns` of the committed rows, read with the schema the
     * manifests recorded, so no parquet footer is read to infer one. None
     * when nothing is committed. Fails, naming the manifest, when a commit's
     * data lacks one of the columns or stores it with another type.
     */
-  def read(spark: SparkSession, columns: Seq[String]): Option[DataFrame] = {
-    val ms = manifests
-    ms.headOption.map { first =>
+  def read(spark: SparkSession, columns: Seq[String]): Option[DataFrame] =
+    listed.headOption.map { first =>
       val schema = StructType(columns.flatMap(c => first.schema.find(_.name == c)))
-      ms.foreach { m =>
+      listed.foreach { m =>
         val lacking = columns.filterNot(c =>
           m.schema.exists(f => f.name == c && schema.exists(g => g.name == c && g.dataType == f.dataType)))
         require(lacking.isEmpty, s"${manPath(m.commitId)}: committed data lacks " +
           lacking.map(c => s"`$c`").mkString(", ") +
           s" (or stores it with another type than commit ${first.commitId})")
       }
-      spark.read.schema(schema).parquet(ms.map(m => commitDir(m.commitId)): _*)
+      spark.read.schema(schema).parquet(listed.map(m => commitDir(m.commitId)): _*)
     }
-  }
 
-  /** Roll back: drop the last manifest (data stays, becomes invisible). */
-  def rollbackLast(): Unit = manifests.lastOption.foreach { m =>
-    Files.deleteIfExists(manPath(m.commitId))
-    manifests.lastOption match {
-      case Some(prev) => AtomicFile.write(currentPath, prev.commitId.toString)
-      case None => Files.deleteIfExists(currentPath)
-    }
+  /** Roll back: drop the last manifest on disk (listed anew; its data stays, invisible). */
+  def rollbackLast(): Unit = {
+    listed = list()
+    listed.lastOption.foreach { m => Files.deleteIfExists(manPath(m.commitId)); listed = listed.init }
   }
 }
 

@@ -52,21 +52,87 @@ class PipelineSpec extends SparkSpec {
     val t = new SinkTable(out)
     val before = t.read(spark).orderBy("doc_id")
       .select("sink", "doc_id", "n_tok", "ts_ns").collect().toSeq
-    // each rollback swaps CURRENT back one commit, leaving no temp file
-    val manDir = java.nio.file.Paths.get(out, "_manifests")
-    def tmpFiles = Files.list(manDir).toArray.toSeq
-      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).filter(_.startsWith(".tmp-"))
-    assert(t.currentCommit === Some(2L))
+    // each rollback drops the last manifest; the manifests are the only
+    // committed state, with no pointer and no temp file beside them
+    assert(manifestFiles(out) === Seq(1L, 2L).map(manifestName))
     t.rollbackLast()
-    assert(t.currentCommit === Some(1L))
-    assert(tmpFiles.isEmpty)
+    assert(t.manifests.map(_.commitId) === Seq(1L))
+    assert(manifestFiles(out) === Seq(manifestName(1L)))
     t.rollbackLast()
-    assert(t.currentCommit === None)
+    assert(t.manifests.isEmpty && manifestFiles(out).isEmpty)
     assert(t.read(spark).count() === 0L) // uncommitted data invisible
     Pipeline.run(spark, Sf, out, 3L)
-    val after = t.read(spark).orderBy("doc_id")
+    val after = new SinkTable(out).read(spark).orderBy("doc_id")
       .select("sink", "doc_id", "n_tok", "ts_ns").collect().toSeq
     assert(after === before)
+    assert(manifestFiles(out) === Seq(manifestName(3L)))
+  }
+
+  private def manifestName(id: Long) = f"$id%012d.json"
+
+  /** Every file name under `out`'s `_manifests`, sorted. */
+  private def manifestFiles(out: String): Seq[String] =
+    Files.list(java.nio.file.Paths.get(out, "_manifests")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).sorted
+
+  test("a committed id is never overwritten: a second run with id 1 fails, naming manifest 1") {
+    val out = freshDir()
+    Pipeline.run(spark, Sf, out, 1L)
+    val data = java.nio.file.Paths.get(out, "data", "commit=000000000001")
+    def files = Files.list(data).toArray.toSeq.map(_.toString).sorted
+    val written = files
+    val e = intercept[IllegalArgumentException](Pipeline.run(spark, Sf, out, 1L))
+    assert(e.getMessage.contains(java.nio.file.Paths.get(out, "_manifests", manifestName(1L)).toString))
+    assert(files === written, "no data is written for a refused commit")
+    val t = new SinkTable(out)
+    assert(t.read(spark).count() === 500L)
+    assert(t.manifests.map(m => (m.commitId, m.rows)) === Seq((1L, 500L)))
+  }
+
+  test("a table answers from the listing made at open; its own commit and rollback update it") {
+    val out = freshDir()
+    val a = new SinkTable(out)
+    a.commit(rows(0L, 10L), 1L)
+    assert(a.manifests.map(_.commitId) === Seq(1L))
+    val b = new SinkTable(out)
+    a.commit(rows(10L, 30L), 2L)
+    // b was opened before commit 2: one snapshot, the one it listed
+    assert(b.manifests.map(_.commitId) === Seq(1L))
+    assert(b.committedMaxLineNo === 9L && b.read(spark).count() === 10L)
+    assert(b.read(spark, Seq("line_no")).get.count() === 10L)
+    val reopened = new SinkTable(out)
+    assert(reopened.manifests.map(_.commitId) === Seq(1L, 2L))
+    assert(reopened.committedMaxLineNo === 29L && reopened.read(spark).count() === 30L)
+    // commit and rollback decide from the disk, not from b's stale listing
+    val e = intercept[IllegalArgumentException](b.commit(rows(30L, 40L), 2L))
+    assert(e.getMessage.contains(manifestName(2L)))
+    b.rollbackLast() // drops commit 2, the last one on disk
+    assert(b.manifests.map(_.commitId) === Seq(1L))
+    assert(new SinkTable(out).manifests.map(_.commitId) === Seq(1L))
+    b.commit(rows(10L, 20L), 3L)
+    assert(b.manifests.map(_.commitId) === Seq(1L, 3L))
+    assert(b.committedMaxLineNo === 19L && b.read(spark).count() === 20L)
+    assert(a.manifests.map(_.commitId) === Seq(1L, 2L), "a still answers from its own listing")
+    assert(manifestFiles(out) === Seq(1L, 3L).map(manifestName))
+  }
+
+  test("commits that recorded different schemas fail read, naming the manifest") {
+    val out = freshDir()
+    val t = new SinkTable(out)
+    t.commit(rows(0L, 10L), 1L)
+    t.commit(rows(10L, 20L).withColumn("v", col("line_no")), 2L) // v: string → bigint
+    val manifest2 = java.nio.file.Paths.get(out, "_manifests", manifestName(2L)).toString
+    val e1 = intercept[IllegalArgumentException](t.read(spark))
+    assert(e1.getMessage.contains(manifest2) && e1.getMessage.contains("`v`"))
+    // read(spark) reads every recorded column: one a commit lacks fails too
+    val extra = freshDir()
+    val u = new SinkTable(extra)
+    u.commit(rows(0L, 10L), 1L)
+    u.commit(rows(10L, 20L).withColumn("w", lit(1)), 2L)
+    val e2 = intercept[IllegalArgumentException](u.read(spark))
+    val manifest1 = java.nio.file.Paths.get(extra, "_manifests", manifestName(1L)).toString
+    assert(e2.getMessage.contains(manifest1) && e2.getMessage.contains("`w`"))
+    assert(u.read(spark, Seq("line_no", "v")).get.count() === 20L)
   }
 
   /** Commit-shaped rows [lo, hi): every row routed to `sink`. */
@@ -126,6 +192,31 @@ class PipelineSpec extends SparkSpec {
       .groupBy("source", "ts_raw_ns").count().where(col("count") > 1).count() > 100)
   }
 
+  test("crash after the data write: an unpublished commit is invisible, and its re-run equals one shot") {
+    val in = freshDir(); val out = freshDir()
+    grow(in, 0L, 250L)
+    Pipeline.run(spark, in, out, 1L)
+    // commit 2 crashed between its two phases: data landed (a copy of
+    // commit 1's files), no manifest
+    val data = java.nio.file.Paths.get(out, "data")
+    org.apache.commons.io.FileUtils.copyDirectory(
+      data.resolve("commit=000000000001").toFile, data.resolve("commit=000000000002").toFile)
+    val t = new SinkTable(out)
+    assert(t.manifests.map(_.commitId) === Seq(1L))
+    assert(t.read(spark).count() === 250L)
+    assert(t.committedMaxLineNo === t.manifests.head.maxLineNo)
+    val report = Report.fromManifests(spark, t.manifests)
+    val fromData = Report.perSink(t.read(spark))
+    assert(report.exceptAll(fromData).isEmpty && fromData.exceptAll(report).isEmpty)
+    assert(report.collect().map(_.getAs[Long]("records")).sum === 250L)
+    grow(in, 250L, 500L)
+    Pipeline.run(spark, in, out, 2L) // the re-run overwrites the orphaned data
+    val a = new SinkTable(out).read(spark).select(ResultCols: _*)
+    val b = Pipeline.transformed(spark, in).select(ResultCols: _*)
+    assert(a.count() === 500L)
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+  }
+
   /** Runs `body`; returns its result and the Spark jobs it started. */
   private def jobsDuring[A](body: => A): (A, Int) = {
     val sc = spark.sparkContext
@@ -145,12 +236,12 @@ class PipelineSpec extends SparkSpec {
 
   test("conservation: manifest report == perSink(read) over commits + rollback; no job after a write") {
     val in = freshDir(); val out = freshDir()
-    val t = new SinkTable(out)
     grow(in, 0L, 200L); Pipeline.run(spark, in, out, 1L)
     grow(in, 200L, 350L); Pipeline.run(spark, in, out, 2L)
     grow(in, 350L, 500L); Pipeline.run(spark, in, out, 3L)
-    t.rollbackLast() // commit 3's rows are past the resume point again
+    new SinkTable(out).rollbackLast() // commit 3's rows are past the resume point again
     val report = Pipeline.run(spark, in, out, 4L)
+    val t = new SinkTable(out)
     val (got, collectJobs) = jobsDuring(report.collect())
     assert(collectJobs === 0, "the report is a local relation")
     val fromData = Report.perSink(t.read(spark))
@@ -169,10 +260,10 @@ class PipelineSpec extends SparkSpec {
 
   test("fail loudly: v1 manifest, sinks without ts_raw_ns, a sink outside the declared list") {
     val v1Base = freshDir()
-    val v1 = new SinkTable(v1Base)
     val v1Path = java.nio.file.Paths.get(v1Base, "_manifests", "000000000001.json")
+    Files.createDirectories(v1Path.getParent)
     Files.writeString(v1Path, """{"commit_id":1,"rows":0,"max_line_no":-1,"partitions":[]}""")
-    val e1 = intercept[IllegalArgumentException](v1.manifests)
+    val e1 = intercept[IllegalArgumentException](new SinkTable(v1Base)) // the open lists it
     assert(e1.getMessage.contains(v1Path.toString) && e1.getMessage.contains("v1"))
 
     val out = freshDir()

@@ -51,11 +51,12 @@ class StreamingSpec extends SparkSpec {
 
     val n2 = stage(in, "line_no % 2 = 1") // new file arrives
     StreamPipeline.run(spark, in, out, cp).awaitTermination()
-    assert(t.read(spark).count() === n1 + n2)
-    assert(t.manifests.size > commitsAfterFirst)
+    val reopened = new SinkTable(out) // a table lists its manifests at open
+    assert(reopened.read(spark).count() === n1 + n2)
+    assert(reopened.manifests.size > commitsAfterFirst)
     // no dupes: doc_ids unique across all commits
-    val total = t.read(spark).count()
-    assert(t.read(spark).select("doc_id").distinct().count() === total)
+    val total = reopened.read(spark).count()
+    assert(reopened.read(spark).select("doc_id").distinct().count() === total)
   }
 
   test("replayed micro-batch is skipped (manifest already committed)") {
@@ -63,12 +64,11 @@ class StreamingSpec extends SparkSpec {
     val cp = tmp("graft-stream-cp3")
     stage(in, "line_no < 100")
     StreamPipeline.run(spark, in, out, cp).awaitTermination()
-    val t = new SinkTable(out)
-    val before = t.read(spark).count()
+    val before = new SinkTable(out).read(spark).count()
     // simulate source replay of batch 0: delete the checkpoint, keep sinks
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(cp))
     StreamPipeline.run(spark, in, out, cp).awaitTermination()
-    assert(t.read(spark).count() === before) // idempotent — no dupes
+    assert(new SinkTable(out).read(spark).count() === before) // idempotent — no dupes
   }
 
   test("watermarked windowed aggregate matches batch groupBy on drained input") {
