@@ -7,8 +7,8 @@ import graft.table.SinkTable
 /** spark-submit entrypoint: run the full parse→enrich→route→aggregate
   * pipeline over a testdata dir, write per-sink tables + manifest, print the
   * per-sink report and each commit's manifest stats.
-  * Args: <sfDir> <outBase> [commitId] [--rollback-first]; commitId
-  * defaults to the last committed id + 1 (1 on an empty table).
+  * Args: <sfDir> <outBase> [commitId] [--rollback-first], the last two in
+  * either order; commitId defaults to the last committed id + 1 (1 if none).
   *
   * `--rollback-first` drops the last manifest before running — the resume
   * drill: re-running must produce identical sink contents (no dupes/gaps),
@@ -19,7 +19,7 @@ object Main {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outBase = if (args.length > 1) args(1) else "/tmp/graft_out"
-    val commitArg = args.lift(2).filterNot(_ == "--rollback-first")
+    val commitArg = args.drop(2).filterNot(_ == "--rollback-first").headOption
     val rollback = args.contains("--rollback-first")
 
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt

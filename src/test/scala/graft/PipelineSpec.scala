@@ -276,6 +276,10 @@ class PipelineSpec extends SparkSpec {
     val e3 = intercept[IllegalArgumentException](t.commit(rows(10L, 20L, sink = "elsewhere"), 2L))
     assert(e3.getMessage.contains("10 of 10 rows routed to no sink"))
     assert(t.manifests.map(_.commitId) === Seq(1L))
+    // t's listing only shows its own commits: the disk shows that neither
+    // refused commit published a manifest
+    assert(manifestFiles(out) === Seq(manifestName(1L)))
+    assert(new SinkTable(out).manifests.map(_.commitId) === Seq(1L))
   }
 
   test("a delta bringing new sources commits the one-shot rows, every row enriched") {
