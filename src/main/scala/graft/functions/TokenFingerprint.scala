@@ -65,7 +65,7 @@ object GraftFunctions {
     ("window_hashes", classOf[WindowHashes], children => WindowHashes(children(0), children(1)))
   )
 
-  /** Register into an existing session (`SqlSurface.register`, tests). */
+  /** Register into an existing session (the test sessions). */
   def register(spark: SparkSession): Unit = fns.foreach { case (name, _, builder) =>
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
   }

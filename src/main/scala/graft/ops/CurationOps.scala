@@ -797,33 +797,6 @@ object CurationOps {
         min(col("fam_e6")).as("min_fam"), max(col("fam_e6")).as("max_fam"))
   }
 
-  /** The DSIR model as a driver-side artifact: per-bucket weights plus the
-    * smoothing-only default for buckets unseen at fit time — the form the
-    * STREAMING ingest gate consumes ([[graft.streaming.StreamPipeline
-    * .dsirGate]] folds it per arriving document, stateless). Collecting
-    * here is legitimate: the model is ≤ `buckets`+1 longs (a broadcast-
-    * sized artifact, like a trained vocab), never corpus-sized. Weights
-    * use the same nonneg int64 truncating division as [[dsirSelect]]'s
-    * `div`, so gate scores of fit-corpus documents equal the batch
-    * selection scores exactly (asserted in StreamingSpec).
-    */
-  def dsirModel(docs: DataFrame, targetPred: Column, n: Int = 8,
-                buckets: Int = 1024): (Map[Long, Long], Long) = {
-    val S = 1000000000L
-    val model = docs.select(targetPred.as("is_t"),
-        explode(graft.functions.WindowHashes.of(col("text"), n)).as("h"))
-      .select(col("is_t"), (col("h") % lit(buckets)).as("b"))
-      .groupBy("b")
-      .agg(sum(when(col("is_t"), 1L).otherwise(0L)).as("ct"),
-        sum(when(col("is_t"), 0L).otherwise(1L)).as("cr"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val ctot = model.map(_._2).sum
-    val crot = model.map(_._3).sum
-    def wt(ct: Long, cr: Long): Long =
-      (ct + 1) * S / (ctot + buckets) - (cr + 1) * S / (crot + buckets)
-    (model.map { case (b, ct, cr) => b -> wt(ct, cr) }.toMap, wt(0L, 0L))
-  }
-
   /** Gap-based sessionization over an event stream (batch form): a new
     * session starts when a user's inter-event gap exceeds `gapSec`.
     * Per-user lag + running sum — window state bounded by one user's

@@ -30,24 +30,6 @@ object DedupOps {
       .agg(count(lit(1)).as("dup_cnt"), min(col("doc_id")).as("keep_doc_id"))
       .where(col("dup_cnt") > 1)
 
-  /** Incremental exact dedup against a persisted hash index — the
-    * production shape: a new batch (today's crawl) dedups against the
-    * history WITHOUT rescanning it. The index holds one row per distinct
-    * md5 ever kept; a batch (1) drops rows whose hash is already indexed
-    * (left-anti join — at real scale the index side is the big one, so
-    * this is a shuffle join on the hash, pre-bucketable by the same key),
-    * (2) keeps one representative per new hash, and (3) appends the new
-    * hashes to the index. Returns the kept rows; the caller owns the
-    * append (see the IncrementalDedupSpec drill for the two-batch flow).
-    */
-  def dedupAgainstIndex(batch: DataFrame, index: DataFrame): DataFrame = {
-    val hashed = batch.withColumn("__h", md5(col("text")))
-    val novel = hashed.join(index.select(col("text_hash").as("__h")), Seq("__h"), "left_anti")
-    val w = Window.partitionBy(col("__h")).orderBy(col("doc_id"))
-    novel.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
-      .drop("__rn").withColumnRenamed("__h", "text_hash")
-  }
-
   /** Keep one representative row per exact-duplicate group. */
   def exactDedup(docs: DataFrame): DataFrame = {
     val w = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))

@@ -20,6 +20,8 @@ import graft.table.SinkTable
   * dimension's columns as expressions of `source` (`Enrich.withSourceAttrs`):
   * no join, no dimension to build, no broadcast.
   *
+  * [[run]] and [[graft.streaming.StreamPipeline.run]] (one micro-batch at a
+  * time) commit through one step, [[commit]].
   * [[run]] resumes: it reads, parses, enriches, routes and writes only the
   * input rows past the committed `line_no` (the reference tails from its
   * checkpoint the same way — src/checkpoint.rs:44-116, zeek.rs:92-94), and
@@ -67,7 +69,17 @@ object Pipeline {
   def run(spark: SparkSession, dir: String, outBase: String, commitId: Long): DataFrame = {
     val table = new SinkTable(outBase)
     val delta = Tables.rawEvents(spark, dir).where(col("line_no") > table.committedMaxLineNo)
-    val routed = stages(delta, table.read(spark, DedupKeys))
+    commit(spark, table, delta, commitId)
+  }
+
+  /** The one commit step of [[run]] and of
+    * [[graft.streaming.StreamPipeline.run]]'s micro-batches: run [[stages]]
+    * over `raw` (`Tables.rawEvents` rows not yet committed), continuing the
+    * dedup window from `table`'s committed keys, and commit the sink columns
+    * as `commitId`. Returns the report over every committed row.
+    */
+  def commit(spark: SparkSession, table: SinkTable, raw: DataFrame, commitId: Long): DataFrame = {
+    val routed = stages(raw, table.read(spark, DedupKeys))
     // quarantined rows keep the WHOLE line as bytes — the reference's raw-log
     // fallback record (Log{kind, log bytes} — src/collector/log.rs:129-149);
     // parsed sinks carry null here (columnar: costs nothing when absent)

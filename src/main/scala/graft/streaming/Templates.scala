@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Template-driven decode with per-key mutable state — the Spark-native
   * re-expression of the reference's NetFlow v9 TemplatesBox: a cross-packet
@@ -11,11 +10,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * NETFLOW_TEMPLATES_PATH — src/collector/netflow.rs:51-57,95-106).
   *
   * This is the one genuinely stateful, order-dependent operator in the
-  * reference (SURVEY.md §1.1), so it gets the one stateful Spark primitive:
-  * `flatMapGroupsWithState` over a key group, state = the latest field-width
-  * template per (exporter, template id). Records are sequenced by `seq`
-  * within a group (the reference relies on packet arrival order; an explicit
-  * sequence number makes replays deterministic).
+  * reference (SURVEY.md §1.1): [[decodeBatch]] folds each exporter's records
+  * in `seq` order, state = the latest field-width template per (exporter,
+  * template id), and [[TemplateStore]] carries that state across runs. The
+  * reference relies on packet arrival order; an explicit sequence number
+  * makes replays deterministic.
   *
   * A data record arriving before any template is emitted as undecodable
   * (fields = empty) rather than dropped — mirroring the reference, which
@@ -96,53 +95,15 @@ object Templates {
     }
   }
 
-  /** Pure per-group fold for the STREAMING form: records of one micro-batch
-    * sorted by seq; templates update the dictionary, data records decode
-    * with the template in force at their seq. Materializing the iterator is
-    * bounded here by the micro-batch size (state across batches lives in
-    * GroupState, not in this Seq); the batch form uses a secondary sort and
-    * never materializes a group — see [[decodeBatch]].
-    */
-  def foldGroup(recs: Iterator[NfRec], init: TplState): (Seq[NfDecoded], TplState) = {
-    // at equal seq (flowsets of one packet) templates apply first — the
-    // reference registers a packet's template flowsets before decoding its
-    // data flowsets in the same pass
-    val sorted = recs.toSeq.sortBy(r => (r.seq, if (r.isTemplate) 0 else 1))
-    var st = init
-    val out = Seq.newBuilder[NfDecoded]
-    sorted.foreach { r =>
-      if (r.isTemplate) st = st.register(r) else out ++= st.decode(r)
-    }
-    (out.result(), st)
-  }
-
-  /** Streaming form: state persists across micro-batches (and, with a
-    * checkpoint, across restarts — the analog of NETFLOW_TEMPLATES_PATH).
-    */
-  def decodeStream(ds: Dataset[NfRec]): Dataset[NfDecoded] = {
-    implicit val encD = Encoders.product[NfDecoded]
-    implicit val encS = Encoders.product[TplState]
-    implicit val encK = Encoders.STRING
-    ds.groupByKey(_.exporter)
-      .flatMapGroupsWithState[TplState, NfDecoded](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, recs: Iterator[NfRec], state: GroupState[TplState]) =>
-          val init = state.getOption.getOrElse(TplState(Map.empty))
-          val (out, st) = foldGroup(recs, init)
-          state.update(st)
-          out.iterator
-      }
-  }
-
   /** Batch form, memory-bounded via secondary sort: hash-partition by
     * exporter, sort each partition by (exporter, seq, templates-first), then
     * fold the iterator directly — group state is ONE template dictionary at
     * a time, never a materialized group. With few exporters (the common
     * case: one router) the old groupByKey+flatMapGroups form held an
     * exporter's whole flowset history in a single task's memory; this form
-    * streams it. Same order semantics as [[foldGroup]]: at equal seq,
-    * templates apply before data (the reference registers a packet's
-    * template flowsets before decoding its data flowsets).
+    * streams it. At equal seq, templates apply before data (the reference
+    * registers a packet's template flowsets before decoding its data
+    * flowsets), and the input's order does not matter.
     */
   def decodeBatch(ds: Dataset[NfRec]): Dataset[NfDecoded] = {
     import org.apache.spark.sql.functions.{col, when}

@@ -271,26 +271,6 @@ class CurationSpec extends SparkSpec {
     assert(moved > 0L)
   }
 
-  test("shard writer lays out one sorted file per bucket and replays the exact order") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.01")
-    val ordered = CurationOps.trainOrder(docs, nBuckets = 8)
-    val out = java.nio.file.Files.createTempDirectory("graft-shards").toString
-    graft.table.ShardWriter.writeShards(ordered, out)
-    // one data file per bucket directory (whole bucket in one task)
-    val bucketDirs = new java.io.File(out).listFiles().filter(_.getName.startsWith("bucket="))
-    assert(bucketDirs.length === 8)
-    bucketDirs.foreach { d =>
-      val files = d.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(files.length === 1, s"${d.getName}: expected 1 sorted shard, got ${files.length}")
-    }
-    // replay equals the in-memory order exactly
-    val replay = graft.table.ShardWriter.readShards(spark, out)
-      .select("doc_id", "bucket", "ord").collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
-    val expect = ordered.orderBy("bucket", "ord")
-      .select("doc_id", "bucket", "ord").collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    assert(replay.map(t => (t._1, t._2.toLong, t._3)).toSeq === expect.toSeq)
-  }
-
   test("token-budget selection hits the target within band variance and prefers quality") {
     val scored = Tables.documents(spark, "/root/testdata/sf0.01")
       .select(col("doc_id").as("did"),

@@ -1,55 +1,16 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.ops.DedupOps
 import graft.sources.Tables
 
-/** Two-batch incremental-dedup drill: batch 2 repeats half of batch 1 —
-  * against the persisted hash index the repeats vanish, within-batch dups
-  * still collapse, and the union of kept rows equals a whole-corpus dedup
-  * of everything seen (incremental ≡ batch, the invariant that makes the
+/** Incremental near-dup drill: probing a delta against the standing
+  * corpus's LSH bands equals the full-corpus LSH restricted to
+  * (index, delta) pairs (incremental ≡ batch, the invariant that makes the
   * index trustworthy).
   */
 class IncrementalDedupSpec extends SparkSpec {
-
-  test("incremental dedup over a persisted index equals whole-corpus dedup") {
-    val idx = Files.createTempDirectory("graft-dedup-idx").toString
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val batch1 = docs.where(col("doc_id") < 30)
-    // batch 2: fresh docs + re-crawls of 10 batch-1 texts under new ids +
-    // an internal duplicate pair
-    val recrawl = batch1.where(col("doc_id") < 10)
-      .withColumn("doc_id", col("doc_id") + 5000L)
-    val internal = docs.where(col("doc_id") === 40L)
-      .withColumn("doc_id", lit(6000L))
-    val batch2 = docs.where(col("doc_id") >= 30 && col("doc_id") < 50)
-      .unionByName(recrawl).unionByName(internal)
-
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      new org.apache.spark.sql.types.StructType()
-        .add("text_hash", org.apache.spark.sql.types.StringType))
-    val kept1 = DedupOps.dedupAgainstIndex(batch1, empty)
-    kept1.select("text_hash").write.mode("overwrite").parquet(idx)
-
-    val kept2 = DedupOps.dedupAgainstIndex(batch2, spark.read.parquet(idx))
-    kept2.select("text_hash").write.mode("append").parquet(idx)
-
-    // re-crawled texts were suppressed, the internal dup collapsed
-    assert(kept2.where(col("doc_id") >= 5000L && col("doc_id") < 6000L).count() === 0L)
-    assert(kept2.where(col("text") === docs.where(col("doc_id") === 40L)
-      .head.getAs[String]("text")).count() === 1L)
-    // incremental ≡ batch over everything seen
-    val all = batch1.unionByName(batch2)
-    val wholeCorpus = DedupOps.exactDedup(all).select("text").collect().map(_.getString(0)).toSet
-    val incremental = kept1.select("text").unionByName(kept2.select("text"))
-      .collect().map(_.getString(0)).toSet
-    assert(incremental === wholeCorpus)
-    // index has exactly one row per distinct text
-    assert(spark.read.parquet(idx).distinct().count() === wholeCorpus.size.toLong)
-  }
 
   test("incremental LSH equals the delta-restricted full-LSH result and broadcasts the delta") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")

@@ -1,19 +1,17 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.BinaryDecode
 import graft.operators.BinaryDecode.V9Rec
 import graft.streaming.Templates
-import graft.streaming.Templates.{NfRec, TplState}
+import graft.streaming.Templates.NfRec
 
 /** Template-driven stateful decode (NetFlow v9 TemplatesBox analog):
-  * cross-batch state via flatMapGroupsWithState, order within a group by
-  * seq, data-before-template emitted undecoded (reference counts & skips —
-  * /root/reference/src/parser/netflow.rs:125-137).
+  * a secondary-sort fold per exporter, cross-run state via TemplateStore,
+  * order within a group by seq, data-before-template emitted undecoded
+  * (the reference counts and skips them — src/parser/netflow.rs:125-137).
   */
 class TemplatesSpec extends SparkSpec {
   import spark.implicits._
@@ -60,13 +58,20 @@ class TemplatesSpec extends SparkSpec {
     assert(bySeq(1500L) === List(0x0aL, 0x0bL)) // redefinition applies forward
   }
 
-  test("foldGroup is order-insensitive to input permutation (sorts by seq)") {
+  test("decodeBatch is order-insensitive to input permutation (sorts by seq)") {
     val recs = Seq(
+      tpl("e1", 7, 1, Seq(2, 2)),
       dat("e1", 7, 2, "0a0b"),
-      tpl("e1", 7, 1, Seq(2, 2)))
-    val (out, st) = Templates.foldGroup(recs.reverseIterator, TplState(Map.empty))
-    assert(out.head.fields === Seq(10L, 11L))
-    assert(st.widths(7) === Seq(2, 2))
+      tpl("e1", 7, 3, Seq(4)),       // redefinition and its data share seq 3:
+      dat("e1", 7, 3, "0c0d"),       // the template applies first
+      dat("e2", 7, 1, "0e0f"))       // other exporter: no template
+    def decoded(in: Seq[NfRec]) = Templates.decodeBatch(spark.createDataset(in)).collect()
+      .map(d => (d.exporter, d.seq, d.recIdx, d.decoded, d.fields.toList))
+      .sortBy(d => (d._1, d._2, d._3)).toSeq
+    val inOrder = decoded(recs)
+    assert(decoded(recs.reverse) === inOrder)
+    assert(inOrder === Seq(("e1", 2L, 0, true, List(10L, 11L)),
+      ("e1", 3L, 0, true, List(0x0c0dL)), ("e2", 1L, 0, false, Nil)))
   }
 
   // four v9 wire packets, exporter 42:
@@ -175,24 +180,5 @@ class TemplatesSpec extends SparkSpec {
     val st = TemplateStore.load(spark, base).collect()
     assert(st.length === 1 && st.head.widths === Seq(8),
       s"state must hold the latest definition only, got ${st.toList}")
-  }
-
-  test("streaming: template from batch 1 decodes data arriving in batch 2 (state persists)") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[NfRec]
-    val q = Templates.decodeStream(mem.toDS()).writeStream
-      .format("memory").queryName("tpl_out").outputMode("append")
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      mem.addData(tpl("e1", 300, 1, Seq(4)), dat("e1", 300, 2, "00aa"))
-      q.processAllAvailable()
-      mem.addData(dat("e1", 300, 3, "00bb")) // no template in this batch — state must carry it
-      q.processAllAvailable()
-      val rows = spark.table("tpl_out").as[Templates.NfDecoded]
-        .collect().map(d => d.seq -> (d.decoded, d.fields.toList)).toMap
-      assert(rows(2L) === (true, List(170L)))
-      assert(rows(3L) === (true, List(187L)))
-    } finally q.stop()
   }
 }
