@@ -18,7 +18,7 @@ object QueriesOps {
   private def docs(s: SparkSession, dir: String) = Tables.documents(s, dir)
   private def emb(s: SparkSession, dir: String) = Tables.embeddings(s, dir)
 
-  /** Oracle CTE chain for [[Ann.kmeansSketch]](k=16, iters=2): iterations
+  /** Oracle CTE chain for [[Ann.kmeansSketch]] (k = 16, 2 iterations): iterations
     * unrolled (asn1→cent1→asn2→cent2→asn3), centroids as exact int64 sums,
     * scores as the identical left-assoc double chains. Shared by i03 (the
     * assignment itself) and d11 (SemDeDup pruning on top of it).
@@ -556,7 +556,7 @@ object QueriesOps {
     // MMR diversified retrieval: greedy λ·rel − (1−λ)·max-sim-to-picked
     // over each query's top-20 pool — exact int64 greedy, 5 picks
     Q("i07_mmr", (s, dir) =>
-      Ann.mmrSelect(emb(s, dir), col("vec_id") < 10),
+      Ann.mmrSelect(emb(s, dir), col("vec_id") < 10, k = 5),
       // the greedy MMR recursion unrolled: one (candidates, argmax) CTE pair
       // per pick, selected set = union of the prior pick CTEs
       {
@@ -709,7 +709,7 @@ object QueriesOps {
     // integer sketch; candidates = union over tables (key cardinality
     // 4·2^8 — no low-cardinality shuffle key at scale)
     Q("a02_ann_lsh", (s, dir) =>
-      Ann.multiTableLshTopK(emb(s, dir), col("vec_id") < 10, k = 5, tables = 4, bits = 8)
+      Ann.multiTableLshTopK(emb(s, dir), col("vec_id") < 10, k = 5)
         .select(col("q_id"), col("c_id"),
           round(col("cos") * 1e6).cast("long").as("cos_e6"), col("rank")),
       {
@@ -1092,7 +1092,7 @@ object QueriesOps {
     // so the candidate join key has real cardinality (nCells IS the shuffle
     // key), nProbe=32 holds the candidate fraction at ≈ 1/8
     Q("a03_ann_ivf", (s, dir) =>
-      Ann.ivfTopK(emb(s, dir), col("vec_id") < 10, k = 5, nCells = 256, nProbe = 32)
+      Ann.ivfTopK(emb(s, dir), col("vec_id") < 10, k = 5, nProbe = 32)
         .select(col("q_id"), col("c_id"),
           round(col("cos") * 1e6).cast("long").as("cos_e6"), col("rank")),
       // twin of the sketch-space IVF: centroid sketches from the shared sk
@@ -1719,7 +1719,7 @@ object QueriesOps {
     // 2-iteration Lloyd k-means in sketch space, division-free
     // sum-centroids so every value stays exact int64 (see Ann scaladoc)
     Q("i03_kmeans", (s, dir) =>
-      Ann.kmeansSketch(emb(s, dir), k = 16, iters = 2),
+      Ann.kmeansSketch(emb(s, dir)),
       // twin of the sketch-space k-means: iterations unrolled, centroids as
       // exact int64 sums, scores as the identical left-assoc double chains
       withCtes(kmeansCtes: _*)(
@@ -1728,7 +1728,7 @@ object QueriesOps {
     // SemDeDup stage 2: prune cluster members whose exact cosine to their
     // cluster representative clears 0.25 (see DedupOps.semDedup)
     Q("d11_semdedup", (s, dir) =>
-      DedupOps.semDedup(emb(s, dir), k = 16, iters = 2, minCos = 0.25),
+      DedupOps.semDedup(emb(s, dir), minCos = 0.25),
       // SemDeDup stage 2: min-id representative per k-means cluster, exact
       // cosine of each member to its representative, prune at >= 0.25
       withCtes(kmeansCtes :+
@@ -1745,7 +1745,7 @@ object QueriesOps {
     // balance): per cluster n, cohesion (mean member->centroid cosine),
     // separation (nearest-other-centroid cosine) — k rows at any scale
     Q("i12_cluster_quality", (s, dir) =>
-      Ann.kmeansQuality(emb(s, dir), k = 16, iters = 2),
+      Ann.kmeansQuality(emb(s, dir)),
       // i12 twin: the shared kmeans CTEs' final assignment (asn3) and
       // centroids (cent2); full cosine (both norms), per-member e6 floor,
       // sign-safe floor mean, k×k centroid self-join for separation
@@ -1950,7 +1950,7 @@ object QueriesOps {
     Q("k15_dsir", (s, dir) =>
       graft.ops.CurationOps.dsirSelect(
         docs(s, dir).repartition(s.sparkContext.defaultParallelism),
-        targetPred = col("lang") === "en"),
+        targetPred = col("lang") === "en", topK = 100),
       {
         // twin of WindowHashes(text, 8) % 1024: the d12 per-window fold
         val fold = (0 until 8).foldLeft("cast(0 AS bigint)") { (acc, j) =>

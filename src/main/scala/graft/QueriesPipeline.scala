@@ -549,13 +549,9 @@ object QueriesPipeline {
           |FROM v2 WHERE did % 3 = 0""".stripMargin)),
 
     Q("p17_parse_ubuntu", (s, dir) => {
-      // run-level syslog-year passthrough — reference injects the wall-clock
-      // year (ubuntu.rs:19-29); a run pins it via conf for reproducibility,
-      // defaulting to the gate fixtures' 2025 (= the oracle twin's constant)
-      val pinYear = s.conf.get("graft.syslog.pinYear", "2025").toInt
       val r = Tables.rawEvents2(s, dir).where(col("kind") === "ubuntu")
         .withColumn("o", graft.operators.ParseVendors.ubuntu(col("raw_line"),
-          Dedup.securitySerial(col("line_no")), pinYear))
+          Dedup.securitySerial(col("line_no"))))
       r.where(col("o.ok")).select(col("doc_id"), col("o.ts_ns").as("ts_ns"),
         col("o.host").as("host"), col("o.daemon").as("daemon"),
         col("o.pid").as("pid"), col("o.contents").as("contents"))
@@ -1196,7 +1192,7 @@ object QueriesPipeline {
     Q("f03_pcap_scan", (s, dir) => {
       val path = graft.sources.Pcap.stage(s, dir)
       val files = s.read.format("binaryFile").load(path)
-      graft.operators.BinaryDecode.pcapNetflowV5Payloads(files)
+      graft.operators.BinaryDecode.pcapNetflowV5Payloads(files, referenceCompat = false)
         .withColumn("o5", graft.operators.BinaryDecode.netflowV5(col("nf")))
         .where(col("o5.ok"))
         .select(col("o5.sys_uptime").as("did"), col("o5.version").as("version"),

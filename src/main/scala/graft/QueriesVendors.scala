@@ -40,13 +40,8 @@ object QueriesVendors {
     ParseVendors.vendors.zipWithIndex.map { case (v, k) =>
       val (ts, proto) = tsSql(k)
       Q(f"v${k + 1}%02d_parse_${v.name}", (s, dir) => {
-        // run-level syslog-year passthrough (SURVEY §2.2): the reference
-        // injects the wall clock (vforce.rs:23-26); a run pins it via conf,
-        // defaulting to the gate fixtures' 2025 (the oracle twin's constant)
-        val pinYear = s.conf.get("graft.syslog.pinYear", "2025").toInt
-        val vv = ParseVendors.vendorsFor(pinYear)(k)
         val r = Tables.rawEvents3(s, dir).where(col("did") % 9 === k)
-          .withColumn("o", ParseVendors.secuLog(vv)(col("raw_line"),
+          .withColumn("o", ParseVendors.secuLog(v)(col("raw_line"),
             Dedup.securitySerial(col("line_no"))))
         r.where(col("o.ok")).select(col("doc_id"), col("o.ts_ns").as("ts_ns"),
           col("o.src_ip").as("src_ip"), col("o.src_port").as("src_port"),

@@ -7,11 +7,12 @@ import org.apache.spark.sql.SparkSession
   * UTC session time zone (the reference pins all timestamps to UTC nanos —
   * /root/reference/src/parser/zeek.rs:59-64).
   *
-  * At cluster scale the same builder is used by spark-submit; only
-  * `master`/`shuffle.partitions` change (driver passes them via conf).
+  * The session is always local: `master` is `local[cpus]` and the shuffle
+  * partitions equal `cpus`. A cluster deployment would need a builder
+  * that takes the master from spark-submit instead.
   */
 object Sessions {
-  def local(cpus: Int = 32, appName: String = "graft"): SparkSession = {
+  def local(cpus: Int, appName: String): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cpus]")

@@ -528,7 +528,7 @@ object BinaryDecode {
     * the ·4 — `consume(ihl − 20)` underflows for any real IHL>5 packet; the
     * intended (ihl·4 − 20)-byte skip is implemented here, matching its
     * stated boundary test packet.rs:1433.) Output: one row per accepted
-    * packet with the NetFlow payload in `nf`.
+    * packet with the NetFlow payload in `nf`, with `referenceCompat = false`.
     *
     * `referenceCompat = true` reproduces the reference binary's OBSERVABLE
     * outcome on IHL>5 packets instead: the release-mode usize wrap of
@@ -539,7 +539,7 @@ object BinaryDecode {
     * is rejected as not-netflow. Emulated as a drop.
     */
   def pcapNetflowV5Payloads(files: org.apache.spark.sql.DataFrame,
-                            referenceCompat: Boolean = false): org.apache.spark.sql.DataFrame = {
+                            referenceCompat: Boolean): org.apache.spark.sql.DataFrame = {
     val d = col("data")
     val et0 = beUint(d, 13, 2)
     // 1-based offset of the IPv4 header after the L2 unwrap:

@@ -18,15 +18,14 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   /** Timestamp dedup: consecutive records with identical ts become ts+0,
-    * ts+1, ts+2…; offset resets when ts changes
+    * ts+1, ts+2…, written to `ts_ns`; offset resets when ts changes
     * (/root/reference/src/collector/common.rs:8-24). Exact iff equal
     * timestamps are adjacent in line order — true for monotonic logs, which
     * is the reference's operating assumption.
     */
-  def timestampDedup(df: DataFrame, ts: Column, partCols: Seq[Column], lineNo: Column,
-                     out: String = "ts_ns"): DataFrame = {
+  def timestampDedup(df: DataFrame, ts: Column, partCols: Seq[Column], lineNo: Column): DataFrame = {
     val w = Window.partitionBy(partCols :+ ts: _*).orderBy(lineNo)
-    df.withColumn(out, ts + row_number().over(w).cast("long") - lit(1L))
+    df.withColumn("ts_ns", ts + row_number().over(w).cast("long") - lit(1L))
   }
 
   /** [[timestampDedup]] of `fresh`, continued from `carried`: the window
@@ -40,11 +39,11 @@ object Dedup {
     * rows, whose output is null whatever they count.
     */
   def timestampDedupCarried(fresh: DataFrame, carried: DataFrame, ts: Column, partCols: Seq[Column],
-                            lineNo: Column, out: String = "ts_ns"): DataFrame = {
+                            lineNo: Column): DataFrame = {
     val both = fresh.withColumn("__fresh", lit(true))
       .unionByName(carried.where(ts.isNotNull).withColumn("__fresh", lit(false)),
         allowMissingColumns = true)
-    timestampDedup(both, ts, partCols, lineNo, out).where(col("__fresh")).drop("__fresh")
+    timestampDedup(both, ts, partCols, lineNo).where(col("__fresh")).drop("__fresh")
   }
 
   /** Consecutive-duplicate drop: a record equal (on cmpCols) to the
@@ -69,11 +68,11 @@ object Dedup {
     ((lineNo - lit(1L)) % lit(999L)) + lit(1L)
 
   /** NetFlow-style intra-group nanos: row_number within (part, second)
-    * window (/root/reference/src/parser/netflow.rs:57-67).
+    * window, 0-based, written to `nanos`
+    * (/root/reference/src/parser/netflow.rs:57-67).
     */
-  def intraGroupNanos(df: DataFrame, partCols: Seq[Column], sec: Column, lineNo: Column,
-                      out: String = "nanos"): DataFrame = {
+  def intraGroupNanos(df: DataFrame, partCols: Seq[Column], sec: Column, lineNo: Column): DataFrame = {
     val w = Window.partitionBy(partCols :+ sec: _*).orderBy(lineNo)
-    df.withColumn(out, row_number().over(w).cast("long") - lit(1L))
+    df.withColumn("nanos", row_number().over(w).cast("long") - lit(1L))
   }
 }

@@ -102,9 +102,11 @@ object Parse {
   /** Kind-dispatched parse: one branch per format family, mirroring the
     * reference's classify→parser dispatch (main.rs:525-543). Produces
     * flat common columns (ts_ns, level, src_ip, status_code, ok) plus the
-    * per-kind struct for sink schemas.
+    * per-kind struct for sink schemas, from the `raw_line` and `kind`
+    * columns.
     */
-  def parsed(df: DataFrame, line: Column = col("raw_line"), kind: Column = col("kind")): DataFrame = {
+  def parsed(df: DataFrame): DataFrame = {
+    val (line, kind) = (col("raw_line"), col("kind"))
     // oplog/nginx match each line once (RegexpExtractStruct: 1.88–2.04×
     // on the regex stage against a regexp_extract per group; equal to the
     // builtins per RegexpExtractStructSpec); fgt/zeek are per-key regex /

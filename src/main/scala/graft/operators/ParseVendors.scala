@@ -60,15 +60,21 @@ object ParseVendors {
       (m("matched") && ts.isNotNull).as("ok"))
   }
 
-  /** ubuntu-style syslog: month-name datetime without year; `pinYear` is
-    * injected (the reference injects the current year — pinned here for
-    * determinism). `serial` (1..999 per line) uniquifies same-second lines,
+  /** The year injected into the syslog formats that omit it (ubuntu,
+    * vforce). The reference injects the wall-clock year (ubuntu.rs:19-29,
+    * vforce.rs:23-26), so its output depends on when it runs; pinned here
+    * to the gate fixtures' year so a run is reproducible.
+    */
+  private val SyslogYear = 2025
+
+  /** ubuntu-style syslog: month-name datetime without year; [[SyslogYear]]
+    * is injected. `serial` (1..999 per line) uniquifies same-second lines,
     * as the reference adds it to every security-log ts
     * (src/collector/security_log.rs:105-109).
     */
-  def ubuntu(line: Column, serial: Column, pinYear: Int = 2025): Column = {
+  def ubuntu(line: Column, serial: Column): Column = {
     val m = graft.functions.RegexpExtractStruct.of(line, UbuntuRe, 5)
-    val ts = to_timestamp(concat(lit(s"$pinYear "), m("g1")), "yyyy MMM dd HH:mm:ss")
+    val ts = to_timestamp(concat(lit(s"$SyslogYear "), m("g1")), "yyyy MMM dd HH:mm:ss")
     struct(
       (nsOf(ts) + serial).as("ts_ns"),
       m("g2").as("host"),
@@ -130,19 +136,16 @@ object ParseVendors {
   /** shadowwall is 10-digit epoch seconds (shadow_wall.rs:16,64). */
   private def epochSec(t: Column): Column = t.cast("long") * lit(1000000000L)
 
-  /** vforce injects the current year (vforce.rs:23-26) — pinned for
-    * determinism, like ubuntu.
+  /** vforce injects the current year (vforce.rs:23-26) — pinned to
+    * [[SyslogYear]], like ubuntu.
     */
-  private def yearInject0900(fmt: String, year: Int)(t: Column): Column =
-    plus0900(s"yyyy $fmt")(concat(lit(s"$year "), t))
+  private def yearInject0900(fmt: String)(t: Column): Column =
+    plus0900(s"yyyy $fmt")(concat(lit(s"$SyslogYear "), t))
 
-  /** The 9-vendor bank with the syslog-year pin threaded through: vforce is
-    * the one vendor whose format omits the year (the reference injects the
-    * wall-clock year, vforce.rs:23-26 — nondeterministic by design); callers
-    * pass the run's configured year (`graft.syslog.pinYear`, read by the
-    * pipeline queries) instead of the wall clock so a run is reproducible.
+  /** The 9-vendor bank. vforce is the one vendor whose format omits the
+    * year; it gets [[SyslogYear]].
     */
-  def vendorsFor(pinYear: Int): Seq[SecuVendor] = Seq(
+  val vendors: Seq[SecuVendor] = Seq(
     // mf2.rs:14-27: "](Y-m-d H:M:S),..,ip,port,ip,port,proto," +0900
     SecuVendor("mf2",
       "\\](\\d{4}-\\d{1,2}-\\d{1,2} \\d{2}:\\d{2}:\\d{2}),.*?,(\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}),(\\d+),(\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}),(\\d+),(\\w+),",
@@ -166,7 +169,7 @@ object ParseVendors {
     // current-year injection +0900
     SecuVendor("vforce",
       ">(\\w{3} \\d{1,2} \\d{2}:\\d{2}:\\d{2}).*?Src:(\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}), Dst:(\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}), Proto:(\\d+), Spt_c:(\\d+), Dpt_t:(\\d+),",
-      yearInject0900("MMM dd HH:mm:ss", pinYear),
+      yearInject0900("MMM dd HH:mm:ss"),
       gDt = 1, gSip = 2, gDip = 3, gProto = 4, gSport = 5, gDport = 6),
     // srx.rs:12-24: RFC3339 with millis and explicit +09:00 offset
     SecuVendor("srx",
@@ -187,9 +190,6 @@ object ParseVendors {
       "time:(\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}).*?src:(\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}).*?dst:(\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}).*?sport:(\\d+).*?dport:(\\d+).*?proto:(\\d+)",
       plus0900("yyyy-MM-dd HH:mm:ss"),
       gDt = 1, gSip = 2, gDip = 3, gSport = 4, gDport = 5, gProto = 6))
-
-  /** Default bank: year pinned to 2025 (the gate fixtures' year). */
-  val vendors: Seq[SecuVendor] = vendorsFor(2025)
 
   val vendorByName: Map[String, SecuVendor] = vendors.map(v => v.name -> v).toMap
 

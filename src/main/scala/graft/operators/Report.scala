@@ -22,8 +22,12 @@ import graft.table.{Manifest, SinkStats}
   */
 object Report {
 
-  def perSink(df: DataFrame, sink: Column = col("sink"), bytes: Column = col("bytes")): DataFrame =
-    df.groupBy(sink.as("sink"))
+  /** Per-sink records, byte statistics and parse outcomes over the `sink`,
+    * `bytes` and `parse_ok` columns.
+    */
+  def perSink(df: DataFrame): DataFrame = {
+    val bytes = col("bytes")
+    df.groupBy(col("sink").as("sink"))
       .agg(
         count(lit(1)).as("records"),
         sum(bytes).as("sum_bytes"),
@@ -35,6 +39,7 @@ object Report {
         sum(when(col("parse_ok"), 1L).otherwise(0L)).as("success_cnt"),
         sum(when(!col("parse_ok"), 1L).otherwise(0L)).as("failed_cnt")
       )
+  }
 
   /** One aggregate struct per sink, named after it — the mergeable part of
     * [[perSink]] (records, sum/min/max bytes, ok, failed), for

@@ -17,8 +17,9 @@ import graft.functions.VectorKernels
   *    one compiled product chain per pair), keep the top fraction via
   *    a two-pass quantized-histogram threshold (no per-query corpus sort —
   *    per-query window state is bounded by the bucket range at any scale),
-  *    re-score only those with exact cosine. Candidate fraction is an exact
-  *    knob (default 1/5); measured recall@5 ≈ 0.89 on the synthetic corpus.
+  *    re-score only those with exact cosine. The candidate fraction is
+  *    1/5 ([[SketchCandDiv]]); measured recall@5 ≈ 0.89 on the synthetic
+  *    corpus.
   *  - [[multiTableLshTopK]] — L independent sign-bucket tables from the same
   *    sketch bits, candidates = union over tables (the standard multi-table
   *    LSH construction; key cardinality L·2^bits, so no low-cardinality
@@ -58,27 +59,38 @@ object Ann {
   def cosine(a: Column, b: Column): Column =
     round(dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b))), 6)
 
-  /** Scale-safe per-query top-k over (q_id, c_id, cos) rows. A direct
-    * `Window.partitionBy(q_id)` rank sorts ALL of a query's candidate rows
-    * in one task — at 100× data that is a single-task corpus sort per
-    * query. Two-level instead: rank within (q_id, salt) partitions first
-    * (any global top-k row is necessarily in its salt bucket's local
-    * top-k), then rank the ≤ salts·k survivors per query. Output is
-    * identical to the direct global rank (same orderBy, same tie-break);
-    * the final window holds at most salts·k rows per query regardless of
-    * corpus size. Same partial-top-k-then-merge shape as e02/k03's
-    * TakeOrderedAndProject, expressed per query group.
+  /** Salt buckets per group in [[saltedTopK]]'s first level. */
+  private val TopKSalts = 32
+
+  /** Scale-safe per-group top-k: the rows of `df` ranked by `order` within
+    * each `group`, rank ≤ k kept, with a `rank` column. A direct
+    * `Window.partitionBy(group)` rank sorts ALL of a group's rows in one
+    * task — at 100× data that is a single-task corpus sort per query or
+    * per source. Two-level instead: rank within (group, pmod(hash(saltBy),
+    * [[TopKSalts]])) partitions first (any group-wide top-k row is
+    * necessarily in its salt bucket's local top-k), keep k, then rank the
+    * ≤ TopKSalts·k survivors per group. Output is identical to the direct
+    * group-wide rank (same order, same tie-break); the final window holds
+    * at most TopKSalts·k rows per group regardless of input size. Same
+    * partial-top-k-then-merge shape as e02/k03's TakeOrderedAndProject,
+    * expressed per group. The salt only splits the work, so `saltBy` may be
+    * any column of the row.
     */
-  private def topKPerQuery(scored: DataFrame, k: Int, salts: Int = 32): DataFrame = {
-    val wLocal = Window.partitionBy(col("q_id"), pmod(hash(col("c_id")), lit(salts)))
-      .orderBy(col("cos").desc, col("c_id"))
-    val pruned = scored.withColumn("__lr", row_number().over(wLocal))
+  private[ops] def saltedTopK(df: DataFrame, group: Column, saltBy: Column,
+                              order: Seq[Column], k: Int): DataFrame = {
+    val wLocal = Window.partitionBy(group, pmod(hash(saltBy), lit(TopKSalts))).orderBy(order: _*)
+    val pruned = df.withColumn("__lr", row_number().over(wLocal))
       .where(col("__lr") <= k).drop("__lr")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    pruned.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("q_id", "c_id", "cos", "rank")
+    val w = Window.partitionBy(group).orderBy(order: _*)
+    pruned.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
+
+  /** Per-query top-k over (q_id, c_id, cos) rows: [[saltedTopK]] by
+    * (cos desc, c_id), salted by c_id.
+    */
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
+    saltedTopK(scored, col("q_id"), col("c_id"), Seq(col("cos").desc, col("c_id")), k)
+      .select("q_id", "c_id", "cos", "rank")
 
   /** Q×N scored pairs (q_id, c_id, cos): every query vector against every
     * other corpus vector (the query side is tiny and broadcasts). Each
@@ -118,8 +130,7 @@ object Ann {
     * directly, the sketch arm applies [[sketchCut]] and takes its
     * candidates' `cos` from the same rows — no second pair build, no
     * embedding re-join for the rerank. Row for row equal to
-    * `(bruteForceTopK, sketchRerankTopK)` at that path's default
-    * [[SketchKProj]] and [[SketchCandDiv]].
+    * `(bruteForceTopK, sketchRerankTopK)`.
     */
   def exactAndSketchTopK(emb: DataFrame, queryFilter: Column, k: Int): (DataFrame, DataFrame) = {
     val scored = scoredPairs(emb, queryFilter, SketchKProj).localCheckpoint(true)
@@ -250,24 +261,28 @@ object Ann {
     scored.join(thr, "q_id").where(col("ski") >= col("thr")).drop("thr")
   }
 
-  /** Default sketch width and candidate divisor (a fifth of the corpus per
-    * query) of the sketch-rerank path, shared by [[exactAndSketchTopK]].
+  /** Width of the shared integer projection sketch: the sketch-rerank
+    * scan, the sketch top-k, k-means and the IVF cells all score in this
+    * 32-d space.
     */
   private val SketchKProj = 32
+
+  /** Candidate divisor of the sketch-rerank path: a fifth of the corpus
+    * per query.
+    */
   private val SketchCandDiv = 5
 
   /** Compressed-scan + exact-rerank top-k: keep every candidate whose
     * sketch cosine clears the per-query cut ([[sketchCut]]), exact-cosine
     * only those.
     */
-  def sketchRerankTopK(emb: DataFrame, queryFilter: Column, k: Int,
-                       kProj: Int = SketchKProj, candDiv: Int = SketchCandDiv): DataFrame = {
+  def sketchRerankTopK(emb: DataFrame, queryFilter: Column, k: Int): DataFrame = {
     // materialized once: the Q×N sketch-score join feeds BOTH the histogram
     // pass and the threshold re-scan — without this the dominant join runs
     // twice per query batch (at cluster scale: persist to the shuffle
     // service / a scratch table instead of local disk)
-    val scored = sketchPairs(sketchFrame(emb, kProj), queryFilter).localCheckpoint(true)
-    rerankExact(emb, sketchCut(scored, candDiv).select("q_id", "c_id"), k)
+    val scored = sketchPairs(sketchFrame(emb, SketchKProj), queryFilter).localCheckpoint(true)
+    rerankExact(emb, sketchCut(scored, SketchCandDiv).select("q_id", "c_id"), k)
   }
 
   /** Exact-cosine rerank of (q_id, c_id) candidate pairs → top-k per query
@@ -299,9 +314,9 @@ object Ann {
     * fraction that still vanishes as 2^bits is sized up with the corpus.
     */
   def multiTableLshTopK(emb: DataFrame, queryFilter: Column, k: Int,
-                        tables: Int = 4, bits: Int = 8, probeRadius: Int = 2): DataFrame = {
-    val kProj = tables * bits
-    val sk = sketches(emb, kProj)
+                        probeRadius: Int = 2): DataFrame = {
+    val (tables, bits) = (LshTables, LshBits)
+    val sk = sketches(emb, tables * bits)
     def bucket(t: Int): Column =
       (0 until bits).map(j => when(col(s"s${t * bits + j}") >= 0, lit(1L << j)).otherwise(0L))
         .reduce(_ + _)
@@ -320,6 +335,10 @@ object Ann {
     rerankExact(emb, pairs, k)
   }
 
+  /** LSH tables and sign bits per table of [[multiTableLshTopK]]. */
+  private val LshTables = 4
+  private val LshBits = 8
+
   /** Binary sign-code + Hamming rerank — the memory-optimal scale path:
     * each vector compresses to ONE long of sign bits from the shared
     * integer projections (8 bytes vs 256 bytes of f32 — 32×), the corpus
@@ -334,9 +353,8 @@ object Ann {
     * information; AnnRecallSpec measures it) — the trade is 32× less scan
     * I/O than exact and 32× less than the int sketch.
     */
-  def hammingRerankTopK(emb: DataFrame, queryFilter: Column, k: Int,
-                        bits: Int = 32, den: Int = 5): DataFrame = {
-    require(bits <= 63, "codes pack into one long")
+  def hammingRerankTopK(emb: DataFrame, queryFilter: Column, k: Int): DataFrame = {
+    val (bits, den) = (HammingBits, HammingDen)
     val sk = sketches(emb, bits)
     val code = (0 until bits)
       .map(j => when(col(s"s$j") >= 0, lit(1L << j)).otherwise(0L)).reduce(_ + _)
@@ -365,6 +383,11 @@ object Ann {
     rerankExact(emb, cand, k)
   }
 
+  /** Code bits and candidate divisor of [[hammingRerankTopK]]. */
+  private val HammingBits = 32
+  private val HammingDen = 5
+  require(HammingBits <= 63, "codes pack into one long")
+
   /** Product-quantization ANN (Jégou et al. 2011): the 64-d vector splits
     * into m contiguous subspaces; each sub-vector is coded as its nearest
     * of kCent codebook entries, so the scanned index is m small codes per
@@ -391,16 +414,26 @@ object Ann {
     * never by the corpus, so no per-query corpus-fraction sort exists
     * anywhere in the plan.
     */
-  def pqTopK(emb: DataFrame, queryFilter: Column, k: Int, m: Int = 8,
-             kCent: Int = 16, den: Int = 5, dims: Int = 64,
-             bucket: Long = 100000000L): DataFrame = {
-    val (codesLong, dt) = pqCodesAndTable(emb, queryFilter, m, kCent, dims)
+  def pqTopK(emb: DataFrame, queryFilter: Column, k: Int): DataFrame = {
+    val (codesLong, dt) = pqCodesAndTable(emb, queryFilter)
     val adist = codesLong.join(broadcast(dt),
         codesLong("s") === dt("s") && codesLong("code") === dt("cid"))
       .where(col("c_id") =!= col("q_id"))
       .groupBy("q_id", "c_id").agg(sum("qd").as("adist"))
-    rerankExact(emb, bucketCutCandidates(adist, den, bucket), k)
+    rerankExact(emb, bucketCutCandidates(adist, PqDen), k)
   }
+
+  /** PQ shape: m subspaces of the dims-d vector, kCent codebook entries
+    * each, ADC distances bucketed by PqBucket, and the candidate divisors
+    * of [[pqTopK]] and [[ivfPqTopK]].
+    */
+  private val PqM = 8
+  private val PqKCent = 16
+  private val PqDims = 64
+  private val PqBucket = 100000000L
+  private val PqDen = 5
+  private val IvfPqDen = 2
+  require(PqDims % PqM == 0, "subspaces must tile the vector")
 
   /** The PQ index artifacts shared by [[pqTopK]] and [[ivfPqTopK]]: the
     * per-vector code rows in long form (c_id, s, code) and the per-query
@@ -408,9 +441,8 @@ object Ann {
     * broadcast side. Exact int64 microunit arithmetic throughout; argmin
     * ties break on cid via the min(dist·100+cid) composite.
     */
-  private def pqCodesAndTable(emb: DataFrame, queryFilter: Column, m: Int,
-                              kCent: Int, dims: Int): (DataFrame, DataFrame) = {
-    require(dims % m == 0, "subspaces must tile the vector")
+  private def pqCodesAndTable(emb: DataFrame, queryFilter: Column): (DataFrame, DataFrame) = {
+    val (m, kCent, dims) = (PqM, PqKCent, PqDims)
     val sub = dims / m
     val e6cols = (1 to dims).map(d =>
       floor(element_at(col("embedding"), d).cast("double") * 1e6 + lit(0.5))
@@ -450,11 +482,11 @@ object Ann {
     * a04/a05 arithmetic): keep the top 1/den fraction by bucketed distance
     * asc. Bucket count is bounded by the value range, never the corpus.
     */
-  private def bucketCutCandidates(adist: DataFrame, den: Int, bucket: Long): DataFrame = {
+  private def bucketCutCandidates(adist: DataFrame, den: Int): DataFrame = {
     // the ADC frame feeds BOTH the histogram and the candidate join —
     // unmaterialized, its whole upstream (code join + coarse stage in the
     // IVF-PQ case) would execute twice (the a04/t08 branch-recompute trap)
-    val b = adist.withColumn("bk", expr(s"adist div $bucket")).localCheckpoint(true)
+    val b = adist.withColumn("bk", expr(s"adist div $PqBucket")).localCheckpoint(true)
     val wCum = Window.partitionBy("q_id").orderBy("bk")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val thr = b.groupBy("q_id", "bk").agg(count(lit(1)).as("n"))
@@ -494,9 +526,9 @@ object Ann {
     * Model rows are `(cid, c array<bigint>, cn)`; the sketch frame is
     * [[sketchCheckpoint]].
     */
-  private def sketchCheckpoint(emb: DataFrame, kProj: Int): DataFrame =
+  private def sketchCheckpoint(emb: DataFrame): DataFrame =
     // materialized once: every assignment pass re-reads it
-    sketchFrame(emb, kProj).localCheckpoint(true)
+    sketchFrame(emb, SketchKProj).localCheckpoint(true)
 
   /** A bounded MODEL ARTIFACT rebuilt as a local relation: collect the
     * trained rows and re-create them as a literal frame. Same legitimacy
@@ -530,11 +562,16 @@ object Ann {
   /** [[seedFrame]] as a local relation, for the IVF cells. */
   private def seedCents(sk: DataFrame, n: Int): DataFrame = localModel(seedFrame(sk, n), n)
 
-  /** The trained sum-centroids after `iters` Lloyd rounds as ≤ k model
-    * rows `(cid, c, cn)`, each with its norm — shared by [[kmeansSketch]]
-    * and the i12 quality report.
+  /** k-means cluster count and Lloyd rounds. */
+  private val KmK = 16
+  private val KmIters = 2
+
+  /** The trained sum-centroids after [[KmIters]] Lloyd rounds as ≤ [[KmK]]
+    * model rows `(cid, c, cn)`, each with its norm — shared by
+    * [[kmeansSketch]] and the i12 quality report.
     */
-  private def kmModel(sk: DataFrame, k: Int, iters: Int, kProj: Int): Seq[Row] = {
+  private def kmModel(sk: DataFrame): Seq[Row] = {
+    val (k, kProj) = (KmK, SketchKProj)
     def withNorms(cents: DataFrame): Seq[Row] =
       modelRows(cents.select(col("cid"), col("c"), sketchNorm(col("c")).as("cn")), k).toSeq
     // every round's model enters its plan as a literal of the same type,
@@ -542,7 +579,7 @@ object Ann {
     // compiles one round and reuses it for the rest
     var model = withNorms(seedFrame(sk, k))
     val sums = (0 until kProj).map(t => sum(col("sk").getItem(t)).as(s"c$t"))
-    for (_ <- 1 to iters if model.nonEmpty) {
+    for (_ <- 1 to KmIters if model.nonEmpty) {
       val cid = VectorKernels.nearestCentroid(col("sk"), model).getField("cid")
       model = withNorms(sk.select(cid.as("cid"), col("sk"))
         .groupBy("cid").agg(sums.head, sums.tail: _*)
@@ -551,9 +588,9 @@ object Ann {
     model
   }
 
-  def kmeansSketch(emb: DataFrame, k: Int = 16, iters: Int = 2, kProj: Int = 32): DataFrame = {
-    val sk = sketchCheckpoint(emb, kProj)
-    val win = VectorKernels.nearestCentroid(col("sk"), kmModel(sk, k, iters, kProj))
+  def kmeansSketch(emb: DataFrame): DataFrame = {
+    val sk = sketchCheckpoint(emb)
+    val win = VectorKernels.nearestCentroid(col("sk"), kmModel(sk))
     sk.select(col("vec_id"), win.getField("cid").as("cluster"))
   }
 
@@ -573,10 +610,9 @@ object Ann {
     * literal, one map-side-combined rollup by cluster, and a ≤k×k centroid
     * self-join — output k rows at any corpus size.
     */
-  def kmeansQuality(emb: DataFrame, k: Int = 16, iters: Int = 2,
-                    kProj: Int = 32): DataFrame = {
-    val sk = sketchCheckpoint(emb, kProj)
-    val model = kmModel(sk, k, iters, kProj)
+  def kmeansQuality(emb: DataFrame): DataFrame = {
+    val sk = sketchCheckpoint(emb)
+    val model = kmModel(sk)
     // ONE fused pass computes the final assignment AND the member→centroid
     // cosine, from the same product fold the winning score divides
     val win = sk.select(VectorKernels.nearestCentroid(col("sk"), model).as("w"),
@@ -612,23 +648,27 @@ object Ann {
     *
     * Cell count must scale with the corpus: the candidate stage equi-joins
     * on `cid`, so nCells IS the shuffle-key cardinality — a handful of
-    * cells funnels the corpus through a handful of reducers. Default 256
-    * (≈√N at the bench scale; at real scale pick 1024–4096), with nProbe
-    * sized to hold the candidate fraction ≈ nProbe/nCells at the target
-    * recall/cost point.
+    * cells funnels the corpus through a handful of reducers. [[IvfCells]]
+    * is 256 (≈√N at the bench scale; at real scale pick 1024–4096), with
+    * nProbe sized to hold the candidate fraction ≈ nProbe/nCells at the
+    * target recall/cost point.
     */
-  def ivfTopK(emb: DataFrame, queryFilter: Column, k: Int,
-              nCells: Int = 256, nProbe: Int = 32, kProj: Int = 32): DataFrame =
-    rerankExact(emb, ivfPairs(emb, queryFilter, nCells, nProbe, kProj), k)
+  def ivfTopK(emb: DataFrame, queryFilter: Column, k: Int, nProbe: Int): DataFrame =
+    rerankExact(emb, ivfPairs(emb, queryFilter, nProbe), k)
+
+  /** IVF coarse cell count, and the cells [[ivfPqTopK]] probes per query. */
+  private val IvfCells = 256
+  private val IvfPqProbe = 64
 
   /** The shared IVF coarse artifacts, in column form for the int64 cell
     * scores: the checkpointed sketch frame and the nCells stride-sampled
     * sketch-space centroids (a ≤ nCells-row local model, evaluated once
     * instead of once per broadcast build).
     */
-  private def ivfBase(emb: DataFrame, nCells: Int, kProj: Int): (DataFrame, DataFrame) = {
-    val sk = sketchCheckpoint(emb, kProj)
-    (slots(sk, "vec_id", "sk", "s", kProj), slots(seedCents(sk, nCells), "cid", "c", "c", kProj))
+  private def ivfBase(emb: DataFrame): (DataFrame, DataFrame) = {
+    val sk = sketchCheckpoint(emb)
+    (slots(sk, "vec_id", "sk", "s", SketchKProj),
+      slots(seedCents(sk, IvfCells), "cid", "c", "c", SketchKProj))
   }
 
   /** per (vector, centroid) int64 sketch dot; within a vector the rank by
@@ -636,9 +676,9 @@ object Ann {
     * is a positive constant across its partition). |s_t| ≤ ~2e8 so the
     * 32-term product sum stays well inside int64 — exact in both engines.
     */
-  private def cellScores(sk: DataFrame, cents: DataFrame, kProj: Int): DataFrame = {
-    val dotChain = (0 until kProj).map(t => col(s"s$t") * col(s"c$t")).reduce(_ + _)
-    val cnormChain = (0 until kProj).map(t => col(s"c$t") * col(s"c$t")).reduce(_ + _)
+  private def cellScores(sk: DataFrame, cents: DataFrame): DataFrame = {
+    val dotChain = (0 until SketchKProj).map(t => col(s"s$t") * col(s"c$t")).reduce(_ + _)
+    val cnormChain = (0 until SketchKProj).map(t => col(s"c$t") * col(s"c$t")).reduce(_ + _)
     sk.crossJoin(broadcast(cents))
       .withColumn("score", dotChain.cast("double") / sqrt(cnormChain.cast("double")))
       .select("vec_id", "cid", "score")
@@ -652,10 +692,9 @@ object Ann {
     * N×nCells scored frame is never sorted, and only its N per-vector
     * partial rows exchange.
     */
-  def ivfAssignment(emb: DataFrame, nCells: Int = 256,
-                    kProj: Int = 32): DataFrame = {
-    val (sk, cents) = ivfBase(emb, nCells, kProj)
-    bestCellAgg(cellScores(sk, cents, kProj))
+  def ivfAssignment(emb: DataFrame): DataFrame = {
+    val (sk, cents) = ivfBase(emb)
+    bestCellAgg(cellScores(sk, cents))
   }
 
   private def bestCellAgg(scores: DataFrame): DataFrame =
@@ -668,19 +707,18 @@ object Ann {
     * [[ivfTopK]] and [[ivfPqTopK]] (see [[ivfTopK]]'s scaladoc for the
     * shuffle-key and exactness analysis).
     */
-  private def ivfPairs(emb: DataFrame, queryFilter: Column,
-                       nCells: Int, nProbe: Int, kProj: Int): DataFrame = {
-    val (sk, cents) = ivfBase(emb, nCells, kProj)
+  private def ivfPairs(emb: DataFrame, queryFilter: Column, nProbe: Int): DataFrame = {
+    val (sk, cents) = ivfBase(emb)
     // corpus best cell: aggregate argmax over the checkpointed sk — one
     // map-side-combined pass (the window form sorted all N×nCells rows); the
     // query probe list re-scores ONLY the query vectors (|Q|×nCells rows),
     // so its bounded rank window costs nothing at any corpus size
-    val corpusCell = bestCellAgg(cellScores(sk, cents, kProj))
+    val corpusCell = bestCellAgg(cellScores(sk, cents))
       .select(col("vec_id").as("c_id"), col("cid"))
     val qIds = emb.where(queryFilter).select(col("vec_id").as("q_id"))
     val qSk = sk.join(qIds, sk("vec_id") === qIds("q_id")).drop("q_id")
     val wC = Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cid"))
-    val queryCells = cellScores(qSk, cents, kProj)
+    val queryCells = cellScores(qSk, cents)
       .withColumn("cr", row_number().over(wC))
       .where(col("cr") <= nProbe)
       .select(col("vec_id").as("q_id"), col("cid"))
@@ -704,12 +742,9 @@ object Ann {
     * All exact int64 until the final cosine — the a03/a06 oracle CTEs
     * compose unchanged.
     */
-  def ivfPqTopK(emb: DataFrame, queryFilter: Column, k: Int,
-                nCells: Int = 256, nProbe: Int = 64, kProj: Int = 32,
-                m: Int = 8, kCent: Int = 16, den: Int = 2, dims: Int = 64,
-                bucket: Long = 100000000L): DataFrame = {
-    val pairs = ivfPairs(emb, queryFilter, nCells, nProbe, kProj)
-    val (codesLong, dt) = pqCodesAndTable(emb, queryFilter, m, kCent, dims)
+  def ivfPqTopK(emb: DataFrame, queryFilter: Column, k: Int): DataFrame = {
+    val pairs = ivfPairs(emb, queryFilter, IvfPqProbe)
+    val (codesLong, dt) = pqCodesAndTable(emb, queryFilter)
     val dtr = dt.select(col("q_id").as("dq"), col("s").as("ds"),
       col("cid").as("dcid"), col("qd"))
     val adist = pairs.join(codesLong, "c_id")
@@ -717,7 +752,7 @@ object Ann {
         col("q_id") === col("dq") && col("s") === col("ds") &&
           col("code") === col("dcid"))
       .groupBy("q_id", "c_id").agg(sum("qd").as("adist"))
-    rerankExact(emb, bucketCutCandidates(adist, den, bucket), k)
+    rerankExact(emb, bucketCutCandidates(adist, IvfPqDen), k)
   }
 
   /** Pure sketch-space top-k ranking — the cheap retrieval RUN (no exact
@@ -726,16 +761,18 @@ object Ann {
     * with [[rrfFuse]] to fuse it with other runs. Same salted two-level
     * rank as [[bruteForceTopK]] — no corpus-sized per-query window.
     */
-  def sketchTopK(emb: DataFrame, queryFilter: Column, k: Int,
-                 kProj: Int = 32): DataFrame = {
-    val scored = sketchPairs(sketchFrame(emb, kProj), queryFilter)
+  def sketchTopK(emb: DataFrame, queryFilter: Column, k: Int): DataFrame = {
+    val scored = sketchPairs(sketchFrame(emb, SketchKProj), queryFilter)
     topKPerQuery(scored.withColumnRenamed("ski", "cos"), k)
       .select(col("q_id"), col("c_id"), col("cos").as("ski"), col("rank"))
   }
 
+  /** The rank offset k of Reciprocal Rank Fusion's 1/(k + rank). */
+  private val RrfK = 60
+
   /** Reciprocal Rank Fusion (Cormack et al. 2009): fuse several retrieval
-    * runs' rankings of the same query set by score Σ 1/(kRrf + rank),
-    * here in exact ppm integers (1e6 div (kRrf + rank)) so the fused
+    * runs' rankings of the same query set by score Σ 1/(RrfK + rank),
+    * here in exact ppm integers (1e6 div (RrfK + rank)) so the fused
     * order is engine-exact. A doc missing from a run simply contributes
     * nothing — the standard RRF treatment. The hybrid-retrieval staple:
     * an exact dense run and a cheap sketch run disagree on tails, RRF
@@ -745,9 +782,9 @@ object Ann {
     * ≤ runs·k rows per query — the per-query rank window is BOUNDED, and
     * the fusion aggregate combines map-side.
     */
-  def rrfFuse(runs: Seq[DataFrame], k: Int, kRrf: Int = 60): DataFrame = {
+  def rrfFuse(runs: Seq[DataFrame], k: Int): DataFrame = {
     val contrib = runs.map(_.select(col("q_id"), col("c_id"),
-      expr(s"1000000 div ($kRrf + rank)").as("pts"))).reduce(_ unionByName _)
+      expr(s"1000000 div ($RrfK + rank)").as("pts"))).reduce(_ unionByName _)
     val fused = contrib.groupBy("q_id", "c_id").agg(sum(col("pts")).as("rrf_e6"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("rrf_e6").desc, col("c_id"))
     fused.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
@@ -759,8 +796,12 @@ object Ann {
     */
   private val MmrMaxSelected = 100000
 
+  /** [[mmrSelect]]'s candidate pool per query and its λ in ppm. */
+  private val MmrPoolK = 20
+  private val MmrLambdaPpm = 700000L
+
   /** Maximal Marginal Relevance diversified top-k (Carbonell & Goldstein
-    * 1998): from each query's `poolK` nearest candidates, greedily pick k
+    * 1998): from each query's [[MmrPoolK]] nearest candidates, greedily pick k
     * results maximizing λ·relevance − (1−λ)·max-similarity-to-already-
     * picked — the diversity-aware selection used to de-redundify retrieved
     * exemplars / few-shot context. The first pick is pure relevance
@@ -772,20 +813,20 @@ object Ann {
     * min c_id — bit-identical to the unrolled DuckDB CTE twin.
     *
     * Shape at scale: the candidate pool and its pairwise similarity frame
-    * are per-query BOUNDED (poolK and poolK² rows), both checkpointed once;
+    * are per-query BOUNDED (MmrPoolK and MmrPoolK² rows), both checkpointed once;
     * each of the k−1 greedy rounds is an equi-join + map-side-combined max
     * on (q_id, c_id) and a per-query argmax via `max(struct(...))` — an
-    * aggregate, never a corpus-wide window. Work is (queries × poolK²) ×
+    * aggregate, never a corpus-wide window. Work is (queries × MmrPoolK²) ×
     * k — linear in the query count, independent of corpus size after the
     * pool cut.
     *
     * The running selection (≤ Q·k rows) is collected to the driver each
     * round ([[localModel]]), bounded by [[MmrMaxSelected]].
     */
-  def mmrSelect(emb: DataFrame, queryFilter: Column, poolK: Int = 20,
-                k: Int = 5, lambdaPpm: Long = 700000L): DataFrame = {
+  def mmrSelect(emb: DataFrame, queryFilter: Column, k: Int): DataFrame = {
+    val lambdaPpm = MmrLambdaPpm
     val mu = 1000000L - lambdaPpm
-    val pool = bruteForceTopK(emb, queryFilter, poolK)
+    val pool = bruteForceTopK(emb, queryFilter, MmrPoolK)
       .select(col("q_id"), col("c_id"),
         round(col("cos") * 1e6).cast("long").as("rel"))
       .localCheckpoint(true)

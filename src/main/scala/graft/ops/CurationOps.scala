@@ -248,7 +248,7 @@ object CurationOps {
     * per-word bounded island windows; the state frame re-materializes each
     * round (localCheckpoint — the k-means/d09 iterative-loop rule).
     *
-    * `maxWordLen` is the trainer's pre-tokenization guard (SentencePiece's
+    * [[MaxWordLen]] is the trainer's pre-tokenization guard (SentencePiece's
     * max_sentencepiece_length, GPT-2's regex splits): an unsegmented blob —
     * a URL, base64 run, or a corpus where the delimiter rarely appears —
     * must not widen the per-word state; overlong "words" are excluded from
@@ -260,9 +260,11 @@ object CurationOps {
     * Output: (round, rank, lhs, rhs, freq) — the top `topM` pairs of each
     * round, of which rank 1 is the merge that round applied.
     */
-  def bpeTrain(docs: DataFrame, rounds: Int, topM: Int,
-               maxWordLen: Int = 32): DataFrame =
-    bpeLoop(docs, rounds, topM, maxWordLen)._1.reduce(_.union(_))
+  def bpeTrain(docs: DataFrame, rounds: Int, topM: Int): DataFrame =
+    bpeLoop(docs, rounds, topM)._1.reduce(_.union(_))
+
+  /** Longest word, in characters, that BPE training and segmentation keep. */
+  private val MaxWordLen = 32
 
   /** Vocabulary segmentation after `rounds` trained merges — the ENCODE
     * side of [[bpeTrain]]: each in-vocabulary word's final symbol
@@ -271,20 +273,18 @@ object CurationOps {
     * length(w) is the compression the trained merges bought. Same loop,
     * same state bounds as the trainer.
     */
-  def bpeSegments(docs: DataFrame, rounds: Int,
-                  maxWordLen: Int = 32): DataFrame =
-    bpeLoop(docs, rounds, topM = 1, maxWordLen)._2
+  def bpeSegments(docs: DataFrame, rounds: Int): DataFrame =
+    bpeLoop(docs, rounds, topM = 1)._2
       .groupBy("w", "wf")
       .agg(count(lit(1)).as("n_sym"),
         array_join(expr(
           "transform(array_sort(collect_list(struct(pos, sym))), x -> x.sym)"),
           " ").as("seg"))
 
-  private def bpeLoop(docs: DataFrame, rounds: Int, topM: Int,
-                      maxWordLen: Int): (Seq[DataFrame], DataFrame) = {
+  private def bpeLoop(docs: DataFrame, rounds: Int, topM: Int): (Seq[DataFrame], DataFrame) = {
     val words = docs
       .select(explode(filter(split(col("text"), " "), w => length(w) > 0)).as("w"))
-      .where(length(col("w")) <= maxWordLen)
+      .where(length(col("w")) <= MaxWordLen)
       .groupBy("w").agg(count(lit(1)).as("wf"))
     var rows = words.select(col("w"), col("wf"),
         posexplode(expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))"))
@@ -570,19 +570,13 @@ object CurationOps {
     * broken on doc_id. A direct `Window.partitionBy(source)` rank would
     * sort each source's full partition in one task — sources are the
     * archetypal hot key (20 values here, few thousand at real scale). The
-    * same two-level construction as Ann's salted top-k instead: rank
-    * within (source, salt) first, keep k, then rank the ≤ salts·k
-    * survivors — identical output, bounded final window.
+    * salted two-level rank instead ([[Ann.saltedTopK]], salted by doc_id)
+    * — identical output, bounded final window.
     */
-  def stratifiedSample(docs: DataFrame, k: Int, salts: Int = 32): DataFrame = {
+  def stratifiedSample(docs: DataFrame, k: Int): DataFrame = {
     val draw = col("doc_id") % lit(1000003L) * lit(2654435761L) % lit(1000003L)
     val base = docs.select(col("source"), col("doc_id"), draw.as("__d"))
-    val wLocal = Window.partitionBy(col("source"), pmod(hash(col("doc_id")), lit(salts)))
-      .orderBy(col("__d"), col("doc_id"))
-    val pruned = base.withColumn("__lr", row_number().over(wLocal))
-      .where(col("__lr") <= k).drop("__lr")
-    val w = Window.partitionBy(col("source")).orderBy(col("__d"), col("doc_id"))
-    pruned.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    Ann.saltedTopK(base, col("source"), col("doc_id"), Seq(col("__d"), col("doc_id")), k)
       .select(col("source"), col("doc_id").as("did"), col("__d").as("draw"), col("rank"))
   }
 
@@ -700,15 +694,19 @@ object CurationOps {
         expr("((l1_present + (n - cov) * ns) * 1000000) div (2 * n * ns)").as("tv_e6"))
   }
 
+  /** DSIR feature shape: char n-gram length and hash-bucket count. */
+  private val DsirN = 8
+  private val DsirBuckets = 1024
+
   /** DSIR-style importance scoring for target-domain data selection
     * (Xie et al. 2023, "Data Selection for Language Models via Importance
     * Resampling"): documents from the raw pool are scored by how much
     * their hashed n-gram feature profile resembles a target domain's, and
     * the top-k scores are the selection. Features are the same base-31
     * char n-gram window hashes the dedup stack uses (one linear codegen
-    * WindowHashes pass per document), bucketed into `buckets` hash
-    * features; both bag-of-features models (target vs raw) are fit with
-    * Laplace +1 smoothing.
+    * WindowHashes pass per document) of [[DsirN]] chars, bucketed into
+    * [[DsirBuckets]] hash features; both bag-of-features models (target
+    * vs raw) are fit with Laplace +1 smoothing.
     *
     * The paper scores by the log-likelihood ratio Σ_f log p_t(f)/p_r(f);
     * `ln` is not bit-stable across engines (libm vs StrictMath), so the
@@ -724,15 +722,15 @@ object CurationOps {
     *
     * Shape at scale: the feature frame materializes ONCE (localCheckpoint;
     * it feeds both the model fit and the per-doc counts), the model is a
-    * ≤ `buckets`-row frame attached by broadcast join, per-doc counts are
+    * ≤ DsirBuckets-row frame attached by broadcast join, per-doc counts are
     * one map-side-combined aggregate on (doc, bucket), and the selection
     * is TakeOrderedAndProject — no corpus-sized sort, no cross-document
     * join anywhere. Raw docs too short to hold a window surface with
     * n_feat = 0 (score 0), not silently dropped: a selection operator must
     * rank every candidate.
     */
-  def dsirSelect(docs: DataFrame, targetPred: Column, n: Int = 8,
-                 buckets: Int = 1024, topK: Int = 100): DataFrame = {
+  def dsirSelect(docs: DataFrame, targetPred: Column, topK: Int): DataFrame = {
+    val (n, buckets) = (DsirN, DsirBuckets)
     val S = 1000000000L
     val feats = docs.select(col("doc_id").as("did"), targetPred.as("is_t"),
         explode(graft.functions.WindowHashes.of(col("text"), n)).as("h"))

@@ -178,8 +178,7 @@ object DedupOps {
     * rows: (sid, tok) shingle rows. Output: (sid, cluster) like
     * [[duplicateClusters]].
     */
-  def duplicateClustersCollapsed(rows: DataFrame, k: Int, r: Int,
-                                 maxIters: Int = 20): DataFrame = {
+  def duplicateClustersCollapsed(rows: DataFrame, k: Int, r: Int): DataFrame = {
     require(k % r == 0, "k must be divisible by r")
     // the signature frame feeds the group map AND the representative bands
     val sig = minhashSigRows(rows, k).localCheckpoint(true)
@@ -197,7 +196,7 @@ object DedupOps {
         Seq("band_idx", "band_key"))
       .where(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
-    val glab = duplicateClusters(gpairs, maxIters)
+    val glab = duplicateClusters(gpairs)
       .select(col("sid").as("gid"), col("cluster"))
     grp.join(glab, Seq("gid"), "left")
       .where(col("gsz") >= 2 || col("cluster").isNotNull)
@@ -371,6 +370,11 @@ object DedupOps {
         col("jac_e6"))
   }
 
+  /** Label-propagation rounds [[duplicateClusters]] runs before it fails as
+    * not converged.
+    */
+  private val MaxClusterIters = 20
+
   /** Connected components over candidate pairs — the clustering step a real
     * dedup pipeline runs after LSH (keep one representative per component,
     * not per pair). Distributed min-label propagation: every node starts as
@@ -380,7 +384,7 @@ object DedupOps {
     * aggregate — no driver-side graph state, only the convergence check
     * (a count) leaves the cluster. pairs: (doc_a, doc_b) with doc_a < doc_b.
     */
-  def duplicateClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
+  def duplicateClusters(pairs: DataFrame): DataFrame = {
     // materialize the edge list once and TRUNCATE its lineage — every round
     // re-joins it, and without the checkpoint each round's plan would embed
     // the whole LSH pipeline (re-analyzed per round: measured 135 s at
@@ -416,7 +420,7 @@ object DedupOps {
         .select(col("sid"),
           least(col("lbl"), coalesce(col("p_lbl"), col("lbl"))).as("lbl"), col("old"))
     }
-    while (!converged && i < maxIters) {
+    while (!converged && i < MaxClusterIters) {
       val start = labels.select(col("sid"), col("lbl"), col("lbl").as("old"))
       val next = step(step(start)).localCheckpoint(true)
       val changed = next.where(col("lbl") =!= col("old")).count()
@@ -428,7 +432,7 @@ object DedupOps {
     // jumping, convergence takes O(log diameter) rounds, so hitting the cap
     // almost certainly means a bug — fail loudly instead
     require(converged,
-      s"duplicateClusters did not converge within $maxIters rounds")
+      s"duplicateClusters did not converge within $MaxClusterIters rounds")
     labels.select(col("sid"), col("lbl").as("cluster"))
   }
 
@@ -518,8 +522,8 @@ object DedupOps {
     * Output: every non-representative member with (cluster, rep_id,
     * cos_e6, pruned 0/1).
     */
-  def semDedup(emb: DataFrame, k: Int, iters: Int, minCos: Double): DataFrame = {
-    val asn = Ann.kmeansSketch(emb, k, iters)
+  def semDedup(emb: DataFrame, minCos: Double): DataFrame = {
+    val asn = Ann.kmeansSketch(emb)
     val reps = asn.groupBy("cluster").agg(min(col("vec_id")).as("rep_id"))
     val e = emb.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))

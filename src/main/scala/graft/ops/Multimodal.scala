@@ -63,6 +63,9 @@ object Multimodal {
     }
   }
 
+  /** Lane-sum quantum of [[nearDupBuckets]]' perceptual bucket. */
+  private val Coarse = 256L
+
   /** Perceptual-bucket media near-duplicate detection — the image-dedup
     * step of a multimodal pipeline, with the codec stubbed like
     * [[extractFeatures]]: a real build would phash the DECODED pixels; here
@@ -70,14 +73,14 @@ object Multimodal {
     * (lane i = Σ bytes at positions ≡ i mod 8 — order-independent, so the
     * DuckDB twin re-derives it with a linear unnest; a float fold would be
     * byte-order-dependent and engine-divergent). Bucket = each lane sum
-    * div `coarse`; payloads landing in the same 8-d bucket are
+    * div [[Coarse]]; payloads landing in the same 8-d bucket are
     * near-duplicates (identical payloads always collide). One typed
     * mapPartitions pass per payload + one hash aggregate on the bucket
     * key — no pairwise comparison anywhere, the same no-O(n²) shape as the
     * text LSH path. Output: one row per bucket with ≥2 members:
     * (bucket, dup_cnt, keep_media_id = min id).
     */
-  def nearDupBuckets(ds: Dataset[MediaRow], coarse: Long = 256L): DataFrame = {
+  def nearDupBuckets(ds: Dataset[MediaRow]): DataFrame = {
     val spark = ds.sparkSession
     import spark.implicits._
     val lanes = ds.mapPartitions { it =>
@@ -88,7 +91,7 @@ object Multimodal {
         (m.media_id, l(0), l(1), l(2), l(3), l(4), l(5), l(6), l(7))
       }
     }.toDF("media_id", "l0", "l1", "l2", "l3", "l4", "l5", "l6", "l7")
-    val bucket = concat_ws("_", (0 until 8).map(i => expr(s"l$i div $coarse")): _*)
+    val bucket = concat_ws("_", (0 until 8).map(i => expr(s"l$i div $Coarse")): _*)
     lanes.groupBy(bucket.as("bucket"))
       .agg(count(lit(1)).as("dup_cnt"), min(col("media_id")).as("keep_media_id"))
       .where(col("dup_cnt") > 1)

@@ -15,7 +15,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Scale design: the global token offset of each doc is a prefix sum. A
   * window `sum() over (order by doc_id)` would funnel 10^12 rows through ONE
   * partition, so it is computed distributed instead:
-  *   1. range-partition + sort by doc_id (global order, parallel),
+  *   1. range-partition + sort by doc_id (global order, parallel, into
+  *      `defaultParallelism` partitions),
   *   2. per-partition token sums → driver (one long per partition),
   *   3. scan-sum those P values (P ~ thousands: driver-trivial),
   *   4. broadcast the per-partition base offsets back; each row's global
@@ -27,11 +28,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 object Packing {
 
   /** (doc_id, tokens, n_tok) → same rows plus a global `tok_offset`. */
-  def withGlobalOffsets(docs: DataFrame, parts: Int = 0): DataFrame = {
+  def withGlobalOffsets(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
-    val p = if (parts > 0) parts else spark.sparkContext.defaultParallelism
     val ordered = docs
-      .repartitionByRange(p, col("doc_id"))
+      .repartitionByRange(spark.sparkContext.defaultParallelism, col("doc_id"))
       .sortWithinPartitions("doc_id")
     val schema = StructType(ordered.schema.fields :+ StructField("tok_offset", LongType, nullable = false))
     val enc = ExpressionEncoder(RowEncoder.encoderFor(schema))
@@ -68,9 +68,9 @@ object Packing {
     * shuffled one 20-30-byte row PER TOKEN, several× corpus size at scale).
     * Each output group re-assembles ≤ seqLen tokens from its few fragments.
     */
-  def pack(docs: DataFrame, seqLen: Int, parts: Int = 0): DataFrame = {
+  def pack(docs: DataFrame, seqLen: Int): DataFrame = {
     val L = seqLen.toLong
-    val withOff = withGlobalOffsets(docs.select("doc_id", "tokens", "n_tok"), parts)
+    val withOff = withGlobalOffsets(docs.select("doc_id", "tokens", "n_tok"))
     val frags = withOff
       .where(col("n_tok") > 0)
       .select(col("doc_id"), col("tok_offset"), col("tokens"), col("n_tok"),
@@ -117,9 +117,8 @@ object Packing {
     *
     * Output: (batch_id, n_seqs, min_tok, max_tok, sum_tok, pad_waste).
     */
-  def lengthBatches(docs: DataFrame, batchSize: Int, parts: Int = 0): DataFrame = {
+  def lengthBatches(docs: DataFrame, batchSize: Int): DataFrame = {
     val spark = docs.sparkSession
-    val p = if (parts > 0) parts else spark.sparkContext.defaultParallelism
     // ONE materialization feeds both passes (per-partition counts, then the
     // rank walk): without it the repartitionByRange+sort lineage executes
     // twice, and the ranks would additionally lean on Spark reusing
@@ -128,7 +127,7 @@ object Packing {
     // with localCheckpoint. Row order and partition indexing are preserved
     // by the checkpoint, which is what the base-rank arithmetic needs.
     val ordered = docs.select("doc_id", "n_tok")
-      .repartitionByRange(p, col("n_tok"), col("doc_id"))
+      .repartitionByRange(spark.sparkContext.defaultParallelism, col("n_tok"), col("doc_id"))
       .sortWithinPartitions("n_tok", "doc_id")
       .localCheckpoint(true)
     val schema = StructType(ordered.schema.fields :+ StructField("rk", LongType, nullable = false))

@@ -28,13 +28,17 @@ import org.apache.spark.sql.functions._
   */
 object Retrieval {
 
+  /** BM25's tf saturation k1 and length normalization b. */
+  private val K1 = 1.2
+  private val B = 0.75
+
   /** BM25 top-k: (doc_id, score_e6) of the k highest-scoring docs for the
-    * fixed `queryTerms`, ties broken by doc_id. Constants are interpolated
-    * into [[bm25OracleSql]] from the SAME Scala doubles so both engines
-    * evaluate bit-identical chains.
+    * fixed `queryTerms`, ties broken by doc_id. [[K1]] and [[B]] are
+    * interpolated into [[bm25OracleSql]] from the SAME Scala doubles so
+    * both engines evaluate bit-identical chains.
     */
-  def bm25TopK(docs: DataFrame, queryTerms: Seq[String], k: Int = 20,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def bm25TopK(docs: DataFrame, queryTerms: Seq[String], k: Int): DataFrame = {
+    val (k1, b) = (K1, B)
     val words = docs.select(col("doc_id"),
       explode(filter(split(col("text"), " "), w => length(w) > 0)).as("w"))
     val dl = docs.select(col("doc_id"), TextOps.wordCount(col("text")).as("len"))
@@ -72,7 +76,7 @@ object Retrieval {
     * df is one map-side-combined aggregate over distinct (doc, term) rows.
     * Output: (did, term, rank, score_e6).
     */
-  def tfidfKeywords(docs: DataFrame, m: Int = 3): DataFrame = {
+  def tfidfKeywords(docs: DataFrame, m: Int): DataFrame = {
     val words = docs.select(col("doc_id"),
       explode(filter(split(col("text"), " "), w => length(w) > 0)).as("w"))
     val tf = words.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
@@ -97,7 +101,7 @@ object Retrieval {
     * twin derives it in its own CTE; both engines then evaluate the same
     * (n − df + 0.5)/(df + 0.5) · tf chain).
     */
-  def tfidfOracleSql(m: Int = 3): String =
+  def tfidfOracleSql(m: Int): String =
     s"""WITH words AS (
        |  SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> length(x) > 0)) AS w
        |  FROM documents),
@@ -118,8 +122,8 @@ object Retrieval {
     * the same Scala doubles; Double.toString round-trips) and identical
     * left-assoc chains.
     */
-  def bm25OracleSql(queryTerms: Seq[String], k: Int = 20,
-                    k1: Double = 1.2, b: Double = 0.75): String = {
+  def bm25OracleSql(queryTerms: Seq[String], k: Int): String = {
+    val (k1, b) = (K1, B)
     val inList = queryTerms.map(t => s"'$t'").mkString(", ")
     val slotSelects = queryTerms.zipWithIndex.map { case (t, i) =>
       s"coalesce(max(CASE WHEN w = '$t' THEN c END), 0.0) AS c$i"

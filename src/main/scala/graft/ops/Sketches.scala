@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Frequency and cardinality sketches, built distributively from explode +
@@ -101,26 +100,21 @@ object Sketches {
     * the exact set there. The exact distinct count rides alongside, like
     * the s03 HLL row — the gap is the estimator's error at this k.
     *
-    * Shape at scale: the k smallest per group come from a SALTED
-    * two-level rank (the repo's top-k idiom): rank within
-    * (group, hv mod salts) — each salt partition holds ~1/salts of the
-    * group's hashes — keep k, then a final rank over the ≤ salts·k
+    * Shape at scale: the k smallest per group come from the SALTED
+    * two-level rank ([[Ann.saltedTopK]], salted by the hash itself): rank
+    * within (group, salt) — each salt partition holds ~1/32 of the
+    * group's hashes — keep k, then a final rank over the ≤ 32·k
     * survivors. No group-wide sort touches the corpus at any size, and
     * the synopsis is O(k) per group regardless of input rows — the
     * mergeable-summary property that makes KMV the set-operation sketch
     * (union = merge-and-cut, unlike HLL registers which only union).
     */
-  def kmvDistinct(values: DataFrame, groupCol: String, valueCol: String,
-                  k: Int, salts: Int = 32): DataFrame = {
+  def kmvDistinct(values: DataFrame, groupCol: String, valueCol: String, k: Int): DataFrame = {
     val v = col(valueCol).cast("long")
     val dist = values.select(col(groupCol), h(0, v).as("hv")).distinct()
-    val w1 = Window.partitionBy(col(groupCol), col("hv") % salts).orderBy("hv")
-    val pre = dist.withColumn("rn", row_number().over(w1))
-      .where(col("rn") <= k).drop("rn")
-    val w2 = Window.partitionBy(groupCol).orderBy("hv")
-    val sk = pre.withColumn("rn", row_number().over(w2)).where(col("rn") <= k)
+    val sk = Ann.saltedTopK(dist, col(groupCol), col("hv"), Seq(col("hv")), k)
       .groupBy(groupCol).agg(
-        max(when(col("rn") === k, col("hv"))).as("kth"),
+        max(when(col("rank") === k, col("hv"))).as("kth"),
         count(lit(1)).as("nk"))
     val exact = values.groupBy(groupCol).agg(countDistinct(v).as("exact"))
     sk.join(exact, groupCol)

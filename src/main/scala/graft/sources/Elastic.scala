@@ -7,7 +7,7 @@ import java.util.Base64
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Positional
@@ -21,20 +21,28 @@ import graft.operators.Positional
   * sysmon_csv.rs:168-205). Auth is the reference's Basic header
   * (build_elastic_client, sysmon_csv.rs:207-226).
   *
-  * Spark-first split: the page loop within one (index, event_code) is
-  * inherently sequential (each request's search_after comes from the
-  * previous response), but DIFFERENT (index, code) pairs are independent —
-  * [[fetchDistributed]] parallelizes them across the cluster as a Dataset of
-  * fetch tasks, which is how a day-partitioned index family actually scales;
-  * [[fetchAll]] is the reference's single-process shape for bounded dumps.
+  * [[fetchAll]] is the reference's single-process shape for bounded dumps:
+  * the page loop within one (index, event_code) is inherently sequential
+  * (each request's search_after comes from the previous response), and
+  * each pair pages independently from cursor 0.
   *
-  * Message → columns stays declarative: sysmon's "Key: value" message lines
-  * resolve per key with [[msgValue]] (the twin of `split_message_part`'s
+  * Divergence from the reference's pager, which loses hits a correct
+  * pager keeps: a short
+  * non-empty page `break`s there BEFORE `all_results.push(result)`, so each
+  * index's trailing `total % size` hits never reach its dump; and its
+  * `last_ts` lives outside `for index in config.indices`, so index B starts
+  * from index A's final cursor and skips every B hit at or before it. Here
+  * the short page is kept and the cursor restarts per index.
+  *
+  * Message → columns: sysmon's "Key: value" message lines are extracted in
+  * one scan per row by [[graft.functions.KvLinesStruct]], and
+  * [[rawColumns]] projects them into the column order of the RE-INGEST
+  * layouts ([[Positional.sysmonCsv]]), so [[typed]] reuses the
+  * oracle-verified decode unchanged. [[msgValue]] is the declarative
+  * reference form of that extraction (the twin of `split_message_part`'s
   * split-on-first-colon-and-trim, sysmon_csv.rs:357, with last-occurrence
-  * wins like the reference's match-arm assignment), and [[rawColumns]]
-  * projects them into the staged-CSV column order of the RE-INGEST layouts
-  * ([[Positional.sysmonCsv]]), so [[typed]] reuses the oracle-verified
-  * decode unchanged.
+  * wins like the reference's match-arm assignment); ElasticSpec holds the
+  * two forms equal.
   *
   * Documented reference bug (not reproduced): its ES dump structs write
   * `parent_process_id` BEFORE `parent_process_guid`
@@ -45,22 +53,13 @@ import graft.operators.Positional
   */
 object Elastic {
 
-  /** `referenceCompat = true` reproduces two paging bugs of the reference
-    * binary a migrant diffing dumps would otherwise see as extra rows here
-    * (both in fetch_data_from_es, sysmon_csv.rs:168-205):
-    *  1. a short non-empty page `break`s BEFORE `all_results.push(result)`,
-    *     so each index's trailing `total % size` hits (an entire index when
-    *     total < size) never reach the dump;
-    *  2. `last_ts` is declared OUTSIDE `for index in config.indices`, so
-    *     index B starts from index A's final cursor and silently skips every
-    *     B hit at or before it.
-    * The default keeps the short page and restarts the cursor per index —
-    * the dump a correct pager produces.
+  /** The reference's ES settings: endpoint, Basic `user:password`, the
+    * indices and event codes to dump, the `@timestamp` range and the page
+    * size.
     */
   final case class EsConfig(url: String, auth: String,
                             indices: Seq[String], eventCodes: Seq[String],
-                            startTime: String, endTime: String, size: Int,
-                            referenceCompat: Boolean = false)
+                            startTime: String, endTime: String, size: Int)
 
   /** One ES hit, reduced to what the dump consumes: the sort timestamp, the
     * two `_source.agent` fields, and the sysmon message text.
@@ -90,26 +89,24 @@ object Elastic {
   private def basicAuth(auth: String): String =
     "Basic " + Base64.getEncoder.encodeToString(auth.getBytes(StandardCharsets.UTF_8))
 
-  /** One shared client: HttpClient is thread-safe and each instance owns a
-    * selector thread + connection pool, so per-call construction would leak
-    * threads/sockets across a (index × code) distributed fetch.
+  /** One shared client: each HttpClient instance owns a selector thread +
+    * connection pool, so per-call construction would leak threads/sockets
+    * across the (index × code) page walks.
     */
   private lazy val httpClient: HttpClient = HttpClient.newHttpClient()
 
-  /** One (index, event_code) page walk from the cursor `startTs`; returns
-    * the kept hits and the final cursor (for the compat cross-index carry).
-    * Safety divergences from the reference, both fail-safe not fail-spin:
-    * a missing/empty `hits.hits` ends the loop (the reference would re-send
-    * the same query forever), and a FULL page whose last hit lacks a
-    * forward-moving numeric `sort[0]` raises instead of re-sending the same
-    * cursor forever.
+  /** One (index, event_code) page walk from cursor 0: every hit, the
+    * short last page included. Safety divergences from the reference, both
+    * fail-safe not fail-spin: a missing/empty `hits.hits` ends the loop
+    * (the reference would re-send the same query forever), and a FULL page
+    * whose last hit lacks a forward-moving numeric `sort[0]` raises instead
+    * of re-sending the same cursor forever.
     */
-  private def fetchFrom(cfg: EsConfig, index: String, eventCode: String,
-                        startTs: Long): (Seq[EsHit], Long) = {
+  private def pageWalk(cfg: EsConfig, index: String, eventCode: String): Seq[EsHit] = {
     require(cfg.size > 0, s"page size must be positive, got ${cfg.size}")
     val mapper = new ObjectMapper()
     val out = Seq.newBuilder[EsHit]
-    var lastTs = startTs
+    var lastTs = 0L
     var done = false
     while (!done) {
       val req = HttpRequest.newBuilder(URI.create(s"${cfg.url}/$index/_search"))
@@ -121,19 +118,15 @@ object Elastic {
       val hits = mapper.readTree(body).path("hits").path("hits")
       val n = if (hits.isArray) hits.size() else 0
       val full = n == cfg.size
-      // the reference drops a short non-empty page (break before push,
-      // sysmon_csv.rs:190-196) — reproduced only under referenceCompat
-      if (n > 0 && (full || !cfg.referenceCompat)) {
-        var k = 0
-        while (k < n) {
-          val h = hits.get(k)
-          val src = h.path("_source")
-          out += EsHit(index, eventCode, h.path("sort").path(0).asLong(),
-            src.path("agent").path("name").asText(""),
-            src.path("agent").path("id").asText(""),
-            src.path("message").asText(""))
-          k += 1
-        }
+      var k = 0
+      while (k < n) {
+        val h = hits.get(k)
+        val src = h.path("_source")
+        out += EsHit(index, eventCode, h.path("sort").path(0).asLong(),
+          src.path("agent").path("name").asText(""),
+          src.path("agent").path("id").asText(""),
+          src.path("message").asText(""))
+        k += 1
       }
       if (full) {
         val next = hits.get(n - 1).path("sort").path(0).asLong()
@@ -144,54 +137,15 @@ object Elastic {
         lastTs = next
       } else done = true // short or empty page: the index is drained
     }
-    (out.result(), lastTs)
-  }
-
-  /** One (index, event_code)'s sequential page loop from cursor 0. */
-  def fetchPages(cfg: EsConfig, index: String, eventCode: String): Seq[EsHit] =
-    fetchFrom(cfg, index, eventCode, 0L)._1
-
-  /** One event_code across every index. Under referenceCompat the cursor
-    * carries from index to index (the reference's `last_ts` lives outside
-    * its index loop); by default each index pages independently from 0.
-    */
-  def fetchCode(cfg: EsConfig, eventCode: String): Seq[EsHit] = {
-    var cursor = 0L
-    val out = Seq.newBuilder[EsHit]
-    cfg.indices.foreach { index =>
-      val (hits, last) = fetchFrom(cfg, index, eventCode,
-        if (cfg.referenceCompat) cursor else 0L)
-      out ++= hits
-      cursor = last
-    }
     out.result()
   }
 
-  /** Driver-side eager dump over every (index, event_code) — the reference's
-    * single-process shape.
+  /** Driver-side eager dump over every (event_code, index) pair, each paged
+    * from cursor 0 — the reference's single-process shape.
     */
   def fetchAll(cfg: EsConfig): Seq[EsHit] =
-    cfg.eventCodes.flatMap(code => fetchCode(cfg, code))
-
-  /** Cluster-parallel fetch. By default one task per (index, event_code)
-    * pair — paging within a pair is sequential by protocol, pairs are not.
-    * Under referenceCompat the cursor couples the indices of one event code,
-    * so the fan-out unit is the event code.
-    */
-  def fetchDistributed(spark: SparkSession, cfg: EsConfig): Dataset[EsHit] = {
-    import spark.implicits._
-    if (cfg.referenceCompat) {
-      val tasks = cfg.eventCodes
-      spark.createDataset(tasks)
-        .repartition(math.max(1, math.min(tasks.length, spark.sparkContext.defaultParallelism)))
-        .mapPartitions(_.flatMap(c => fetchCode(cfg, c)))
-    } else {
-      val tasks = for (i <- cfg.indices; c <- cfg.eventCodes) yield (i, c)
-      spark.createDataset(tasks)
-        .repartition(math.max(1, math.min(tasks.length, spark.sparkContext.defaultParallelism)))
-        .mapPartitions(_.flatMap { case (i, c) => fetchPages(cfg, i, c) })
-    }
-  }
+    for (code <- cfg.eventCodes; index <- cfg.indices; hit <- pageWalk(cfg, index, code))
+      yield hit
 
   /** event code → (re-ingest layout name, the dump's constant event_action)
     * — the 14-arm match of fetch_elastic_search (sysmon_csv.rs:96-160) with
@@ -260,9 +214,8 @@ object Elastic {
     * message keys — extracted in ONE scan per row by the codegen
     * [[graft.functions.KvLinesStruct]] (the HOF form in [[msgValue]] would
     * re-split the message once per field after project collapse; an
-    * ElasticSpec law holds the two forms equal). Writing these tab-joined
-    * yields the event{code}_log.csv the staging ingest
-    * ([[Staging.readStagingDir]]) routes and decodes.
+    * ElasticSpec law holds the two forms equal). Tab-joined, a row is one
+    * line of the reference's event{code}_log.csv dump.
     */
   def rawColumns(hits: DataFrame, code: Int): DataFrame = {
     val (_, action) = eventTypes(code)

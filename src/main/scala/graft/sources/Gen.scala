@@ -18,11 +18,13 @@ import org.apache.spark.sql.functions._
   */
 object Gen {
 
+  /** Distinct `source` values the generator spreads events over. */
+  private val Sources = 500
+
   /** n synthetic raw events across `numPartitions` tasks. */
-  def rawEvents(spark: SparkSession, n: Long, numPartitions: Int,
-                sources: Int = 500): DataFrame = {
+  def rawEvents(spark: SparkSession, n: Long, numPartitions: Int): DataFrame = {
     val did = col("id")
-    val source = concat(lit("src"), (did % sources).cast("string"))
+    val source = concat(lit("src"), (did % Sources).cast("string"))
     // tokens: 20..49 ints, each a mixed function of (doc, position)
     val nTok = (lit(20) + (did % 30)).cast("int")
     val toks = transform(sequence(lit(1), nTok),
@@ -39,8 +41,8 @@ object Gen {
   }
 
   /** Matching source dimension (same derivation as Tables.sourceDim). */
-  def sourceDim(spark: SparkSession, sources: Int = 500): DataFrame = {
+  def sourceDim(spark: SparkSession): DataFrame = {
     val source = concat(lit("src"), col("id").cast("string"))
-    spark.range(0, sources, 1, 1).select(source.as("source") +: Tables.sourceAttrs(source): _*)
+    spark.range(0, Sources, 1, 1).select(source.as("source") +: Tables.sourceAttrs(source): _*)
   }
 }

@@ -36,7 +36,7 @@ class AnnRecallSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, SfBig)
     val qf = col("vec_id") < 20
     val exact = Ann.bruteForceTopK(emb, qf, k = 5)
-    val sk = Ann.sketchRerankTopK(emb, qf, k = 5) // candDiv=5 ⇒ 20% by construction
+    val sk = Ann.sketchRerankTopK(emb, qf, k = 5) // SketchCandDiv = 5 ⇒ 20% by construction
     val r = recall(sk, exact)
     info(f"recall@5 sketch-rerank (candidates = 1/5 of corpus): $r%.3f")
     assert(topSet(sk).size === 20)
@@ -75,8 +75,9 @@ class AnnRecallSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, SfBig)
     val qf = col("vec_id") < 20
     val exact = Ann.bruteForceTopK(emb, qf, k = 5)
-    val ivf = Ann.ivfTopK(emb, qf, k = 5, nCells = 256, nProbe = 64)
-    val ivfpq = Ann.ivfPqTopK(emb, qf, k = 5, nCells = 256, nProbe = 64)
+    // ivfPqTopK probes 64 of its 256 cells
+    val ivf = Ann.ivfTopK(emb, qf, k = 5, nProbe = 64)
+    val ivfpq = Ann.ivfPqTopK(emb, qf, k = 5)
     val rIvf = recall(ivf, exact)
     val r = recall(ivfpq, exact)
     info(f"recall@5 IVF nProbe=64 (~1/4 corpus, full-width rerank): $rIvf%.3f")
@@ -93,9 +94,9 @@ class AnnRecallSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, SfBig)
     val qf = col("vec_id") < 20
     val exact = Ann.bruteForceTopK(emb, qf, k = 5)
-    val lsh = Ann.multiTableLshTopK(emb, qf, k = 5, tables = 4, bits = 8, probeRadius = 2)
-    val lsh0 = Ann.multiTableLshTopK(emb, qf, k = 5, tables = 4, bits = 8, probeRadius = 0)
-    val ivf = Ann.ivfTopK(emb, qf, k = 5, nCells = 256, nProbe = 32)
+    val lsh = Ann.multiTableLshTopK(emb, qf, k = 5, probeRadius = 2)
+    val lsh0 = Ann.multiTableLshTopK(emb, qf, k = 5, probeRadius = 0)
+    val ivf = Ann.ivfTopK(emb, qf, k = 5, nProbe = 32)
     val rLsh = recall(lsh, exact)
     val rLsh0 = recall(lsh0, exact)
     val rIvf = recall(ivf, exact)

@@ -37,6 +37,21 @@ class ContractSpec extends SparkSpec {
     }
   }
 
+  test("registry results do not depend on a graft.* session conf") {
+    // the syslog year is a constant: a session conf must not shift the
+    // ubuntu (p17) or vforce (v05) timestamps the oracles pin
+    Seq("p17_parse_ubuntu", "v05_parse_vforce").foreach { name =>
+      val q = SparkEntry.queries(name)
+      // collected, not checkpointed: running a query unpersists the
+      // session's checkpoints; Seq.diff is exceptAll on the rows
+      val plain = q(spark, Sf).collect().toSeq
+      val withConf = withConfs("graft.syslog.pinYear" -> "2024")(q(spark, Sf).collect().toSeq)
+      assert(plain.nonEmpty, s"$name returned no rows")
+      assert(plain.diff(withConf).isEmpty && withConf.diff(plain).isEmpty,
+        s"$name changed under graft.syslog.pinYear")
+    }
+  }
+
   test("t04 runs in a fresh session and registers no SQL function there") {
     val fresh = spark.newSession()
     val t04 = SparkEntry.queries("t04_fingerprint_roll")

@@ -249,7 +249,7 @@ class CurationSpec extends SparkSpec {
   test("k-means is a total partition that strictly beats its init by sketch-cosine") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
     val n = emb.count()
-    val asn = Ann.kmeansSketch(emb, k = 16, iters = 2)
+    val asn = Ann.kmeansSketch(emb)
     assert(asn.count() === n)
     assert(asn.select("vec_id").distinct().count() === n)
     val k = asn.select("cluster").distinct().count()
@@ -374,29 +374,33 @@ class CurationSpec extends SparkSpec {
   test("dsirSelect == sequential reference on random corpora (2 seeds)") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
-    // small word vocabulary → heavy cross-doc 8-gram sharing; bucket
-    // count 64 forces feature collisions through the same modulus both
-    // sides; doc lengths 0-12 words include windowless docs
+    // small word vocabulary → heavy cross-doc 8-gram sharing; distinct
+    // 8-grams collide in dsirSelect's 1024 buckets (asserted below), so
+    // the same modulus runs on both sides; doc lengths 0-12 words include
+    // windowless docs
     val wordGen = Gen.oneOf("hash", "join", "scan", "merge", "sort", "row",
       "key", "agg", "spark", "window")
     val docGen = Gen.chooseNum(0, 12).flatMap(n => Gen.listOfN(n, wordGen))
     val P = 1000000007L
     val S = 1000000000L
-    val B = 64
-    def feats(s: String): Seq[Long] = {
+    val B = 1024
+    def hashes(s: String): Seq[Long] = {
       val cps = s.codePoints.toArray
       (0 to cps.length - 8).map { i =>
         var h = 0L
         (i until i + 8).foreach(j => h = (h * 31 + cps(j)) % P)
-        h % B
+        h
       }
     }
+    def feats(s: String): Seq[Long] = hashes(s).map(_ % B)
     Seq(13L, 77L).foreach { seed =>
       val corpus = Gen.listOfN(40, docGen)
         .pureApply(Gen.Parameters.default, Seed(seed)).zipWithIndex
         .map { case (ws, i) => ((i + 1).toLong, ws.mkString(" ")) }
+      val distinct = corpus.flatMap(d => hashes(d._2)).distinct
+      assert(distinct.map(_ % B).distinct.size < distinct.size, s"seed $seed: no bucket collision")
       val got = CurationOps.dsirSelect(corpus.toDF("doc_id", "text"),
-          col("doc_id") % 3 === 0, n = 8, buckets = B, topK = 1000)
+          col("doc_id") % 3 === 0, topK = 1000)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       val (tgt, raw) = corpus.partition(_._1 % 3 == 0)
       val tf = tgt.flatMap(d => feats(d._2))
@@ -437,8 +441,7 @@ class CurationSpec extends SparkSpec {
       (3L, "qqqq wwww eeee rrrr tttt yyyy uuuu iiii oooo pppp aaaa ssss dddd"),
       (4L, "short") // no 8-char window: n_feat = 0, score 0, still ranked
     ).toDF("doc_id", "text")
-    val out = CurationOps.dsirSelect(docs, col("doc_id") === 1L, n = 8,
-        buckets = 1024, topK = 10)
+    val out = CurationOps.dsirSelect(docs, col("doc_id") === 1L, topK = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
 
     // sequential single-threaded reference: same fold, same int64 arithmetic

@@ -34,8 +34,8 @@ class DedupSpec extends SparkSpec {
     (1 to 20).map(tsRuns).foreach { ts =>
       val df = ts.zipWithIndex.map { case (t, i) => (t, i.toLong, "f") }
         .toDF("ts", "line_no", "file")
-      val got = Dedup.timestampDedup(df, col("ts"), Seq(col("file")), col("line_no"), "out")
-        .orderBy("line_no").select("out").as[Long].collect().toSeq
+      val got = Dedup.timestampDedup(df, col("ts"), Seq(col("file")), col("line_no"))
+        .orderBy("line_no").select("ts_ns").as[Long].collect().toSeq
       assert(got === refTsDedup(ts))
     }
   }
@@ -43,8 +43,8 @@ class DedupSpec extends SparkSpec {
   test("timestampDedup output strictly increasing within equal-ts runs") {
     val ts = Seq(5L, 5L, 5L, 7L, 7L, 9L)
     val df = ts.zipWithIndex.map { case (t, i) => (t, i.toLong, "f") }.toDF("ts", "line_no", "file")
-    val out = Dedup.timestampDedup(df, col("ts"), Seq(col("file")), col("line_no"), "out")
-      .orderBy("line_no").select("out").as[Long].collect()
+    val out = Dedup.timestampDedup(df, col("ts"), Seq(col("file")), col("line_no"))
+      .orderBy("line_no").select("ts_ns").as[Long].collect()
     assert(out.toSeq === Seq(5L, 6L, 7L, 7L, 8L, 9L))
   }
 
@@ -68,11 +68,11 @@ class DedupSpec extends SparkSpec {
     }.toDF("case", "source", "line_no", "ts", "k")
     val part = Seq(col("case"), col("source"))
     val isFresh = col("line_no") > col("k")
-    def result(df: org.apache.spark.sql.DataFrame) = df.select("case", "line_no", "out")
-    val full = result(Dedup.timestampDedup(all, col("ts"), part, col("line_no"), "out").where(isFresh))
+    def result(df: org.apache.spark.sql.DataFrame) = df.select("case", "line_no", "ts_ns")
+    val full = result(Dedup.timestampDedup(all, col("ts"), part, col("line_no")).where(isFresh))
     val carried = all.where(!isFresh).select("case", "source", "line_no", "ts")
     val carry = result(Dedup.timestampDedupCarried(all.where(isFresh), carried, col("ts"), part,
-      col("line_no"), "out"))
+      col("line_no")))
     assert(full.count() === all.where(isFresh).count())
     assert(carry.exceptAll(full).isEmpty && full.exceptAll(carry).isEmpty)
     // the law has teeth: the generator straddles k, and fresh rows alone differ
@@ -81,7 +81,7 @@ class DedupSpec extends SparkSpec {
       fresh.exists { case (r, _) => r._2.isDefined && old.exists(_._1 == r) }
     }
     assert(straddling > 20 && cases.exists(_._1.exists(_._2.isEmpty)))
-    val freshOnly = result(Dedup.timestampDedup(all.where(isFresh), col("ts"), part, col("line_no"), "out"))
+    val freshOnly = result(Dedup.timestampDedup(all.where(isFresh), col("ts"), part, col("line_no")))
     assert(!freshOnly.exceptAll(full).isEmpty)
   }
 

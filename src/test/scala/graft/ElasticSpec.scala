@@ -1,20 +1,19 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 import java.util.Base64
 
 import org.apache.spark.sql.functions._
 
 import graft.operators.Positional
-import graft.sources.{Elastic, ElasticStub, Staging}
+import graft.sources.{Elastic, ElasticStub}
 import graft.sources.Elastic.EsConfig
 import graft.sources.ElasticStub.StubHit
 
 /** The live-ES source: real HTTP paging client against the in-process
   * `_search` stub — auth header, query shape, search_after cursor walk,
-  * short-page/empty-page termination, distributed (index × code) fan-out,
-  * and the message→typed-layout parse including the reader-order emission
+  * short-page/empty-page termination, per-index cursor restart, and the
+  * message→typed-layout parse including the reader-order emission
   * (parent_process_guid BEFORE parent_process_id — the reference's own dump
   * writes them swapped relative to its reader, sysmon_csv/process_create.rs
   * :207-208 vs :121-135).
@@ -48,7 +47,7 @@ class ElasticSpec extends SparkSpec {
   test("paging: the search_after cursor walks full pages and stops on the short page; Basic auth on every request") {
     val stub = ElasticStub.start(Map(("idx", "1") -> hitsFor(25)))
     try {
-      val got = Elastic.fetchPages(cfg(stub.url, 10), "idx", "1")
+      val got = Elastic.fetchAll(cfg(stub.url, 10))
       assert(got.length === 25)
       assert(got.map(_.sort_ts) === (0 until 25).map(1000L + _))
       assert(got.map(_.agent_name).take(2) === Seq("agent0", "agent1"))
@@ -66,26 +65,10 @@ class ElasticSpec extends SparkSpec {
   test("a page-aligned total drains with one trailing empty page (the reference's loop rule)") {
     val stub = ElasticStub.start(Map(("idx", "1") -> hitsFor(20)))
     try {
-      val got = Elastic.fetchPages(cfg(stub.url, 10), "idx", "1")
+      val got = Elastic.fetchAll(cfg(stub.url, 10))
       assert(got.length === 20)
       // 10 + 10(full → one more request) + 0(empty → stop)
       assert(stub.requests.map(_.searchAfter) === Seq(0L, 1009L, 1019L))
-    } finally stub.stop()
-  }
-
-  test("fetchDistributed fans (index × code) tasks across the cluster and equals the sequential fetchAll") {
-    val data = Map(
-      ("idx-a", "1") -> hitsFor(7, base = 1000),
-      ("idx-b", "1") -> hitsFor(5, base = 2000),
-      ("idx-a", "5") -> hitsFor(3, base = 3000),
-      ("idx-b", "5") -> IndexedSeq.empty[StubHit])
-    val stub = ElasticStub.start(data)
-    try {
-      val c = cfg(stub.url, 4, indices = Seq("idx-a", "idx-b"), codes = Seq("1", "5"))
-      val seq = Elastic.fetchAll(c).map(h => (h.index, h.event_code, h.sort_ts)).sorted
-      val dist = Elastic.fetchDistributed(spark, c).collect().toSeq
-        .map(h => (h.index, h.event_code, h.sort_ts)).sorted
-      assert(seq.length === 15 && dist === seq)
     } finally stub.stop()
   }
 
@@ -125,26 +108,19 @@ class ElasticSpec extends SparkSpec {
     assert(o.getAs[String]("process_guid") === "pg-0")
   }
 
-  test("referenceCompat paging reproduces the reference's two bugs: short-page discard and cross-index cursor carry") {
+  test("each index pages from cursor 0 and keeps its short page") {
     // idx-a: 25 hits (two full pages + a short page of 5)
-    // idx-b: 10 hits, ALL below idx-a's final cursor
+    // idx-b: 10 hits, ALL below idx-a's final cursor — the reference's
+    // pager drops idx-a's short page and starts idx-b at cursor 1019
     val data = Map(
       ("idx-a", "1") -> hitsFor(25, base = 1000),
       ("idx-b", "1") -> hitsFor(10, base = 500))
     val stub = ElasticStub.start(data)
     try {
       val base = cfg(stub.url, 10, indices = Seq("idx-a", "idx-b"))
-      // default: short page kept, each index pages from 0 → all 35 hits
-      assert(Elastic.fetchCode(base, "1").length === 35)
-      // compat: idx-a's short page of 5 is discarded (break before push);
-      // idx-b starts from idx-a's cursor 1019 and sees nothing
-      val compat = Elastic.fetchCode(base.copy(referenceCompat = true), "1")
-      assert(compat.length === 20)
-      assert(compat.map(_.sort_ts).max === 1019L)
-      // the compat distributed fan-out (per event code) agrees
-      val dist = Elastic.fetchDistributed(spark, base.copy(referenceCompat = true))
-        .collect().map(_.sort_ts).sorted.toSeq
-      assert(dist === compat.map(_.sort_ts).sorted)
+      assert(Elastic.fetchAll(base).length === 35)
+      assert(stub.requests.map(r => (r.index, r.searchAfter)) ===
+        Seq(("idx-a", 0L), ("idx-a", 1009L), ("idx-a", 1019L), ("idx-b", 0L), ("idx-b", 509L)))
     } finally stub.stop()
   }
 
@@ -252,30 +228,5 @@ class ElasticSpec extends SparkSpec {
       val mapped = proto.fields.drop(3).map(f => Elastic.messageKey(f.name)).toSet
       assert(mapped === refKeys(code), s"code $code ($protoName)")
     }
-  }
-
-  test("staged event{code}_log.csv round-trips through the staging ingest to the same typed rows") {
-    val proto = Positional.sysmonCsv.head
-    val df = spark.createDataset(
-      (0 until 4).map(i => Elastic.EsHit("idx", "1", 1000L + i, s"agent$i", s"aid$i", procMsg(i)))).toDF()
-    val lines = Elastic.rawColumns(df, 1)
-      .select(concat_ws("\t", proto.fields.indices.map(i => col(s"c$i")): _*))
-      .collect().map(_.getString(0))
-    val dir = Files.createTempDirectory("graft-es-stage")
-    Files.write(Paths.get(dir.toString, "event1_log.csv"),
-      lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    val staged = Staging.readStagingDir(spark, dir.toString)
-    assert(staged.select("event_code").distinct().collect().map(_.getInt(0)).toSeq === Seq(1))
-    val typedBack = staged
-      .select(Positional.fromColumns(proto, i => s"_c$i").as("o"))
-      .select(col("o.process_guid"), col("o.parent_process_guid"),
-        col("o.parent_process_id"), col("o.ts_ns"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).sortBy(_._1)
-    val direct = Elastic.typed(df, 1)
-      .select(col("o.process_guid"), col("o.parent_process_guid"),
-        col("o.parent_process_id"), col("o.ts_ns"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).sortBy(_._1)
-    assert(typedBack === direct)
-    assert(direct.map(_._2).toSeq === (0 until 4).map(i => s"PPG-$i"))
   }
 }

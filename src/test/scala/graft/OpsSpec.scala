@@ -291,7 +291,7 @@ class OpsSpec extends SparkSpec {
       (2L, Array(0.949f, 0.315f, 0f, 0f)),
       (3L, Array(0.88f, -0.47f, 0f, 0f))
     ).toDF("vec_id", "embedding")
-    val got = Ann.mmrSelect(emb, col("vec_id") === 0, poolK = 20, k = 3)
+    val got = Ann.mmrSelect(emb, col("vec_id") === 0, k = 3)
       .orderBy("pick").select("c_id", "pick", "mmr")
       .as[(Long, Int, Long)].collect()
     assert(got.map(_._1).toSeq === Seq(1L, 3L, 2L))
@@ -326,7 +326,7 @@ class OpsSpec extends SparkSpec {
 
   test("kmeansQuality: counts conserve, cohesion beats separation on every cluster") {
     val e = Tables.embeddings(spark, Sf)
-    val q = Ann.kmeansQuality(e, k = 16, iters = 2).collect()
+    val q = Ann.kmeansQuality(e).collect()
     assert(q.map(_.getLong(1)).sum === e.count())
     // the partition is doing SOMETHING: members are closer to their own
     // centroid than the centroids are to each other — in aggregate and

@@ -15,8 +15,11 @@ class PackingSpec extends SparkSpec {
   private val L = 128
 
   test("global offsets equal the sequential prefix sum (4 partitions)") {
+    // Packing range-partitions into defaultParallelism partitions: 4 on the
+    // shared local[4] test session
+    assert(spark.sparkContext.defaultParallelism === 4)
     val toks = Tables.tokens(spark, Sf).select("doc_id", "tokens", "n_tok")
-    val got = Packing.withGlobalOffsets(toks, parts = 4)
+    val got = Packing.withGlobalOffsets(toks)
       .select("doc_id", "n_tok", "tok_offset")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
       .sortBy(_._1)
@@ -29,7 +32,7 @@ class PackingSpec extends SparkSpec {
 
   test("packed sequences = doc-order token concatenation cut every L; all exactly L long") {
     val toks = Tables.tokens(spark, Sf).select("doc_id", "tokens", "n_tok")
-    val packed = Packing.pack(toks, L, parts = 4)
+    val packed = Packing.pack(toks, L)
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).sortBy(_._1)
     assert(packed.nonEmpty)
     assert(packed.forall(_._2.length == L))
@@ -44,9 +47,10 @@ class PackingSpec extends SparkSpec {
 
   test("length batches equal the single-window reference implementation (4 partitions)") {
     import org.apache.spark.sql.expressions.Window
+    assert(spark.sparkContext.defaultParallelism === 4)
     val toks = Tables.tokens(spark, Sf).select("doc_id", "n_tok")
     val B = 32
-    val got = Packing.lengthBatches(Tables.tokens(spark, Sf), B, parts = 4)
+    val got = Packing.lengthBatches(Tables.tokens(spark, Sf), B)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getLong(4), r.getLong(5)))
       .sortBy(_._1)
     // reference: the naive global window (fine at spec scale, single-task

@@ -49,7 +49,7 @@ class PcapPeelSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-pcap-peel")
     Files.write(Paths.get(dir.toString, "t.pcap"), bytes)
     val files = spark.read.format("binaryFile").load(dir.toString)
-    BinaryDecode.pcapNetflowV5Payloads(files)
+    BinaryDecode.pcapNetflowV5Payloads(files, referenceCompat = false)
       .select(hex(col("nf"))).collect().map(_.getString(0).toLowerCase).toSeq
   }
 

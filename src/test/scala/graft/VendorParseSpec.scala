@@ -18,33 +18,12 @@ class VendorParseSpec extends SparkSpec {
   test("ubuntu syslog: month name + injected year + serial; fields extracted") {
     val line = "Oct 15 04:05:06 host3 sshd[812]: Failed password for user9 from 10.0.0.5"
     val r = Seq(line).toDF("l")
-      .select(ParseVendors.ubuntu($"l", lit(37L), pinYear = 2025).as("o"))
+      .select(ParseVendors.ubuntu($"l", lit(37L)).as("o"))
       .select("o.ts_ns", "o.host", "o.daemon", "o.pid", "o.contents")
       .as[(Long, String, String, Int, String)].head()
     assert(r._1 === ns("2025-10-15T04:05:06") + 37L)
     assert(r._2 === "host3" && r._3 === "sshd" && r._4 === 812)
     assert(r._5 === "Failed password for user9 from 10.0.0.5")
-  }
-
-  test("syslog year pin is a run-level config: non-default year shifts ubuntu AND vforce") {
-    // the reference injects the wall-clock year (ubuntu.rs:19-29,
-    // vforce.rs:23-26) — nondeterministic by design; here the run pins it
-    // (graft.syslog.pinYear → vendorsFor/ubuntu's pinYear parameter)
-    val line = "Oct 15 04:05:06 host3 sshd[812]: msg"
-    val t24 = Seq(line).toDF("l")
-      .select(ParseVendors.ubuntu($"l", lit(0L), pinYear = 2024)("ts_ns"))
-      .as[Long].head()
-    assert(t24 === ns("2024-10-15T04:05:06"))
-    // vforce (the year-injecting vendor in the 9-vendor bank): 2024 vs the
-    // default 2025 bank differ by exactly the year shift on the same line
-    val vf = ">Oct 15 04:05:06 dev9 Src:10.2.3.4, Dst:10.3.4.5, Proto:6, Spt_c:1024, Dpt_t:443,"
-    val v24 = ParseVendors.vendorsFor(2024).find(_.name == "vforce").get
-    val v25 = ParseVendors.vendorByName("vforce")
-    val Seq(a, b) = Seq(v24, v25).map { v =>
-      Seq(vf).toDF("l").select(ParseVendors.secuLog(v)($"l", lit(0L))("ts_ns")).as[Long].head()
-    }
-    // +0900 vendor: 2024-10-15T04:05:06+09:00 vs 2025-...
-    assert(a === ns("2024-10-14T19:05:06") && b === ns("2025-10-14T19:05:06"))
   }
 
   test("sysmon CSV: ms datetime, hex 0x logon via conv, comma-split hashes") {
