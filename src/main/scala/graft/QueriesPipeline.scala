@@ -33,6 +33,23 @@ object QueriesPipeline {
   private def parsed(s: SparkSession, dir: String) = Parse.parsed(raws(s, dir))
   private def events(s: SparkSession, dir: String) = Tables.events(s, dir)
 
+  /** DuckDB twin of `Dedup.timestampDedupExact` with no carry, part 1:
+    * `parsedx` with `run_id`, the running sum of the lines where a run
+    * starts (a source's first line with a ts, or a ts other than its
+    * previous such line's). Lines with a null ts sit in partitions of their
+    * own and join no run.
+    */
+  private val ExactRuns = {
+    val w = "PARTITION BY source, ts_raw_ns IS NULL ORDER BY line_no"
+    s"""(SELECT *, sum(brk) OVER ($w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id
+       |  FROM (SELECT *, CASE WHEN ts_raw_ns = lag(ts_raw_ns) OVER ($w) THEN 0 ELSE 1 END AS brk
+       |    FROM parsedx))""".stripMargin
+  }
+
+  /** Part 2: ts plus the count of earlier lines in the line's run. */
+  private val ExactTsNs =
+    "ts_raw_ns + row_number() OVER (PARTITION BY source, ts_raw_ns IS NULL, run_id ORDER BY line_no) - 1 AS ts_ns"
+
   val registry: Seq[Q] = Seq(
     Q("p01_tokenize", (s, dir) =>
       toks(s, dir).select(
@@ -145,6 +162,15 @@ object QueriesPipeline {
           |  ts_raw_ns + row_number() OVER (PARTITION BY source, ts_raw_ns ORDER BY line_no) - 1 AS ts_ns
           |FROM parsedx WHERE parse_ok""".stripMargin)),
 
+    Q("p08x_ts_dedup_exact", (s, dir) =>
+      Dedup.timestampDedupExact(parsed(s, dir), col("ts_raw_ns"), col("source"), col("line_no"), Map.empty)
+        .where(col("parse_ok"))
+        .select(col("doc_id"), col("source"), col("ts_raw_ns").as("ts_raw"), col("ts_ns")),
+      withCtes(ToksCte, RawCte, ParsedCte)(
+        s"""SELECT doc_id, source, ts_raw, ts_ns
+          |FROM (SELECT doc_id, source, parse_ok, ts_raw_ns AS ts_raw, $ExactTsNs FROM $ExactRuns)
+          |WHERE parse_ok""".stripMargin)),
+
     Q("p09_consec_dedup", (s, dir) =>
       Dedup.dropConsecutiveDuplicates(events(s, dir),
         Seq(col("user_id")), col("event_id"), Seq(col("event_type")))
@@ -206,6 +232,26 @@ object QueriesPipeline {
           |  FROM (
           |    SELECT *, ts_raw_ns + row_number() OVER (PARTITION BY source, ts_raw_ns ORDER BY line_no) - 1 AS ts_ns
           |    FROM parsedx) d
+          |  LEFT JOIN dim m USING (source))
+          |GROUP BY 1, 2""".stripMargin)),
+
+    Q("p14x_pipeline_exact", (s, dir) =>
+      graft.plans.Pipeline.transformedExact(s, dir)
+        .groupBy("sink", "vendor").agg(
+          count(lit(1)).as("records"),
+          sum(col("bytes")).as("sum_bytes"),
+          sum(col("n_tok")).as("sum_n_tok"),
+          min(col("ts_ns")).as("min_ts"),
+          max(col("ts_ns")).as("max_ts")),
+      withCtes(ToksCte, RawCte, ParsedCte, DimCte)(
+        s"""SELECT sink, vendor, count(*) AS records,
+          |  cast(sum(bytes) AS bigint) AS sum_bytes,
+          |  cast(sum(n_tok) AS bigint) AS sum_n_tok,
+          |  min(ts_ns) AS min_ts, max(ts_ns) AS max_ts
+          |FROM (
+          |  SELECT d.*, m.vendor,
+          |    CASE WHEN NOT d.parse_ok THEN 'quarantine' ELSE d.kind END AS sink
+          |  FROM (SELECT *, $ExactTsNs FROM $ExactRuns) d
           |  LEFT JOIN dim m USING (source))
           |GROUP BY 1, 2""".stripMargin)),
 

@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
 /** Driver contract — see SURVEY.md §7.
@@ -34,14 +35,17 @@ object SparkEntry {
     // sessions plan (guide §3.1: broadcast the side that fits — estimates
     // at the 10 MB default flip small model/frequency tables to shuffles)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-    // drop the PREVIOUS query's localCheckpoint blocks before this one
-    // runs: eager checkpoints otherwise accumulate across a 212-query
+    // drop the PREVIOUS registry query's localCheckpoint blocks before this
+    // one runs: eager checkpoints otherwise accumulate across a whole-registry
     // session until the driver happens to GC the RDD handles, saturating
     // the storage pool so late queries pay eviction + disk spill for
     // blocks nothing will ever read again (guide §5 — unpersist when
-    // done). prep runs before a query builds its frames, so every
-    // persistent RDD seen here belongs to an already-completed query.
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    // done). Only the RDDs that query's build persisted go: a caller's own
+    // checkpoints on the session stay readable.
+    val sc = spark.sparkContext
+    lastBuilt.getAndSet(None).filter(_._1 eq sc).foreach { case (_, ids) =>
+      ids.flatMap(sc.getPersistentRDDs.get).foreach(_.unpersist(blocking = false))
+    }
     spark
   }
 
@@ -60,9 +64,22 @@ object SparkEntry {
   val registry: Seq[Q] = registryOf(QueriesPipeline.registry ++ QueriesOps.registry ++
     QueriesProto.registry ++ QueriesVendors.registry)
 
-  /** Each query by name, run after [[prep]] on the caller's session. */
+  /** The persistent RDDs the last registry query's build created, with their context. */
+  private val lastBuilt =
+    new java.util.concurrent.atomic.AtomicReference[Option[(SparkContext, Set[Int])]](None)
+
+  private def persistentIds(s: SparkSession): Set[Int] = s.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Each query by name, run after [[prep]] on the caller's session. The
+    * RDDs its build persists are the ones the next query's [[prep]] drops.
+    */
   val queries: Map[String, QFn] = registry.map { q =>
-    q.name -> ((s: SparkSession, dir: String) => q.run(prep(s), dir))
+    q.name -> ((s: SparkSession, dir: String) => {
+      val before = persistentIds(prep(s))
+      val df = q.run(s, dir)
+      lastBuilt.set(Some(s.sparkContext -> (persistentIds(s) -- before)))
+      df
+    })
   }.toMap
 
   /** Each query's DuckDB oracle SQL by name. */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,40 +10,102 @@ import org.apache.spark.sql.functions._
   * column (`line_no`), which the source carries.
   *
   * Scale note: windows partition by (file/source, ts) or (source) — never a
-  * global sort. At 10^12 rows a single source's window could skew; the
-  * pipeline buckets by file so each partition is one file's lines, matching
-  * the reference's per-file sequential semantics exactly while files
-  * themselves parallelize.
+  * global sort. A window partitioned by source alone puts one source's lines
+  * in one task, so a hot source skews it (ROADMAP item 1 keeps a segmented
+  * scan open); files themselves parallelize.
   */
 object Dedup {
 
-  /** Timestamp dedup: consecutive records with identical ts become ts+0,
-    * ts+1, ts+2…, written to `ts_ns`; offset resets when ts changes
-    * (/root/reference/src/collector/common.rs:8-24). Exact iff equal
-    * timestamps are adjacent in line order — true for monotonic logs, which
-    * is the reference's operating assumption.
+  /** Timestamp dedup in its windowed form: the lines of a partition that
+    * share a ts become ts+0, ts+1, ts+2… in line order, written to `ts_ns`.
+    * It counts every line of the `(partCols, ts)` group, so it equals the
+    * reference's rule (reference src/collector/common.rs:8-24, where
+    * the offset resets as soon as ts changes) only when equal timestamps are
+    * adjacent in line order: input ts `[5,7,5,5]` gives `[5,7,6,7]` here and
+    * `[5,7,5,6]` there. The p08 and p14 oracles pin this form;
+    * [[timestampDedupExact]] is the reference's rule.
     */
   def timestampDedup(df: DataFrame, ts: Column, partCols: Seq[Column], lineNo: Column): DataFrame = {
     val w = Window.partitionBy(partCols :+ ts: _*).orderBy(lineNo)
     df.withColumn("ts_ns", ts + row_number().over(w).cast("long") - lit(1L))
   }
 
-  /** [[timestampDedup]] of `fresh`, continued from `carried`: the window
-    * counts the carried rows too, and only the fresh rows come out.
-    * `carried` needs only the partition, ts and line-order columns, so a
-    * resumed commit continues the committed rows' equal-ts groups from the
-    * committed table's narrow keys instead of re-parsing the input behind
-    * the resume point. Equals the window over fresh ∪ carried restricted to
-    * the fresh rows (DedupSpec's resume law). Carried rows with a null ts
-    * are dropped first: they share a window group only with null-ts fresh
-    * rows, whose output is null whatever they count.
+  /** Where one partition's sequencing stands after its last line with a
+    * ts: that ts and the length of the equal-ts run the line ends, so the
+    * line's `ts_ns` is `ts + runLen - 1`.
     */
-  def timestampDedupCarried(fresh: DataFrame, carried: DataFrame, ts: Column, partCols: Seq[Column],
-                            lineNo: Column): DataFrame = {
-    val both = fresh.withColumn("__fresh", lit(true))
-      .unionByName(carried.where(ts.isNotNull).withColumn("__fresh", lit(false)),
-        allowMissingColumns = true)
-    timestampDedup(both, ts, partCols, lineNo).where(col("__fresh")).drop("__fresh")
+  final case class RunEnd(ts: Long, runLen: Long)
+
+  /** Each partition's [[RunEnd]], keyed by its `part` value (None for the
+    * null one).
+    */
+  type RunEnds = Map[Option[String], RunEnd]
+
+  /** The column [[timestampDedupExact]] adds beside `ts_ns`: on each
+    * partition's last line with a ts, `struct(source, ts, run_len)`; null on
+    * every other line. [[nextRunEnds]] reads `collect_list` of it.
+    */
+  val RunEndCol = "run_end"
+
+  /** The run ends after a commit: `prev`, updated with the [[RunEndCol]]
+    * values the commit's rows carried. A partition with no line with a ts
+    * in the commit keeps its previous run end.
+    */
+  def nextRunEnds(prev: RunEnds, observed: Seq[Row]): RunEnds = {
+    val ended = observed.map(r => Option(r.getString(0)) -> RunEnd(r.getLong(1), r.getLong(2)))
+    require(ended.map(_._1).distinct.size == ended.size, "a partition ended twice in one commit")
+    prev ++ ended
+  }
+
+  /** Timestamp dedup by the reference's rule: within a `part` partition in
+    * `lineNo` order, a run of equal ts starts wherever ts differs from the
+    * previous line's, and `ts_ns` = ts + the count of earlier lines in the
+    * run. Lines with a null ts are left out of the runs, as the reference
+    * sequences only the records it parsed: their `ts_ns` is null and the
+    * lines around them sequence as if they were absent. The first run of a
+    * partition continues `carry`'s [[RunEnd]] for it when its ts equals the
+    * recorded one, so a resumed commit sequences its delta from the
+    * O(partitions) state of the committed rows without reading them: the
+    * output equals this operator over committed ∪ delta restricted to the
+    * delta whenever each partition's delta lines come after its committed
+    * lines (DedupSpec's laws). Also writes [[RunEndCol]].
+    *
+    * One window `partitionBy(part).orderBy(lineNo)` in two select levels
+    * (lag and lead over the lines with a ts, the running count of those
+    * lines; then the running max of the run starts): one shuffle, one sort.
+    * The carry enters as one map literal, looked up only on first-run rows;
+    * with no carry the plan has no state term.
+    */
+  def timestampDedupExact(df: DataFrame, ts: Column, part: Column, lineNo: Column,
+                          carry: RunEnds): DataFrame = {
+    val w = Window.partitionBy(part).orderBy(lineNo)
+    val upTo = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val marked = df.select(col("*"), lag(ts, 1, null, true).over(w).as("__prev"),
+      count(ts).over(upTo).as("__k"), lead(ts, 1, null, true).over(w).as("__next"))
+    // a run starts at a partition's first line with a ts and where ts changes;
+    // __k numbers the lines with a ts
+    val starts = when(ts.isNotNull && coalesce(ts =!= col("__prev"), lit(true)), col("__k"))
+    val runs = marked.select(col("*"), max(starts).over(upTo).as("__start"))
+    val inRun = col("__k") - col("__start")
+    val offset = carried(carry, part).fold(inRun) { end =>
+      inRun + when(col("__start") === 1 && ts === end("_1"), end("_2")).otherwise(0L)
+    }
+    runs.select(df.columns.toSeq.map(c => col(s"`$c`")) ++ Seq(
+      (ts + offset).as("ts_ns"),
+      when(ts.isNotNull && col("__next").isNull,
+        struct(part.as("source"), ts.as("ts"), (offset + 1L).as("run_len"))).as(RunEndCol)): _*)
+  }
+
+  /** `carry`'s (ts, run length) struct for each row's `part`, as one map
+    * literal plus the null partition's entry; None when `carry` is empty.
+    */
+  private def carried(carry: RunEnds, part: Column): Option[Column] = {
+    val named = carry.collect { case (Some(p), e) => p -> (e.ts, e.runLen) }
+    val byName = Option.when(named.nonEmpty)(typedLit(named).getItem(part))
+    carry.get(None).map(e => typedLit((e.ts, e.runLen))) match {
+      case Some(nullEnd) => Some(when(part.isNull, nullEnd).otherwise(byName.getOrElse(lit(null))))
+      case None => byName
+    }
   }
 
   /** Consecutive-duplicate drop: a record equal (on cmpCols) to the

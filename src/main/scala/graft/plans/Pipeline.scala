@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 import graft.operators.{Dedup, Enrich, Parse, Report, Route}
-import graft.table.SinkTable
+import graft.table.{SinkTable, Writer}
 
 /** The end-to-end north-rule pipeline:
   * read → tokenize → parse (Catalyst grok) → ts-dedup window → enrich
@@ -14,72 +14,82 @@ import graft.table.SinkTable
   * run_pipeline_with_sender loop (reference src/controller.rs:61-145).
   *
   * Single logical plan until the write: Catalyst fuses parse + dedup-window
-  * + enrich into few stages; the only row shuffle is the window partition by
-  * (source, ts), on a high-cardinality composite key, so no hot partitions;
-  * AQE skew-join covers residual skew. Enrichment attaches the source
-  * dimension's columns as expressions of `source` (`Enrich.withSourceAttrs`):
-  * no join, no dimension to build, no broadcast.
+  * + enrich into few stages; the only row shuffle is the dedup window's.
+  * Enrichment attaches the source dimension's columns as expressions of
+  * `source` (`Enrich.withSourceAttrs`): no join, no dimension to build, no
+  * broadcast.
+  *
+  * What it commits sequences timestamps by the reference's rule
+  * (`Dedup.timestampDedupExact`, windowed by `source` in `line_no` order).
+  * [[transformed]] keeps the windowed `(source, ts)` form that the p14
+  * oracle pins; [[transformedExact]] is the committed form over a whole
+  * input.
   *
   * [[run]] and [[graft.streaming.StreamPipeline.run]] (one micro-batch at a
   * time) commit through one step, [[commit]].
   * [[run]] resumes: it reads, parses, enriches, routes and writes only the
   * input rows past the committed `line_no` (the reference tails from its
   * checkpoint the same way — src/checkpoint.rs:44-116, zeek.rs:92-94), and
-  * its report merges the manifests (no scan, no job). A delta commit runs
+  * its report merges the manifests (no scan, no job). The dedup continues
+  * each source's last equal-ts run from the run ends the last manifest
+  * recorded, so a commit reads no committed row. A delta commit runs
   *   - one scan of the delta, whose `line_no` predicate reaches the parquet
   *     scan;
-  *   - one scan of the committed table's `(source, line_no, ts_raw_ns)`
-  *     with the schema the manifests recorded, rows with a null ts dropped
-  *     at the scan; it continues the dedup window's equal-ts groups;
-  *   - the window shuffle over the delta ∪ those keys. Its reduce side
+  *   - the window shuffle over the delta, by source. Its reduce side
   *     enriches, routes, sorts each partition by sink and writes; the
-  *     manifest's stats are observed on that write.
-  * The committed keys are the one part that is not O(delta): three narrow
-  * columns of every committed row with a ts are scanned and shuffled on
-  * each commit (ROADMAP item 1 lists ways to cut them to the keys a delta
-  * can meet).
+  *     manifest's stats and run ends are observed on that write.
+  * Everything it reads and shuffles is O(delta); the state it carries is
+  * O(sources).
   */
 object Pipeline {
 
-  /** The transform-only portion (no writes) — reused by queries and tests. */
-  def transformed(spark: SparkSession, dir: String): DataFrame =
-    stages(Tables.rawEvents(spark, dir), None)
+  private val Ts = col("ts_raw_ns")
+  private val Source = col("source")
+  private val LineNo = col("line_no")
 
-  /** parse → ts-dedup window → enrich → route: the one stage chain of
-    * [[transformed]] and [[run]]. With `carried` committed dedup keys the
-    * window continues their equal-ts groups, and only `raw`'s rows come out.
+  /** The transform-only portion (no writes), with the windowed ts dedup —
+    * reused by queries (p14 pins it) and tests.
     */
-  private def stages(raw: DataFrame, carried: Option[DataFrame]): DataFrame = {
-    val parsed = Parse.parsed(raw)
-    val (ts, part, lineNo) = (col("ts_raw_ns"), Seq(col("source")), col("line_no"))
-    val deduped = carried.fold(Dedup.timestampDedup(parsed, ts, part, lineNo))(
-      Dedup.timestampDedupCarried(parsed, _, ts, part, lineNo))
-    Route.routed(Enrich.withSourceAttrs(deduped))
-  }
+  def transformed(spark: SparkSession, dir: String): DataFrame =
+    enrichRoute(Dedup.timestampDedup(Parse.parsed(Tables.rawEvents(spark, dir)), Ts, Seq(Source), LineNo))
 
-  /** The committed columns a resumed commit's dedup window needs. */
-  private val DedupKeys = Seq("source", "line_no", "ts_raw_ns")
+  /** The transform-only portion with the reference's ts sequencing: the
+    * rows one [[run]] on an empty table commits.
+    */
+  def transformedExact(spark: SparkSession, dir: String): DataFrame =
+    stages(Tables.rawEvents(spark, dir), Map.empty)
+
+  /** parse → exact ts dedup continued from `carry` → enrich → route. A line
+    * whose ts did not parse (a quarantined line) joins no run.
+    */
+  private def stages(raw: DataFrame, carry: Dedup.RunEnds): DataFrame =
+    enrichRoute(Dedup.timestampDedupExact(Parse.parsed(raw), Ts, Source, LineNo, carry))
+
+  private def enrichRoute(deduped: DataFrame): DataFrame =
+    Route.routed(Enrich.withSourceAttrs(deduped))
 
   /** Commit the input rows past the resume point as `commitId` (never a
     * committed one). Returns the report over every committed row. Resume
-    * point, carried keys and report come from one manifest listing plus this
-    * commit's manifest. Its rows equal one full [[transformed]] run whenever
+    * point, run ends and report come from one manifest listing plus this
+    * commit's manifest. Its rows equal one [[transformedExact]] run whenever
     * every input row at or before the resume point is committed.
     */
   def run(spark: SparkSession, dir: String, outBase: String, commitId: Long): DataFrame = {
     val table = new SinkTable(outBase)
     val delta = Tables.rawEvents(spark, dir).where(col("line_no") > table.committedMaxLineNo)
-    commit(spark, table, delta, commitId)
+    commit(spark, table, delta, commitId, Writer.Batch)
   }
 
   /** The one commit step of [[run]] and of
     * [[graft.streaming.StreamPipeline.run]]'s micro-batches: run [[stages]]
-    * over `raw` (`Tables.rawEvents` rows not yet committed), continuing the
-    * dedup window from `table`'s committed keys, and commit the sink columns
-    * as `commitId`. Returns the report over every committed row.
+    * over `raw` (`Tables.rawEvents` rows not yet committed, each source's
+    * after its committed ones), continuing each source's run from `table`'s
+    * run ends, and commit the sink columns as `commitId`, recorded as
+    * written by `writer`. Returns the report over every committed row.
     */
-  def commit(spark: SparkSession, table: SinkTable, raw: DataFrame, commitId: Long): DataFrame = {
-    val routed = stages(raw, table.read(spark, DedupKeys))
+  def commit(spark: SparkSession, table: SinkTable, raw: DataFrame, commitId: Long,
+             writer: Writer): DataFrame = {
+    val routed = stages(raw, table.runEnds)
     // quarantined rows keep the WHOLE line as bytes — the reference's raw-log
     // fallback record (Log{kind, log bytes} — src/collector/log.rs:129-149);
     // parsed sinks carry null here (columnar: costs nothing when absent)
@@ -88,8 +98,8 @@ object Pipeline {
       col("ts_raw_ns"), col("ts_ns"), col("level"), col("src_ip"), col("status_code"),
       col("vendor"), col("log_type"), col("version"), col("bytes"),
       when(col("sink") === Route.Quarantine, encode(col("raw_line"), "UTF-8")).as("raw_log"),
-      col("parse_ok"), col("sink"))
-    table.commit(slim, commitId)
+      col("parse_ok"), col("sink"), col(Dedup.RunEndCol))
+    table.commit(slim, commitId, writer)
     Report.fromManifests(spark, table.manifests)
   }
 }

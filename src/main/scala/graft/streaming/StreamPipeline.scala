@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.plans.Pipeline
-import graft.table.SinkTable
+import graft.table.{SinkTable, Writer}
 
 /** Structured Streaming form of the pipeline — the Spark-native
   * re-expression of the reference's polling-tail collect loop
@@ -21,17 +21,22 @@ import graft.table.SinkTable
   * batch pipeline's own commit step, with the batch id as the commit id: the
   * same parse → ts-dedup → enrich → route stages, the same sink columns and
   * the same manifest, so one table may hold streamed and batch commits. A
-  * replayed batch (post-crash) finds its manifest already published and
-  * skips the write — exactly-once sink contents on top of the source's
-  * at-least-once replay, mirroring the reference's "position advances only
-  * after the batch is acked" (src/collector/zeek.rs:92-94,155-161).
+  * replayed batch (post-crash) finds its manifest already published by the
+  * stream and skips the write — exactly-once sink contents on top of the
+  * source's at-least-once replay, mirroring the reference's "position
+  * advances only after the batch is acked" (src/collector/zeek.rs:92-94,155-161).
+  * A batch id that a `Pipeline.run` took fails the query, naming the
+  * manifest: that batch is no replay, and skipping it would lose its rows.
+  * Commit ids rise (`SinkTable.commit`), so a batch id below a
+  * `Pipeline.run`'s id fails too, naming the last manifest.
   *
   * The resume state is the source checkpoint plus that replay skip; a
-  * micro-batch is not filtered by `line_no`. The ts-dedup window continues
-  * the committed rows' equal-ts groups, so a streamed table equals one
-  * [[graft.plans.Pipeline.run]] over the same lines when, in every
-  * `(source, ts)` group, each micro-batch's lines come after the committed
-  * ones. A tailing log meets this: its files arrive in line order.
+  * micro-batch is not filtered by `line_no`. The ts dedup continues each
+  * source's last equal-ts run from the run ends the last manifest recorded,
+  * so a streamed table equals one [[graft.plans.Pipeline.run]] over the same
+  * lines when, for every source, each micro-batch's lines of it come after
+  * its committed ones. A tailing log meets this: its files arrive in line
+  * order.
   */
 object StreamPipeline {
 
@@ -55,14 +60,17 @@ object StreamPipeline {
       .parquet(inDir)
 
   /** Drain the files available in `inDir`, committing each micro-batch to
-    * the table at `outBase` unless its id is already committed.
+    * the table at `outBase` unless the stream already committed its id.
     */
   def run(spark: SparkSession, inDir: String, outBase: String,
           checkpointDir: String): StreamingQuery = {
     val writeBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       val table = new SinkTable(outBase)
-      if (!table.manifests.exists(_.commitId == batchId)) {
-        Pipeline.commit(batch.sparkSession, table, batch, batchId)
+      table.manifests.find(_.commitId == batchId) match {
+        case None => Pipeline.commit(batch.sparkSession, table, batch, batchId, Writer.Stream)
+        case Some(m) => require(m.writer == Writer.Stream,
+          s"${table.manifestPath(batchId)}: commit $batchId was written by a ${m.writer.name} run, " +
+            s"so micro-batch $batchId is no replay of it and cannot commit")
       }
       ()
     }

@@ -42,14 +42,27 @@ class ContractSpec extends SparkSpec {
     // ubuntu (p17) or vforce (v05) timestamps the oracles pin
     Seq("p17_parse_ubuntu", "v05_parse_vforce").foreach { name =>
       val q = SparkEntry.queries(name)
-      // collected, not checkpointed: running a query unpersists the
-      // session's checkpoints; Seq.diff is exceptAll on the rows
+      // Seq.diff is exceptAll on the rows
       val plain = q(spark, Sf).collect().toSeq
       val withConf = withConfs("graft.syslog.pinYear" -> "2024")(q(spark, Sf).collect().toSeq)
       assert(plain.nonEmpty, s"$name returned no rows")
       assert(plain.diff(withConf).isEmpty && withConf.diff(plain).isEmpty,
         s"$name changed under graft.syslog.pinYear")
     }
+  }
+
+  test("a caller's checkpointed frame survives a registry query's build and run") {
+    def persistent = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val mine = spark.range(1000).selectExpr("id % 7 AS k").localCheckpoint(true)
+    val before = persistent
+    SparkEntry.queries("d22_allpairs")(spark, Sf).collect()
+    val built = persistent -- before
+    assert(built.nonEmpty, "d22 checkpoints while it builds")
+    assert(mine.count() === 1000L)
+    // the next query's prep drops what d22 built, and only that
+    SparkEntry.queries("p10_serial")(spark, Sf).collect()
+    assert((persistent intersect built).isEmpty)
+    assert(mine.groupBy("k").count().count() === 7L)
   }
 
   test("t04 runs in a fresh session and registers no SQL function there") {

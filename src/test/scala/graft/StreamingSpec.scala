@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.plans.Pipeline
 import graft.sources.Tables
 import graft.streaming.StreamPipeline
-import graft.table.SinkTable
+import graft.table.{SinkTable, Writer}
 
 /** Streaming pipeline: file-source polling analog, exactly-once fan-out via
   * per-batch manifest commits through the batch pipeline's commit step, and
@@ -57,7 +57,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   /** PipelineSpec's two-lap input: the second lap repeats the first's docs
-    * 7000 ids on, so its equal-ts groups straddle the slices.
+    * 7000 ids on, so its timestamps recur across the slices.
     */
   private val Slices = Seq((0L, 170L, 0L), (170L, 340L, 0L), (340L, 500L, 0L),
     (0L, 250L, 7000L), (250L, 500L, 7000L))
@@ -110,6 +110,26 @@ class StreamingSpec extends SparkSpec {
     assert(t.manifests.map(_.commitId) === Seq(0L, 1L, 2L, 3L))
     assert(t.read(spark).count() === 1000L)
     assertSameRows(t.read(spark), new SinkTable(one).read(spark))
+  }
+
+  test("a micro-batch whose id a batch commit took fails loudly, naming the manifest") {
+    val docs = tmp("graft-stream-docs"); val in = tmp("graft-stream-in")
+    val out = tmp("graft-stream-out"); val cp = tmp("graft-stream-cp")
+    Slices.take(3).foreach { s =>
+      grow(docs, in, s)
+      StreamPipeline.run(spark, in, out, cp).awaitTermination()
+    }
+    Pipeline.run(spark, docs, out, 3L) // an empty delta, committed as id 3
+    grow(docs, in, Slices(3)) // the stream's next batch is 3
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      StreamPipeline.run(spark, in, out, cp).awaitTermination())
+    val manifest3 = java.nio.file.Paths.get(out, "_manifests", "000000000003.json").toString
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    assert(causes.exists(m => m != null && m.contains(manifest3) && m.contains("batch run")), causes)
+    val t = new SinkTable(out)
+    assert(t.manifests.map(m => (m.commitId, m.writer)) ===
+      Seq(0L, 1L, 2L).map(_ -> Writer.Stream) :+ (3L -> Writer.Batch))
+    assert(t.read(spark).count() === 500L)
   }
 
   test("checkpoint resume: restart picks up only new files, no dupes/gaps") {
