@@ -27,7 +27,8 @@ import graft.sources.Tables
   * ids rise: a commit's id must exceed every committed one, so a committed
   * id is never written again and the last manifest by id is the newest. A
   * table lists its manifests once, at open, and answers from that listing
-  * plus its own commits/rollbacks.
+  * plus its own commits/rollbacks; it commits only while that listing is
+  * the disk's.
   *
   * A manifest (v3) holds the commit's row count, its max `line_no` (the
   * resume point), the data's schema, one report partial per sink
@@ -112,16 +113,25 @@ final class SinkTable(base: String) {
   /** Write the data, THEN the manifest (the commit point). `commitId` must
     * exceed every committed id, so the last manifest by id is the newest
     * and holds the table's run ends; an id at or below it fails, naming the
-    * last manifest, before any data is written. df must carry `line_no`,
-    * `sink`, `bytes`, `parse_ok` and `Dedup.RunEndCol` (observed, not
-    * written); every row's sink must be one of `Tables.SinkNames`.
+    * last manifest, before any data is written. So does a commit through a
+    * listing that another instance's commit or rollback has made stale:
+    * df was sequenced from this listing's run ends and resume point. df
+    * must carry `line_no`, `sink`, `bytes`, `parse_ok` and
+    * `Dedup.RunEndCol` (observed, not written); every row's sink must be
+    * one of `Tables.SinkNames`.
     */
   def commit(df: DataFrame, commitId: Long, writer: Writer): Manifest = {
-    manifestFiles().lastOption.foreach { last =>
-      require(commitId > last.getFileName.toString.stripSuffix(".json").toLong,
-        s"$last: commit $commitId is not past the last commit; commit ids rise with each commit, " +
+    val last = manifestFiles().lastOption
+    def idOf(p: Path): Long = p.getFileName.toString.stripSuffix(".json").toLong
+    last.foreach { p =>
+      require(commitId > idOf(p),
+        s"$p: commit $commitId is not past the last commit; commit ids rise with each commit, " +
           "and a committed id is never overwritten")
     }
+    require(last.map(idOf) == listed.lastOption.map(_.commitId),
+      s"${last.getOrElse(manDir)}: the last commit on disk is not the last one this table listed " +
+        s"(${listed.lastOption.fold("none")(m => manifestPath(m.commitId).toString)}); " +
+        "reopen the table and sequence anew")
     val dir = commitDir(commitId)
     val obs = Observation()
     val observed = Seq(count(lit(1)).as("rows"),

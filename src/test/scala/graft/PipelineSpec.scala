@@ -105,6 +105,11 @@ class PipelineSpec extends SparkSpec {
     // commit and rollback decide from the disk, not from b's stale listing
     val e = intercept[IllegalArgumentException](b.commit(rows(30L, 40L), 2L, Writer.Batch))
     assert(e.getMessage.contains(manifestName(2L)))
+    // a new id through b's stale listing would carry commit 1's run ends and resume point
+    val stale = intercept[IllegalArgumentException](b.commit(rows(30L, 40L), 3L, Writer.Batch))
+    assert(stale.getMessage.contains(manifestName(2L)) && stale.getMessage.contains("reopen the table"),
+      stale.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(out, "data", "commit=000000000003")), "no data is written")
     b.rollbackLast() // drops commit 2, the last one on disk
     assert(b.manifests.map(_.commitId) === Seq(1L))
     assert(new SinkTable(out).manifests.map(_.commitId) === Seq(1L))
