@@ -2,8 +2,12 @@ package graft
 
 /** Shared DuckDB SQL fragments for the driver's oracle. Each fragment is the
   * exact SQL twin of a Spark derivation in [[graft.sources.Tables]] /
-  * [[graft.operators]] — same integer/string arithmetic, so values match
-  * bit-for-bit. Conventions for engine parity:
+  * [[graft.operators]] / [[graft.ops]] — same integer/string arithmetic, so
+  * values match bit-for-bit. The hash, seeded-draw and sign-bit primitives
+  * are not spelled here: their SQL twins sit beside the Spark forms in
+  * [[graft.ops.Sketches]] (the MinHash fragments below call
+  * `Sketches.permSql`), and the ANN candidate cut's twin is `Ann.cutSql`.
+  * Conventions for engine parity:
   *   - every integer sum is cast to BIGINT (DuckDB sum → HUGEINT),
   *   - counts stay BIGINT (both engines),
   *   - doubles are emitted as round(x·1e6/1e2) BIGINT "cents"/"e6" columns,
@@ -101,13 +105,9 @@ object Oracles {
 
   val ShingCte: String = shingCteOver("documents")
 
-  private val P = 2147483647L
-  def mhA(j: Int): Long = (2654435761L * (j + 1)) % P
-  def mhB(j: Int): Long = (1013904223L * (j + 1)) % P
-
-  /** Minhash m{j} over a list column, SQL side. */
+  /** Minhash m{j} over a list column: twin of DedupOps.minhash. */
   def mhSql(listCol: String, j: Int): String =
-    s"list_min(list_transform($listCol, t -> (${mhA(j)}*cast(t AS bigint) + ${mhB(j)}) % $P))"
+    s"list_min(list_transform($listCol, t -> ${graft.ops.Sketches.permSql(j, "t")}))"
 
   /** Twin of DedupOps.minhashSigRows(k=16) over shingles. */
   val SigCte: String = {
@@ -124,7 +124,7 @@ object Oracles {
     s"sbands AS ($bands)"
   }
 
-  /** Twin of DedupOps.lshCandidatesRows: distinct (doc_a<doc_b) band matches. */
+  /** Twin of DedupOps.bandPairs (lshCandidatesRows): distinct (doc_a<doc_b) band matches. */
   val PairsCte: String =
     """spairs AS (
       |  SELECT DISTINCT a.sid AS doc_a, b.sid AS doc_b

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.sources.Tables
-import graft.ops.{Ann, DedupOps, Multimodal, Retrieval, TextOps}
+import graft.ops.{Ann, DedupOps, Multimodal, Retrieval, Sketches, TextOps}
+import graft.ops.Sketches.{drawSql, hSql, signBitsSql}
 import graft.Oracles._
 import graft.SparkEntry.Q
 
@@ -152,14 +153,7 @@ object QueriesOps {
        |    cast(floor((${skCosSql("q", "c")}) * 1000000) AS bigint) AS ski
        |  FROM sk q JOIN sk c ON c.vec_id <> q.vec_id
        |  WHERE q.vec_id < 10)""".stripMargin,
-    """thr AS (
-      |  SELECT q_id, max(ski) AS thr FROM (
-      |    SELECT q_id, ski,
-      |      sum(n) OVER (PARTITION BY q_id ORDER BY ski DESC
-      |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-      |      sum(n) OVER (PARTITION BY q_id) AS cnt
-      |    FROM (SELECT q_id, ski, count(*) AS n FROM sc GROUP BY 1, 2))
-      |  WHERE cum >= (cnt + 4) // 5 GROUP BY q_id)""".stripMargin,
+    Ann.cutSql("sc", "ski", 5, descending = true),
     """cand AS (
       |  SELECT sc.q_id, sc.c_id FROM sc JOIN thr USING (q_id)
       |  WHERE sc.ski >= thr.thr)""".stripMargin)
@@ -181,6 +175,48 @@ object QueriesOps {
          |      ORDER BY cast(($dot) AS double)/sqrt(cast(($cnorm) AS double)) DESC, cid) AS cr
          |  FROM sk k CROSS JOIN cent c)""".stripMargin)
   }
+
+  /** a06's PQ CTE chain (twin of Ann.pqCodesAndTable): microunit vectors
+    * e6, the 16-entry seeded-draw codebook named `cents` (a07 names it
+    * `pcent`, beside a03's `cent`), per-vector codes, the query ADC table
+    * dtq and the long-form codes cl.
+    */
+  private def pqCtes(cents: String): Seq[String] = {
+    def dist(s: Int): String = (1 to 8).map { d0 =>
+      val d = s * 8 + d0; s"(xi[$d]-ci[$d])*(xi[$d]-ci[$d])"
+    }.mkString(" + ")
+    val codeCols = (0 until 8)
+      .map(s => s"(min((${dist(s)})*100 + cid)) % 100 AS code$s").mkString(", ")
+    val dtArms = (0 until 8).map(s =>
+      s"SELECT vec_id AS q_id, cid, $s AS s, ${dist(s)} AS qd FROM qe6 CROSS JOIN $cents")
+      .mkString("\n  UNION ALL ")
+    val clArms = (0 until 8)
+      .map(s => s"SELECT c_id, $s AS s, code$s AS code FROM codes")
+      .mkString("\n  UNION ALL ")
+    Seq(
+      """e6 AS (SELECT vec_id, list_transform(embedding,
+        |  x -> cast(floor(cast(x AS double)*1000000 + 0.5) AS bigint)) AS xi
+        |FROM embeddings)""".stripMargin,
+      s"""$cents AS (
+         |  SELECT row_number() OVER (ORDER BY
+         |      ${drawSql("vec_id")}, vec_id) AS cid,
+         |    xi AS ci
+         |  FROM e6
+         |  ORDER BY ${drawSql("vec_id")}, vec_id
+         |  LIMIT 16)""".stripMargin,
+      s"codes AS (SELECT vec_id AS c_id, $codeCols FROM e6 CROSS JOIN $cents GROUP BY 1)",
+      "qe6 AS (SELECT vec_id, xi FROM e6 WHERE vec_id < 10)",
+      s"dtq AS ($dtArms)",
+      s"cl AS ($clArms)")
+  }
+
+  /** The ADC candidate cut over a `bkt(q_id, c_id, bk)` CTE (twin of
+    * Ann.bucketCutCandidates).
+    */
+  private def pqCutCtes(den: Int): Seq[String] = Seq(
+    Ann.cutSql("bkt", "bk", den, descending = false),
+    """cand AS (SELECT b.q_id, b.c_id FROM bkt b JOIN thr USING (q_id)
+      |  WHERE b.bk <= thr.thr)""".stripMargin)
 
   /** The k17/k18 BPE recursion CTE chain: capped word vocabulary, initial
     * character symbol frame, then per round the pair count, top-5 output,
@@ -300,16 +336,11 @@ object QueriesOps {
           """capairs AS (SELECT DISTINCT a.sid AS doc_a, b.sid AS doc_b
             |  FROM prefr a JOIN prefr b USING (tok)
             |  WHERE a.sid < b.sid AND a.len*2 >= b.len AND b.len*2 >= a.len)""".stripMargin)(
-          """SELECT doc_a, doc_b, inter, sz_a, sz_b,
-            |  (inter * 1000000) // (sz_a + sz_b - inter) AS jac_e6
-            |FROM (
-            |  SELECT p.doc_a, p.doc_b,
-            |    len(list_intersect(x.stoks, y.stoks)) AS inter,
-            |    len(x.stoks) AS sz_a, len(y.stoks) AS sz_b
-            |  FROM capairs p
-            |  JOIN wind x ON x.sid = p.doc_a
-            |  JOIN wind y ON y.sid = p.doc_b)
-            |WHERE (inter * 1000000) // (sz_a + sz_b - inter) >= 500000""".stripMargin)
+          s"""SELECT doc_a, doc_b, inter, sz_a, sz_b,
+             |  (inter * 1000000) // (sz_a + sz_b - inter) AS jac_e6
+             |FROM (
+             |${DedupOps.intersectSql("capairs", "wind")})
+             |WHERE (inter * 1000000) // (sz_a + sz_b - inter) >= 500000""".stripMargin)
       }),
 
     Q("d04_lsh_jaccard", (s, dir) => {
@@ -330,24 +361,18 @@ object QueriesOps {
       // in the oracle engine. Same result set: only pairs with inter ≥ 1
       // appear (the join twin's inner join dropped inter=0 pairs).
       withCtes(ShingCte, SigCte, BandsCte, PairsCte)(
-        """SELECT doc_a, doc_b, inter, sz_a, sz_b,
-          |  (inter * 1000000) // (sz_a + sz_b - inter) AS jac_e6
-          |FROM (
-          |  SELECT p.doc_a, p.doc_b,
-          |    len(list_intersect(x.stoks, y.stoks)) AS inter,
-          |    len(x.stoks) AS sz_a, len(y.stoks) AS sz_b
-          |  FROM spairs p
-          |  JOIN shingd x ON x.sid = p.doc_a
-          |  JOIN shingd y ON y.sid = p.doc_b)
-          |WHERE inter > 0""".stripMargin)),
+        s"""SELECT doc_a, doc_b, inter, sz_a, sz_b,
+           |  (inter * 1000000) // (sz_a + sz_b - inter) AS jac_e6
+           |FROM (
+           |${DedupOps.intersectSql("spairs", "shingd")})
+           |WHERE inter > 0""".stripMargin)),
 
     Q("d05_simhash", (s, dir) =>
       DedupOps.simhash16(Tables.tokens(s, dir), "doc_id", col("tokens")),
       withCtes(ToksCte)({
         val sums = (0 until 16).map(b =>
           s"sum(CASE WHEN (t >> $b) % 2 = 1 THEN 1 ELSE -1 END) AS s$b").mkString(", ")
-        val hash = (0 until 16).map(b =>
-          s"(CASE WHEN s$b >= 0 THEN ${1L << b} ELSE 0 END)").mkString(" + ")
+        val hash = signBitsSql((0 until 16).map(b => s"s$b"))
         s"""SELECT doc_id, cast($hash AS bigint) AS simhash FROM (
            |  SELECT doc_id, $sums FROM (SELECT doc_id, unnest(tokens) AS t FROM toks) GROUP BY 1)""".stripMargin
       })),
@@ -713,8 +738,7 @@ object QueriesOps {
         .select(col("q_id"), col("c_id"),
           round(col("cos") * 1e6).cast("long").as("cos_e6"), col("rank")),
       {
-        def bucket(t: Int): String = (0 until 8).map(j =>
-          s"(CASE WHEN s${t * 8 + j} >= 0 THEN ${1L << j} ELSE 0 END)").mkString(" + ")
+        def bucket(t: Int): String = signBitsSql((0 until 8).map(j => s"s${t * 8 + j}"))
         val tb = (0 until 4).map(t =>
           s"SELECT vec_id, $t AS tbl, ${bucket(t)} AS bkt FROM sk").mkString("\n  UNION ALL ")
         withCtes(EmbCte, SkCte,
@@ -746,8 +770,7 @@ object QueriesOps {
         .select(col("q_id"), col("c_id"),
           round(col("cos") * 1e6).cast("long").as("cos_e6"), col("rank")),
       {
-        val code = (0 until 32).map(j =>
-          s"(CASE WHEN s$j >= 0 THEN ${1L << j} ELSE 0 END)").mkString(" + ")
+        val code = signBitsSql((0 until 32).map(j => s"s$j"))
         withCtes(EmbCte, SkCte,
           s"cd AS (SELECT vec_id, $code AS code FROM sk)",
           """hp AS (
@@ -755,13 +778,7 @@ object QueriesOps {
             |    bit_count(xor(q.code, c.code)) AS ham
             |  FROM cd q JOIN cd c ON c.vec_id <> q.vec_id
             |  WHERE q.vec_id < 10)""".stripMargin,
-          """thr AS (SELECT q_id, min(ham) AS thr FROM (
-            |    SELECT q_id, ham,
-            |      sum(n) OVER (PARTITION BY q_id ORDER BY ham
-            |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-            |      sum(n) OVER (PARTITION BY q_id) AS cnt
-            |    FROM (SELECT q_id, ham, count(*) AS n FROM hp GROUP BY 1, 2))
-            |  WHERE cum >= (cnt + 4) // 5 GROUP BY q_id)""".stripMargin,
+          Ann.cutSql("hp", "ham", 5, descending = false),
           """cand AS (SELECT q_id, c_id FROM hp JOIN thr USING (q_id)
             |  WHERE ham <= thr)""".stripMargin)(RerankSql)
       }),
@@ -772,48 +789,13 @@ object QueriesOps {
       Ann.pqTopK(emb(s, dir), col("vec_id") < 10, k = 5)
         .select(col("q_id"), col("c_id"),
           round(col("cos") * 1e6).cast("long").as("cos_e6"), col("rank")),
-      {
-        def dist(s: Int): String = (1 to 8).map { d0 =>
-          val d = s * 8 + d0; s"(xi[$d]-ci[$d])*(xi[$d]-ci[$d])"
-        }.mkString(" + ")
-        val codeCols = (0 until 8)
-          .map(s => s"(min((${dist(s)})*100 + cid)) % 100 AS code$s").mkString(", ")
-        val dtArms = (0 until 8).map(s =>
-          s"SELECT vec_id AS q_id, cid, $s AS s, ${dist(s)} AS qd FROM qe6 CROSS JOIN cents")
-          .mkString("\n  UNION ALL ")
-        val clArms = (0 until 8)
-          .map(s => s"SELECT c_id, $s AS s, code$s AS code FROM codes")
-          .mkString("\n  UNION ALL ")
-        withCtes(EmbCte,
-          """e6 AS (SELECT vec_id, list_transform(embedding,
-            |  x -> cast(floor(cast(x AS double)*1000000 + 0.5) AS bigint)) AS xi
-            |FROM embeddings)""".stripMargin,
-          """cents AS (
-            |  SELECT row_number() OVER (ORDER BY
-            |      (vec_id % 1000003) * 2654435761 % 1000003, vec_id) AS cid,
-            |    xi AS ci
-            |  FROM e6
-            |  ORDER BY (vec_id % 1000003) * 2654435761 % 1000003, vec_id
-            |  LIMIT 16)""".stripMargin,
-          s"codes AS (SELECT vec_id AS c_id, $codeCols FROM e6 CROSS JOIN cents GROUP BY 1)",
-          "qe6 AS (SELECT vec_id, xi FROM e6 WHERE vec_id < 10)",
-          s"dtq AS ($dtArms)",
-          s"cl AS ($clArms)",
-          """bkt AS (
-            |  SELECT q_id, c_id, adist // 100000000 AS bk FROM (
-            |    SELECT d.q_id, cl.c_id, cast(sum(d.qd) AS bigint) AS adist
-            |    FROM cl JOIN dtq d ON d.s = cl.s AND d.cid = cl.code
-            |    WHERE cl.c_id <> d.q_id GROUP BY 1, 2))""".stripMargin,
-          """thr AS (SELECT q_id, min(bk) AS thr FROM (
-            |    SELECT q_id, bk,
-            |      sum(n) OVER (PARTITION BY q_id ORDER BY bk
-            |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-            |      sum(n) OVER (PARTITION BY q_id) AS cnt
-            |    FROM (SELECT q_id, bk, count(*) AS n FROM bkt GROUP BY 1, 2))
-            |  WHERE cum >= (cnt + 4) // 5 GROUP BY q_id)""".stripMargin,
-          """cand AS (SELECT b.q_id, b.c_id FROM bkt b JOIN thr USING (q_id)
-            |  WHERE b.bk <= thr.thr)""".stripMargin)(RerankSql)
-      }),
+      withCtes(EmbCte +: pqCtes("cents") :+
+        """bkt AS (
+          |  SELECT q_id, c_id, adist // 100000000 AS bk FROM (
+          |    SELECT d.q_id, cl.c_id, cast(sum(d.qd) AS bigint) AS adist
+          |    FROM cl JOIN dtq d ON d.s = cl.s AND d.cid = cl.code
+          |    WHERE cl.c_id <> d.q_id GROUP BY 1, 2))""".stripMargin :++
+        pqCutCtes(5): _*)(RerankSql)),
 
     // IVF-PQ composition (the billion-vector scale path): coarse cell cut,
     // ADC rank of only the probed cells' 4-byte codes, exact rerank
@@ -824,64 +806,17 @@ object QueriesOps {
       // IVF-PQ twin: the a03 coarse CTEs (cent/asn → ivfc, nProbe=64) feed
       // the a06 ADC CTEs (pcent/codes/dtq/cl), bkt sums qd only over ivfc
       // pairs, den=2 cut, shared exact rerank
-      {
-        def chain(f: Int => String) = (0 until 32).map(f).mkString(" + ")
-        val dot = chain(t => s"k.s$t*c.c$t")
-        val cnorm = chain(t => s"c.c$t*c.c$t")
-        val centCols = (0 until 32).map(t => s"s$t AS c$t").mkString(", ")
-        def dist(s: Int): String = (1 to 8).map { d0 =>
-          val d = s * 8 + d0; s"(xi[$d]-ci[$d])*(xi[$d]-ci[$d])"
-        }.mkString(" + ")
-        val codeCols = (0 until 8)
-          .map(s => s"(min((${dist(s)})*100 + cid)) % 100 AS code$s").mkString(", ")
-        val dtArms = (0 until 8).map(s =>
-          s"SELECT vec_id AS q_id, cid, $s AS s, ${dist(s)} AS qd FROM qe6 CROSS JOIN pcent")
-          .mkString("\n  UNION ALL ")
-        val clArms = (0 until 8)
-          .map(s => s"SELECT c_id, $s AS s, code$s AS code FROM codes")
-          .mkString("\n  UNION ALL ")
-        withCtes(EmbCte, SkCte,
-          s"""cent AS (SELECT vec_id AS cid, $centCols FROM sk
-             |  WHERE vec_id % 13 = 7 ORDER BY vec_id LIMIT 256)""".stripMargin,
-          s"""asn AS (
-             |  SELECT vec_id, cid,
-             |    row_number() OVER (PARTITION BY vec_id
-             |      ORDER BY cast(($dot) AS double)/sqrt(cast(($cnorm) AS double)) DESC, cid) AS cr
-             |  FROM sk k CROSS JOIN cent c)""".stripMargin,
-          """ivfc AS (
-            |  SELECT DISTINCT q.vec_id AS q_id, cc.vec_id AS c_id
-            |  FROM asn q JOIN asn cc ON cc.cid = q.cid AND cc.cr = 1 AND cc.vec_id <> q.vec_id
-            |  WHERE q.vec_id < 10 AND q.cr <= 64)""".stripMargin,
-          """e6 AS (SELECT vec_id, list_transform(embedding,
-            |  x -> cast(floor(cast(x AS double)*1000000 + 0.5) AS bigint)) AS xi
-            |FROM embeddings)""".stripMargin,
-          """pcent AS (
-            |  SELECT row_number() OVER (ORDER BY
-            |      (vec_id % 1000003) * 2654435761 % 1000003, vec_id) AS cid,
-            |    xi AS ci
-            |  FROM e6
-            |  ORDER BY (vec_id % 1000003) * 2654435761 % 1000003, vec_id
-            |  LIMIT 16)""".stripMargin,
-          s"codes AS (SELECT vec_id AS c_id, $codeCols FROM e6 CROSS JOIN pcent GROUP BY 1)",
-          "qe6 AS (SELECT vec_id, xi FROM e6 WHERE vec_id < 10)",
-          s"dtq AS ($dtArms)",
-          s"cl AS ($clArms)",
-          """bkt AS (
-            |  SELECT q_id, c_id, adist // 100000000 AS bk FROM (
-            |    SELECT v.q_id, v.c_id, cast(sum(d.qd) AS bigint) AS adist
-            |    FROM ivfc v JOIN cl ON cl.c_id = v.c_id
-            |    JOIN dtq d ON d.q_id = v.q_id AND d.s = cl.s AND d.cid = cl.code
-            |    GROUP BY 1, 2))""".stripMargin,
-          """thr AS (SELECT q_id, min(bk) AS thr FROM (
-            |    SELECT q_id, bk,
-            |      sum(n) OVER (PARTITION BY q_id ORDER BY bk
-            |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-            |      sum(n) OVER (PARTITION BY q_id) AS cnt
-            |    FROM (SELECT q_id, bk, count(*) AS n FROM bkt GROUP BY 1, 2))
-            |  WHERE cum >= (cnt + 1) // 2 GROUP BY q_id)""".stripMargin,
-          """cand AS (SELECT b.q_id, b.c_id FROM bkt b JOIN thr USING (q_id)
-            |  WHERE b.bk <= thr.thr)""".stripMargin)(RerankSql)
-      }),
+      withCtes((EmbCte +: SkCte +: A03AsnCtes :+
+        """ivfc AS (
+          |  SELECT DISTINCT q.vec_id AS q_id, cc.vec_id AS c_id
+          |  FROM asn q JOIN asn cc ON cc.cid = q.cid AND cc.cr = 1 AND cc.vec_id <> q.vec_id
+          |  WHERE q.vec_id < 10 AND q.cr <= 64)""".stripMargin) ++ pqCtes("pcent") ++
+        ("""bkt AS (
+          |  SELECT q_id, c_id, adist // 100000000 AS bk FROM (
+          |    SELECT v.q_id, v.c_id, cast(sum(d.qd) AS bigint) AS adist
+          |    FROM ivfc v JOIN cl ON cl.c_id = v.c_id
+          |    JOIN dtq d ON d.q_id = v.q_id AND d.s = cl.s AND d.cid = cl.code
+          |    GROUP BY 1, 2))""".stripMargin +: pqCutCtes(2)): _*)(RerankSql)),
 
     // lexical retrieval over the corpus (decontamination-by-search / eval-
     // similar mining): rational-idf BM25, fixed-order term sum, top-k
@@ -1246,13 +1181,13 @@ object QueriesOps {
     // across runs and engines — no sampling RNG), the assignment step of
     // every dataset-curation pipeline
     Q("k05_split", (s, dir) => {
-      val h = col("line_no") % 1000003L * 2654435761L % 1000003L % 97
+      val h = Sketches.draw(col("line_no")) % 97
       Tables.tokens(s, dir)
         .withColumn("split", when(h < 87, lit("train")).otherwise(lit("val")))
         .groupBy("split").agg(count(lit(1)).as("docs"), sum(col("n_tok")).as("sum_tokens"))
     },
       withCtes(ToksCte)(
-        """SELECT CASE WHEN (line_no % 1000003) * 2654435761 % 1000003 % 97 < 87 THEN 'train' ELSE 'val' END AS split,
+        s"""SELECT CASE WHEN ${drawSql("line_no")} % 97 < 87 THEN 'train' ELSE 'val' END AS split,
           |  count(*) AS docs, cast(sum(len(tokens)) AS bigint) AS sum_tokens
           |FROM toks GROUP BY 1""".stripMargin)),
 
@@ -1446,10 +1381,7 @@ object QueriesOps {
         Tables.tokens(s, dir).select(explode(col("tokens")).as("tok")),
         "tok", d = 4, w = 1024, topK = 20),
       {
-        val P = 2147483647L
-        def a(j: Int) = (2654435761L * (j + 1)) % P
-        def b(j: Int) = (1013904223L * (j + 1)) % P
-        def hb(j: Int, v: String) = s"((${a(j)}*($v % $P) + ${b(j)}) % $P) % 1024"
+        def hb(j: Int, v: String) = s"(${hSql(j, v)}) % 1024"
         val cells = (0 until 4).map(j =>
           s"SELECT $j AS r, ${hb(j, "tok")} AS b FROM tv").mkString("\n  UNION ALL ")
         val probes = (0 until 4).map(j =>
@@ -1473,14 +1405,12 @@ object QueriesOps {
         Tables.tokens(s, dir).select(col("source"), explode(col("tokens")).as("tok")),
         "source", "tok", m = 64),
       {
-        val P = 2147483647L
-        val (a0, b0) = ((2654435761L % P), (1013904223L % P))
         val alphaM2 = (0.7213 / (1.0 + 1.079 / 64)) * 64 * 64
         val rank = (24 to 1 by -1).map(k =>
           s"WHEN body % ${1L << k} = 0 THEN ${k + 1}").mkString(" ")
         withCtes(ToksCte,
           "tv AS (SELECT source, cast(unnest(tokens) AS bigint) AS tok FROM toks)",
-          s"hv AS (SELECT source, ($a0*(tok % $P) + $b0) % $P AS hv FROM tv)",
+          s"hv AS (SELECT source, ${hSql(0, "tok")} AS hv FROM tv)",
           s"""rg AS (SELECT source, hv % 64 AS reg,
              |  CASE $rank ELSE 1 END AS rho
              |  FROM (SELECT source, hv, hv // 64 AS body FROM hv))""".stripMargin,
@@ -1508,17 +1438,15 @@ object QueriesOps {
       // s05 twin: same h(0, ·) hash as s03, plain per-source rank (the salted
       // two-level rank is a pure execution-shape choice — same k smallest)
       {
-        val P = 2147483647L
-        val (a0, b0) = (2654435761L % P, 1013904223L % P)
         withCtes(ToksCte,
           "tv AS (SELECT source, cast(unnest(tokens) AS bigint) AS tok FROM toks)",
-          s"hv AS (SELECT DISTINCT source, ($a0*(tok % $P) + $b0) % $P AS hv FROM tv)",
+          s"hv AS (SELECT DISTINCT source, ${hSql(0, "tok")} AS hv FROM tv)",
           """rk AS (SELECT source, hv,
             |  row_number() OVER (PARTITION BY source ORDER BY hv) AS rn FROM hv)""".stripMargin,
           """sk AS (SELECT source, max(CASE WHEN rn = 64 THEN hv END) AS kth,
             |  count(*) AS nk FROM rk WHERE rn <= 64 GROUP BY 1)""".stripMargin)(
           s"""SELECT s.source,
-             |  cast(CASE WHEN nk < 64 THEN nk ELSE ${63L * P} // kth END AS bigint) AS kmv_est,
+             |  cast(CASE WHEN nk < 64 THEN nk ELSE ${63L * Sketches.P} // kth END AS bigint) AS kmv_est,
              |  x.exact
              |FROM sk s
              |JOIN (SELECT source, count(DISTINCT tok) AS exact FROM tv GROUP BY 1) x USING (source)""".stripMargin)
@@ -1534,11 +1462,8 @@ object QueriesOps {
         shingleRows(s, dir).localCheckpoint(true), col("sid") % 89 === 7,
         m = 1 << 20, k = 3, minHits = 60),
       {
-        val P = 2147483647L
-        def a(j: Int) = (2654435761L * (j + 1)) % P
-        def b(j: Int) = (1013904223L * (j + 1)) % P
         // identical position arithmetic to Sketches.h(j, tok) % 2^20
-        def p(j: Int, v: String) = s"((${a(j)}*(cast($v AS bigint) % $P) + ${b(j)}) % $P) % ${1 << 20}"
+        def p(j: Int, v: String) = s"(${hSql(j, s"cast($v AS bigint)")}) % ${1 << 20}"
         val evPos = (0 until 3).map(j => s"SELECT ${p(j, "g")} AS p FROM evs").mkString(" UNION ALL ")
         val prPos = (0 until 3).map(j =>
           s"SELECT sid, g, $j AS j, ${p(j, "g")} AS p FROM trs").mkString(" UNION ALL ")
@@ -1579,7 +1504,7 @@ object QueriesOps {
          |  FROM fullagg LEFT JOIN boundary ON true)
          |SELECT did, quality, n_tok FROM base CROSS JOIN cut
          |WHERE (qstar IS NOT NULL AND quality >= qstar)
-         |   OR (quality = bq AND (did % 1000003) * 2654435761 % 1000003 % 1000000 < rate_e6)""".stripMargin),
+         |   OR (quality = bq AND ${drawSql("did")} % 1000000 < rate_e6)""".stripMargin),
 
     // length-grouped batch assembly: global (n_tok, doc_id) rank via the
     // distributed prefix-sum (range partition + per-partition counts — no
@@ -1618,9 +1543,9 @@ object QueriesOps {
     // deterministic domain-mix resampling by per-source target rates
     Q("k06_domain_mix", (s, dir) =>
       graft.ops.CurationOps.domainMixSample(docs(s, dir)),
-      """SELECT doc_id AS did, source FROM documents
-        |WHERE (doc_id % 1000003) * 2654435761 % 1000003 % 1000
-        |      < ((cast(substr(source, 4) AS int) % 4) + 1) * 250""".stripMargin),
+      s"""SELECT doc_id AS did, source FROM documents
+         |WHERE ${drawSql("doc_id")} % 1000
+         |      < ((cast(substr(source, 4) AS int) % 4) + 1) * 250""".stripMargin),
 
     // temperature-scaled mixture weights (w_i ∝ n_i^(1/2)): per-domain
     // sampling ppm, one-corpus token budget, and epoch factor — all int64
@@ -1828,18 +1753,13 @@ object QueriesOps {
           |  SELECT DISTINCT a.sid AS doc_a, b.sid AS doc_b
           |  FROM sbands a JOIN sbands b USING (band_idx, band_key)
           |  WHERE a.sid % 5 <> 0 AND b.sid % 5 = 0)""".stripMargin)(
-        """SELECT doc_a AS index_id, doc_b AS delta_id, inter,
-          |  sz_a AS sz_index, sz_b AS sz_delta,
-          |  (inter * 1000000) // (sz_a + sz_b - inter) AS jac_e6
-          |FROM (
-          |  SELECT p.doc_a, p.doc_b,
-          |    len(list_intersect(x.stoks, y.stoks)) AS inter,
-          |    len(x.stoks) AS sz_a, len(y.stoks) AS sz_b
-          |  FROM ipairs p
-          |  JOIN shingd x ON x.sid = p.doc_a
-          |  JOIN shingd y ON y.sid = p.doc_b)
-          |WHERE inter > 0
-          |  AND (inter * 1000000) // (sz_a + sz_b - inter) >= 300000""".stripMargin)),
+        s"""SELECT doc_a AS index_id, doc_b AS delta_id, inter,
+           |  sz_a AS sz_index, sz_b AS sz_delta,
+           |  (inter * 1000000) // (sz_a + sz_b - inter) AS jac_e6
+           |FROM (
+           |${DedupOps.intersectSql("ipairs", "shingd")})
+           |WHERE inter > 0
+           |  AND (inter * 1000000) // (sz_a + sz_b - inter) >= 300000""".stripMargin)),
 
     // exact-substring-dedup interval step (Lee et al. 2022): shared 20-char
     // window positions merged into maximal character spans per doc
@@ -1936,13 +1856,13 @@ object QueriesOps {
     // salted two-level rank — sources are the archetypal hot window key
     Q("k13_strat_sample", (s, dir) =>
       graft.ops.CurationOps.stratifiedSample(docs(s, dir), k = 20),
-      """SELECT source, did, draw, rank FROM (
-        |  SELECT source, doc_id AS did,
-        |    (doc_id % 1000003) * 2654435761 % 1000003 AS draw,
-        |    cast(row_number() OVER (PARTITION BY source
-        |      ORDER BY (doc_id % 1000003) * 2654435761 % 1000003, doc_id) AS int) AS rank
-        |  FROM documents)
-        |WHERE rank <= 20""".stripMargin),
+      s"""SELECT source, did, draw, rank FROM (
+         |  SELECT source, doc_id AS did,
+         |    ${drawSql("doc_id")} AS draw,
+         |    cast(row_number() OVER (PARTITION BY source
+         |      ORDER BY ${drawSql("doc_id")}, doc_id) AS int) AS rank
+         |  FROM documents)
+         |WHERE rank <= 20""".stripMargin),
 
     // DSIR-style target-domain selection: hashed 8-gram features, target
     // model = the 'en' slice, top-100 raw docs by the ln-free
@@ -2008,14 +1928,14 @@ object QueriesOps {
     // deterministic training-order shuffle (sorted-bucket-writer layout)
     Q("k09_train_order", (s, dir) =>
       graft.ops.CurationOps.trainOrder(docs(s, dir), nBuckets = 256),
-      """WITH kd AS (
-        |  SELECT doc_id, (doc_id % 1000003) * 2654435761 % 1000003 AS key,
-        |         (doc_id % 1000003) * 2654435761 % 1000003 % 256 AS bucket
-        |  FROM documents)
-        |SELECT doc_id, bucket,
-        |  cast(row_number() OVER (PARTITION BY bucket ORDER BY key, doc_id) AS int) AS ord,
-        |  key
-        |FROM kd""".stripMargin),
+      s"""WITH kd AS (
+         |  SELECT doc_id, ${drawSql("doc_id")} AS key,
+         |         ${drawSql("doc_id")} % 256 AS bucket
+         |  FROM documents)
+         |SELECT doc_id, bucket,
+         |  cast(row_number() OVER (PARTITION BY bucket ORDER BY key, doc_id) AS int) AS ord,
+         |  key
+         |FROM kd""".stripMargin),
 
     // contrastive-pair mining for embedding training: anchor + top-1
     // cosine positive + 4 deterministic hash-drawn negatives (j indexes the

@@ -12,22 +12,32 @@ import org.apache.spark.sql.SparkSession
   * that takes the master from spark-submit instead.
   */
 object Sessions {
+
+  /** Runtime SQL confs the plans assume: non-ANSI casts (a malformed field
+    * becomes NULL, as the reference drops and counts bad records) and a 64 MB
+    * broadcast threshold (small model/frequency tables broadcast). [[local]]
+    * builds with them; `SparkEntry.prep` re-sets them on a session built
+    * elsewhere (the Bench/Verify drivers').
+    */
+  private[graft] val RuntimeConfs: Seq[(String, String)] = Seq(
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.autoBroadcastJoinThreshold" -> (64L << 20).toString)
+
   def local(cpus: Int, appName: String): SparkSession = {
-    val spark = SparkSession
+    val builder = SparkSession
       .builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .getOrCreate()
+    RuntimeConfs.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -23,18 +23,13 @@ object SparkEntry {
   final case class Q(name: String, run: QFn, oracle: String)
 
   private def prep(spark: SparkSession): SparkSession = {
-    // non-ANSI: malformed field → NULL (the reference drops-and-counts bad
-    // records, never aborts — /root/reference/src/collector/zeek.rs:118-139)
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    // the AQE partition-coalescing floor stays at Spark's 1 MB default: a
-    // 64 KB global floor was measured +30 s across the 212-query bench
-    // (every modest shuffle pays extra task scheduling); the operators with
+    // the driver-created bench/verify session gets the confs Sessions.local
+    // builds with, so it plans what the dev sessions plan. The AQE
+    // partition-coalescing floor stays at Spark's 1 MB default: a 64 KB
+    // global floor was measured +30 s across the 212-query bench (every
+    // modest shuffle pays extra task scheduling); the operators with
     // byte-SMALL, compute-DENSE stages pin their own parallelism locally.
-    // Match the engine's own Sessions.local broadcast threshold (64 MB) so
-    // the driver-created bench/verify session plans the same joins the dev
-    // sessions plan (guide §3.1: broadcast the side that fits — estimates
-    // at the 10 MB default flip small model/frequency tables to shuffles)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
+    Sessions.RuntimeConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     // drop the PREVIOUS registry query's localCheckpoint blocks before this
     // one runs: eager checkpoints otherwise accumulate across a whole-registry
     // session until the driver happens to GC the RDD handles, saturating

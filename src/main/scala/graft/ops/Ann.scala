@@ -127,7 +127,7 @@ object Ann {
   /** The a01 exact top-k and the a04 sketch-rerank top-k of the same
     * queries, both from ONE checkpointed Q×N frame carrying the exact
     * `cos` and the sketch `ski` ([[scoredPairs]]): the exact arm ranks it
-    * directly, the sketch arm applies [[sketchCut]] and takes its
+    * directly, the sketch arm applies [[candidateCut]] and takes its
     * candidates' `cos` from the same rows — no second pair build, no
     * embedding re-join for the rerank. Row for row equal to
     * `(bruteForceTopK, sketchRerankTopK)`.
@@ -136,7 +136,8 @@ object Ann {
     val scored = scoredPairs(emb, queryFilter, SketchKProj).localCheckpoint(true)
     val exact = topKPerQuery(scored.select("q_id", "c_id", "cos"), k)
     val apx = topKPerQuery(
-      sketchCut(scored.where(col("has_sk")), SketchCandDiv).select("q_id", "c_id", "cos"), k)
+      candidateCut(scored.where(col("has_sk")), "ski", SketchCandDiv, descending = true)
+        .select("q_id", "c_id", "cos"), k)
     (exact, apx)
   }
 
@@ -231,34 +232,57 @@ object Ann {
         sketchScore(col("qsk"), col("qn"), col("csk"), col("cn")).as("ski"))
   }
 
-  /** The per-query candidate cut over scored rows (q_id, ski, …): every row
-    * whose sketch score clears the query's threshold, all columns kept.
+  /** The per-query candidate cut over scored rows (q_id, `key`, …): the
+    * best ceil(cnt/den) rows of each query by the integer `key` — the
+    * largest keys when `descending`, else the smallest — plus every row
+    * tied with the threshold key, all columns kept. Ties are all kept
+    * (candidates may slightly exceed cnt/den — recall can only improve,
+    * and both engines keep the identical set, so the oracle stays exact).
     *
     * The cut is derived WITHOUT ranking the corpus per query (a
     * `Window.partitionBy(q_id)` rank over the Q×N scored rows would sort
-    * the whole corpus in one task per query): sketch cosines are quantized
-    * to integer micro-units (floor(x·1e6) — bit-identical doubles in both
-    * engines, so the quantization is too), pass 1 builds a per-(q_id,
-    * bucket) histogram — a map-side-combined aggregate whose per-query size
-    * is bounded by the 2·1e6+1 bucket range REGARDLESS of corpus size —
-    * and the threshold bucket (largest bucket at which the descending
-    * cumulative count reaches ceil(cnt/candDiv)) falls out of a window over
-    * that bounded histogram. Pass 2 re-scans the scored rows and keeps
-    * ski ≥ threshold; boundary-bucket ties are all kept (candidates may
-    * slightly exceed cnt/candDiv — recall can only improve, and both
-    * engines keep the identical set, so the oracle stays exact). Both
-    * passes read `scored`, so the caller materializes it once.
+    * the whole corpus in one task per query): pass 1 builds a per-(q_id,
+    * key) histogram — a map-side-combined aggregate whose per-query size is
+    * bounded by the key's value range REGARDLESS of corpus size — and the
+    * threshold key (the first at which the cumulative count in cut order
+    * reaches ceil(cnt/den), integer (cnt+den−1) div den in both engines)
+    * falls out of a window over that bounded histogram. Pass 2 re-scans the
+    * scored rows and keeps the keys up to the threshold. Both passes read
+    * `scored`, so the caller materializes it once. SQL twin: [[cutSql]].
+    *
+    * Callers: the a04/i09 sketch cut (floor(sketch cosine·1e6), descending,
+    * ≤ 2·1e6+1 buckets), the a05 Hamming cut (ascending, ≤ bits+1 values)
+    * and the a06/a07 ADC cut (bucketed distance, ascending).
     */
-  private def sketchCut(scored: DataFrame, candDiv: Int): DataFrame = {
-    val hist = scored.groupBy("q_id", "ski").agg(count(lit(1)).as("n"))
-    val wCum = Window.partitionBy(col("q_id")).orderBy(col("ski").desc)
+  private[graft] def candidateCut(scored: DataFrame, key: String, den: Int,
+                                  descending: Boolean): DataFrame = {
+    val k = col(key)
+    val hist = scored.groupBy("q_id", key).agg(count(lit(1)).as("n"))
+    val wCum = Window.partitionBy(col("q_id")).orderBy(if (descending) k.desc else k)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val thr = hist
       .withColumn("cum", sum(col("n")).over(wCum))
       .withColumn("cnt", sum(col("n")).over(Window.partitionBy(col("q_id"))))
-      .where(col("cum") >= expr(s"(cnt + ${candDiv - 1}) div $candDiv"))
-      .groupBy("q_id").agg(max(col("ski")).as("thr"))
-    scored.join(thr, "q_id").where(col("ski") >= col("thr")).drop("thr")
+      .where(col("cum") >= expr(s"(cnt + ${den - 1}) div $den"))
+      .groupBy("q_id").agg((if (descending) max(k) else min(k)).as("thr"))
+    scored.join(thr, "q_id")
+      .where(if (descending) k >= col("thr") else k <= col("thr")).drop("thr")
+  }
+
+  /** SQL twin of [[candidateCut]]'s threshold: the `thr(q_id, thr)` CTE over
+    * the scored relation `from`. The oracles spell the descending form's
+    * first line apart from the ascending one's; the builder keeps each.
+    */
+  private[graft] def cutSql(from: String, key: String, den: Int, descending: Boolean): String = {
+    val (open, agg, dir) = if (descending) ("\n  ", "max", " DESC") else ("", "min", "")
+    s"thr AS ($open" +
+      s"""SELECT q_id, $agg($key) AS thr FROM (
+         |    SELECT q_id, $key,
+         |      sum(n) OVER (PARTITION BY q_id ORDER BY $key$dir
+         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+         |      sum(n) OVER (PARTITION BY q_id) AS cnt
+         |    FROM (SELECT q_id, $key, count(*) AS n FROM $from GROUP BY 1, 2))
+         |  WHERE cum >= (cnt + ${den - 1}) // $den GROUP BY q_id)""".stripMargin
   }
 
   /** Width of the shared integer projection sketch: the sketch-rerank
@@ -273,7 +297,7 @@ object Ann {
   private val SketchCandDiv = 5
 
   /** Compressed-scan + exact-rerank top-k: keep every candidate whose
-    * sketch cosine clears the per-query cut ([[sketchCut]]), exact-cosine
+    * sketch cosine clears the per-query cut ([[candidateCut]]), exact-cosine
     * only those.
     */
   def sketchRerankTopK(emb: DataFrame, queryFilter: Column, k: Int): DataFrame = {
@@ -282,7 +306,8 @@ object Ann {
     // twice per query batch (at cluster scale: persist to the shuffle
     // service / a scratch table instead of local disk)
     val scored = sketchPairs(sketchFrame(emb, SketchKProj), queryFilter).localCheckpoint(true)
-    rerankExact(emb, sketchCut(scored, SketchCandDiv).select("q_id", "c_id"), k)
+    val cand = candidateCut(scored, "ski", SketchCandDiv, descending = true)
+    rerankExact(emb, cand.select("q_id", "c_id"), k)
   }
 
   /** Exact-cosine rerank of (q_id, c_id) candidate pairs → top-k per query
@@ -317,9 +342,7 @@ object Ann {
                         probeRadius: Int = 2): DataFrame = {
     val (tables, bits) = (LshTables, LshBits)
     val sk = sketches(emb, tables * bits)
-    def bucket(t: Int): Column =
-      (0 until bits).map(j => when(col(s"s${t * bits + j}") >= 0, lit(1L << j)).otherwise(0L))
-        .reduce(_ + _)
+    def bucket(t: Int): Column = Sketches.signBits((0 until bits).map(j => col(s"s${t * bits + j}")))
     val tb = sk.select(col("vec_id"),
       explode(array((0 until tables).map(t =>
         struct(lit(t).as("tbl"), bucket(t).as("bkt"))): _*)).as("b"))
@@ -356,9 +379,8 @@ object Ann {
   def hammingRerankTopK(emb: DataFrame, queryFilter: Column, k: Int): DataFrame = {
     val (bits, den) = (HammingBits, HammingDen)
     val sk = sketches(emb, bits)
-    val code = (0 until bits)
-      .map(j => when(col(s"s$j") >= 0, lit(1L << j)).otherwise(0L)).reduce(_ + _)
-    val codes = sk.select(col("vec_id"), code.as("code"))
+    val codes = sk.select(col("vec_id"),
+      Sketches.signBits((0 until bits).map(j => col(s"s$j"))).as("code"))
     val q = codes.join(emb.where(queryFilter).select(col("vec_id")), "vec_id")
       .select(col("vec_id").as("q_id"), col("code").as("qc"))
     // the Hamming scan feeds BOTH the threshold histogram and the candidate
@@ -368,25 +390,13 @@ object Ann {
       .select(col("q_id"), col("c_id"),
         bit_count(col("cc").bitwiseXOR(col("qc"))).as("ham"))
       .localCheckpoint(true)
-    // bounded per-query histogram → integer ceil cut (same (cnt+den-1) div
-    // den arithmetic as a04 — exact in both engines, no double fractions)
-    val hist = scored.groupBy("q_id", "ham").agg(count(lit(1)).as("n"))
-    val wCum = Window.partitionBy("q_id").orderBy("ham")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val thr = hist
-      .withColumn("cum", sum("n").over(wCum))
-      .withColumn("cnt", sum("n").over(Window.partitionBy("q_id")))
-      .where(col("cum") >= expr(s"(cnt + ${den - 1}) div $den"))
-      .groupBy("q_id").agg(min("ham").as("thr"))
-    val cand = scored.join(thr, "q_id").where(col("ham") <= col("thr"))
-      .select("q_id", "c_id")
+    val cand = candidateCut(scored, "ham", den, descending = false).select("q_id", "c_id")
     rerankExact(emb, cand, k)
   }
 
   /** Code bits and candidate divisor of [[hammingRerankTopK]]. */
   private val HammingBits = 32
   private val HammingDen = 5
-  require(HammingBits <= 63, "codes pack into one long")
 
   /** Product-quantization ANN (Jégou et al. 2011): the 64-d vector splits
     * into m contiguous subspaces; each sub-vector is coded as its nearest
@@ -448,9 +458,8 @@ object Ann {
       floor(element_at(col("embedding"), d).cast("double") * 1e6 + lit(0.5))
         .cast("long").as(s"x$d"))
     val base = emb.select(col("vec_id") +: e6cols: _*).localCheckpoint(true)
-    val draw = col("vec_id") % lit(1000003L) * lit(2654435761L) % lit(1000003L)
     val wSeed = Window.orderBy(col("__d"), col("vec_id")) // kCent rows only
-    val cents = base.withColumn("__d", draw)
+    val cents = base.withColumn("__d", Sketches.draw(col("vec_id")))
       .orderBy(col("__d"), col("vec_id")).limit(kCent)
       .withColumn("cid", row_number().over(wSeed))
       .select(col("cid") +: (1 to dims).map(d => col(s"x$d").as(s"c$d")): _*)
@@ -478,24 +487,16 @@ object Ann {
     (codesLong, dt)
   }
 
-  /** Bounded bucket histogram → integer ceil cut over ADC distances (the
-    * a04/a05 arithmetic): keep the top 1/den fraction by bucketed distance
-    * asc. Bucket count is bounded by the value range, never the corpus.
+  /** The ADC candidate cut: the top 1/den fraction by bucketed distance
+    * asc ([[candidateCut]]). Bucket count is bounded by the value range,
+    * never the corpus.
     */
   private def bucketCutCandidates(adist: DataFrame, den: Int): DataFrame = {
     // the ADC frame feeds BOTH the histogram and the candidate join —
     // unmaterialized, its whole upstream (code join + coarse stage in the
     // IVF-PQ case) would execute twice (the a04/t08 branch-recompute trap)
     val b = adist.withColumn("bk", expr(s"adist div $PqBucket")).localCheckpoint(true)
-    val wCum = Window.partitionBy("q_id").orderBy("bk")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val thr = b.groupBy("q_id", "bk").agg(count(lit(1)).as("n"))
-      .withColumn("cum", sum("n").over(wCum))
-      .withColumn("cnt", sum("n").over(Window.partitionBy("q_id")))
-      .where(col("cum") >= expr(s"(cnt + ${den - 1}) div $den"))
-      .groupBy("q_id").agg(min("bk").as("thr"))
-    b.join(thr, "q_id").where(col("bk") <= col("thr"))
-      .select("q_id", "c_id")
+    candidateCut(b, "bk", den, descending = false).select("q_id", "c_id")
   }
 
   /** Lloyd k-means in sketch space — the clustering stage of semantic

@@ -144,17 +144,14 @@ object CurationOps {
   }
 
   /** Deterministic domain-mix resampling: keep each document with a
-    * per-source target rate, decided by a multiplicative-hash draw on
-    * doc_id (no RNG — reproducible across runs, engines, and cluster
-    * sizes; the same construction as the train/val split). Source s gets
+    * per-source target rate, decided by the seeded draw on doc_id
+    * ([[Sketches.draw]]: no RNG — reproducible across runs, engines, and
+    * cluster sizes; the same construction as the train/val split). Source s gets
     * rate ((s mod 4)+1)/4 here; in production the rates are the mixture
     * weights of the data recipe.
     */
   def domainMixSample(docs: DataFrame): DataFrame = {
-    // reduce the id into the modulus BEFORE multiplying: id·A overflows
-    // int64 once ids pass ~3.4e9 (silent wrap here, runtime error in the
-    // SQL twin) — (id mod M)·A stays ≤ 2.7e15 for any id
-    val draw = col("doc_id") % lit(1000003L) * lit(2654435761L) % lit(1000003L) % lit(1000L)
+    val draw = Sketches.draw(col("doc_id")) % lit(1000L)
     val rate = (expr("cast(substr(source, 4) AS int)") % 4 + 1) * lit(250L)
     docs.where(draw < rate).select(col("doc_id").as("did"), col("source"))
   }
@@ -574,8 +571,7 @@ object CurationOps {
     * — identical output, bounded final window.
     */
   def stratifiedSample(docs: DataFrame, k: Int): DataFrame = {
-    val draw = col("doc_id") % lit(1000003L) * lit(2654435761L) % lit(1000003L)
-    val base = docs.select(col("source"), col("doc_id"), draw.as("__d"))
+    val base = docs.select(col("source"), col("doc_id"), Sketches.draw(col("doc_id")).as("__d"))
     Ann.saltedTopK(base, col("source"), col("doc_id"), Seq(col("__d"), col("doc_id")), k)
       .select(col("source"), col("doc_id").as("did"), col("__d").as("draw"), col("rank"))
   }
@@ -620,9 +616,8 @@ object CurationOps {
     * across runs, engines, and cluster sizes, unlike RNG-based shuffles.
     */
   def trainOrder(docs: DataFrame, nBuckets: Int): DataFrame = {
-    // (id mod M)·A, not id·A — overflow-safe for unbounded ids (see
-    // domainMixSample); ties across the 1e6 key space break on doc_id
-    val key = col("doc_id") % lit(1000003L) * lit(2654435761L) % lit(1000003L)
+    // ties across the 1e6 key space break on doc_id
+    val key = Sketches.draw(col("doc_id"))
     val w = Window.partitionBy(col("bucket")).orderBy(col("key"), col("doc_id"))
     docs.select(col("doc_id"), key.as("key"), (key % nBuckets).as("bucket"))
       .withColumn("ord", row_number().over(w))
@@ -661,7 +656,7 @@ object CurationOps {
     val cut = fullAgg.join(boundary, lit(true), "left")
       .select(col("bq"), col("qstar"),
         expr("((budget - coalesce(used, 0)) * 1000000) div btoks").as("rate_e6"))
-    val draw = col("did") % lit(1000003L) * lit(2654435761L) % lit(1000003L) % lit(1000000L)
+    val draw = Sketches.draw(col("did")) % lit(1000000L)
     scored.crossJoin(broadcast(cut))
       .where((col("qstar").isNotNull && col("quality") >= col("qstar")) ||
         (col("quality") === col("bq") && draw < col("rate_e6")))

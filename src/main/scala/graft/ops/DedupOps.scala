@@ -15,11 +15,16 @@ import org.apache.spark.sql.functions._
   * exact dedup is one hash aggregate; MinHash-LSH joins on band keys
   * (O(candidates), not O(n²)); SimHash groups on a 16-bit key; verification
   * joins are confined to candidate pairs.
+  *
+  * The hash and sign-bit primitives (the MinHash permutation, SimHash's
+  * bit packing, the shingle modulus) are [[Sketches]]' and sit beside their
+  * SQL twins there. The LSH band self-join ([[bandPairs]], SQL twin
+  * `Oracles.PairsCte`) and the token-array pair verify ([[intersectPairs]],
+  * SQL twin [[intersectSql]]) are defined once here.
   */
 object DedupOps {
 
-  private val P = 2147483647L // 2^31-1, Mersenne prime for LCG hashing
-
+  import Sketches.{P, perm}
 
   /** Exact dedup: md5(text) groups; keep min doc_id as canonical
     * representative. One map-side-combined hash aggregate — at 100 TB the
@@ -36,22 +41,10 @@ object DedupOps {
     docs.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
   }
 
-  /** The j-th MinHash permutation (a_j, b_j) of t ↦ (a_j·t + b_j) mod P —
-    * one definition shared by the column and the aggregate signature, so
-    * both generate identical hash values. Knuth multiplier: a·t wraps P
-    * even for small t, so the permutation mixes (a small multiplier is
-    * monotone on small ids → min-hash would always elect the smallest
-    * token).
-    */
-  private def perm(j: Int, t: Column): Column = {
-    val a = (2654435761L * (j + 1)) % P
-    val b = (1013904223L * (j + 1)) % P
-    (lit(a) * t.cast("long") + lit(b)) % lit(P)
-  }
-
   /** j-th MinHash over an int-token array: min over tokens of the LCG
-    * permutation ((a_j·t + b_j) mod P). Min over the multiset equals min
-    * over the set, so no dedup of tokens needed.
+    * permutation ([[Sketches.perm]], the same one the aggregate signature
+    * uses). Min over the multiset equals min over the set, so no dedup of
+    * tokens needed.
     */
   def minhash(tokens: Column, j: Int): Column =
     array_min(transform(tokens, perm(j, _)))
@@ -66,9 +59,7 @@ object DedupOps {
       sum(when(shiftright(col("t"), b) % 2 === 1, 1L).otherwise(-1L)).as(s"s$b")
     }
     val agg = e.groupBy(col(idCol)).agg(sums.head, sums.tail: _*)
-    val hash = (0 until 16).map(b => when(col(s"s$b") >= 0, lit(1L << b)).otherwise(0L))
-      .reduce(_ + _)
-    agg.select(col(idCol), hash.as("simhash"))
+    agg.select(col(idCol), Sketches.signBits((0 until 16).map(b => col(s"s$b"))).as("simhash"))
   }
 
   /** Distinct int32 shingle tokens: base-31 ascii hash of each n-char
@@ -134,15 +125,20 @@ object DedupOps {
       .select(col("sid"), col("__band.band_idx").as("band_idx"), col("__band.band_key").as("band_key"))
   }
 
-  /** MinHash-LSH candidate pairs from (sid, tok) rows (doc_a < doc_b). */
-  def lshCandidatesRows(rows: DataFrame, k: Int, r: Int): DataFrame = {
-    val b = bandRows(minhashSigRows(rows, k), k, r)
-    b.select(col("sid").as("doc_a"), col("band_idx"), col("band_key"))
-      .join(b.select(col("sid").as("doc_b"), col("band_idx"), col("band_key")),
+  /** The LSH band self-join: distinct (doc_a, doc_b) pairs, doc_a < doc_b,
+    * of the sids that share a band key in some band. SQL twin:
+    * `Oracles.PairsCte`.
+    */
+  private def bandPairs(bands: DataFrame): DataFrame =
+    bands.select(col("sid").as("doc_a"), col("band_idx"), col("band_key"))
+      .join(bands.select(col("sid").as("doc_b"), col("band_idx"), col("band_key")),
         Seq("band_idx", "band_key"))
       .where(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
-  }
+
+  /** MinHash-LSH candidate pairs from (sid, tok) rows (doc_a < doc_b). */
+  def lshCandidatesRows(rows: DataFrame, k: Int, r: Int): DataFrame =
+    bandPairs(bandRows(minhashSigRows(rows, k), k, r))
 
   /** [[duplicateClusters]] over the GROUP graph — value-identical, built
     * for corpora with large exact/near-identical families: docs sharing an
@@ -190,18 +186,56 @@ object DedupOps {
         count(lit(1)).over(bySig).as("gsz"))
       .localCheckpoint(true) // feeds representative pick + final join-back
     val reps = grp.where(col("sid") === col("gid")).select("sid")
-    val b = bandRows(sig.join(reps, "sid"), k, r)
-    val gpairs = b.select(col("sid").as("doc_a"), col("band_idx"), col("band_key"))
-      .join(b.select(col("sid").as("doc_b"), col("band_idx"), col("band_key")),
-        Seq("band_idx", "band_key"))
-      .where(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    val glab = duplicateClusters(gpairs)
+    val glab = duplicateClusters(bandPairs(bandRows(sig.join(reps, "sid"), k, r)))
       .select(col("sid").as("gid"), col("cluster"))
     grp.join(glab, Seq("gid"), "left")
       .where(col("gsz") >= 2 || col("cluster").isNotNull)
       .select(col("sid"), coalesce(col("cluster"), col("gid")).as("cluster"))
   }
+
+  /** The pair verify: candidate `pairs` (doc_a, doc_b) joined to both
+    * sides' token arrays from `sets` (sid, ts) — renamed ta/sz_a and
+    * tb/sz_b, with `sz` each side's set size — plus `inter`, the size of
+    * the arrays' intersection, an exact set intersection when each `ts` is
+    * distinct. SQL twin: [[intersectSql]].
+    *
+    * Per-pair intersection on the token ARRAYS: an explicit two-key token
+    * join pushes |pairs|·|doc| exploded rows through a shuffle (23M at
+    * sf0.1 for d22's 87k candidates), while the array join ships each
+    * candidate doc's tokens once and intersects in place; array_intersect is
+    * a native expression, not a CodegenFallback HOF.
+    *
+    * The pair frame is byte-SMALL (two longs per pair) but each pair costs
+    * a real array_intersect over two ~hundreds-token arrays: AQE's
+    * byte-based coalescing folded the whole verify into ONE task (measured
+    * 4.3–5.2 s single-task at sf0.1 while 31 cores idled). An explicit hash
+    * repartition with a pinned partition count (AQE respects a
+    * user-specified numPartitions) keeps the verify parallel; the count
+    * follows the session's shuffle parallelism. It is keyed on doc_a ALONE
+    * so it cannot collapse into a distinct's (doc_a, doc_b) exchange — an
+    * ENSURE_REQUIREMENTS exchange gets coalesced by bytes.
+    */
+  private def intersectPairs(pairs: DataFrame, sets: DataFrame, sz: Column): DataFrame = {
+    val nVerify = sets.sparkSession.sparkContext.defaultParallelism
+    def side(id: String, t: String, s: String): DataFrame =
+      sets.select(col("sid").as(id), col("ts").as(t), sz.as(s))
+    pairs.repartition(nVerify, col("doc_a"))
+      .join(side("doc_a", "ta", "sz_a"), "doc_a")
+      .join(side("doc_b", "tb", "sz_b"), "doc_b")
+      .withColumn("inter", size(array_intersect(col("ta"), col("tb"))).cast("long"))
+  }
+
+  /** SQL twin of [[intersectPairs]] (the d04/d15/d22 oracles' verify):
+    * `pairs` (doc_a, doc_b) joined to both docs' distinct token lists
+    * `stoks` in `sets`, with inter, sz_a and sz_b.
+    */
+  private[graft] def intersectSql(pairs: String, sets: String): String =
+    s"""  SELECT p.doc_a, p.doc_b,
+       |    len(list_intersect(x.stoks, y.stoks)) AS inter,
+       |    len(x.stoks) AS sz_a, len(y.stoks) AS sz_b
+       |  FROM $pairs p
+       |  JOIN $sets x ON x.sid = p.doc_a
+       |  JOIN $sets y ON y.sid = p.doc_b""".stripMargin
 
   /** Exact Jaccard over (sid, tok) rows for given candidate pairs
     * (doc_a, doc_b): per-pair intersection of the two docs' token sets.
@@ -209,27 +243,11 @@ object DedupOps {
     * ([[shingleRows]] with dedup=true) — duplicates inflate `inter`.
     */
   def jaccardRows(rows: DataFrame, pairs: DataFrame): DataFrame = {
-    // per-pair set intersection on collected token ARRAYS — the same shape
-    // the d22 verify (and the d04 oracle) use: the explicit two-key token
-    // join pushed |pairs|·|doc| exploded rows through a shuffle, while the
-    // array join ships each candidate doc's token set ONCE and intersects
-    // in place (array_intersect is a native codegen expression, and the
-    // rows-distinct precondition makes size() the exact set intersection).
-    val nVerify = rows.sparkSession.sparkContext.defaultParallelism
+    // the rows-distinct precondition makes the collected list a set
     val docsArr = rows.groupBy("sid")
       .agg(collect_list(col("tok")).as("ts"), count(lit(1)).as("sz"))
       .localCheckpoint(true)
-    pairs
-      // byte-small pair frame, compute-dense verify: pin the parallelism
-      // (keyed on doc_a alone — see allPairsSimilarity) or AQE folds the
-      // whole intersect stage into one task by bytes
-      .repartition(nVerify, col("doc_a"))
-      .join(docsArr.select(col("sid").as("doc_a"),
-        col("ts").as("__ta"), col("sz").as("sz_a")), "doc_a")
-      .join(docsArr.select(col("sid").as("doc_b"),
-        col("ts").as("__tb"), col("sz").as("sz_b")), "doc_b")
-      .withColumn("inter", size(array_intersect(col("__ta"), col("__tb"))).cast("long"))
-      .drop("__ta", "__tb")
+    intersectPairs(pairs, docsArr, col("sz"))
       .withColumn("jaccard",
         round(col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")), 6))
       .select(col("doc_a"), col("doc_b"), col("inter"), col("sz_a"), col("sz_b"),
@@ -299,36 +317,13 @@ object DedupOps {
     // once or the df join + two windows execute per side (the a05/a06 trap)
     val pref = ranked.where(col("rn") <= col("len") - expr("(len + 1) div 2") + 1)
       .select("sid", "tok", "len").localCheckpoint(true)
-    // the candidate frame is byte-SMALL (two longs per pair) but each pair
-    // costs a real array_intersect over two ~hundreds-token arrays below —
-    // AQE's byte-based coalescing folded the whole verify into ONE task
-    // (measured 4.3–5.2 s single-task at sf0.1 while 31 cores idled). An
-    // explicit hash repartition with a pinned partition count (AQE respects
-    // a user-specified numPartitions) keeps the verify parallel; the count
-    // follows the session's shuffle parallelism, so it scales with the
-    // deployment, not a local constant.
-    val nVerify = docs.sparkSession.sparkContext.defaultParallelism
+    // the candidates verify on the token arrays in pinned parallelism
+    // ([[intersectPairs]])
     val cand = pref.as("a").join(pref.as("b"), "tok")
       .where(col("a.sid") < col("b.sid") &&
         col("a.len") * 2 >= col("b.len") && col("b.len") * 2 >= col("a.len"))
       .select(col("a.sid").as("doc_a"), col("b.sid").as("doc_b")).distinct()
-      // keyed on doc_a ALONE so it cannot collapse into the distinct's
-      // (doc_a, doc_b) exchange — a user-pinned partition count survives
-      // AQE, an ENSURE_REQUIREMENTS exchange gets coalesced by bytes
-      .repartition(nVerify, col("doc_a"))
-    // verify via per-pair set intersection on the token ARRAYS (the same
-    // fix the d04 oracle made: the explicit two-key token join pushes
-    // |pairs|·|doc| exploded rows through a shuffle — 23M at sf0.1 for 87k
-    // candidates — while the array join ships each candidate doc's tokens
-    // once and intersects in place; array_intersect is a native expression,
-    // not a CodegenFallback HOF, and both inputs are distinct so size() is
-    // the exact set intersection)
-    def side(id: String, t: String, sz: String): DataFrame =
-      sets.select(col("sid").as(id), col("ts").as(t), size(col("ts")).cast("long").as(sz))
-    cand
-      .join(side("doc_a", "ta", "sz_a"), "doc_a")
-      .join(side("doc_b", "tb", "sz_b"), "doc_b")
-      .withColumn("inter", size(array_intersect(col("ta"), col("tb"))).cast("long"))
+    intersectPairs(cand, sets, size(col("ts")).cast("long"))
       .withColumn("jac_e6", expr("inter * 1000000 div (sz_a + sz_b - inter)"))
       .where(col("jac_e6") >= tE6)
       .select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "jac_e6")

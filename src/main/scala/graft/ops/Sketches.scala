@@ -14,15 +14,79 @@ import org.apache.spark.sql.functions._
   * in oracle-checkable form, and the shapes — (row, bucket) counters,
   * per-bucket max-rank registers — are exactly what survives a 100 TB
   * corpus: sketch size is O(d·w) / O(m) regardless of input rows.
+  *
+  * This object is also the one home of the hash and bit primitives that
+  * the sketches, the MinHash/SimHash dedup ([[DedupOps]]), the ANN sign
+  * codes ([[Ann]]) and the seeded samples ([[CurationOps]], [[Ann]]) share.
+  * Each Spark form sits beside its DuckDB twin (the `…Sql` builder of the
+  * same name), and every oracle that needs one calls the builder:
+  *   - the hash family `(a_j·t + b_j) mod P`: [[h]] / [[hSql]] reduce the
+  *     value mod P first (count-min, HLL, KMV, Bloom); [[perm]] /
+  *     [[permSql]] do not (the MinHash permutation, `Oracles.mhSql`);
+  *   - the seeded draw `(x mod 1000003)·2654435761 mod 1000003`: [[draw]] /
+  *     [[drawSql]];
+  *   - sign-bit packing into one long: [[signBits]] / [[signBitsSql]].
   */
 object Sketches {
 
+  /** The modulus of the hash family: 2^31−1, a Mersenne prime. */
   private[graft] val P = 2147483647L
 
-  private[graft] def h(j: Int, v: Column): Column =
-    // v reduced into P first: A·v overflows int64 for raw values past
-    // ~3.4e9 (and the SQL twin would error rather than wrap)
-    (lit((2654435761L * (j + 1)) % P) * (v % lit(P)) + lit((1013904223L * (j + 1)) % P)) % lit(P)
+  /** Coefficients of the j-th member of the hash family. The Knuth
+    * multiplier makes a·t wrap P even for small t, so the permutation
+    * mixes (a small multiplier is monotone on small ids, and min-hash
+    * would always elect the smallest token).
+    */
+  private def a(j: Int): Long = (2654435761L * (j + 1)) % P
+  private def b(j: Int): Long = (1013904223L * (j + 1)) % P
+
+  private def lcg(j: Int, x: Column): Column = (lit(a(j)) * x + lit(b(j))) % lit(P)
+  private def lcgSql(j: Int, x: String): String = s"(${a(j)}*$x + ${b(j)}) % $P"
+
+  /** The j-th hash of a long value, reduced into P first: A·v overflows
+    * int64 for raw values past ~3.4e9 (and the SQL twin would error rather
+    * than wrap).
+    */
+  private[graft] def h(j: Int, v: Column): Column = lcg(j, v % lit(P))
+
+  /** SQL twin of [[h]]. */
+  private[graft] def hSql(j: Int, v: String): String = lcgSql(j, s"($v % $P)")
+
+  /** The j-th MinHash permutation t ↦ (a_j·t + b_j) mod P of a token id,
+    * with no reduction first (token ids are below P).
+    */
+  private[graft] def perm(j: Int, t: Column): Column = lcg(j, t.cast("long"))
+
+  /** SQL twin of [[perm]]. */
+  private[graft] def permSql(j: Int, t: String): String = lcgSql(j, s"cast($t AS bigint)")
+
+  /** The seeded draw of an id: a multiplicative hash into [0, 1000003), the
+    * reproducible stand-in for a random draw in every seeded sample, split
+    * and shuffle. The id is reduced into the modulus BEFORE multiplying:
+    * id·A overflows int64 once ids pass ~3.4e9 (a silent wrap here, a
+    * runtime error in the SQL twin), while (id mod M)·A stays ≤ 2.7e15 for
+    * any id.
+    */
+  private[graft] def draw(id: Column): Column = id % lit(1000003L) * lit(2654435761L) % lit(1000003L)
+
+  /** SQL twin of [[draw]]. */
+  private[graft] def drawSql(id: String): String = s"($id % 1000003) * 2654435761 % 1000003"
+
+  /** Sign bits of `slots` packed into one long: bit j is set iff slot j is
+    * ≥ 0 (a null slot sets no bit). At most 63 slots, so the code stays a
+    * non-negative long.
+    */
+  private[graft] def signBits(slots: Seq[Column]): Column = {
+    require(slots.size <= 63, s"${slots.size} sign bits do not pack into one long")
+    slots.zipWithIndex.map { case (s, j) => when(s >= 0, lit(1L << j)).otherwise(0L) }.reduce(_ + _)
+  }
+
+  /** SQL twin of [[signBits]]. */
+  private[graft] def signBitsSql(slots: Seq[String]): String = {
+    require(slots.size <= 63, s"${slots.size} sign bits do not pack into one long")
+    slots.zipWithIndex.map { case (s, j) => s"(CASE WHEN $s >= 0 THEN ${1L << j} ELSE 0 END)" }
+      .mkString(" + ")
+  }
 
   /** Count-min sketch over an exploded value column: d rows × w buckets of
     * exact counts (one groupBy), plus the point-estimate join for the top-k

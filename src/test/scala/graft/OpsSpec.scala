@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
-import graft.ops.{Ann, DedupOps, Multimodal, TextOps}
+import graft.ops.{Ann, DedupOps, Multimodal, Sketches, TextOps}
 import graft.sources.Tables
 
 class OpsSpec extends SparkSpec {
@@ -248,6 +248,81 @@ class OpsSpec extends SparkSpec {
     assert(h(1L) === h(2L))
     val hamming = java.lang.Long.bitCount(h(1L) ^ h(3L))
     assert(hamming <= 6, s"near-identical docs should be hamming-close, got $hamming")
+  }
+
+  test("signBits packs slot j's sign into bit j like hand packing, 0 and negatives included") {
+    val rnd = new Random(5)
+    def slotValue(): java.lang.Long = rnd.nextInt(6) match {
+      case 0 => 0L
+      case 1 => -1L
+      case 2 => null
+      case 3 => Long.MinValue
+      case _ => rnd.nextLong()
+    }
+    def hand(vs: Seq[java.lang.Long]): Long =
+      vs.zipWithIndex.map { case (v, j) => if (v != null && v >= 0) 1L << j else 0L }.sum
+    for (n <- Seq(1, 8, 63)) {
+      val data = (1 to 40).map(i => (i.toLong, Seq.fill(n)(slotValue())))
+      val df = data.toDF("id", "a")
+      val got = df.select(col("id"),
+          Sketches.signBits((0 until n).map(j => col("a").getItem(j))).as("code"),
+          // the SQL twin evaluates to the same code
+          expr(Sketches.signBitsSql((0 until n).map(j => s"a[$j]"))).cast("long").as("twin"))
+        .as[(Long, Long, Long)].collect()
+      got.foreach { case (id, code, twin) =>
+        val want = hand(data(id.toInt - 1)._2)
+        assert(code === want, s"n=$n id=$id")
+        assert(twin === want, s"n=$n id=$id (SQL twin)")
+      }
+    }
+  }
+
+  test("signBits refuses 64 slots: the code must fit one long") {
+    val e1 = intercept[IllegalArgumentException](Sketches.signBits((0 until 64).map(j => col(s"s$j"))))
+    assert(e1.getMessage.contains("64 sign bits"))
+    val e2 = intercept[IllegalArgumentException](Sketches.signBitsSql((0 until 64).map(j => s"s$j")))
+    assert(e2.getMessage.contains("64 sign bits"))
+  }
+
+  test("hash, permutation and draw twins evaluate to their Spark forms") {
+    val rnd = new Random(3)
+    val vs = (Seq(0L, 1L, Sketches.P - 1, Sketches.P, 3400000000L, 999999999999L) ++
+      Seq.fill(30)(math.abs(rnd.nextLong()) % 1000000000000L)).toDF("v")
+    val toks = (Seq(0, 1, Int.MaxValue) ++ Seq.fill(30)(rnd.nextInt(Int.MaxValue))).toDF("t")
+    for (j <- 0 until 4) {
+      assert(vs.where(Sketches.h(j, col("v")) =!= expr(Sketches.hSql(j, "v"))).isEmpty, s"h j=$j")
+      assert(toks.where(Sketches.perm(j, col("t")) =!= expr(Sketches.permSql(j, "t"))).isEmpty,
+        s"perm j=$j")
+    }
+    assert(vs.where(Sketches.draw(col("v")) =!= expr(Sketches.drawSql("v"))).isEmpty)
+    // the draw is a hash into [0, 1000003)
+    assert(vs.where(Sketches.draw(col("v")) < 0 || Sketches.draw(col("v")) >= 1000003L).isEmpty)
+  }
+
+  test("candidateCut equals a brute-force reference: both directions, threshold ties, one-row query") {
+    val rnd = new Random(11)
+    // keys from a 9-value range so most thresholds land on a tied key;
+    // query 6 holds one row
+    val rows = ((0 until 6).flatMap(q => Seq.fill(1 + rnd.nextInt(40))((q.toLong, rnd.nextInt(9) - 4L)))
+      :+ ((6L, 3L))).zipWithIndex.map { case ((q, k), i) => (q, k, i.toLong) }
+    val df = rows.toDF("q_id", "key", "id")
+    def ref(den: Int, descending: Boolean): Set[(Long, Long)] =
+      rows.groupBy(_._1).toSeq.flatMap { case (q, rs) =>
+        val need = (rs.size + den - 1) / den
+        val order = rs.map(_._2).sorted
+        val thr = (if (descending) order.reverse else order)(need - 1)
+        rs.filter(r => if (descending) r._2 >= thr else r._2 <= thr).map(r => (q, r._3))
+      }.toSet
+    for (den <- Seq(1, 2, 5); descending <- Seq(true, false)) {
+      val cut = Ann.candidateCut(df, "key", den, descending)
+      assert(cut.columns.toSeq.sorted === df.columns.toSeq.sorted)
+      val got = cut.select("q_id", "id").as[(Long, Long)].collect()
+      assert(got.length === got.toSet.size)
+      assert(got.toSet === ref(den, descending), s"den=$den descending=$descending")
+    }
+    // the data does tie on thresholds: some cut keeps more than ceil(n/den) rows
+    val needs = rows.groupBy(_._1).values.toSeq.map(_.size)
+    assert(Seq(2, 5).exists(den => ref(den, descending = true).size > needs.map(n => (n + den - 1) / den).sum))
   }
 
   test("ANN brute force: rank-1 neighbor is the true argmax cosine") {
