@@ -28,10 +28,72 @@ object QueriesPipeline {
       .as[graft.streaming.Templates.NfRec]
   }
 
+  /** The decoded-v9 row p27, p32 and p33 compare. */
+  private def v9Rows(decoded: DataFrame): DataFrame =
+    decoded.select(col("exporter").cast("long").as("exporter_id"),
+      col("templateId").as("template_id"), col("seq"),
+      col("recIdx").as("rec_idx"), col("decoded"),
+      element_at(col("fields"), 1).as("srcaddr"),
+      element_at(col("fields"), 2).as("src_port"),
+      element_at(col("fields"), 3).as("dst_port"),
+      element_at(col("fields"), 4).as("in_bytes"))
+
+  /** f03/f05: the NetFlow v5 rows of the staged capture files, peeled by
+    * the default or the reference-compat pcap walk.
+    */
+  private def pcapV5Rows(s: SparkSession, dir: String, referenceCompat: Boolean): DataFrame = {
+    val path = graft.sources.Pcap.stage(s, dir)
+    val files = s.read.format("binaryFile").load(path)
+    graft.operators.BinaryDecode.pcapNetflowV5Payloads(files, referenceCompat)
+      .withColumn("o5", graft.operators.BinaryDecode.netflowV5(col("nf")))
+      .where(col("o5.ok"))
+      .select(col("o5.sys_uptime").as("did"), col("o5.version").as("version"),
+        col("cap_sec"), col("o5.unix_secs").as("unix_secs"),
+        graft.operators.BinaryDecode.ipv4String(col("o5.src_addr")).as("src_ip"),
+        graft.operators.BinaryDecode.ipv4String(col("o5.dst_addr")).as("dst_ip"),
+        col("o5.src_port").as("src_port"), col("o5.dst_port").as("dst_port"),
+        col("o5.d_octets").as("d_octets"), col("o5.prot").as("prot"),
+        col("o5.tcp_flags").as("tcp_flags"),
+        col("o5.sampling_mode").as("sampling_mode"),
+        col("o5.sampling_rate").as("sampling_rate"))
+  }
+
+  /** f04/f06: the w_process_create columns they compare, from the rows of
+    * a typed `o` struct that parsed.
+    */
+  private def sysmonPick(typed: DataFrame): DataFrame =
+    typed.where(col("o.ok"))
+      .select(col("o.ts_ns").as("ts_ns"), col("o.process_guid").as("process_guid"),
+        col("o.process_id").as("process_id"), col("o.image").as("image"),
+        col("o.logon_id").as("logon_id"),
+        concat_ws(",", col("o.hashes")).as("hashes_csv"),
+        col("o.parent_image").as("parent_image"))
+
+  /** DuckDB twin of [[sysmonPick]]: each field re-derived from `did`. */
+  private def sysmonPickSql: String = {
+    val proto = graft.operators.Positional.sysmonCsv.head
+    val want = Set("ts_ns", "process_guid", "process_id", "image",
+      "logon_id", "hashes", "parent_image")
+    val cols = proto.fields.zipWithIndex.collect { case (f, i) if want(f.name) =>
+      graft.operators.ProtoSynth.parsedSql(f.t, i, f.name)
+        .map { case (n, sql) => s"  $sql AS $n" }
+    }.flatten
+    withCtes(V2Cte)("SELECT\n" + cols.mkString(",\n") + "\nFROM v2")
+  }
+
   private def toks(s: SparkSession, dir: String) = Tables.tokens(s, dir)
   private def raws(s: SparkSession, dir: String) = Tables.rawEvents(s, dir)
   private def parsed(s: SparkSession, dir: String) = Parse.parsed(raws(s, dir))
   private def events(s: SparkSession, dir: String) = Tables.events(s, dir)
+
+  /** p14's plan: the pipeline's transform (parse, ts dedup, enrich, route)
+    * with the windowed `(source, ts)` dedup its oracle pins. The committed
+    * form, `Pipeline.transformedExact`, sequences by the reference's run
+    * rule (p14x).
+    */
+  private def windowedPipeline(s: SparkSession, dir: String): DataFrame =
+    Route.routed(Enrich.withSourceAttrs(
+      Dedup.timestampDedup(parsed(s, dir), col("ts_raw_ns"), Seq(col("source")), col("line_no"))))
 
   /** DuckDB twin of `Dedup.timestampDedupExact` with no carry, part 1:
     * `parsedx` with `run_id`, the running sum of the lines where a run
@@ -214,7 +276,7 @@ object QueriesPipeline {
           |FROM parsedx GROUP BY 1""".stripMargin)),
 
     Q("p14_pipeline", (s, dir) =>
-      graft.plans.Pipeline.transformed(s, dir)
+      windowedPipeline(s, dir)
         .groupBy("sink", "vendor").agg(
           count(lit(1)).as("records"),
           sum(col("bytes")).as("sum_bytes"),
@@ -880,17 +942,8 @@ object QueriesPipeline {
     // never-defined-template packets emitted as undecodable
     // (counted-and-skipped), record loop bounded by the header count
     Q("p27_netflow_v9", (s, dir) => {
-      import s.implicits._
       val recs = graft.operators.BinaryDecode.v9FlowsetWalk(Tables.nfV9Packets(s, dir))
-      val ds = nfRecsOf(s, recs)
-      graft.streaming.Templates.decodeBatch(ds).toDF()
-        .select(col("exporter").cast("long").as("exporter_id"),
-          col("templateId").as("template_id"), col("seq"),
-          col("recIdx").as("rec_idx"), col("decoded"),
-          element_at(col("fields"), 1).as("srcaddr"),
-          element_at(col("fields"), 2).as("src_port"),
-          element_at(col("fields"), 3).as("dst_port"),
-          element_at(col("fields"), 4).as("in_bytes"))
+      v9Rows(graft.streaming.Templates.decodeBatch(nfRecsOf(s, recs)).toDF())
     },
       // did%10==9: the 8-flowset walk case — 7 single-record data flowsets
       // against the packet's own template (tid+300), each decoding at
@@ -1096,15 +1149,8 @@ object QueriesPipeline {
       graft.streaming.TemplateStore.decodeBatchResumable(
         ds.where(col("isTemplate")), base).count()
       // run 2: data only, warm-started from the snapshot
-      graft.streaming.TemplateStore.decodeBatchResumable(
-        ds.where(!col("isTemplate")), base).toDF()
-        .select(col("exporter").cast("long").as("exporter_id"),
-          col("templateId").as("template_id"), col("seq"),
-          col("recIdx").as("rec_idx"), col("decoded"),
-          element_at(col("fields"), 1).as("srcaddr"),
-          element_at(col("fields"), 2).as("src_port"),
-          element_at(col("fields"), 3).as("dst_port"),
-          element_at(col("fields"), 4).as("in_bytes"))
+      v9Rows(graft.streaming.TemplateStore.decodeBatchResumable(
+        ds.where(!col("isTemplate")), base).toDF())
     },
       // like p27 but warm-started from the persisted store: did%10==1
       // (data-before-template) NOW decodes — the snapshot's templates apply
@@ -1141,17 +1187,8 @@ object QueriesPipeline {
     // registrations carry the group's highest seq, so they can't affect
     // any earlier data record). Everything single-flowset matches p27.
     Q("p33_netflow_v9_compat", (s, dir) => {
-      import s.implicits._
       val recs = graft.operators.BinaryDecode.v9FlowsetWalkCompat(Tables.nfV9Packets(s, dir))
-      val ds = nfRecsOf(s, recs)
-      graft.streaming.Templates.decodeBatch(ds).toDF()
-        .select(col("exporter").cast("long").as("exporter_id"),
-          col("templateId").as("template_id"), col("seq"),
-          col("recIdx").as("rec_idx"), col("decoded"),
-          element_at(col("fields"), 1).as("srcaddr"),
-          element_at(col("fields"), 2).as("src_port"),
-          element_at(col("fields"), 3).as("dst_port"),
-          element_at(col("fields"), 4).as("in_bytes"))
+      v9Rows(graft.streaming.Templates.decodeBatch(nfRecsOf(s, recs)).toDF())
     },
       // p27's twin under the reference's framing quirks: class 3 references
       // the template flowset's second entry, which the whole-buffer loop
@@ -1235,22 +1272,8 @@ object QueriesPipeline {
     // pcap global-header validation + per-packet walk + eth/ip/udp peel +
     // cflow-port filter, then the NetFlow v5 byte decode — every 13th
     // packet targets a non-cflow port and must be dropped by the reader
-    Q("f03_pcap_scan", (s, dir) => {
-      val path = graft.sources.Pcap.stage(s, dir)
-      val files = s.read.format("binaryFile").load(path)
-      graft.operators.BinaryDecode.pcapNetflowV5Payloads(files, referenceCompat = false)
-        .withColumn("o5", graft.operators.BinaryDecode.netflowV5(col("nf")))
-        .where(col("o5.ok"))
-        .select(col("o5.sys_uptime").as("did"), col("o5.version").as("version"),
-          col("cap_sec"), col("o5.unix_secs").as("unix_secs"),
-          graft.operators.BinaryDecode.ipv4String(col("o5.src_addr")).as("src_ip"),
-          graft.operators.BinaryDecode.ipv4String(col("o5.dst_addr")).as("dst_ip"),
-          col("o5.src_port").as("src_port"), col("o5.dst_port").as("dst_port"),
-          col("o5.d_octets").as("d_octets"), col("o5.prot").as("prot"),
-          col("o5.tcp_flags").as("tcp_flags"),
-          col("o5.sampling_mode").as("sampling_mode"),
-          col("o5.sampling_rate").as("sampling_rate"))
-    },
+    Q("f03_pcap_scan", (s, dir) =>
+      pcapV5Rows(s, dir, referenceCompat = false),
       withCtes(V2Cte)(
         s"""SELECT did, cast(5 AS bigint) AS version,
           |  1700000000 + did % 1000 AS cap_sec,
@@ -1273,22 +1296,8 @@ object QueriesPipeline {
     // binary reject every IHL>5 packet as not-netflow — compat mode drops
     // the did%7==2 (IHL=6) packets the default peel decodes correctly;
     // everything else is byte-identical to f03
-    Q("f05_pcap_scan_compat", (s, dir) => {
-      val path = graft.sources.Pcap.stage(s, dir)
-      val files = s.read.format("binaryFile").load(path)
-      graft.operators.BinaryDecode.pcapNetflowV5Payloads(files, referenceCompat = true)
-        .withColumn("o5", graft.operators.BinaryDecode.netflowV5(col("nf")))
-        .where(col("o5.ok"))
-        .select(col("o5.sys_uptime").as("did"), col("o5.version").as("version"),
-          col("cap_sec"), col("o5.unix_secs").as("unix_secs"),
-          graft.operators.BinaryDecode.ipv4String(col("o5.src_addr")).as("src_ip"),
-          graft.operators.BinaryDecode.ipv4String(col("o5.dst_addr")).as("dst_ip"),
-          col("o5.src_port").as("src_port"), col("o5.dst_port").as("dst_port"),
-          col("o5.d_octets").as("d_octets"), col("o5.prot").as("prot"),
-          col("o5.tcp_flags").as("tcp_flags"),
-          col("o5.sampling_mode").as("sampling_mode"),
-          col("o5.sampling_rate").as("sampling_rate"))
-    },
+    Q("f05_pcap_scan_compat", (s, dir) =>
+      pcapV5Rows(s, dir, referenceCompat = true),
       // f03's twin under the reference's IHL bug: did%7==2 packets carry
       // IPv4 options (IHL=6) and are dropped by the compat peel
       withCtes(V2Cte)(
@@ -1344,26 +1353,11 @@ object QueriesPipeline {
           Seq("sysmon-2023"), Seq("1"),
           "2023-01-01T00:00:00Z", "2023-12-31T00:00:00Z", size = 97))
       } finally stub.stop()
-      Elastic.typed(s.createDataset(hits).toDF(), 1).where(col("o.ok"))
-        .select(col("o.ts_ns").as("ts_ns"),
-          col("o.process_guid").as("process_guid"),
-          col("o.process_id").as("process_id"), col("o.image").as("image"),
-          col("o.logon_id").as("logon_id"),
-          concat_ws(",", col("o.hashes")).as("hashes_csv"),
-          col("o.parent_image").as("parent_image"))
+      sysmonPick(Elastic.typed(s.createDataset(hits).toDF(), 1))
     },
       // the ES fetch lands in the SAME typed frame the f04 file scan reads —
       // identical field arithmetic, so the twin is f04's construction
-      {
-        val proto = graft.operators.Positional.sysmonCsv.head
-        val want = Set("ts_ns", "process_guid", "process_id", "image",
-          "logon_id", "hashes", "parent_image")
-        val cols = proto.fields.zipWithIndex.collect { case (f, i) if want(f.name) =>
-          graft.operators.ProtoSynth.parsedSql(f.t, i, f.name)
-            .map { case (n, sql) => s"  $sql AS $n" }
-        }.flatten
-        withCtes(V2Cte)("SELECT\n" + cols.mkString(",\n") + "\nFROM v2")
-      }),
+      sysmonPickSql),
 
     // REAL sysmon CSV file scan WITH a header row (the reference's reader
     // config: tab-separated, header present — sysmon_csv.rs:334-341): the
@@ -1378,24 +1372,10 @@ object QueriesPipeline {
       val path = graft.operators.RawLog.stageWithHeader(data, header, "sysmon_csv", dir)
       val schema = (0 until n).map(i => s"c$i STRING").mkString(", ")
       val o = graft.operators.Positional.fromColumns(proto, i => s"c$i")
-      s.read.option("sep", "\t").option("header", "true").schema(schema).csv(path)
-        .select(o.as("o")).where(col("o.ok"))
-        .select(col("o.ts_ns").as("ts_ns"), col("o.process_guid").as("process_guid"),
-          col("o.process_id").as("process_id"), col("o.image").as("image"),
-          col("o.logon_id").as("logon_id"),
-          concat_ws(",", col("o.hashes")).as("hashes_csv"),
-          col("o.parent_image").as("parent_image"))
+      sysmonPick(s.read.option("sep", "\t").option("header", "true").schema(schema).csv(path)
+        .select(o.as("o")))
     },
-      {
-        val proto = graft.operators.Positional.sysmonCsv.head
-        val want = Set("ts_ns", "process_guid", "process_id", "image",
-          "logon_id", "hashes", "parent_image")
-        val cols = proto.fields.zipWithIndex.collect { case (f, i) if want(f.name) =>
-          graft.operators.ProtoSynth.parsedSql(f.t, i, f.name)
-            .map { case (n, sql) => s"  $sql AS $n" }
-        }.flatten
-        withCtes(V2Cte)("SELECT\n" + cols.mkString(",\n") + "\nFROM v2")
-      }),
+      sysmonPickSql),
 
     // Smtp layout: comma-split recipient array with '-' sentinel → []
     Q("p25_parse_smtp", (s, dir) => {

@@ -1,11 +1,9 @@
 package graft.functions
 
-import java.util.regex.{Matcher, Pattern}
+import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,8 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * regex once and extracts all named groups in one pass
   * (/root/reference/src/parser/security_log.rs:128-139, OnceLock'd regexes
   * e.g. nginx.rs:14); this Expression restores that 1-pass cost inside
-  * whole-stage codegen — the compiled Pattern is a codegen reference object,
-  * the matcher runs once, groups copy out as UTF8String.
+  * whole-stage codegen: the matcher runs once, groups copy out as
+  * UTF8String. One body, [[extract]], serves the interpreted eval and the
+  * generated code, which calls it on this expression as a reference object.
   *
   * Pattern is a compile-time constant (like the reference's static regexes),
   * so it lives in the plan, not in a child expression.
@@ -36,7 +35,10 @@ case class RegexpExtractStruct(child: Expression, regex: String, numGroups: Int)
 
   override def prettyName: String = "regexp_extract_struct"
 
-  override protected def nullSafeEval(input: Any): Any = {
+  /** One `find()` and the group copy-out; called by both the interpreted
+    * eval and the generated code, so the two paths cannot diverge.
+    */
+  def extract(input: UTF8String): GenericInternalRow = {
     val m = pattern.matcher(input.toString)
     val row = new GenericInternalRow(numGroups + 1)
     if (m.find()) {
@@ -55,32 +57,12 @@ case class RegexpExtractStruct(child: Expression, regex: String, numGroups: Int)
     row
   }
 
+  override protected def nullSafeEval(input: Any): Any =
+    extract(input.asInstanceOf[UTF8String])
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val patternRef = ctx.addReferenceObj("pattern", pattern, classOf[Pattern].getName)
-    val matcherCls = classOf[Matcher].getName
-    val rowCls = classOf[GenericInternalRow].getName
-    val utf8Cls = classOf[UTF8String].getName
-    nullSafeCodeGen(ctx, ev, c => {
-      val m = ctx.freshName("m")
-      val row = ctx.freshName("row")
-      val i = ctx.freshName("i")
-      val g = ctx.freshName("g")
-      s"""
-         |$matcherCls $m = $patternRef.matcher($c.toString());
-         |$rowCls $row = new $rowCls(${numGroups + 1});
-         |if ($m.find()) {
-         |  for (int $i = 1; $i <= $numGroups; $i++) {
-         |    String $g = $m.group($i);
-         |    $row.update($i - 1, $utf8Cls.fromString($g == null ? "" : $g));
-         |  }
-         |  $row.update($numGroups, java.lang.Boolean.TRUE);
-         |} else {
-         |  for (int $i = 0; $i < $numGroups; $i++) $row.update($i, $utf8Cls.EMPTY_UTF8);
-         |  $row.update($numGroups, java.lang.Boolean.FALSE);
-         |}
-         |${ev.value} = $row;
-       """.stripMargin
-    })
+    val ref = ctx.addReferenceObj("regexpExtract", this, classOf[RegexpExtractStruct].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.extract($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): RegexpExtractStruct =

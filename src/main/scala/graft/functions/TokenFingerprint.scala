@@ -14,16 +14,27 @@ import org.apache.spark.sql.SparkSessionExtensions
   * for consecutive-dup detection, /root/reference/src/collector/zeek.rs:115;
   * a rolling hash is the constant-space analog for token sequences).
   *
-  * Implemented as a Catalyst `UnaryExpression` with `doGenCode` so it stays
-  * inside whole-stage codegen — no UDF boxing, no iterator breaks. The loop
-  * reads ints straight out of the unsafe array format.
+  * A Catalyst `UnaryExpression` that stays inside whole-stage codegen — no
+  * UDF boxing, no iterator breaks. One body, [[TokenFingerprint.fingerprint]],
+  * serves the interpreted eval and the generated code, which calls it.
   */
 case class TokenFingerprint(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "token_fingerprint"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(input: Any): Any =
+    TokenFingerprint.fingerprint(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"${classOf[TokenFingerprint].getName}.fingerprint($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): TokenFingerprint =
+    copy(child = newChild)
+}
+
+object TokenFingerprint {
+  /** The fold of one non-null array; both evaluation paths call it. */
+  def fingerprint(arr: ArrayData): Long = {
     var acc = 0L
     var i = 0
     val n = arr.numElements()
@@ -31,24 +42,6 @@ case class TokenFingerprint(child: Expression) extends UnaryExpression {
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $c.numElements(); $i++) {
-         |  $acc = ($acc * 31L + $c.getInt($i)) % 1000000007L;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): TokenFingerprint =
-    copy(child = newChild)
-}
-
-object TokenFingerprint {
   /** Column DSL: `TokenFingerprint.of(col("tokens"))` → bigint, with no
     * SQL function registration in the session.
     */

@@ -21,7 +21,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   * yields kProj null slots, like a `sum` over nulls only.
   *
   * One tight loop over the unsafe array instead of a per-element
-  * row explode, a 32-`sum` aggregate and its shuffle.
+  * row explode, a 32-`sum` aggregate and its shuffle. One body, [[sketch]],
+  * serves the interpreted eval and the generated code, which calls it on
+  * this expression as a reference object.
   */
 case class ProjSketch(child: Expression, kProj: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
@@ -34,8 +36,10 @@ case class ProjSketch(child: Expression, kProj: Int) extends UnaryExpression {
       s"proj_sketch needs array<double> and kProj > 0, got $dt and $kProj")
   }
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  /** The sketch of one non-null array, or null for an empty one; called by
+    * both the interpreted eval and the generated code.
+    */
+  def sketch(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     if (n == 0) return null
     val acc = new Array[Long](kProj)
@@ -58,38 +62,14 @@ case class ProjSketch(child: Expression, kProj: Int) extends UnaryExpression {
     if (any) new GenericArrayData(acc) else new GenericArrayData(new Array[Any](kProj))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val any = ctx.freshName("any")
-      val i = ctx.freshName("i")
-      val xi = ctx.freshName("xi")
-      val i0 = ctx.freshName("i0")
-      val t = ctx.freshName("t")
-      val gad = "org.apache.spark.sql.catalyst.util.GenericArrayData"
-      s"""
-         |int $n = $arr.numElements();
-         |if ($n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long[] $acc = new long[$kProj];
-         |  boolean $any = false;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if (!$arr.isNullAt($i)) {
-         |      $any = true;
-         |      long $xi = (long) java.lang.Math.floor($arr.getDouble($i) * 1000000.0 + 0.5);
-         |      long $i0 = $i + 1L;
-         |      for (int $t = 0; $t < $kProj; $t++) {
-         |        $acc[$t] += $xi * (($i0 * ((2L * $t + 3L) * 2654435761L)
-         |          + ($t + 1L) * 1013904223L) % 1000003L % 7L - 3L);
-         |      }
-         |    }
-         |  }
-         |  ${ev.value} = $any ? new $gad($acc) : new $gad(new Object[$kProj]);
-         |}
-       """.stripMargin
-    })
+  override protected def nullSafeEval(input: Any): Any = sketch(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("projSketch", this, classOf[ProjSketch].getName)
+    nullSafeCodeGen(ctx, ev, arr =>
+      s"""${ev.value} = $ref.sketch($arr);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  }
 
   override protected def withNewChildInternal(c: Expression): ProjSketch = copy(child = c)
 }
@@ -111,16 +91,18 @@ case class ProjSketch(child: Expression, kProj: Int) extends UnaryExpression {
   * k-means argmax compares ±0.0 as equal, and products of int64 values are
   * never NaN.
   *
-  * A compiled loop over the unsafe arrays: `ArrayAggregate` and `ZipWith`
-  * are `CodegenFallback`, so the HOF form ran interpreted lambdas per
-  * element.
+  * It stays inside whole-stage codegen, where the HOF form did not:
+  * `ArrayAggregate` and `ZipWith` are `CodegenFallback`, so that form ran
+  * interpreted lambdas per element. Both paths call the same two bodies,
+  * [[ArrayDot.nullRule]] and [[ArrayDot.fold]], so the result stays a
+  * primitive double.
   */
 case class ArrayDot(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "dot_fold"
 
-  private def elemType = left.dataType.asInstanceOf[ArrayType].elementType
+  private def longs: Boolean = left.dataType.asInstanceOf[ArrayType].elementType == LongType
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) |
@@ -130,44 +112,48 @@ case class ArrayDot(left: Expression, right: Expression) extends BinaryExpressio
   }
 
   override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+    val (a, b) = (l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+    if (ArrayDot.nullRule(a, b)) null else ArrayDot.fold(a, b, longs)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = classOf[ArrayDot].getName
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.isNull} = $cls.nullRule($a, $b);
+         |if (!${ev.isNull}) ${ev.value} = $cls.fold($a, $b, $longs);""".stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): ArrayDot =
+    copy(left = l, right = r)
+}
+
+object ArrayDot {
+  /** The null rule of the fold: unequal lengths or a null element. */
+  def nullRule(a: ArrayData, b: ArrayData): Boolean = {
     val n = a.numElements()
-    if (n != b.numElements()) return null
-    val long = elemType == LongType
-    def at(x: ArrayData, i: Int): Double = if (long) x.getLong(i).toDouble else x.getDouble(i)
+    if (n != b.numElements()) return true
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return true
+      i += 1
+    }
+    false
+  }
+
+  /** The fold of two arrays that pass [[nullRule]]; `longs` reads each
+    * element as a long widened to double.
+    */
+  def fold(a: ArrayData, b: ArrayData, longs: Boolean): Double = {
+    val n = a.numElements()
     var acc = 0.0
     var i = 0
     while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      acc += at(a, i) * at(b, i)
+      acc += (if (longs) a.getLong(i).toDouble * b.getLong(i).toDouble
+              else a.getDouble(i) * b.getDouble(i))
       i += 1
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      def at(x: String): String =
-        if (elemType == LongType) s"(double) $x.getLong($i)" else s"$x.getDouble($i)"
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    ${ev.value} += ${at(a)} * ${at(b)};
-         |  }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ArrayDot =
-    copy(left = l, right = r)
 }
 
 /** The nearest centroid of an int64 sketch within a bounded model — the
@@ -190,6 +176,9 @@ case class ArrayDot(left: Expression, right: Expression) extends BinaryExpressio
   *
   * A null sketch scores null against every centroid, so it gets the
   * smallest cid, as the cross join gave it. An empty model gives null.
+  *
+  * The generated code evaluates both children, then calls the one body,
+  * [[NearestCentroid.nearest]], which the interpreted eval calls too.
   */
 case class NearestCentroid(sketch: Expression, model: Expression) extends BinaryExpression {
   override def left: Expression = sketch
@@ -206,104 +195,18 @@ case class NearestCentroid(sketch: Expression, model: Expression) extends Binary
       s"${s.simpleString} and ${m.simpleString}")
   }
 
-  override def eval(input: InternalRow): Any = {
-    val m = model.eval(input).asInstanceOf[ArrayData]
-    if (m == null || m.numElements() == 0) return null
-    val s = sketch.eval(input).asInstanceOf[ArrayData]
-    var best = -1
-    var bestScore = 0.0
-    var bestScoreNull = true
-    var bestNc = 0L
-    var bestD = 0.0
-    var bestDNull = true
-    var j = 0
-    while (j < m.numElements()) {
-      val cent = m.getStruct(j, 3)
-      val nc = -cent.getLong(0)
-      // the ArrayDot fold of the sketch and this centroid
-      var dNull = s == null || cent.isNullAt(1)
-      var d = 0.0
-      if (!dNull) {
-        val c = cent.getArray(1)
-        val n = s.numElements()
-        if (n != c.numElements()) dNull = true
-        var i = 0
-        while (!dNull && i < n) {
-          if (s.isNullAt(i) || c.isNullAt(i)) dNull = true
-          else d += s.getLong(i).toDouble * c.getLong(i).toDouble
-          i += 1
-        }
-      }
-      val cnNull = cent.isNullAt(2)
-      val cn = if (cnNull) 0.0 else cent.getDouble(2)
-      val scoreNull = dNull || cnNull || cn == 0.0
-      val score = if (scoreNull) 0.0 else d / cn
-      val cmp =
-        if (scoreNull) { if (bestScoreNull) 0 else -1 }
-        else if (bestScoreNull) 1
-        else SQLOrderingUtil.compareDoubles(score, bestScore)
-      if (best < 0 || cmp > 0 || (cmp == 0 && nc > bestNc)) {
-        best = j; bestScore = score; bestScoreNull = scoreNull; bestNc = nc
-        bestD = d; bestDNull = dNull
-      }
-      j += 1
-    }
-    val win = m.getStruct(best, 3)
-    new GenericInternalRow(Array[Any](-bestNc, if (bestDNull) null else bestD,
-      if (win.isNullAt(2)) null else win.getDouble(2)))
-  }
+  override def eval(input: InternalRow): Any = NearestCentroid.nearest(
+    sketch.eval(input).asInstanceOf[ArrayData], model.eval(input).asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val s = sketch.genCode(ctx)
     val m = model.genCode(ctx)
-    val Seq(best, bestScore, bestScoreNull, bestNc, bestD, bestDNull, j, cent, nc, d, dNull,
-      c, n, i, cnNull, cn, scoreNull, score, cmp, win) = Seq("best", "bestScore",
-      "bestScoreNull", "bestNc", "bestD", "bestDNull", "j", "cent", "nc", "d", "dNull", "c",
-      "n", "i", "cnNull", "cn", "scoreNull", "score", "cmp", "win").map(ctx.freshName)
-    val ord = "org.apache.spark.sql.catalyst.util.SQLOrderingUtil"
-    val row = classOf[GenericInternalRow].getName
     ev.copy(code = code"""
       |${m.code}
       |${s.code}
-      |boolean ${ev.isNull} = true;
-      |${CodeGenerator.javaType(dataType)} ${ev.value} = null;
-      |if (!${m.isNull} && ${m.value}.numElements() > 0) {
-      |  int $best = -1;
-      |  double $bestScore = 0.0;
-      |  boolean $bestScoreNull = true;
-      |  long $bestNc = 0L;
-      |  double $bestD = 0.0;
-      |  boolean $bestDNull = true;
-      |  for (int $j = 0; $j < ${m.value}.numElements(); $j++) {
-      |    InternalRow $cent = ${m.value}.getStruct($j, 3);
-      |    long $nc = -$cent.getLong(0);
-      |    boolean $dNull = ${s.isNull} || $cent.isNullAt(1);
-      |    double $d = 0.0;
-      |    if (!$dNull) {
-      |      ArrayData $c = $cent.getArray(1);
-      |      int $n = ${s.value}.numElements();
-      |      if ($n != $c.numElements()) $dNull = true;
-      |      for (int $i = 0; !$dNull && $i < $n; $i++) {
-      |        if (${s.value}.isNullAt($i) || $c.isNullAt($i)) $dNull = true;
-      |        else $d += (double) ${s.value}.getLong($i) * (double) $c.getLong($i);
-      |      }
-      |    }
-      |    boolean $cnNull = $cent.isNullAt(2);
-      |    double $cn = $cnNull ? 0.0 : $cent.getDouble(2);
-      |    boolean $scoreNull = $dNull || $cnNull || $cn == 0.0;
-      |    double $score = $scoreNull ? 0.0 : $d / $cn;
-      |    int $cmp = $scoreNull ? ($bestScoreNull ? 0 : -1)
-      |      : $bestScoreNull ? 1 : $ord.compareDoubles($score, $bestScore);
-      |    if ($best < 0 || $cmp > 0 || ($cmp == 0 && $nc > $bestNc)) {
-      |      $best = $j; $bestScore = $score; $bestScoreNull = $scoreNull; $bestNc = $nc;
-      |      $bestD = $d; $bestDNull = $dNull;
-      |    }
-      |  }
-      |  InternalRow $win = ${m.value}.getStruct($best, 3);
-      |  ${ev.isNull} = false;
-      |  ${ev.value} = new $row(new Object[] {-$bestNc, $bestDNull ? null : (Object) $bestD,
-      |    $win.isNullAt(2) ? null : (Object) $win.getDouble(2)});
-      |}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} = ${classOf[NearestCentroid].getName}.nearest(
+      |  ${s.isNull} ? null : ${s.value}, ${m.isNull} ? null : ${m.value});
+      |boolean ${ev.isNull} = ${ev.value} == null;
       """.stripMargin)
   }
 
@@ -323,6 +226,43 @@ object NearestCentroid {
     StructField("cid", LongType, nullable = false),
     StructField("d", DoubleType),
     StructField("cn", DoubleType)))
+
+  /** The winner of a sketch (null allowed) against a model; null when the
+    * model is null or empty. Both evaluation paths call it.
+    */
+  def nearest(s: ArrayData, m: ArrayData): InternalRow = {
+    if (m == null || m.numElements() == 0) return null
+    var best = -1
+    var bestScore = 0.0
+    var bestScoreNull = true
+    var bestNc = 0L
+    var bestD = 0.0
+    var bestDNull = true
+    var j = 0
+    while (j < m.numElements()) {
+      val cent = m.getStruct(j, 3)
+      val nc = -cent.getLong(0)
+      val c = if (cent.isNullAt(1)) null else cent.getArray(1)
+      val dNull = s == null || c == null || ArrayDot.nullRule(s, c)
+      val d = if (dNull) 0.0 else ArrayDot.fold(s, c, longs = true)
+      val cnNull = cent.isNullAt(2)
+      val cn = if (cnNull) 0.0 else cent.getDouble(2)
+      val scoreNull = dNull || cnNull || cn == 0.0
+      val score = if (scoreNull) 0.0 else d / cn
+      val cmp =
+        if (scoreNull) { if (bestScoreNull) 0 else -1 }
+        else if (bestScoreNull) 1
+        else SQLOrderingUtil.compareDoubles(score, bestScore)
+      if (best < 0 || cmp > 0 || (cmp == 0 && nc > bestNc)) {
+        best = j; bestScore = score; bestScoreNull = scoreNull; bestNc = nc
+        bestD = d; bestDNull = dNull
+      }
+      j += 1
+    }
+    val win = m.getStruct(best, 3)
+    new GenericInternalRow(Array[Any](-bestNc, if (bestDNull) null else bestD,
+      if (win.isNullAt(2)) null else win.getDouble(2)))
+  }
 }
 
 /** Column DSL for the vector kernels. Each casts its inputs to the array

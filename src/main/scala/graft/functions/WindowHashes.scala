@@ -26,68 +26,48 @@ import org.apache.spark.unsafe.types.UTF8String
   * an empty array — `explode` then drops them, matching the windowed
   * chain's `length ≥ n` guard.
   *
-  * A Catalyst `BinaryExpression` with `doGenCode`, so it runs inside
-  * whole-stage codegen like [[TokenFingerprint]].
+  * A Catalyst `BinaryExpression` that runs inside whole-stage codegen like
+  * [[TokenFingerprint]]. One body, [[hashes]], serves the interpreted eval
+  * and the generated code, which calls it on this expression as a
+  * reference object, so the modulus stays out of the generated text.
   */
 case class WindowHashes(left: Expression, right: Expression,
                         p: Long = 1000000007L) extends BinaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "window_hashes"
 
-  private val P = p
-
-  override def nullSafeEval(t: Any, nv: Any): Any = {
-    val cps = t.asInstanceOf[UTF8String].toString.codePoints.toArray
-    val n = nv.asInstanceOf[Int]
+  /** Every window hash of one string, the slide of the paragraph above;
+    * called by both the interpreted eval and the generated code.
+    */
+  def hashes(text: UTF8String, n: Int): GenericArrayData = {
+    val cps = text.toString.codePoints.toArray
     val m = cps.length - n + 1
     if (m <= 0) return new GenericArrayData(Array.empty[Long])
     val out = new Array[Long](m)
     var h = 0L
     var j = 0
-    while (j < n) { h = (h * 31L + cps(j)) % P; j += 1 }
+    while (j < n) { h = (h * 31L + cps(j)) % p; j += 1 }
     out(0) = h
     var pw = 1L
     j = 1
-    while (j < n) { pw = pw * 31L % P; j += 1 }
+    while (j < n) { pw = pw * 31L % p; j += 1 }
     var i = 1
     while (i < m) {
-      h = (h - cps(i - 1) * pw % P + P) % P
-      h = (h * 31L + cps(i + n - 1)) % P
+      h = (h - cps(i - 1) * pw % p + p) % p
+      h = (h * 31L + cps(i + n - 1)) % p
       out(i) = h
       i += 1
     }
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, nv) => {
-      val cps = ctx.freshName("cps")
-      val m = ctx.freshName("m")
-      val out = ctx.freshName("out")
-      val h = ctx.freshName("h")
-      val i = ctx.freshName("i")
-      val pw = ctx.freshName("pw")
-      s"""
-         |int[] $cps = $t.toString().codePoints().toArray();
-         |int $m = $cps.length - $nv + 1;
-         |if ($m <= 0) {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new long[0]);
-         |} else {
-         |  long[] $out = new long[$m];
-         |  long $h = 0L;
-         |  for (int $i = 0; $i < $nv; $i++) { $h = ($h * 31L + $cps[$i]) % ${P}L; }
-         |  $out[0] = $h;
-         |  long $pw = 1L;
-         |  for (int $i = 1; $i < $nv; $i++) { $pw = $pw * 31L % ${P}L; }
-         |  for (int $i = 1; $i < $m; $i++) {
-         |    $h = ($h - (long) $cps[$i - 1] * $pw % ${P}L + ${P}L) % ${P}L;
-         |    $h = ($h * 31L + $cps[$i + $nv - 1]) % ${P}L;
-         |    $out[$i] = $h;
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |}
-       """.stripMargin
-    })
+  override def nullSafeEval(t: Any, nv: Any): Any =
+    hashes(t.asInstanceOf[UTF8String], nv.asInstanceOf[Int])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("windowHashes", this, classOf[WindowHashes].getName)
+    defineCodeGen(ctx, ev, (t, nv) => s"$ref.hashes($t, $nv)")
+  }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): WindowHashes =
     copy(left = l, right = r)

@@ -394,73 +394,83 @@ object Positional {
     F("ts_ns", PTsSecMicros), F("sensor", PStr),
     F("agent_name", PStr), F("agent_id", PStr))
 
-  /** All 14 sysmon event types (giganto_import/sysmon.rs:63-543). */
-  val sysmon14: Seq[Proto] = Seq(
-    Proto("y_process_create", yHead ++ Seq(
+  /** The 14 sysmon event bodies after a family's head, one list for both
+    * families: the giganto-import layouts (giganto_import/sysmon.rs:63-543)
+    * and the CSV ones (sysmon_csv/{process_create,…}.rs). Their bodies
+    * differ in three field types only: the creation times (`ts`),
+    * `logon_id` and file_delete's `archived`.
+    */
+  private def sysmonFamily(prefix: String, head: Seq[Field], ts: FType, logonId: FType,
+                           archived: FType): Seq[Proto] = Seq(
+    "process_create" -> Seq(
       F("process_guid", PStr), F("process_id", PLong), F("image", PStr),
       F("file_version", PStr), F("description", PStr), F("product", PStr),
       F("company", PStr), F("original_file_name", PStr), F("command_line", PStr),
       F("current_directory", PStr), F("user_s", PStr), F("logon_guid", PStr),
-      F("logon_id", PLong), F("terminal_session_id", PLong),
+      F("logon_id", logonId), F("terminal_session_id", PLong),
       F("integrity_level", PStr), F("hashes", PStrArr),
       F("parent_process_guid", PStr), F("parent_process_id", PLong),
       F("parent_image", PStr), F("parent_command_line", PStr),
-      F("parent_user", PStr))),
-    Proto("y_file_create_time", yHead ++ Seq(
+      F("parent_user", PStr)),
+    "file_create_time" -> Seq(
       F("process_guid", PStr), F("process_id", PLong), F("image", PStr),
-      F("target_filename", PStr), F("creation_utc_time", PTsRfc3339),
-      F("previous_creation_utc_time", PTsRfc3339), F("user_s", PStr))),
-    Proto("y_network_connect", yHead ++ Seq(
+      F("target_filename", PStr), F("creation_utc_time", ts),
+      F("previous_creation_utc_time", ts), F("user_s", PStr)),
+    "network_connect" -> Seq(
       F("process_guid", PStr), F("process_id", PLong), F("image", PStr),
       F("user_s", PStr), F("protocol", PStr), F("initiated", PBoolWord),
       F("source_is_ipv6", PBoolWord), F("source_ip", PIp),
       F("source_hostname", PStr), F("source_port", PInt),
       F("source_port_name", PStr), F("destination_is_ipv6", PBoolWord),
       F("destination_ip", PIp), F("destination_hostname", PStr),
-      F("destination_port", PInt), F("destination_port_name", PStr))),
-    Proto("y_process_terminate", yHead ++ Seq(
+      F("destination_port", PInt), F("destination_port_name", PStr)),
+    "process_terminate" -> Seq(
       F("process_guid", PStr), F("process_id", PLong), F("image", PStr),
-      F("user_s", PStr))),
-    Proto("y_image_load", yHead ++ Seq(
+      F("user_s", PStr)),
+    "image_load" -> Seq(
       F("process_guid", PStr), F("process_id", PLong), F("image", PStr),
       F("image_loaded", PStr), F("file_version", PStr), F("description", PStr),
       F("product", PStr), F("company", PStr), F("original_file_name", PStr),
       F("hashes", PStrArr), F("signed", PBoolWord), F("signature", PStr),
-      F("signature_status", PStr), F("user_s", PStr))),
-    Proto("y_file_create", yHead ++ Seq(
+      F("signature_status", PStr), F("user_s", PStr)),
+    "file_create" -> Seq(
       F("process_guid", PStr), F("process_id", PLong), F("image", PStr),
-      F("target_filename", PStr), F("creation_utc_time", PTsRfc3339),
-      F("user_s", PStr))),
-    Proto("y_registry_value_set", yHead ++ Seq(
+      F("target_filename", PStr), F("creation_utc_time", ts),
+      F("user_s", PStr)),
+    "registry_value_set" -> Seq(
       F("event_type", PStr), F("process_guid", PStr), F("process_id", PLong),
       F("image", PStr), F("target_object", PStr), F("details", PStr),
-      F("user_s", PStr))),
-    Proto("y_registry_key_rename", yHead ++ Seq(
+      F("user_s", PStr)),
+    "registry_key_rename" -> Seq(
       F("event_type", PStr), F("process_guid", PStr), F("process_id", PLong),
       F("image", PStr), F("target_object", PStr), F("new_name", PStr),
-      F("user_s", PStr))),
-    Proto("y_file_create_stream_hash", yHead ++ Seq(
+      F("user_s", PStr)),
+    "file_create_stream_hash" -> Seq(
       F("process_guid", PStr), F("process_id", PLong), F("image", PStr),
-      F("target_filename", PStr), F("creation_utc_time", PTsRfc3339),
-      F("hash", PStrArr), F("contents", PStr), F("user_s", PStr))),
-    Proto("y_pipe_event", yHead ++ Seq(
+      F("target_filename", PStr), F("creation_utc_time", ts),
+      F("hash", PStrArr), F("contents", PStr), F("user_s", PStr)),
+    "pipe_event" -> Seq(
       F("event_type", PStr), F("process_guid", PStr), F("process_id", PLong),
-      F("pipe_name", PStr), F("image", PStr), F("user_s", PStr))),
-    Proto("y_dns_query", yHead ++ Seq(
+      F("pipe_name", PStr), F("image", PStr), F("user_s", PStr)),
+    "dns_query" -> Seq(
       F("process_guid", PStr), F("process_id", PLong), F("query_name", PStr),
       F("query_status", PLong), F("query_results", PStrArr), F("image", PStr),
-      F("user_s", PStr))),
-    Proto("y_file_delete", yHead ++ Seq(
+      F("user_s", PStr)),
+    "file_delete" -> Seq(
       F("process_guid", PStr), F("process_id", PLong), F("user_s", PStr),
       F("image", PStr), F("target_filename", PStr), F("hashes", PStrArr),
-      F("is_executable", PBoolWord), F("archived", PBoolWord))),
-    Proto("y_process_tamper", yHead ++ Seq(
+      F("is_executable", PBoolWord), F("archived", archived)),
+    "process_tamper" -> Seq(
       F("process_guid", PStr), F("process_id", PLong), F("image", PStr),
-      F("tamper_type", PStr), F("user_s", PStr))),
-    Proto("y_file_delete_detected", yHead ++ Seq(
+      F("tamper_type", PStr), F("user_s", PStr)),
+    "file_delete_detected" -> Seq(
       F("process_guid", PStr), F("process_id", PLong), F("user_s", PStr),
       F("image", PStr), F("target_filename", PStr), F("hashes", PStrArr),
-      F("is_executable", PBoolWord))))
+      F("is_executable", PBoolWord))
+  ).map { case (name, body) => Proto(prefix + name, head ++ body) }
+
+  /** All 14 sysmon event types (giganto_import/sysmon.rs:63-543). */
+  val sysmon14: Seq[Proto] = sysmonFamily("y_", yHead, PTsRfc3339, PLong, PBoolWord)
 
   /** Sysmon CSV common prefix (sysmon_csv impls: agent_name/agent_id at
     * 0/1, index 2 skipped, sysmon-ms UTC timestamp at 3).
@@ -473,72 +483,7 @@ object Positional {
     * sysmon_csv/{process_create,…}.rs — distinct field order and timestamp
     * format from the giganto-import sysmon layouts above).
     */
-  val sysmonCsv: Seq[Proto] = Seq(
-    Proto("w_process_create", wHead ++ Seq(
-      F("process_guid", PStr), F("process_id", PLong), F("image", PStr),
-      F("file_version", PStr), F("description", PStr), F("product", PStr),
-      F("company", PStr), F("original_file_name", PStr), F("command_line", PStr),
-      F("current_directory", PStr), F("user_s", PStr), F("logon_guid", PStr),
-      F("logon_id", PHexId), F("terminal_session_id", PLong),
-      F("integrity_level", PStr), F("hashes", PStrArr),
-      F("parent_process_guid", PStr), F("parent_process_id", PLong),
-      F("parent_image", PStr), F("parent_command_line", PStr),
-      F("parent_user", PStr))),
-    Proto("w_file_create_time", wHead ++ Seq(
-      F("process_guid", PStr), F("process_id", PLong), F("image", PStr),
-      F("target_filename", PStr), F("creation_utc_time", PTsSysmonMs),
-      F("previous_creation_utc_time", PTsSysmonMs), F("user_s", PStr))),
-    Proto("w_network_connect", wHead ++ Seq(
-      F("process_guid", PStr), F("process_id", PLong), F("image", PStr),
-      F("user_s", PStr), F("protocol", PStr), F("initiated", PBoolWord),
-      F("source_is_ipv6", PBoolWord), F("source_ip", PIp),
-      F("source_hostname", PStr), F("source_port", PInt),
-      F("source_port_name", PStr), F("destination_is_ipv6", PBoolWord),
-      F("destination_ip", PIp), F("destination_hostname", PStr),
-      F("destination_port", PInt), F("destination_port_name", PStr))),
-    Proto("w_process_terminate", wHead ++ Seq(
-      F("process_guid", PStr), F("process_id", PLong), F("image", PStr),
-      F("user_s", PStr))),
-    Proto("w_image_load", wHead ++ Seq(
-      F("process_guid", PStr), F("process_id", PLong), F("image", PStr),
-      F("image_loaded", PStr), F("file_version", PStr), F("description", PStr),
-      F("product", PStr), F("company", PStr), F("original_file_name", PStr),
-      F("hashes", PStrArr), F("signed", PBoolWord), F("signature", PStr),
-      F("signature_status", PStr), F("user_s", PStr))),
-    Proto("w_file_create", wHead ++ Seq(
-      F("process_guid", PStr), F("process_id", PLong), F("image", PStr),
-      F("target_filename", PStr), F("creation_utc_time", PTsSysmonMs),
-      F("user_s", PStr))),
-    Proto("w_registry_value_set", wHead ++ Seq(
-      F("event_type", PStr), F("process_guid", PStr), F("process_id", PLong),
-      F("image", PStr), F("target_object", PStr), F("details", PStr),
-      F("user_s", PStr))),
-    Proto("w_registry_key_rename", wHead ++ Seq(
-      F("event_type", PStr), F("process_guid", PStr), F("process_id", PLong),
-      F("image", PStr), F("target_object", PStr), F("new_name", PStr),
-      F("user_s", PStr))),
-    Proto("w_file_create_stream_hash", wHead ++ Seq(
-      F("process_guid", PStr), F("process_id", PLong), F("image", PStr),
-      F("target_filename", PStr), F("creation_utc_time", PTsSysmonMs),
-      F("hash", PStrArr), F("contents", PStr), F("user_s", PStr))),
-    Proto("w_pipe_event", wHead ++ Seq(
-      F("event_type", PStr), F("process_guid", PStr), F("process_id", PLong),
-      F("pipe_name", PStr), F("image", PStr), F("user_s", PStr))),
-    Proto("w_dns_query", wHead ++ Seq(
-      F("process_guid", PStr), F("process_id", PLong), F("query_name", PStr),
-      F("query_status", PLong), F("query_results", PStrArr), F("image", PStr),
-      F("user_s", PStr))),
-    Proto("w_file_delete", wHead ++ Seq(
-      F("process_guid", PStr), F("process_id", PLong), F("user_s", PStr),
-      F("image", PStr), F("target_filename", PStr), F("hashes", PStrArr),
-      F("is_executable", PBoolWord), F("archived", PStr))),
-    Proto("w_process_tamper", wHead ++ Seq(
-      F("process_guid", PStr), F("process_id", PLong), F("image", PStr),
-      F("tamper_type", PStr), F("user_s", PStr))),
-    Proto("w_file_delete_detected", wHead ++ Seq(
-      F("process_guid", PStr), F("process_id", PLong), F("user_s", PStr),
-      F("image", PStr), F("target_filename", PStr), F("hashes", PStrArr),
-      F("is_executable", PBoolWord))))
+  val sysmonCsv: Seq[Proto] = sysmonFamily("w_", wHead, PTsSysmonMs, PHexId, PStr)
 
   /** Zeek common prefix (zeek/network.rs: ts at 0, uid at 1, 4-tuple 2-5). */
   private val zHead: Seq[Field] = Seq(

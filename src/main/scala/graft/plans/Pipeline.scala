@@ -21,9 +21,9 @@ import graft.table.{SinkTable, Writer}
   *
   * What it commits sequences timestamps by the reference's rule
   * (`Dedup.timestampDedupExact`, windowed by `source` in `line_no` order).
-  * [[transformed]] keeps the windowed `(source, ts)` form that the p14
-  * oracle pins; [[transformedExact]] is the committed form over a whole
-  * input.
+  * [[transformedExact]], the one transform it exports, is the committed
+  * form over a whole input; the windowed `(source, ts)` form that the p14
+  * oracle pins is that query's own plan in `QueriesPipeline`.
   *
   * [[run]] and [[graft.streaming.StreamPipeline.run]] (one micro-batch at a
   * time) commit through one step, [[commit]].
@@ -47,12 +47,6 @@ object Pipeline {
   private val Source = col("source")
   private val LineNo = col("line_no")
 
-  /** The transform-only portion (no writes), with the windowed ts dedup —
-    * reused by queries (p14 pins it) and tests.
-    */
-  def transformed(spark: SparkSession, dir: String): DataFrame =
-    enrichRoute(Dedup.timestampDedup(Parse.parsed(Tables.rawEvents(spark, dir)), Ts, Seq(Source), LineNo))
-
   /** The transform-only portion with the reference's ts sequencing: the
     * rows one [[run]] on an empty table commits.
     */
@@ -63,10 +57,8 @@ object Pipeline {
     * whose ts did not parse (a quarantined line) joins no run.
     */
   private def stages(raw: DataFrame, carry: Dedup.RunEnds): DataFrame =
-    enrichRoute(Dedup.timestampDedupExact(Parse.parsed(raw), Ts, Source, LineNo, carry))
-
-  private def enrichRoute(deduped: DataFrame): DataFrame =
-    Route.routed(Enrich.withSourceAttrs(deduped))
+    Route.routed(Enrich.withSourceAttrs(
+      Dedup.timestampDedupExact(Parse.parsed(raw), Ts, Source, LineNo, carry)))
 
   /** Commit the input rows past the resume point as `commitId` (never a
     * committed one). Returns the report over every committed row. Resume

@@ -3,10 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
-/** ScalaCheck property: the codegen'd TokenFingerprint equals the pure-Scala
-  * fold on arbitrary int arrays — including empty arrays, negative token
-  * ids, and Int extremes (the codegen and interpreted paths share one
-  * semantics).
+/** ScalaCheck properties: TokenFingerprint equals the pure-Scala fold on
+  * arbitrary int arrays — including empty arrays, negative token ids, and
+  * Int extremes — and WindowHashes the per-window fold, each on generated
+  * code only and on the interpreted path.
+  *
+  * Inputs come from an RDD: over a local `Seq`, `ConvertToLocalRelation`
+  * would evaluate the projection through `eval` and the generated code
+  * would never run.
   */
 class FingerprintPropSpec extends SparkSpec {
   import spark.implicits._
@@ -20,10 +24,11 @@ class FingerprintPropSpec extends SparkSpec {
     val samples: Seq[Seq[Int]] =
       Gen.listOfN(197, genArr).sample.get.map(_.toSeq) ++
         Seq(Seq.empty[Int], Seq(Int.MinValue), Seq(Int.MaxValue, Int.MinValue, 0))
-    val df = samples.zipWithIndex.map { case (a, i) => (i.toLong, a) }.toDF("id", "tokens")
-    val got = df.select(expr("token_fingerprint(tokens)")).as[Long].collect()
-    val want = samples.map(scalaFold)
-    assert(got.toSeq === want)
+    val rows = spark.sparkContext.parallelize(samples.zipWithIndex.map { case (a, i) => (i.toLong, a) }, 2)
+    val df = rows.toDF("id", "tokens").select(col("id"), expr("token_fingerprint(tokens)"))
+    assertBothLegs(samples.map(scalaFold), "token_fingerprint") {
+      df.orderBy("id").as[(Long, Long)].collect().map(_._2).toSeq
+    }
   }
 
   // the per-window fold the sliding WindowHashes must reproduce bit-for-bit
@@ -42,17 +47,13 @@ class FingerprintPropSpec extends SparkSpec {
         // supplementary-plane (non-BMP) text: one CODE POINT per character —
         // U+1F600 hashes as 128512, never as its two UTF-16 surrogates
         "a😀b😀" + ("c😀" * 30))
-    // an RDD, not a local Seq: the optimizer would evaluate projections over
-    // a LocalRelation itself, through eval, and codegen would never run
     val rows = spark.sparkContext.parallelize(samples.zipWithIndex.map { case (s, i) => (i.toLong, s) }, 2)
     for (n <- Seq(2, 16, 24)) {
       val df = rows.toDF("id", "text")
         .select(col("id"), expr(s"window_hashes(text, $n)").as("hs"))
-      val want = samples.map(s => windowFold(s, n))
-      assert(df.orderBy("id").as[(Long, Seq[Long])].collect().map(_._2).toSeq === want,
-        s"codegen path diverged at n=$n")
-      assert(interpreted(df.orderBy("id").as[(Long, Seq[Long])].collect()).map(_._2).toSeq === want,
-        s"interpreted path diverged at n=$n")
+      assertBothLegs(samples.map(s => windowFold(s, n)), s"window_hashes at n=$n") {
+        df.orderBy("id").as[(Long, Seq[Long])].collect().map(_._2).toSeq
+      }
     }
   }
 

@@ -27,6 +27,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def interpreted[A](body: => A): A =
     withConfs("spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body)
+
+  /** Runs `body` with generated code only: no fallback to `eval`. */
+  def compiled[A](body: => A): A =
+    withConfs("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")(body)
+
+  /** Runs `got` on [[compiled]] and on [[interpreted]]; fails naming every
+    * leg whose result is not `want`.
+    */
+  def assertBothLegs[A](want: A, what: String)(got: => A): Unit = {
+    val bad = Seq("generated code" -> compiled(got), "interpreted path" -> interpreted(got))
+      .collect { case (leg, g) if g != want => leg }
+    assert(bad.isEmpty, s"$what: ${bad.mkString(" and ")} diverged")
+  }
 }
 
 object SparkSpec {

@@ -72,11 +72,6 @@ class VectorKernelsSpec extends SparkSpec {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
   }
 
-  /** Runs `body` with generated code only: no fallback to `eval`. */
-  private def compiled[A](body: => A): A =
-    withConfs("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
-      "spark.sql.codegen.fallback" -> "false")(body)
-
   /** The bits of a double with every NaN collapsed to one: ±0.0 and all
     * finite values compare exactly, but which NaN an `inf − inf` or a
     * NaN-plus-NaN yields is not fixed by the JVM — the JIT may commute a
@@ -90,15 +85,18 @@ class VectorKernelsSpec extends SparkSpec {
   private def doubles(df: DataFrame, c: Column): Map[Long, Option[Long]] =
     df.select(col("id"), c).collect().map(r => r.getLong(0) -> bits(r.get(1))).toMap
 
-  /** Both legs of `run` against the reference values, per id. */
+  /** Both legs of `run` against the reference values, per id; a failure
+    * names every leg that diverged.
+    */
   private def bothLegs[B](what: String)(run: => Map[Long, B])(want: Map[Long, B]): Unit = {
-    def check(got: Map[Long, B], leg: String): Unit = {
+    def diverged(got: Map[Long, B], leg: String): Option[String] = {
       val bad = (got.keySet ++ want.keySet).toSeq.sorted.filter(id => got.get(id) != want.get(id))
-      if (bad.nonEmpty) fail(s"$what: the $leg diverged at ${bad.size} ids, first " +
+      Option.when(bad.nonEmpty)(s"the $leg diverged at ${bad.size} ids, first " +
         bad.take(3).map(id => s"$id: got ${got.get(id)}, want ${want.get(id)}").mkString("; "))
     }
-    check(compiled(run), "generated code")
-    check(interpreted(run), "interpreted path")
+    val failures = Seq(diverged(compiled(run), "generated code"),
+      diverged(interpreted(run), "interpreted path")).flatten
+    if (failures.nonEmpty) fail(s"$what: ${failures.mkString(" | ")}")
   }
 
   test("dot fold == aggregate(zip_with) bit for bit, codegen AND interpreted") {
